@@ -1,7 +1,9 @@
 package graft.algorithms
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 import graft.util.CacheLifecycle.releaseOnFirstAction
 
@@ -13,8 +15,9 @@ import graft.util.CacheLifecycle.releaseOnFirstAction
  * Design for scale: each iteration is a shuffle join + partial aggregation;
  * frontiers/state are cached per iteration and the lineage is cut with
  * `localCheckpoint` every few rounds (the Spark-specific hazard SURVEY §7.4
- * calls out — without it the plan tree doubles per iteration). No driver-side
- * per-row loops; the only driver values are convergence counts.
+ * calls out — without it the plan tree doubles per iteration). Graphs
+ * under the driver-local gate skip the rounds: [[onDriver]] collects them
+ * once and the fixpoint runs in-JVM ([[Local]] states the rule).
  */
 object Algorithms {
 
@@ -29,23 +32,19 @@ object Algorithms {
     * wedge-quadratic growth would dominate, so propagation stays 1-hop. */
   val SccAugMaxEdges: Long = 1L << 20
 
-  /** Edge-count gate for the driver-local small-graph fast paths
-    * ([[connectedComponents]]' union-find, [[stronglyConnectedComponents]]'
-    * residual-tail Tarjan): at or below it the edge set collects (≤ ~32 MB
-    * of long pairs) and the fixpoint runs in-JVM — the per-round Spark job
-    * floor is the whole cost of these loops on distillate-sized graphs
+  /** Edge-count gate of the driver-local loops ([[Local]] states the rule,
+    * [[onDriver]] applies it): at or below it the edge set collects (≤ ~32
+    * MB of long pairs) and the fixpoint runs in-JVM — the per-round Spark
+    * job floor is the whole cost of these loops on distillate-sized graphs
     * (measured: scc at sf0.1 = 252 jobs, 0.7 core-seconds of actual work).
-    * Above the gate the distributed loops run unchanged. Labels are
-    * identical by construction (component = min member id); equality is
-    * spec-pinned on both paths. Overridable per session via
-    * `graft.localGraphMaxEdges` (tests force 0 to exercise the
-    * distributed path on toy graphs). */
+    * Overridable per session via `graft.localGraphMaxEdges` (tests force 0
+    * to exercise the distributed path on toy graphs). */
   val LocalGraphMaxEdges: Long = 2L * 1000 * 1000
 
-  /** Vertex/seed-count cap for the driver-local loop gates: collected id
-    * arrays stay ≤ ~64 MB. The edge gate alone does not bound the vertex
-    * set (a billion isolated vertices over ten edges), so every local path
-    * that collects a vertex or seed list checks this too. */
+  /** Vertex/seed-count cap of the driver-local loops: collected id arrays
+    * stay ≤ ~64 MB. The edge gate alone does not bound the vertex set (a
+    * billion isolated vertices over ten edges), so [[onDriver]] caps every
+    * id list it collects too. */
   val LocalGraphMaxVertices: Long = 4L * 1000 * 1000
 
   /** Row cap for the local per-source BFS state (Σ per-source
@@ -58,117 +57,60 @@ object Algorithms {
     * over-budget source aborts mid-flood instead of after completing. */
   val LocalStateMaxRows: Long = 1L << 22
 
-  private def localGraphGate(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.localGraphMaxEdges")
-      .map(_.toLong).getOrElse(LocalGraphMaxEdges)
+  /** An id list [[onDriver]] collects: the `id` column of `df`. A [[Fresh]]
+    * list is deduplicated, persisted and counted by the dispatch itself; a
+    * [[Held]] list is the caller's own, already distinct, of `n` rows. */
+  private sealed trait Ids { def df: DataFrame }
+  private final case class Fresh(df: DataFrame) extends Ids
+  private final case class Held(df: DataFrame, n: Long) extends Ids
 
-  /** The local gates collect ids via getLong — any other id type skips the
-    * gate and runs distributed (queries and tests use BIGINT ids; this is
-    * the safety net, not a supported alternate path). */
-  private def longCols(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c => df.schema(c).dataType ==
-      org.apache.spark.sql.types.LongType)
-
-  private def collectPairs(df: DataFrame): Array[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1)))
-
-  private def collectIds(df: DataFrame): Array[Long] =
-    df.collect().map(_.getLong(0))
-
-  /** In-JVM union-find over an edge list: label = MIN member id of each
-    * component — exactly [[connectedComponents]]' fixpoint labeling.
-    * Returns one (id, label) row per distinct endpoint. */
-  private[graft] def localComponentLabels(es: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
-    def at(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
-    val parent = scala.collection.mutable.ArrayBuffer[Int]()
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    es.foreach { case (s, d) =>
-      val (si, di) = (at(s), at(d))
-      while (parent.length < ids.length) parent += parent.length
-      val (rs, rd) = (find(si), find(di))
-      if (rs != rd) parent(rd) = rs
-    }
-    while (parent.length < ids.length) parent += parent.length
-    val minOf = new scala.collection.mutable.LongMap[Long]()
-    var i = 0
-    while (i < ids.length) {
-      val r = find(i).toLong
-      val v = ids(i)
-      minOf.updateWith(r)(o => Some(o.fold(v)(math.min(_, v))))
-      i += 1
-    }
-    Array.tabulate(ids.length)(j => (ids(j), minOf(find(j).toLong)))
+  /** What [[onDriver]] hands the local loop; each part collects on first
+    * use, so a declined answer collects no more than it needed. */
+  private final class Collected(e: DataFrame, idLists: Seq[DataFrame]) {
+    private lazy val rows = e.collect()
+    lazy val pairs: Array[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1)))
+    /** The edge frame's third column; None when a weight is NULL — the
+      * distributed loop owns NULL semantics (dist + null → null, sums skip
+      * nulls), so such inputs behave the same on both sides of the gate. */
+    def weights: Option[Array[Double]] =
+      if (rows.exists(_.isNullAt(2))) None else Some(rows.map(_.getDouble(2)))
+    lazy val ids: Seq[Array[Long]] = idLists.map(_.collect().map(_.getLong(0)))
   }
 
-  /** In-JVM iterative Tarjan: (id, minMemberIdOfItsScc) per vertex. */
-  private[graft] def localSccLabels(vs: Array[Long], es: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val n = vs.length
-    val idx = new scala.collection.mutable.LongMap[Int](n)
-    var i = 0
-    while (i < n) { idx.put(vs(i), i); i += 1 }
-    // CSR adjacency over edges whose BOTH endpoints are known vertices
-    val deg = new Array[Int](n)
-    es.foreach { case (s, d) =>
-      if (idx.contains(s) && idx.contains(d)) deg(idx(s)) += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val adj = new Array[Int](off(n))
-    val fill = off.clone()
-    es.foreach { case (s, d) =>
-      if (idx.contains(s) && idx.contains(d)) {
-        val si = idx(s); adj(fill(si)) = idx(d); fill(si) += 1
+  /**
+   * The driver-local dispatch, the one place the gate rule of [[Local]]
+   * lives. `e` is the caller's persisted edge frame, endpoints in its first
+   * two columns; `edgeCount` is its row count (evaluated only once the
+   * BIGINT checks pass — it is the cache fill, so the gate adds no job).
+   * When the graph passes the gate, `run` gets it collected and its answer
+   * comes back as a DataFrame with columns `cols`; `e` and every id list
+   * are then released. None means: run the distributed loop (the caller's
+   * frames stay persisted for it). Frames the dispatch persisted itself are
+   * released on every exit.
+   */
+  private def onDriver[T <: Product : TypeTag](e: DataFrame, edgeCount: => Long, ids: Ids*)(
+      cols: String*)(run: Collected => Option[Array[T]]): Option[DataFrame] = {
+    def bigint(df: DataFrame, k: Int) = df.schema.take(k).forall(_.dataType == LongType)
+    val spark = e.sparkSession
+    if (!bigint(e, 2) || !ids.forall(i => bigint(i.df.select(col("id")), 1)) ||
+        ids.exists { case Held(_, n) => n > LocalGraphMaxVertices; case _ => false } ||
+        edgeCount > spark.conf.getOption("graft.localGraphMaxEdges")
+          .map(_.toLong).getOrElse(LocalGraphMaxEdges)) return None
+    val owned = scala.collection.mutable.Buffer[DataFrame]()
+    try {
+      val lists = ids.map {
+        case Fresh(df) =>
+          val d = df.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+          owned += d
+          d
+        case Held(df, _) => df.select(col("id"))
       }
-    }
-    val index = Array.fill(n)(-1)
-    val low = new Array[Int](n)
-    val onStack = new Array[Boolean](n)
-    val stack = new scala.collection.mutable.ArrayBuffer[Int]()
-    val label = new Array[Long](n)
-    var counter = 0
-    // explicit DFS stack: (vertex, next child pointer)
-    val dfsV = new scala.collection.mutable.ArrayBuffer[Int]()
-    val dfsC = new scala.collection.mutable.ArrayBuffer[Int]()
-    var root = 0
-    while (root < n) {
-      if (index(root) < 0) {
-        dfsV += root; dfsC += off(root)
-        index(root) = counter; low(root) = counter; counter += 1
-        stack += root; onStack(root) = true
-        while (dfsV.nonEmpty) {
-          val v = dfsV.last
-          if (dfsC.last < off(v + 1)) {
-            val w = adj(dfsC.last)
-            dfsC(dfsC.length - 1) += 1
-            if (index(w) < 0) {
-              index(w) = counter; low(w) = counter; counter += 1
-              stack += w; onStack(w) = true
-              dfsV += w; dfsC += off(w)
-            } else if (onStack(w) && index(w) < low(v)) low(v) = index(w)
-          } else {
-            dfsV.remove(dfsV.length - 1); dfsC.remove(dfsC.length - 1)
-            if (dfsV.nonEmpty && low(v) < low(dfsV.last)) low(dfsV.last) = low(v)
-            if (low(v) == index(v)) { // v roots an SCC: pop it, label = min id
-              var j = stack.length - 1
-              var mn = Long.MaxValue
-              while (stack(j) != v) { mn = math.min(mn, vs(stack(j))); j -= 1 }
-              mn = math.min(mn, vs(v))
-              while (stack.length > j) {
-                val w = stack.remove(stack.length - 1)
-                onStack(w) = false; label(w) = mn
-              }
-            }
-          }
-        }
-      }
-      root += 1
-    }
-    Array.tabulate(n)(j => (vs(j), label(j)))
+      if (owned.exists(_.count() > LocalGraphMaxVertices)) return None
+      val answer = run(new Collected(e, lists))
+      if (answer.nonEmpty) { e.unpersist(false); ids.foreach(_.df.unpersist(false)) }
+      import spark.implicits._
+      answer.map(_.toSeq.toDF(cols: _*))
+    } finally owned.foreach(_.unpersist(false))
   }
 
   /**
@@ -245,22 +187,9 @@ object Algorithms {
    */
   def bfs(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
     val e = edges.select(col("src"), col("dst")).cache()
-    // Distillate gate (see [[Local]]): the per-round job floor is the whole
-    // cost of this loop on small graphs — collect once, run in-JVM,
-    // parallelize the result. Levels are exact integers on both paths.
-    if (longCols(e, "src", "dst") && longCols(sources.select(col("id")), "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val src = sources.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (src.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(e)
-        val sArr = collectIds(src)
-        e.unpersist(false); src.unpersist(false)
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return Local.bfsLevels(eArr, sArr, maxIter).toSeq.toDF("id", "level")
-      }
-      src.unpersist(false)
-    }
+    val local = onDriver(e, e.count(), Fresh(sources))("id", "level")(g =>
+      Some(Local.bfsLevels(g.pairs, g.ids(0), maxIter)))
+    if (local.nonEmpty) return local.get
     val cutF = new Cutter; val cutV = new Cutter
     var visited = sources.select(col("id")).distinct().withColumn("level", lit(0))
     var frontier = visited
@@ -296,26 +225,11 @@ object Algorithms {
    */
   def bfsPerSource(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst")).cache()
-    // Distillate gate (see [[Local]]): exact integer levels; the local run
-    // aborts past [[LocalStateMaxRows]] of (src, id, level) state and falls
-    // through to the distributed loop (e stays cached for it).
-    if (longCols(e, "e_src", "e_dst") && longCols(sources.select(col("id")), "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val src = sources.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (src.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(e)
-        val sArr = collectIds(src)
-        src.unpersist(false)
-        Local.bfsPerSource(eArr, sArr, maxIter, LocalStateMaxRows) match {
-          case Some(arr) =>
-            e.unpersist(false)
-            val spark = edges.sparkSession
-            import spark.implicits._
-            return arr.toSeq.toDF("src", "id", "level")
-          case None => // state too large for the driver: run distributed
-        }
-      } else src.unpersist(false)
-    }
+    // the local run declines past [[LocalStateMaxRows]] of (src, id, level)
+    // state: the distributed loop's state is disk-backed
+    val local = onDriver(e, e.count(), Fresh(sources))("src", "id", "level")(g =>
+      Local.bfsPerSource(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
+    if (local.nonEmpty) return local.get
     val cutF = new Cutter; val cutV = new Cutter
     var visited = sources.select(col("id")).distinct()
       .select(col("id").as("src"), col("id"), lit(0).as("level"))
@@ -452,23 +366,14 @@ object Algorithms {
       .select(col("id"), md5(col("id").cast("string").cast("binary")).as("h"))
       .orderBy(col("h"), col("id")).limit(kk.toInt).select("id")
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst")).cache()
-    // Distillate gate (see [[Local]]): σ forward pass is exact; the
-    // backward δ sums differ only in double-sum order (oracle-verified at
-    // round-6). Landmark selection stays the distributed TakeOrdered above
-    // — the collected list is ≤ k rows.
-    if (longCols(e, "e_src", "e_dst") && longCols(vs, "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val eArr = collectPairs(e)
-      val lArr = collectIds(landmarks)
-      e.unpersist(false)
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      val bc = Local.betweennessDeltas(eArr, lArr, maxIter)
-        .toSeq.toDF("id", "dsum")
-      return vs.join(bc, Seq("id"), "left")
+    // landmark selection stays the distributed TakeOrdered above: the
+    // collected list is its kk rows
+    val local = onDriver(e, e.count(), Held(landmarks, kk))("id", "dsum")(g =>
+      Some(Local.betweennessDeltas(g.pairs, g.ids(0), maxIter).toArray))
+    if (local.nonEmpty)
+      return vs.join(local.get, Seq("id"), "left")
         .select(col("id"),
           (coalesce(col("dsum"), lit(0.0)) * lit(n.toDouble / kk)).as("betweenness"))
-    }
     val cutF = new Cutter; val cutV = new Cutter
     var visited = landmarks
       .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma"))
@@ -549,23 +454,13 @@ object Algorithms {
    */
   def maximalIndependentSet(vertices: DataFrame, edges: DataFrame,
                             maxIter: Int = 50): DataFrame = {
-    // Distillate gate (see [[Local]]): exact — the per-round md5 priority
-    // strings and the strict-min winner rule are replicated byte for byte.
-    {
-      val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val vs0 = vertices.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (longCols(e0, "src", "dst") && longCols(vs0, "id") &&
-          e0.count() <= localGraphGate(edges) && vs0.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(e0)
-        val vArr = collectIds(vs0)
-        e0.unpersist(false); vs0.unpersist(false)
-        val spark = vertices.sparkSession
-        import spark.implicits._
-        return Local.mis(vArr, eArr, maxIter).toSeq.toDF("id", "in_mis")
-      }
-      e0.unpersist(false); vs0.unpersist(false)
-    }
+    // the gate's edge cache serves only the local loop
+    val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val local = onDriver(e0, e0.count(), Fresh(vertices))("id", "in_mis")(g =>
+      Some(Local.mis(g.ids(0), g.pairs, maxIter)))
+    if (local.nonEmpty) return local.get
+    e0.unpersist(false)
     val vs = vertices.select(col("id")).distinct().localCheckpoint(true)
     val sym = edges.select("src", "dst").filter(col("src") =!= col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -616,40 +511,21 @@ object Algorithms {
    */
   def shortestPathCounts(edges: DataFrame, sources: DataFrame,
                          maxIter: Int = 100): DataFrame = {
-    // Distillate gate (see [[Local]]): σ is an exact long sum on both
-    // paths. This replaces round 13's withLoopWidth narrow-shuffle device
-    // (and its session-conf mutation, the round-13 advisory): the regime
-    // where the narrow width won — tiny per-round sigma tables — is
-    // exactly the at-or-under-gate regime that now runs in-JVM, and above
-    // the gate the data-sized width equaled the session width anyway.
-    // persist-then-count (the CC device, r15): the gate count doubles as the
-    // cache fill, the local path collects FROM the cache, and the
-    // distributed loop's pre-partitioned edge cache repartitions from it —
-    // one evaluation of the (often expensive: a lineitem self-join at the
-    // graph_sigma call site) edge derivation instead of two (three when the
-    // gate failed). r14 counted the RAW derivation here, unlike every other
-    // gate — the graph_sigma remaining cost was exactly that second pass.
+    // The local loop replaces round 13's withLoopWidth narrow-shuffle
+    // device (and its session-conf mutation, the round-13 advisory): the
+    // regime where the narrow width won — tiny per-round sigma tables — is
+    // exactly the at-or-under-gate regime, and above the gate the
+    // data-sized width equaled the session width anyway. The gate's count
+    // fills e0, the local path collects FROM it, and the distributed loop's
+    // pre-partitioned edge cache repartitions from it — one evaluation of
+    // the (often expensive: a lineitem self-join at the graph_sigma call
+    // site) edge derivation. The local run declines past
+    // [[LocalStateMaxRows]] of state, as in [[bfsPerSource]].
     val e0 = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e0.count()
-    if (longCols(e0, "src", "dst") &&
-        longCols(sources.select(col("id")), "id") &&
-        eCount <= localGraphGate(edges)) {
-      val src = sources.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (src.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(e0)
-        val sArr = collectIds(src)
-        src.unpersist(false)
-        Local.sigmaCounts(eArr, sArr, maxIter, LocalStateMaxRows) match {
-          case Some(arr) =>
-            e0.unpersist(false)
-            val spark = edges.sparkSession
-            import spark.implicits._
-            return arr.toSeq.toDF("src", "id", "level", "sigma")
-          case None => // state too large for the driver: run distributed
-        }
-      } else src.unpersist(false)
-    }
+    val local = onDriver(e0, e0.count(), Fresh(sources))("src", "id", "level", "sigma")(g =>
+      Local.sigmaCounts(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
+    if (local.nonEmpty) return local.get
     // cached PRE-PARTITIONED on the join key: every round's expansion join
     // then reads e exchange-free from cache (InMemoryRelation preserves
     // outputPartitioning) instead of re-shuffling the full edge table once
@@ -681,7 +557,7 @@ object Algorithms {
       iter += 1
     }
     if (!done) throw new BudgetExhausted("shortestPathCounts", maxIter)
-    releaseOnFirstAction(visited, e +: (cutF.leftovers ++ cutV.leftovers): _*)
+    releaseOnFirstAction(visited, Seq(e, e0) ++ cutF.leftovers ++ cutV.leftovers: _*)
   }
 
   /**
@@ -700,31 +576,14 @@ object Algorithms {
    */
   def sssp(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w")).cache()
-    // Distillate gate (see [[Local]]): bit-exact — every kept distance is
-    // produced by the identical `dist + w` relaxation on both paths, and
-    // min is order-free.
-    if (longCols(e, "src", "dst") && longCols(sources.select(col("id")), "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val src = sources.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (src.count() <= LocalGraphMaxVertices) {
-        // NULL weights fall through to the distributed loop: its semantics
-        // (dist + null → null, nulls dropped by min over mixed groups, a
-        // null dist row for null-only-reachable vertices) are not worth
-        // replicating in-JVM, and r14's getDouble here CRASHED on them —
-        // same input must behave identically above and below the gate
-        // (r15 advisory fix)
-        val rows = e.collect()
-        if (rows.forall(r => !r.isNullAt(2))) {
-          val eArr = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          val sArr = collectIds(src)
-          e.unpersist(false); src.unpersist(false)
-          val spark = edges.sparkSession
-          import spark.implicits._
-          return Local.sssp(eArr, sArr, maxIter).toSeq.toDF("id", "dist")
-        }
-      }
-      src.unpersist(false)
-    }
+    // NULL weights fall through to the distributed loop: its semantics
+    // (dist + null → null, nulls dropped by min over mixed groups, a null
+    // dist row for null-only-reachable vertices) are not worth replicating
+    // in-JVM, and r14's getDouble here CRASHED on them — same input must
+    // behave identically above and below the gate (r15 advisory fix)
+    val local = onDriver(e, e.count(), Fresh(sources))("id", "dist")(g =>
+      g.weights.map(w => Local.sssp(g.pairs, w, g.ids(0), maxIter)))
+    if (local.nonEmpty) return local.get
     val cutD = new Cutter; val cutF = new Cutter
     var dist = sources.select(col("id")).distinct().withColumn("dist", lit(0.0))
     var frontier = dist
@@ -789,24 +648,17 @@ object Algorithms {
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Distillate gate: CC is routinely fed a SMALL edge set (an LSH dedup's
-    // pair table, a delta-contracted graph) where the per-round job floor
-    // of the star-contraction loop is the entire cost. At or below the
-    // gate, collect the cached edge set (≤ ~32 MB) and run the union-find
-    // in-JVM — identical min-id labels, one job instead of 2×rounds.
-    // `vertices` stays distributed either way (only the edge-induced
-    // labeling collects).
+    // CC is routinely fed a SMALL edge set (an LSH dedup's pair table, a
+    // delta-contracted graph) — the local union-find answers it in one job
+    // instead of 2×rounds. `vertices` stays distributed either way (only
+    // the edge-induced labeling collects).
     val eCount = e0.count()
-    if (eCount <= localGraphGate(edges) && longCols(e0, "src", "dst")) {
-      val arr = collectPairs(e0.select(col("src"), col("dst")))
-      e0.unpersist(false)
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      val labels = localComponentLabels(arr).toSeq.toDF("id", "component")
+    val local = onDriver(e0, eCount)("id", "component")(g =>
+      Some(Local.componentLabels(g.pairs)))
+    if (local.nonEmpty)
       return vertices.select(col("id")).distinct()
-        .join(labels.filter(col("id") =!= col("component")), Seq("id"), "left")
+        .join(local.get.filter(col("id") =!= col("component")), Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    }
     // distributed loop: root the rounds at a lineage-free leaf (per-round
     // planning over a deep upstream tree was the r13 finding — 40+ s of
     // driver gaps on the minhash pair graph); the checkpoint reads the
@@ -1076,15 +928,9 @@ object Algorithms {
     val cutter = new Cutter
     var e = cutter(canonicalEdges(edges), 0)
     var n = e.count()
-    // Distillate gate (see [[Local]]): exact synchronous peel, round for
-    // round (same convergence and budget behavior).
-    if (longCols(e, "a", "b") && n <= localGraphGate(edges)) {
-      val eArr = collectPairs(e)
-      cutter.leftovers.foreach(_.unpersist(false))
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return Local.kCore(eArr, k, maxIter).toSeq.toDF("id")
-    }
+    val local = onDriver(e, n)("id")(g =>
+      Some(Local.kCore(g.pairs, k, maxIter).map(Tuple1(_))))
+    if (local.nonEmpty) return local.get
     var iter = 0
     var converged = n == 0
     while (iter < maxIter && !converged) {
@@ -1135,15 +981,8 @@ object Algorithms {
     val cutter = new Cutter
     var e = cutter(canonicalEdges(edges), 0)
     var n = e.count()
-    // Distillate gate (see [[Local]]): exact synchronous support peel,
-    // round for round.
-    if (longCols(e, "a", "b") && n <= localGraphGate(edges)) {
-      val eArr = collectPairs(e)
-      cutter.leftovers.foreach(_.unpersist(false))
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return Local.kTruss(eArr, k, maxIter).toSeq.toDF("a", "b")
-    }
+    val local = onDriver(e, n)("a", "b")(g => Some(Local.kTruss(g.pairs, k, maxIter)))
+    if (local.nonEmpty) return local.get
     var iter = 0
     var converged = n == 0
     while (iter < maxIter && !converged) {
@@ -1197,22 +1036,9 @@ object Algorithms {
       .distinct()
       .select(col("src").as("id"), col("dst").as("nb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Distillate gate (see [[Local]]): exact integer argmax with the same
-    // (count desc, label asc) tie-break, round for round.
-    if (longCols(sym, "id", "nb") &&
-        longCols(vertices.select(col("id")), "id") &&
-        sym.count() <= localGraphGate(edges)) {
-      val vsD = vertices.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (vsD.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(sym)
-        val vArr = collectIds(vsD)
-        sym.unpersist(false); vsD.unpersist(false)
-        val spark = vertices.sparkSession
-        import spark.implicits._
-        return Local.lpa(vArr, eArr, iters).toSeq.toDF("id", "community")
-      }
-      vsD.unpersist(false)
-    }
+    val local = onDriver(sym, sym.count(), Fresh(vertices))("id", "community")(g =>
+      Some(Local.lpa(g.ids(0), g.pairs, iters)))
+    if (local.nonEmpty) return local.get
     var labels = cutter(vertices.select(col("id")).distinct()
       .withColumn("lab", col("id")), 0)
     for (i <- 1 to iters) {
@@ -1244,58 +1070,10 @@ object Algorithms {
    * PageRank, fixed iteration count (deterministic for oracle-less
    * cross-checks). Dangling mass is redistributed uniformly.
    *
-   * The dangling-mass term is a 1-row aggregate BROADCAST INTO the plan
-   * (crossJoin of a singleton), not a driver-side `.first()`: a per-
-   * iteration driver action is a synchronization barrier per round — 10
-   * blocking round-trips whose latency (stragglers, CPU steal on shared
-   * hosts) adds up; in-plan, the whole chain runs as one job per lineage
-   * cut. Only the vertex count and the periodic eager checkpoints touch
-   * the driver.
-   *
    * @return (id, rank DOUBLE), ranks sum to ~numVertices
    */
-  def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val v = vertices.select(col("id")).distinct().cache()
-    val n = v.count()
-    // the edge derivation can be expensive (a lineitem self-join at the
-    // call sites) — persist it ONCE; the gate count doubles as the cache
-    // fill, and the distributed path's outDeg/links then both read the
-    // cache instead of re-running the derivation (it ran twice before)
-    val e0 = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e0.count()
-    // Distillate gate (see [[Local]]): same iteration, same dangling-mass
-    // formula; double-sum order differs (as it already does between Spark's
-    // own partial aggregates and the oracle) — parity spec-pinned at 1e-12
-    // and oracle-verified at round-6.
-    if (longCols(e0, "src", "dst") && longCols(v, "id") &&
-        m <= localGraphGate(edges) && n <= LocalGraphMaxVertices) {
-      val eArr = collectPairs(e0)
-      val vArr = collectIds(v)
-      e0.unpersist(false); v.unpersist(false)
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      return Local.pageRank(vArr, eArr, iters, damping).toSeq.toDF("id", "rank")
-    }
-    val outDeg = e0.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")).cache()
-    val links = e0.select("src", "dst").join(outDeg, col("src") === col("id")).drop("id").cache()
-    links.count()
-    val cutter = new Cutter
-    var ranks = v.withColumn("rank", lit(1.0))
-    for (i <- 0 until iters) {
-      val contribs = links.join(ranks, links("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("contrib"))
-      // ranks sum to n; non-dangling mass flows via links
-      val dangling = ranks.join(outDeg, Seq("id"), "left_semi")
-        .agg((lit(n.toDouble) - sum("rank")).as("__dm"))
-      val next = v.join(contribs, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"),
-          (lit(1 - damping) + lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("__dm") / lit(n.toDouble))).as("rank"))
-      ranks = cutter(next, i)
-    }
-    releaseOnFirstAction(ranks, Seq(v, e0, outDeg, links) ++ cutter.leftovers: _*)
-  }
+  def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame =
+    uniformPageRank(vertices, edges.select(col("src"), col("dst")), weighted = false, iters, damping)
 
   /**
    * Edge-weighted PageRank: the walker at u follows edge (u, v, w) with
@@ -1303,64 +1081,17 @@ object Algorithms {
    * affinity graph wants (an edge seen 50× should carry 50× the mass of a
    * singleton), degenerating exactly to [[pageRank]] on uniform weights.
    * Vertices whose outgoing weight sums to 0 (or with no out-edges) are
-   * dangling and redistribute uniformly, as in the unweighted form. Same
-   * plan shape and determinism contract: links/out-weights cached once,
-   * the dangling mass a broadcast singleton, fixed iterations → unrolled
-   * oracle.
+   * dangling and redistribute uniformly, as in the unweighted form.
    *
    * @param edges (src, dst, w) — w coerced to double; non-positive total
    *              out-weight makes the source dangling
    * @return (id, rank DOUBLE), ranks sum to ~|V|
    */
   def pageRankWeighted(vertices: DataFrame, edges: DataFrame,
-                       iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val v = vertices.select(col("id")).distinct().cache()
-    val n = v.count()
-    // persist the (possibly expensive) weighted edge derivation once — the
-    // gate count fills the cache, outW/links read it (see [[pageRank]])
-    val e0 = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e0.count()
-    // Distillate gate (see [[Local]]): same iteration and dangling rule
-    // (wsum ≤ 0 ⇒ dangling); double-sum order parity as in [[pageRank]].
-    if (longCols(e0, "src", "dst") && longCols(v, "id") &&
-        m <= localGraphGate(edges) && n <= LocalGraphMaxVertices) {
-      // NULL weights fall through to the distributed loop (see [[sssp]]'s
-      // gate — r14's getDouble here crashed on a null the distributed path
-      // null-propagates through its sums; r15 advisory fix)
-      val rows = e0.collect()
-      if (rows.forall(r => !r.isNullAt(2))) {
-        val eArr = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val vArr = collectIds(v)
-        e0.unpersist(false); v.unpersist(false)
-        val spark = vertices.sparkSession
-        import spark.implicits._
-        return Local.pageRankWeighted(vArr, eArr, iters, damping).toSeq.toDF("id", "rank")
-      }
-    }
-    val outW = e0.select(col("src"), col("w"))
-      .groupBy(col("src").as("id")).agg(sum("w").as("wsum"))
-      .filter(col("wsum") > 0).cache()
-    val links = e0.select(col("src"), col("dst"), col("w"))
-      .join(outW, col("src") === col("id")).drop("id").cache()
-    links.count()
-    val cutter = new Cutter
-    var ranks = v.withColumn("rank", lit(1.0))
-    for (i <- 0 until iters) {
-      val contribs = links.join(ranks, links("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") * col("w") / col("wsum")).as("c"))
-        .groupBy("id").agg(sum("c").as("contrib"))
-      val dangling = ranks.join(outW, Seq("id"), "left_semi")
-        .agg((lit(n.toDouble) - sum("rank")).as("__dm"))
-      val next = v.join(contribs, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"),
-          (lit(1 - damping) + lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-            col("__dm") / lit(n.toDouble))).as("rank"))
-      ranks = cutter(next, i)
-    }
-    releaseOnFirstAction(ranks, Seq(v, e0, outW, links) ++ cutter.leftovers: _*)
-  }
+                       iters: Int = 10, damping: Double = 0.85): DataFrame =
+    uniformPageRank(vertices,
+      edges.select(col("src"), col("dst"), col("w").cast("double").as("w")), weighted = true,
+      iters, damping)
 
   /**
    * Personalized PageRank: random walks restart at the `sources` set instead
@@ -1372,10 +1103,6 @@ object Algorithms {
    * walk). Fixed iteration count, deterministic — oracle-comparable via the
    * same unrolled-CTE device as [[pageRank]].
    *
-   * Same plan shape as [[pageRank]]: links/out-degrees cached once, the
-   * dangling-mass term a broadcast singleton folded into the plan (no
-   * per-iteration driver action), lineage cut every few rounds.
-   *
    * @param sources restart vertices (rows absent from `vertices` are ignored)
    * @return (id, rank DOUBLE), ranks sum to ~1
    */
@@ -1386,44 +1113,79 @@ object Algorithms {
       .join(v, Seq("id"), "left_semi").cache()
     val nS = srcs.count()
     require(nS > 0, "personalizedPageRank needs at least one source present in `vertices`")
-    // persist the edge derivation once (see [[pageRank]]); gate + cache fill
+    // the edge derivation is persisted once: the gate's count fills it
     val e0 = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e0.count()
-    val n0 = v.count()
-    // Distillate gate (see [[Local]]): same teleport-vector iteration;
-    // double-sum order parity as in [[pageRank]].
-    if (longCols(e0, "src", "dst") && longCols(v, "id") &&
-        m <= localGraphGate(edges) && n0 <= LocalGraphMaxVertices) {
-      val eArr = collectPairs(e0)
-      val vArr = collectIds(v)
-      val sArr = collectIds(srcs)
-      e0.unpersist(false); v.unpersist(false); srcs.unpersist(false)
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      return Local.personalizedPageRank(vArr, eArr, sArr, iters, damping)
-        .toSeq.toDF("id", "rank")
+    val local = onDriver(e0, e0.count(), Held(v, v.count()), Held(srcs, nS))("id", "rank") { g =>
+      val (vs, seeds) = (g.ids(0), g.ids(1).toSet)
+      Some(Local.pageRank(vs, g.pairs, Array.fill(g.pairs.length)(1.0),
+        vs.map(id => if (seeds(id)) 1.0 / seeds.size else 0.0), 1.0, iters, damping))
     }
+    if (local.nonEmpty) return local.get
     val p = v.join(srcs.withColumn("__p", lit(1.0 / nS)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__p"), lit(0.0)).as("p")).cache()
-    val outDeg = e0.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")).cache()
-    val links = e0.select("src", "dst").join(outDeg, col("src") === col("id")).drop("id").cache()
+    pageRankLoop(p, e0.withColumn("w", lit(1.0)), 1.0, iters, damping, v, srcs, p, e0)
+  }
+
+  /** [[pageRank]] and [[pageRankWeighted]]: teleport p = 1 on every
+    * vertex, total mass |V|. `e` is (src, dst[, w]); unweighted edges flow
+    * with w = 1. */
+  private def uniformPageRank(vertices: DataFrame, e: DataFrame, weighted: Boolean,
+                              iters: Int, damping: Double): DataFrame = {
+    val v = vertices.select(col("id")).distinct().cache()
+    val n = v.count()
+    // the edge derivation can be expensive (a lineitem self-join at the
+    // call sites) — persist it ONCE; the gate's count fills the cache and
+    // the distributed loop's out-weights and links both read it
+    val e0 = e.persist(StorageLevel.MEMORY_AND_DISK)
+    // NULL weights fall through to the distributed loop (see [[sssp]] —
+    // r14's getDouble here crashed on a null the distributed path
+    // null-propagates through its sums; r15 advisory fix)
+    val local = onDriver(e0, e0.count(), Held(v, n))("id", "rank") { g =>
+      val w = if (weighted) g.weights else Some(Array.fill(g.pairs.length)(1.0))
+      val vs = g.ids(0)
+      w.map(Local.pageRank(vs, g.pairs, _, Array.fill(vs.length)(1.0), vs.length, iters, damping))
+    }
+    if (local.nonEmpty) return local.get
+    pageRankLoop(v.withColumn("p", lit(1.0)), if (weighted) e0 else e0.withColumn("w", lit(1.0)),
+      n.toDouble, iters, damping, v, e0)
+  }
+
+  /**
+   * The PageRank family's one distributed loop — the iteration of
+   * [[Local.pageRank]] over `p` (id, p: teleport share, total `mass`) and
+   * `e` (src, dst, w). Out-weights and links are cached once; `scratch`
+   * (the caller's caches) is released with them on the first action.
+   *
+   * The dangling-mass term is a 1-row aggregate BROADCAST INTO the plan
+   * (crossJoin of a singleton), not a driver-side `.first()`: a per-
+   * iteration driver action is a synchronization barrier per round — 10
+   * blocking round-trips whose latency (stragglers, CPU steal on shared
+   * hosts) adds up; in-plan, the whole chain runs as one job per lineage
+   * cut. Only the periodic eager checkpoints touch the driver.
+   */
+  private def pageRankLoop(p: DataFrame, e: DataFrame, mass: Double, iters: Int,
+                           damping: Double, scratch: DataFrame*): DataFrame = {
+    val outW = e.groupBy(col("src").as("id")).agg(sum("w").as("wsum"))
+      .filter(col("wsum") > 0).cache()
+    val links = e.select(col("src"), col("dst"), col("w"))
+      .join(outW, col("src") === col("id")).drop("id").cache()
     links.count()
     val cutter = new Cutter
     var ranks = p.select(col("id"), col("p").as("rank"))
     for (i <- 0 until iters) {
       val contribs = links.join(ranks, links("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+        .select(col("dst").as("id"), (col("rank") * col("w") / col("wsum")).as("c"))
         .groupBy("id").agg(sum("c").as("contrib"))
-      val dangling = ranks.join(outDeg, Seq("id"), "left_semi")
-        .agg((lit(1.0) - sum("rank")).as("__dm"))
+      val dangling = ranks.join(outW, Seq("id"), "left_semi")
+        .agg((lit(mass) - sum("rank")).as("__dm"))
       val next = p.join(contribs, Seq("id"), "left_outer")
         .crossJoin(broadcast(dangling))
         .select(col("id"),
-          (lit(1 - damping) * col("p") +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("__dm") * col("p"))).as("rank"))
+          (lit(1 - damping) * col("p") + lit(damping) *
+            (coalesce(col("contrib"), lit(0.0)) + col("__dm") * col("p") / lit(mass))).as("rank"))
       ranks = cutter(next, i)
     }
-    releaseOnFirstAction(ranks, Seq(v, srcs, p, e0, outDeg, links) ++ cutter.leftovers: _*)
+    releaseOnFirstAction(ranks, scratch ++ Seq(outW, links) ++ cutter.leftovers: _*)
   }
 
   /**
@@ -1499,15 +1261,8 @@ object Algorithms {
   def hits(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"hits needs iters >= 1, got $iters")
     val e = edges.select("src", "dst").distinct().cache()
-    // Distillate gate (see [[Local]]): same L1-normalized half-steps;
-    // double-sum order parity as in [[pageRank]].
-    if (longCols(e, "src", "dst") && e.count() <= localGraphGate(edges)) {
-      val eArr = collectPairs(e)
-      e.unpersist(false)
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return Local.hits(eArr, iters).toSeq.toDF("id", "hub", "auth")
-    }
+    val local = onDriver(e, e.count())("id", "hub", "auth")(g => Some(Local.hits(g.pairs, iters)))
+    if (local.nonEmpty) return local.get
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct().cache()
     // score frames are |V|-sized; under the broadcast gate each half-step
@@ -1564,21 +1319,9 @@ object Algorithms {
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     require(steps >= 0, s"randomWalks needs steps >= 0, got $steps")
     val e = edges.select("src", "dst").distinct().cache()
-    // Distillate gate (see [[Local]]): exact — the md5-argmin next-hop
-    // strings are replicated byte for byte over the same deduped edges.
-    if (longCols(e, "src", "dst") && longCols(seeds.select(col("id")), "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val sd = seeds.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      if (sd.count() <= LocalGraphMaxVertices) {
-        val eArr = collectPairs(e)
-        val sArr = collectIds(sd)
-        e.unpersist(false); sd.unpersist(false)
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return Local.randomWalks(eArr, sArr, steps).toSeq.toDF("walk_id", "step", "node")
-      }
-      sd.unpersist(false)
-    }
+    val local = onDriver(e, e.count(), Fresh(seeds))("walk_id", "step", "node")(g =>
+      Some(Local.randomWalks(g.pairs, g.ids(0), steps)))
+    if (local.nonEmpty) return local.get
     e.count()
     val cutter = new Cutter
     var cur = seeds.select(col("id")).distinct()
@@ -1661,22 +1404,19 @@ object Algorithms {
     }
     var budget = maxIter
     var live = nodes.count()
-    // ENTRY gate (round 14): the round-13 residual-tail gate only fired
-    // after the distributed trim loop had already paid its per-pass job
-    // floor; when the INITIAL graph is already distillate-sized (and the
-    // vertex set is bounded — trim hasn't yet established live ≤ 2·edges),
-    // go straight to the in-JVM Tarjan.
-    if (live > 0 && live <= LocalGraphMaxVertices &&
-        longCols(e, "src", "dst") && longCols(nodes, "id") &&
-        e.count() <= localGraphGate(edges)) {
-      val vArr = collectIds(nodes.select(col("id")))
-      val eArr = collectPairs(e.select(col("src"), col("dst")))
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      assign(localSccLabels(vArr, eArr).toSeq.toDF("id", "root"))
-      nodes = nodes.filter(lit(false)).localCheckpoint(true)
-      live = 0L
-    }
+    // Finish the live graph with the in-JVM Tarjan when it passes the gate:
+    // identical min-id components (the epilogue relabels to min either way)
+    def tarjanOnDriver(eCount: => Long): Unit =
+      onDriver(e.select(col("src"), col("dst")), eCount, Held(nodes, live))("id", "root")(g =>
+        Some(Local.sccLabels(g.ids(0), g.pairs))).foreach { labels =>
+        assign(labels)
+        nodes = nodes.filter(lit(false)).localCheckpoint(true)
+        live = 0L
+      }
+    // ENTRY gate (round 14): the residual-tail gate below only fires after
+    // the distributed trim loop has already paid its per-pass job floor; an
+    // INITIAL graph that is already distillate-sized goes straight to Tarjan
+    if (live > 0) tarjanOnDriver(e.count())
     // Small-state tail: once the live subgraph is tiny relative to the
     // cluster, per-round task-scheduling latency dominates the actual work
     // (measured 0.37 s/round on a 1868-node graph at 32 shuffle
@@ -1685,22 +1425,14 @@ object Algorithms {
     // vertices) keep full parallelism.
     def squeeze(df: DataFrame): DataFrame =
       if (live <= 1000000L) df.coalesce(1) else df
-    val __dbg = sys.env.contains("GRAFT_SCC_DEBUG")
-    var __t = System.nanoTime()
-    def __lap(tag: String): Unit = if (__dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[scc] $tag%-14s ${(now - __t) / 1e9}%6.2f s  budget=$budget")
-      __t = now
-    }
     while (live > 0) {
       // ---- 1. trim the DAG periphery, one peel layer per materialization.
       // (Composing several lazy passes per job looks tempting but each pass
       // references keep/e TWICE — the un-reused plan subtree doubles per
       // pass and analysis cost explodes exponentially; measured 6x slower.)
-      // Only `keep` materializes every pass (its count decides the
-      // fixpoint); the shrinking edge set re-roots every 4th pass.
+      // `keep` materializes every pass (its count decides the fixpoint),
+      // and the shrinking edge set re-roots on it.
       var trimming = true
-      var trimPass = 0
       while (trimming && live > 0) {
         if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
         budget -= 1
@@ -1715,110 +1447,93 @@ object Algorithms {
             .select(col("id"), col("id").as("root")))
           nodes = keep
           live = kept
-          trimPass += 1
           e = squeeze(e.join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi"))
             .localCheckpoint(true)
         }
       }
-      __lap("trim")
       if (live > 0) {
         // re-root the (possibly lazily filtered) edge set once for the
         // color/sweep loops, then build this round's hop augmentation
         e = squeeze(e).localCheckpoint(true)
         val eCount = e.count()
         // Residual-tail gate: the color/sweep machinery pays 2-4 jobs per
-        // LEVEL; once the live subgraph is distillate-sized (post-trim
-        // residuals usually are), collect it and finish with in-JVM Tarjan —
-        // identical min-id components (the epilogue relabels to min either
-        // way), zero further rounds. Big residuals keep the distributed
-        // loop; the gate re-checks every outer round as `live` shrinks.
-        // (post-trim every live vertex has in- and out-degree ≥ 1, so
-        // live ≤ 2·eCount — the edge gate bounds the collect)
-        if (eCount <= localGraphGate(edges)) {
-          val vArr = nodes.select(col("id")).collect().map(_.getLong(0))
-          val eArr = e.select(col("src"), col("dst")).collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          val spark = vertices.sparkSession
-          import spark.implicits._
-          assign(localSccLabels(vArr, eArr).toSeq.toDF("id", "root"))
-          nodes = nodes.filter(lit(false)).localCheckpoint(true)
-          live = 0L
-        } else {
-        val eAug =
-          if (eCount > SccAugMaxEdges) e
-          else {
-            val ab = e.select(col("src").as("a"), col("dst").as("b"))
-            val bc = e.select(col("src").as("b"), col("dst").as("c"))
-            val e2 = ab.join(bc, "b").select(col("a").as("src"), col("c").as("dst"))
-              .filter(col("src") =!= col("dst")).distinct()
-            val cd = e.select(col("src").as("c"), col("dst").as("d"))
-            val e3 = e2.select(col("src").as("a"), col("dst").as("c")).join(cd, "c")
-              .select(col("a").as("src"), col("d").as("dst"))
-              .filter(col("src") =!= col("dst")).distinct()
-            squeeze(e.unionByName(e2).unionByName(e3).distinct()).localCheckpoint(true)
+        // LEVEL; post-trim residuals are usually distillate-sized. Big
+        // residuals keep the distributed loop; the gate re-checks every
+        // outer round as `live` shrinks (post-trim every live vertex has
+        // in- and out-degree ≥ 1, so live ≤ 2·eCount)
+        tarjanOnDriver(eCount)
+        if (live > 0) {
+          val eAug =
+            if (eCount > SccAugMaxEdges) e
+            else {
+              val ab = e.select(col("src").as("a"), col("dst").as("b"))
+              val bc = e.select(col("src").as("b"), col("dst").as("c"))
+              val e2 = ab.join(bc, "b").select(col("a").as("src"), col("c").as("dst"))
+                .filter(col("src") =!= col("dst")).distinct()
+              val cd = e.select(col("src").as("c"), col("dst").as("d"))
+              val e3 = e2.select(col("src").as("a"), col("dst").as("c")).join(cd, "c")
+                .select(col("a").as("src"), col("d").as("dst"))
+                .filter(col("src") =!= col("dst")).distinct()
+              squeeze(e.unionByName(e2).unionByName(e3).distinct()).localCheckpoint(true)
+            }
+          // ---- 2. forward-max coloring to fixpoint (frontier-based over eAug)
+          var color = squeeze(nodes.select(col("id"), col("id").as("color"))).localCheckpoint(true)
+          var colorPending = 0
+          var frontier = color
+          var coloring = true
+          while (coloring) {
+            if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
+            budget -= 1
+            val prop = frontier.join(eAug, frontier("id") === eAug("src"))
+              .groupBy(eAug("dst").as("id")).agg(max("color").as("nc"))
+            val improved = squeeze(prop.join(color, Seq("id"))
+              .filter(col("nc") > col("color"))
+              .select(col("id"), col("nc").as("color")))
+              .localCheckpoint(true)
+            if (improved.count() == 0L) coloring = false
+            else {
+              color = color.join(improved.select("id"), Seq("id"), "left_anti")
+                .unionByName(improved)
+              colorPending += 1
+              if (colorPending >= 4) { color = squeeze(color).localCheckpoint(true); colorPending = 0 }
+              frontier = improved
+            }
           }
-        __lap("augment")
-        // ---- 2. forward-max coloring to fixpoint (frontier-based over eAug)
-        var color = squeeze(nodes.select(col("id"), col("id").as("color"))).localCheckpoint(true)
-        var colorPending = 0
-        var frontier = color
-        var coloring = true
-        while (coloring) {
-          if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
-          budget -= 1
-          val prop = frontier.join(eAug, frontier("id") === eAug("src"))
-            .groupBy(eAug("dst").as("id")).agg(max("color").as("nc"))
-          val improved = squeeze(prop.join(color, Seq("id"))
-            .filter(col("nc") > col("color"))
-            .select(col("id"), col("nc").as("color")))
+          // ---- 3. backward sweep from the roots, within each color class
+          val roots = color.filter(col("color") === col("id")).select(col("id").as("root"))
+          var reached = squeeze(roots.select(col("root"), col("root").as("id"))).localCheckpoint(true)
+          var reachedPending = 0
+          var bf = reached
+          var sweeping = true
+          while (sweeping) {
+            if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
+            budget -= 1
+            val cand = squeeze(bf.join(eAug, bf("id") === eAug("dst"))
+              .select(col("root"), eAug("src").as("id")).distinct()
+              .join(color, Seq("id"))
+              .filter(col("color") === col("root")).drop("color")
+              .join(reached, Seq("root", "id"), "left_anti"))
+              .localCheckpoint(true)
+            if (cand.count() == 0L) sweeping = false
+            else {
+              reached = reached.unionByName(cand)
+              reachedPending += 1
+              if (reachedPending >= 4) { reached = squeeze(reached).localCheckpoint(true); reachedPending = 0 }
+              bf = cand
+            }
+          }
+          val found = reached.select(col("id"), col("root")).localCheckpoint(true)
+          val c = found.count()
+          assign(found)
+          nodes = nodes.join(found.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
+          live -= c
+          e = e.join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
             .localCheckpoint(true)
-          if (improved.count() == 0L) coloring = false
-          else {
-            color = color.join(improved.select("id"), Seq("id"), "left_anti")
-              .unionByName(improved)
-            colorPending += 1
-            if (colorPending >= 4) { color = squeeze(color).localCheckpoint(true); colorPending = 0 }
-            frontier = improved
-          }
         }
-        __lap("color")
-        // ---- 3. backward sweep from the roots, within each color class
-        val roots = color.filter(col("color") === col("id")).select(col("id").as("root"))
-        var reached = squeeze(roots.select(col("root"), col("root").as("id"))).localCheckpoint(true)
-        var reachedPending = 0
-        var bf = reached
-        var sweeping = true
-        while (sweeping) {
-          if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
-          budget -= 1
-          val cand = squeeze(bf.join(eAug, bf("id") === eAug("dst"))
-            .select(col("root"), eAug("src").as("id")).distinct()
-            .join(color, Seq("id"))
-            .filter(col("color") === col("root")).drop("color")
-            .join(reached, Seq("root", "id"), "left_anti"))
-            .localCheckpoint(true)
-          if (cand.count() == 0L) sweeping = false
-          else {
-            reached = reached.unionByName(cand)
-            reachedPending += 1
-            if (reachedPending >= 4) { reached = squeeze(reached).localCheckpoint(true); reachedPending = 0 }
-            bf = cand
-          }
-        }
-        __lap("sweep")
-        val found = reached.select(col("id"), col("root")).localCheckpoint(true)
-        val c = found.count()
-        assign(found)
-        nodes = nodes.join(found.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
-        live -= c
-        e = e.join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
-        } // end distributed color/sweep (residual-tail gate's else)
       }
     }
-    __lap("epilogue")
     // relabel each component to its minimum member id (stable, orderable)
     val minId = assigned.groupBy("root").agg(min("id").as("scc"))
     vsAll.join(assigned.join(minId, "root").select(col("id"), col("scc")), Seq("id"), "left")

@@ -6,21 +6,26 @@ import scala.collection.mutable
  * Driver-local loop bodies for distillate-sized graphs — the in-JVM twins
  * of the distributed iterative algorithms in [[Algorithms]].
  *
+ * THE GATE RULE (one place: `Algorithms.onDriver`): an algorithm runs here
+ * when its edge and id columns are BIGINT, its persisted edge frame has at
+ * most [[Algorithms.LocalGraphMaxEdges]] rows (session override
+ * `graft.localGraphMaxEdges`; 0 forces the distributed loops) and every id
+ * list it collects has at most [[Algorithms.LocalGraphMaxVertices]] rows.
+ * Then the edges and ids collect once, the loop runs in-JVM, and the answer
+ * is parallelized back; the gate's count is the edge cache's fill. Above
+ * the gate the distributed loops run unchanged — a 100 TB graph never
+ * collects.
+ *
  * WHY (measured, round 13/14): on a graph of a few thousand vertices the
  * distributed loops are pure per-round JOB FLOOR — pagerank at sf0.1 is 92
  * Spark jobs / 32 task-seconds for a 30-vertex graph, ppr 113 jobs, mis 53
- * jobs — tens of scheduling round-trips for sub-second real work. The CC
- * union-find / SCC Tarjan gates (round 13) established the device: the
- * corpus-scale derivation stays distributed, and when the DERIVED graph is
- * distillate-sized (≤ [[Algorithms.LocalGraphMaxEdges]], ≈32 MB of long
- * pairs) the fixpoint runs in one collect + one in-JVM loop + one
- * parallelize, instead of 2-10 jobs per round. Above the gate the
- * distributed loops run unchanged — a 100 TB graph never collects.
+ * jobs — tens of scheduling round-trips for sub-second real work.
  *
  * EQUIVALENCE CONTRACT (what makes the gate safe, per algorithm):
  *  - integer/lexicographic fixpoints (BFS levels, σ counts, k-core,
- *    k-truss, LPA argmax, MIS md5 priorities, md5-argmin walks) are
- *    replicated round-for-round and are bit-exact by construction;
+ *    k-truss, LPA argmax, MIS md5 priorities, md5-argmin walks, component
+ *    and SCC min-id labels) are replicated round-for-round and are
+ *    bit-exact by construction;
  *  - min-plus (SSSP) relaxes the same (dist + w) candidates round by
  *    round — every kept double is produced by the identical two-operand
  *    expression, so it is bit-exact too;
@@ -51,8 +56,10 @@ private[graft] object Local {
 
   /** Dense vertex index + CSR out-adjacency (multiplicity preserved —
     * σ counting must see parallel edges exactly as the distributed join
-    * does). Vertices = every id in `extraIds` plus every edge endpoint. */
-  final class Csr(edges: Array[(Long, Long)], extraIds: Array[Long]) {
+    * does). Vertices = every id in `extraIds` plus every edge endpoint, in
+    * first-seen order. `weights`, when given, are parallel to `edges`. */
+  final class Csr(edges: Array[(Long, Long)], extraIds: Array[Long],
+                  weights: Array[Double] = Array.emptyDoubleArray) {
     val idx = new mutable.LongMap[Int]()
     val ids = new mutable.ArrayBuffer[Long]()
     private def at(v: Long): Int =
@@ -68,11 +75,17 @@ private[graft] object Local {
       while (i < n) { o(i + 1) = o(i) + deg(i); i += 1 }
       o
     }
+    /** Edge weights parallel to [[adj]] (empty when none were given). */
+    val wt: Array[Double] = new Array[Double](if (weights.isEmpty) 0 else off(n))
     val adj: Array[Int] = {
       val a = new Array[Int](off(n))
       val fill = off.clone()
+      var k = 0
       edges.foreach { case (s, d) =>
-        val si = idx(s); a(fill(si)) = idx(d); fill(si) += 1 }
+        val si = idx(s)
+        if (wt.nonEmpty) wt(fill(si)) = weights(k)
+        a(fill(si)) = idx(d); fill(si) += 1; k += 1
+      }
       a
     }
     def outFrom(v: Int): Range = off(v) until off(v + 1)
@@ -104,7 +117,10 @@ private[graft] object Local {
 
   /** Per-source BFS levels — [[Algorithms.bfsPerSource]]. Returns None when
     * the accumulated (src, id, level) state would exceed `maxRows` (caller
-    * falls back to the distributed loop, whose state is disk-backed). */
+    * falls back to the distributed loop, whose state is disk-backed) —
+    * unless the tripping source's frontier is still live at `maxIter`: that
+    * run throws [[Algorithms.BudgetExhausted]] here, as the distributed loop
+    * would after `maxIter` more rounds of cluster work. */
   def bfsPerSource(edges: Array[(Long, Long)], sources: Array[Long],
                    maxIter: Int, maxRows: Long): Option[Array[(Long, Long, Int)]] = {
     val g = new Csr(edges, sources)
@@ -130,8 +146,9 @@ private[graft] object Local {
         iter += 1
         // cap checked per ROUND, not per completed source: one over-budget
         // source aborts mid-flood instead of first materializing its whole
-        // reachability on the driver (r14 advisory)
-        if (out.length > maxRows) return None
+        // reachability on the driver (r14 advisory); a frontier live at
+        // maxIter falls out of the loop to the budget throw instead
+        if (out.length > maxRows && (frontier.isEmpty || iter < maxIter)) return None
       }
       if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("bfsPerSource", maxIter)
     }
@@ -175,203 +192,100 @@ private[graft] object Local {
         }
         frontier = next.toArray
         iter += 1
-        // per-ROUND cap check — see [[bfsPerSource]]
-        if (out.length > maxRows) return None
+        // per-ROUND cap check and budget precedence — see [[bfsPerSource]]
+        if (out.length > maxRows && (frontier.isEmpty || iter < maxIter)) return None
       }
       if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("shortestPathCounts", maxIter)
     }
     Some(out.toArray)
   }
 
-  /** Frontier Bellman–Ford — [[Algorithms.sssp]]. Round-synchronous: each
-    * round relaxes only edges out of last round's improved set; every kept
-    * distance is produced by the identical `dist + w` expression, so values
-    * are bit-equal to the distributed loop's. */
-  def sssp(edges: Array[(Long, Long, Double)], sources: Array[Long],
+  /** Frontier Bellman–Ford — [[Algorithms.sssp]], `w` parallel to
+    * `edges`. Round-synchronous: each round relaxes only edges out of last
+    * round's improved set; every kept distance is produced by the identical
+    * `dist + w` expression, so values are bit-equal to the distributed
+    * loop's. */
+  def sssp(edges: Array[(Long, Long)], w: Array[Double], sources: Array[Long],
            maxIter: Int): Array[(Long, Double)] = {
-    val idx = new mutable.LongMap[Int]()
-    val ids = new mutable.ArrayBuffer[Long]()
-    def at(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
-    sources.foreach(at)
-    edges.foreach { case (s, d, _) => at(s); at(d) }
-    val n = ids.length
-    val deg = new Array[Int](n)
-    edges.foreach { case (s, _, _) => deg(idx(s)) += 1 }
-    val off = new Array[Int](n + 1)
-    var oi = 0
-    while (oi < n) { off(oi + 1) = off(oi) + deg(oi); oi += 1 }
-    val adjV = new Array[Int](off(n))
-    val adjW = new Array[Double](off(n))
-    val fill = off.clone()
-    edges.foreach { case (s, d, w) =>
-      val si = idx(s); adjV(fill(si)) = idx(d); adjW(fill(si)) = w; fill(si) += 1 }
-    val dist = new Array[Double](n)
-    val has = new Array[Boolean](n)
-    var frontier = sources.distinct.map(idx(_))
+    val g = new Csr(edges, sources, w)
+    val dist = new Array[Double](g.n)
+    val has = new Array[Boolean](g.n)
+    var frontier = sources.distinct.map(g.idx(_))
     frontier.foreach { v => dist(v) = 0.0; has(v) = true }
     var iter = 0
     while (frontier.nonEmpty && iter < maxIter) {
       // min candidate per destination this round, then improve
       val cand = new mutable.LongMap[Double]()
       frontier.foreach { v =>
-        var ei = off(v)
-        while (ei < off(v + 1)) {
-          val w = adjV(ei)
-          val nd = dist(v) + adjW(ei)
-          val k = w.toLong
+        g.outFrom(v).foreach { ei =>
+          val nd = dist(v) + g.wt(ei)
+          val k = g.adj(ei).toLong
           if (!cand.contains(k) || nd < cand(k)) cand.update(k, nd)
-          ei += 1
         }
       }
       val improved = new mutable.ArrayBuffer[Int]()
       cand.foreach { case (wi, nd) =>
-        val w = wi.toInt
-        if (!has(w) || nd < dist(w)) { dist(w) = nd; has(w) = true; improved += w }
+        val v = wi.toInt
+        if (!has(v) || nd < dist(v)) { dist(v) = nd; has(v) = true; improved += v }
       }
       frontier = improved.toArray
       iter += 1
     }
     if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("sssp", maxIter)
-    (0 until n).iterator.filter(has(_)).map(i => (ids(i), dist(i))).toArray
+    (0 until g.n).iterator.filter(has(_)).map(i => (g.ids(i), dist(i))).toArray
   }
 
-  /** PageRank — [[Algorithms.pageRank]]'s exact iteration: contribs summed
-    * per destination, dangling mass = n − Σ rank over out-degreed vertices,
-    * rank' = (1−d) + d·(contrib + dm/n). Vertices = `vs` only (edge
-    * endpoints outside `vs` receive/contribute exactly as the distributed
-    * joins decide: sources outside vs contribute nothing, dsts outside vs
-    * are dropped). */
-  def pageRank(vs: Array[Long], edges: Array[(Long, Long)],
-               iters: Int, damping: Double): Array[(Long, Double)] = {
-    val idx = new mutable.LongMap[Int]()
-    vs.foreach { v => if (!idx.contains(v)) idx.update(v, idx.size) }
-    val n = idx.size
-    val nD = n.toDouble
-    // links restricted to src ∈ vs (rank join is inner); dst outside vs drops
-    val outDeg = new mutable.LongMap[Long]()
-    edges.foreach { case (s, _) => outDeg.update(s, outDeg.getOrElse(s, 0L) + 1L) }
-    val live = edges.filter { case (s, d) => idx.contains(s) }
-    var rank = Array.fill(n)(1.0)
-    val hasOut = new Array[Boolean](n)
-    idx.foreach { case (v, i) => hasOut(i) = outDeg.contains(v) }
-    var it = 0
-    while (it < iters) {
-      val contrib = new Array[Double](n)
-      val seen = new Array[Boolean](n)
-      live.foreach { case (s, d) =>
-        idx.get(d).foreach { di =>
-          contrib(di) += rank(idx(s)) / outDeg(s).toDouble
-          seen(di) = true
-        }
-      }
-      var dm = nD
-      var i = 0
-      while (i < n) { if (hasOut(i)) dm -= rank(i); i += 1 }
-      val next = new Array[Double](n)
-      i = 0
-      while (i < n) {
-        val c = if (seen(i)) contrib(i) else 0.0
-        next(i) = (1 - damping) + damping * (c + dm / nD)
-        i += 1
-      }
-      rank = next
-      it += 1
-    }
-    val out = new Array[(Long, Double)](n)
-    idx.foreach { case (v, i) => out(i) = (v, rank(i)) }
-    out
-  }
-
-  /** Weighted PageRank — [[Algorithms.pageRankWeighted]]: flow ∝ w/Σw;
-    * sources with non-positive total out-weight are dangling. */
-  def pageRankWeighted(vs: Array[Long], edges: Array[(Long, Long, Double)],
-                       iters: Int, damping: Double): Array[(Long, Double)] = {
-    val idx = new mutable.LongMap[Int]()
-    vs.foreach { v => if (!idx.contains(v)) idx.update(v, idx.size) }
-    val n = idx.size
-    val nD = n.toDouble
-    val wsumAll = new mutable.LongMap[Double]()
-    edges.foreach { case (s, _, w) => wsumAll.update(s, wsumAll.getOrElse(s, 0.0) + w) }
+  /** The PageRank family's one loop — [[Algorithms.pageRank]],
+    * [[Algorithms.pageRankWeighted]] and [[Algorithms.personalizedPageRank]].
+    * `vs` is distinct, `w` parallel to `edges`, and the teleport vector `p`
+    * parallel to `vs` with total `mass` (uniform: p = 1, mass = |vs|;
+    * personalized: p = 1/|S| on the seeds, mass = 1). Ranks start at p and
+    * iterate rank' = (1−d)·p + d·(contrib + dm·p / mass): contribs flow
+    * (rank·w) / Σw out of every source whose total out-weight is positive,
+    * and the dangling mass dm = mass − Σ rank over those sources. Vertices
+    * = `vs` only: edges out of or into other ids carry nothing. The
+    * expression order is each variant's historical one (w = 1 and
+    * mass = 1 are exact), so results are bit-stable. */
+  def pageRank(vs: Array[Long], edges: Array[(Long, Long)], w: Array[Double],
+               p: Array[Double], mass: Double, iters: Int,
+               damping: Double): Array[(Long, Double)] = {
+    val n = vs.length
+    val idx = new mutable.LongMap[Int](n)
+    vs.indices.foreach(i => idx.update(vs(i), i))
     val wsum = new mutable.LongMap[Double]()
-    wsumAll.foreach { case (s, w) => if (w > 0) wsum.update(s, w) }
-    val live = edges.filter { case (s, _, _) => wsum.contains(s) && idx.contains(s) }
-    var rank = Array.fill(n)(1.0)
-    val hasOut = new Array[Boolean](n)
-    idx.foreach { case (v, i) => hasOut(i) = wsum.contains(v) }
-    var it = 0
-    while (it < iters) {
-      val contrib = new Array[Double](n)
-      val seen = new Array[Boolean](n)
-      live.foreach { case (s, d, w) =>
-        idx.get(d).foreach { di =>
-          contrib(di) += rank(idx(s)) * w / wsum(s)
-          seen(di) = true
-        }
-      }
-      var dm = nD
-      var i = 0
-      while (i < n) { if (hasOut(i)) dm -= rank(i); i += 1 }
-      val next = new Array[Double](n)
-      i = 0
-      while (i < n) {
-        val c = if (seen(i)) contrib(i) else 0.0
-        next(i) = (1 - damping) + damping * (c + dm / nD)
-        i += 1
-      }
-      rank = next
-      it += 1
+    edges.indices.foreach { k =>
+      val s = edges(k)._1
+      wsum.update(s, wsum.getOrElse(s, 0.0) + w(k))
     }
-    val out = new Array[(Long, Double)](n)
-    idx.foreach { case (v, i) => out(i) = (v, rank(i)) }
-    out
-  }
-
-  /** Personalized PageRank — [[Algorithms.personalizedPageRank]]:
-    * teleport vector p = 1/|S| on sources∩vs; rank' = (1−d)·p +
-    * d·(contrib + dm·p) with dm = 1 − Σ rank over out-degreed vertices. */
-  def personalizedPageRank(vs: Array[Long], edges: Array[(Long, Long)],
-                           sources: Array[Long], iters: Int,
-                           damping: Double): Array[(Long, Double)] = {
-    val idx = new mutable.LongMap[Int]()
-    vs.foreach { v => if (!idx.contains(v)) idx.update(v, idx.size) }
-    val n = idx.size
-    val srcs = sources.distinct.filter(idx.contains)
-    require(srcs.nonEmpty,
-      "personalizedPageRank needs at least one source present in `vertices`")
-    val p = new Array[Double](n)
-    srcs.foreach(s => p(idx(s)) = 1.0 / srcs.length)
-    val outDeg = new mutable.LongMap[Long]()
-    edges.foreach { case (s, _) => outDeg.update(s, outDeg.getOrElse(s, 0L) + 1L) }
-    val live = edges.filter { case (s, _) => idx.contains(s) }
-    val hasOut = new Array[Boolean](n)
-    idx.foreach { case (v, i) => hasOut(i) = outDeg.contains(v) }
+    // the flowing edges, in input order (contribs sum in that order)
+    val live = edges.indices.filter { k =>
+      val (s, d) = edges(k)
+      wsum(s) > 0 && idx.contains(s) && idx.contains(d)
+    }.toArray
+    val from = live.map(k => idx(edges(k)._1))
+    val to = live.map(k => idx(edges(k)._2))
+    val lw = live.map(w(_))
+    val lsum = live.map(k => wsum(edges(k)._1))
+    val hasOut = vs.map(v => wsum.getOrElse(v, 0.0) > 0)
     var rank = p.clone()
     var it = 0
     while (it < iters) {
       val contrib = new Array[Double](n)
-      val seen = new Array[Boolean](n)
-      live.foreach { case (s, d) =>
-        idx.get(d).foreach { di =>
-          contrib(di) += rank(idx(s)) / outDeg(s).toDouble
-          seen(di) = true
-        }
-      }
-      var dm = 1.0
+      var k = 0
+      while (k < live.length) { contrib(to(k)) += rank(from(k)) * lw(k) / lsum(k); k += 1 }
+      var dm = mass
       var i = 0
       while (i < n) { if (hasOut(i)) dm -= rank(i); i += 1 }
       val next = new Array[Double](n)
       i = 0
       while (i < n) {
-        val c = if (seen(i)) contrib(i) else 0.0
-        next(i) = (1 - damping) * p(i) + damping * (c + dm * p(i))
+        next(i) = (1 - damping) * p(i) + damping * (contrib(i) + dm * p(i) / mass)
         i += 1
       }
       rank = next
       it += 1
     }
-    val out = new Array[(Long, Double)](n)
-    idx.foreach { case (v, i) => out(i) = (v, rank(i)) }
-    out
+    vs.indices.map(i => (vs(i), rank(i))).toArray
   }
 
   /** HITS — [[Algorithms.hits]]: L1-normalized half-steps over the DEDUPED
@@ -654,5 +568,90 @@ private[graft] object Local {
       }
     }
     dsum
+  }
+
+  /** Union-find components — [[Algorithms.connectedComponents]]: label =
+    * MIN member id of each component, one (id, label) row per distinct
+    * endpoint. */
+  def componentLabels(es: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val idx = new mutable.LongMap[Int]()
+    val ids = mutable.ArrayBuffer[Long]()
+    def at(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    val parent = mutable.ArrayBuffer[Int]()
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    es.foreach { case (s, d) =>
+      val (si, di) = (at(s), at(d))
+      while (parent.length < ids.length) parent += parent.length
+      val (rs, rd) = (find(si), find(di))
+      if (rs != rd) parent(rd) = rs
+    }
+    while (parent.length < ids.length) parent += parent.length
+    val minOf = new mutable.LongMap[Long]()
+    var i = 0
+    while (i < ids.length) {
+      val r = find(i).toLong
+      val v = ids(i)
+      minOf.updateWith(r)(o => Some(o.fold(v)(math.min(_, v))))
+      i += 1
+    }
+    Array.tabulate(ids.length)(j => (ids(j), minOf(find(j).toLong)))
+  }
+
+  /** Iterative Tarjan — [[Algorithms.stronglyConnectedComponents]]:
+    * (id, min member id of its SCC) for every vertex of the distinct `vs`,
+    * over the edges whose BOTH endpoints are in `vs`. */
+  def sccLabels(vs: Array[Long], es: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val known = new mutable.LongMap[Boolean](vs.length)
+    vs.foreach(known.update(_, true))
+    val g = new Csr(es.filter { case (s, d) => known.contains(s) && known.contains(d) }, vs)
+    val n = g.n
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new mutable.ArrayBuffer[Int]()
+    val label = new Array[Long](n)
+    var counter = 0
+    // explicit DFS stack: (vertex, next child pointer)
+    val dfsV = new mutable.ArrayBuffer[Int]()
+    val dfsC = new mutable.ArrayBuffer[Int]()
+    var root = 0
+    while (root < n) {
+      if (index(root) < 0) {
+        dfsV += root; dfsC += g.off(root)
+        index(root) = counter; low(root) = counter; counter += 1
+        stack += root; onStack(root) = true
+        while (dfsV.nonEmpty) {
+          val v = dfsV.last
+          if (dfsC.last < g.off(v + 1)) {
+            val w = g.adj(dfsC.last)
+            dfsC(dfsC.length - 1) += 1
+            if (index(w) < 0) {
+              index(w) = counter; low(w) = counter; counter += 1
+              stack += w; onStack(w) = true
+              dfsV += w; dfsC += g.off(w)
+            } else if (onStack(w) && index(w) < low(v)) low(v) = index(w)
+          } else {
+            dfsV.remove(dfsV.length - 1); dfsC.remove(dfsC.length - 1)
+            if (dfsV.nonEmpty && low(v) < low(dfsV.last)) low(dfsV.last) = low(v)
+            if (low(v) == index(v)) { // v roots an SCC: pop it, label = min id
+              var j = stack.length - 1
+              var mn = Long.MaxValue
+              while (stack(j) != v) { mn = math.min(mn, g.ids(stack(j))); j -= 1 }
+              mn = math.min(mn, g.ids(v))
+              while (stack.length > j) {
+                val w = stack.remove(stack.length - 1)
+                onStack(w) = false; label(w) = mn
+              }
+            }
+          }
+        }
+      }
+      root += 1
+    }
+    Array.tabulate(n)(j => (g.ids(j), label(j)))
   }
 }

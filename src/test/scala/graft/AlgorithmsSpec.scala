@@ -1,6 +1,7 @@
 package graft
 
-import graft.algorithms.Algorithms
+import graft.algorithms.{Algorithms, Local}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
 
 /**
@@ -10,6 +11,16 @@ import org.apache.spark.sql.functions.lit
  */
 class AlgorithmsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `f` with the driver-local gate forced off: the distributed loops run. */
+  private def distributed[A](f: => A): A = {
+    spark.conf.set("graft.localGraphMaxEdges", "0")
+    try f finally spark.conf.unset("graft.localGraphMaxEdges")
+  }
+
+  /** `f` on both sides of the gate: under the default (toy graphs run the
+    * driver-local loops), then with it forced off. */
+  private def bothSides[A](f: => A): (A, A) = (f, distributed(f))
 
   // reference DocSpec graph: 0→1→2→3, 0→2, 2→4 with weights
   private def wEdges = Seq(
@@ -69,10 +80,9 @@ class AlgorithmsSpec extends SparkSpec {
     }
     // the local union-find gate never exhausts a budget — force the
     // distributed star-contraction loop to pin ITS budget behavior
-    spark.conf.set("graft.localGraphMaxEdges", "0")
-    try intercept[Algorithms.BudgetExhausted] {
+    distributed(intercept[Algorithms.BudgetExhausted] {
       Algorithms.connectedComponents(vs, chain, maxIter = 1).count()
-    } finally spark.conf.unset("graft.localGraphMaxEdges")
+    })
     // and the same graph under an adequate budget is correct
     val lv = Algorithms.bfs(chain, Seq(0L).toDF("id"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -276,23 +286,51 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("algorithm scratch caches are released after the first materializing action") {
-    // iters = 1 keeps the run short of the Cutter's first localCheckpoint
-    // (every 3 rounds), so every persisted frame — the symmetrized edge
-    // cache and both iteration tips — is a plain recomputable cache and the
-    // release must leave the session completely clean.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // Each input stays short of the Cutter's first localCheckpoint (every 3
+    // rounds), so every persisted frame — edge caches and iteration tips —
+    // is a plain recomputable cache and the release must leave the session
+    // completely clean.
+    def released(result: => DataFrame): Set[Row] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val df = result
+      val first = df.collect().toSet
+      // the release listener fires async on the listener bus — poll briefly
+      val deadline = System.currentTimeMillis() + 20000
+      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(leaked.isEmpty, s"algorithm scratch not released: RDDs $leaked")
+      // a second action recomputes the same result without the caches
+      assert(df.collect().toSet == first)
+      first
+    }
+    // label propagation, iters = 1; distributed: the symmetrized edge
+    // cache and both tips
     val vs = Seq(1L, 2L, 3L, 9L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val result = Algorithms.labelPropagation(vs, es, iters = 1)
-    val first = result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the release listener fires async on the listener bus — poll briefly
-    val deadline = System.currentTimeMillis() + 20000
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"algorithm scratch not released: RDDs $leaked")
-    // a second action recomputes the same result without the caches
-    val second = result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(second == first && first(2L) == 1L)
+    val (lpaL, lpaD) = bothSides(released(Algorithms.labelPropagation(vs, es, iters = 1))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(lpaL == lpaD && lpaL(2L) == 1L)
+    // distributed shortest-path counts on one hop: the gate's edge cache
+    // too, not only the pre-partitioned one the loop reads
+    val sigma = distributed(released(
+      Algorithms.shortestPathCounts(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"))))
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+    assert(sigma == Set((1L, 1L, 0, 1L), (1L, 2L, 1, 1L)))
+  }
+
+  test("local per-source BFS: a row cap tripped with the frontier live at maxIter throws") {
+    // chain 0→…→10 from 0: the state holds r + 1 rows after round r, so a
+    // cap of 3 trips in round 3
+    val chain = (0L until 10L).map(i => (i, i + 1)).toArray
+    intercept[Algorithms.BudgetExhausted](
+      Local.bfsPerSource(chain, Array(0L), maxIter = 3, maxRows = 3))
+    intercept[Algorithms.BudgetExhausted](
+      Local.sigmaCounts(chain, Array(0L), maxIter = 3, maxRows = 3))
+    // tripped before maxIter: decline, the distributed loop takes over
+    assert(Local.bfsPerSource(chain, Array(0L), maxIter = 5, maxRows = 3).isEmpty)
+    assert(Local.sigmaCounts(chain, Array(0L), maxIter = 5, maxRows = 3).isEmpty)
+    // under the cap: the whole answer
+    assert(Local.bfsPerSource(chain, Array(0L), maxIter = 20, maxRows = 100).get.length == 11)
   }
 
   test("betweenness: path graph, all sources (k = n) matches hand computation") {
@@ -441,12 +479,6 @@ class AlgorithmsSpec extends SparkSpec {
     // path against the distributed loop on seeded random graphs. Integer /
     // lexicographic results must be identical; double-sum results agree to
     // 1e-9 (the published queries round to 6 decimals).
-    def run[A](f: => A): (A, A) = {
-      val local = f
-      spark.conf.set("graft.localGraphMaxEdges", "0")
-      val dist = try f finally spark.conf.unset("graft.localGraphMaxEdges")
-      (local, dist)
-    }
     def eq(name: String, seed: Int)(l: Map[Long, Double], d: Map[Long, Double]): Unit = {
       assert(l.keySet == d.keySet, s"$name keys, seed=$seed")
       l.foreach { case (k, v) =>
@@ -463,49 +495,49 @@ class AlgorithmsSpec extends SparkSpec {
         .toDF("src", "dst", "w")
       val srcs = Seq(0L, 3L, 7L).toDF("id")
 
-      val (bfsL, bfsD) = run(Algorithms.bfs(es, srcs)
+      val (bfsL, bfsD) = bothSides(Algorithms.bfs(es, srcs)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
       assert(bfsL == bfsD, s"bfs, seed=$seed")
-      val (bpsL, bpsD) = run(Algorithms.bfsPerSource(es, srcs)
+      val (bpsL, bpsD) = bothSides(Algorithms.bfsPerSource(es, srcs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
       assert(bpsL == bpsD, s"bfsPerSource, seed=$seed")
-      val (sigL, sigD) = run(Algorithms.shortestPathCounts(es, srcs)
+      val (sigL, sigD) = bothSides(Algorithms.shortestPathCounts(es, srcs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet)
       assert(sigL == sigD, s"shortestPathCounts, seed=$seed")
-      val (ssspL, ssspD) = run(Algorithms.sssp(wes, srcs)
+      val (ssspL, ssspD) = bothSides(Algorithms.sssp(wes, srcs)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       assert(ssspL == ssspD, s"sssp (bit-exact), seed=$seed") // min-plus: exact
-      val (prL, prD) = run(Algorithms.pageRank(vs, es, iters = 5)
+      val (prL, prD) = bothSides(Algorithms.pageRank(vs, es, iters = 5)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       eq("pageRank", seed)(prL, prD)
-      val (pwL, pwD) = run(Algorithms.pageRankWeighted(vs, wes, iters = 5)
+      val (pwL, pwD) = bothSides(Algorithms.pageRankWeighted(vs, wes, iters = 5)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       eq("pageRankWeighted", seed)(pwL, pwD)
-      val (ppL, ppD) = run(Algorithms.personalizedPageRank(vs, es, srcs, iters = 5)
+      val (ppL, ppD) = bothSides(Algorithms.personalizedPageRank(vs, es, srcs, iters = 5)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       eq("personalizedPageRank", seed)(ppL, ppD)
-      val (hL, hD) = run(Algorithms.hits(es, iters = 3)
+      val (hL, hD) = bothSides(Algorithms.hits(es, iters = 3)
         .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap)
       assert(hL.keySet == hD.keySet, s"hits keys, seed=$seed")
       hL.foreach { case (k, (hub, auth)) =>
         assert(math.abs(hub - hD(k)._1) < 1e-9 && math.abs(auth - hD(k)._2) < 1e-9,
           s"hits($k), seed=$seed") }
-      val (lpaL, lpaD) = run(Algorithms.labelPropagation(vs, es, iters = 3)
+      val (lpaL, lpaD) = bothSides(Algorithms.labelPropagation(vs, es, iters = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(lpaL == lpaD, s"lpa, seed=$seed")
-      val (kcL, kcD) = run(Algorithms.kCore(es, k = 3)
+      val (kcL, kcD) = bothSides(Algorithms.kCore(es, k = 3)
         .collect().map(_.getLong(0)).toSet)
       assert(kcL == kcD, s"kCore, seed=$seed")
-      val (ktL, ktD) = run(Algorithms.kTruss(es, k = 3)
+      val (ktL, ktD) = bothSides(Algorithms.kTruss(es, k = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
       assert(ktL == ktD, s"kTruss, seed=$seed")
-      val (misL, misD) = run(Algorithms.maximalIndependentSet(vs, es)
+      val (misL, misD) = bothSides(Algorithms.maximalIndependentSet(vs, es)
         .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
       assert(misL == misD, s"mis, seed=$seed")
-      val (rwL, rwD) = run(Algorithms.randomWalks(es, srcs, steps = 5)
+      val (rwL, rwD) = bothSides(Algorithms.randomWalks(es, srcs, steps = 5)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
       assert(rwL == rwD, s"randomWalks, seed=$seed")
-      val (btL, btD) = run(Algorithms.betweennessLandmark(vs, es, k = 4)
+      val (btL, btD) = bothSides(Algorithms.betweennessLandmark(vs, es, k = 4)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       eq("betweennessLandmark", seed)(btL, btD)
     }
@@ -524,12 +556,6 @@ class AlgorithmsSpec extends SparkSpec {
     // graphs; every toy test above now exercises THEM, so the distributed
     // star-contraction and trim/color/sweep machinery must be pinned
     // explicitly — identical labels on the same seeded random graphs
-    def run[A](f: => A): (A, A) = {
-      val local = f
-      spark.conf.set("graft.localGraphMaxEdges", "0")
-      val dist = try f finally spark.conf.unset("graft.localGraphMaxEdges")
-      (local, dist)
-    }
     for (seed <- Seq(3, 11, 99)) {
       val rnd = new scala.util.Random(seed)
       val n = 30
@@ -537,10 +563,10 @@ class AlgorithmsSpec extends SparkSpec {
         .filter(e => e._1 != e._2).distinct
       val vs = (0L until n.toLong).toDF("id")
       val es = edges.toDF("src", "dst")
-      val (ccL, ccD) = run(Algorithms.connectedComponents(vs, es)
+      val (ccL, ccD) = bothSides(Algorithms.connectedComponents(vs, es)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(ccL == ccD, s"cc local != distributed, seed=$seed")
-      val (sccL, sccD) = run(Algorithms.stronglyConnectedComponents(vs, es)
+      val (sccL, sccD) = bothSides(Algorithms.stronglyConnectedComponents(vs, es)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(sccL == sccD, s"scc local != distributed, seed=$seed")
     }
@@ -549,11 +575,11 @@ class AlgorithmsSpec extends SparkSpec {
   test("weighted pagerank: uniform weights degenerate to plain; weight skews flow") {
     val vs = Seq(0L, 1L, 2L).toDF("id")
     val uni = Seq((0L, 1L, 1.0), (0L, 2L, 1.0)).toDF("src", "dst", "w")
-    val plain = Algorithms.pageRank(vs, uni.select("src", "dst"), iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val wUni = Algorithms.pageRankWeighted(vs, uni, iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    (0L to 2L).foreach(v => assert(math.abs(plain(v) - wUni(v)) < 1e-12))
+    def ranks(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // one core per side of the gate: bit-identical, not merely close
+    val (plainL, plainD) = bothSides(ranks(Algorithms.pageRank(vs, uni.select("src", "dst"), iters = 5)))
+    val (wUniL, wUniD) = bothSides(ranks(Algorithms.pageRankWeighted(vs, uni, iters = 5)))
+    assert(plainL == wUniL && plainD == wUniD)
     // 3:1 weights skew the split 3:1 (single iteration makes it exact)
     val skew = Algorithms.pageRankWeighted(vs,
       Seq((0L, 1L, 3.0), (0L, 2L, 1.0)).toDF("src", "dst", "w"), iters = 1)
