@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.{GraphStats, PropertyGraph}
-import graft.cypher.CypherParser
+import graft.cypher.{Ast, CypherParser, ParseException, WriteConflictException}
 import graft.plans.{LogicNode, Pattern, Planner}
 import graft.operators.PatternExec
 
@@ -14,6 +14,22 @@ import graft.operators.PatternExec
  *
  * Stats are snapshotted once per GraphDB, mirroring the reference's
  * `withStats(_.copy)` snapshot-before-plan (GraphDB.scala:25).
+ *
+ * Every query form (pattern match, WITH chain, UNWIND source, UNION,
+ * variable-length named path, shortestPath) and write (CREATE, MERGE, SET,
+ * DELETE) compiles through one set of rules, each stated once:
+ *  - ORDER BY / SKIP / LIMIT: `orderSkipLimit` (`queryTail` for a query's
+ *    own modifiers)
+ *  - the WITH-stage loop: `runStages`; per stage `projectStage` and
+ *    `stagePipe`
+ *  - the aggregate-function table: `aggregate`
+ *  - node-property join-back: `joinNodeProps`
+ *  - SET items (SET and MERGE's ON CREATE / ON MATCH SET): `checkSetItem`
+ *    and `setColumn`
+ *  - MERGE's `(src, dst, etype)` anti-join: `unstoredEdges`
+ *  - the match of a write statement: `matchFrame`
+ * The AST walks live in [[graft.cypher.Ast]]: `children`/`collect` (one
+ * walk behind `patAggs`, `patterns` and `fns`) and `Path.names`.
  */
 object GraphDB {
   /** Session conf: refuse a `shortestPath` whose (pruned) seed set exceeds
@@ -79,26 +95,57 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     else runCreate(stmt)
   }
 
-  /** The match of a write statement projected to `refs` (distinct). */
-  private def matchFrame(stmt: cypher.Ast.WriteStmt, refs: Seq[String]): DataFrame =
-    runQuery(cypher.Ast.Query(stmt.matchPaths, Seq.empty, stmt.where,
-      refs.map(b => cypher.Ast.Ret(b)), distinct = true, Seq.empty, None))
+  /** The match of a write statement projected to `items` (distinct). */
+  private def matchFrame(stmt: Ast.WriteStmt, items: Seq[Ast.Ret]): DataFrame =
+    runQuery(Ast.Query(stmt.matchPaths, Seq.empty, stmt.where, items,
+      distinct = true, Seq.empty, None))
 
-  private def runCreate(stmt: cypher.Ast.WriteStmt): GraphDB = {
+  /** The rows of `df` whose (src, dst, etype) key is not stored yet —
+    * MERGE's idempotent edge append (re-running it appends nothing). */
+  private def unstoredEdges(df: DataFrame): DataFrame =
+    df.join(graph.edges.select(col("src"), col("dst"), col("etype")),
+      Seq("src", "dst", "etype"), "left_anti")
+
+  /** The checks every SET item passes (SET and MERGE's ON CREATE/ON MATCH
+    * SET): the core columns are immutable, and the value reads only the
+    * target binding's own properties. */
+  private def checkSetItem(s: Ast.SetItem, clause: String): Unit = {
+    if (s.prop == "id" || s.prop == "label") throw new ParseException(
+      s"$clause cannot change the core column ${s.prop}")
+    Ast.Expr.refs(s.value).foreach { case (b, _) =>
+      if (b != s.binding) throw new ParseException(
+        s"$clause ${s.binding}.${s.prop}: the value may only read " +
+          s"${s.binding}'s own properties (found $b)")
+    }
+  }
+
+  /** SET's per-row column rewrite: rows where `hit` holds take the item's
+    * value (cast to the stored type, looked up in `stored`), the others
+    * keep theirs; a new column is null outside the hit rows. */
+  private def setColumn(df: DataFrame, stored: org.apache.spark.sql.types.StructType,
+                        s: Ast.SetItem, hit: Column): DataFrame = {
+    val existing = stored.find(_.name == s.prop).map(_.dataType)
+    val raw = operators.Preds.exprColumn(s.value,
+      (_, pp) => if (pp.isEmpty) col("id") else col(pp))
+    val v = existing.fold(raw)(t => raw.cast(t))
+    df.withColumn(s.prop,
+      if (existing.isDefined) when(hit, v).otherwise(col(s.prop)) else when(hit, v))
+  }
+
+  private def runCreate(stmt: Ast.WriteStmt): GraphDB = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     val spark = graph.nodes.sparkSession
     val created = stmt.nodes.map(_.name)
     if (created.distinct.size != created.size)
-      throw new cypher.ParseException("duplicate created binding in CREATE")
-    val matchBound: Set[String] = stmt.matchPaths
-      .flatMap(p => p.first.name.toSeq ++ p.hops.flatMap(_._2.name.toSeq)).toSet
+      throw new ParseException("duplicate created binding in CREATE")
+    val matchBound: Set[String] = stmt.matchPaths.flatMap(_.names).toSet
     stmt.edges.flatMap(e => Seq(e.src, e.dst)).foreach { b =>
-      if (!created.contains(b) && !matchBound(b)) throw new cypher.ParseException(
+      if (!created.contains(b) && !matchBound(b)) throw new ParseException(
         s"CREATE endpoint $b is neither a created node nor a match binding")
     }
     if (stmt.matchPaths.nonEmpty && stmt.nodes.nonEmpty)
-      throw new cypher.ParseException(
+      throw new ParseException(
         "per-match-row node creation is not supported (CREATE after MATCH " +
           "creates relationships; bulk-load nodes with addNodes)")
     def norm(v: Any): Any = v match { case i: Int => i.toLong; case x => x }
@@ -107,7 +154,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       case _: Long    => LongType
       case _: Double  => DoubleType
       case _: Boolean => BooleanType
-      case other => throw new cypher.ParseException(
+      case other => throw new ParseException(
         s"unsupported CREATE property value: $other")
     }
     /** Literal rows → DataFrame whose shared columns are cast to `alignTo`'s
@@ -135,9 +182,9 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     }
     var pg = graph
     var idOf = Map.empty[String, Long]
-    var createdNodes = Seq.empty[cypher.Ast.CreateNode]
+    var createdNodes = Seq.empty[Ast.CreateNode]
     if (stmt.nodes.nonEmpty) {
-      val explicitId: cypher.Ast.CreateNode => Option[Long] =
+      val explicitId: Ast.CreateNode => Option[Long] =
         n => n.props.collectFirst { case ("id", v: Long) => v; case ("id", v: Int) => v.toLong }
       // MERGE: a literal node that already exists (same label, every given
       // prop equal) binds its EXISTING id (edges may reference it) and is
@@ -166,14 +213,14 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       if (toCreate.nonEmpty) {
         val explicitIds = toCreate.flatMap(explicitId)
         if (explicitIds.distinct.size != explicitIds.size)
-          throw new cypher.WriteConflictException(
+          throw new WriteConflictException(
             s"duplicate explicit id in CREATE: ${explicitIds.diff(explicitIds.distinct).head}")
         // an explicit id colliding with a stored node would silently corrupt
         // id-keyed joins — fail loudly (one tiny lookup, driver-sized input)
         if (explicitIds.nonEmpty) {
           val clash = graph.nodes.filter(col("id").isin(explicitIds: _*))
             .select(col("id")).orderBy(col("id")).limit(1).collect()
-          if (clash.nonEmpty) throw new cypher.WriteConflictException(
+          if (clash.nonEmpty) throw new WriteConflictException(
             s"CREATE explicit id ${clash(0).getLong(0)} already exists in the node table")
         }
         var next =
@@ -215,9 +262,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         literalEdges.map(_.props), graph.edges)
       // MERGE: only the keys not already stored are appended (idempotent)
       val df = if (!stmt.merge) df0
-        else df0.join(graph.edges.select(col("src"), col("dst"), col("etype")),
-          Seq("src", "dst", "etype"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else unstoredEdges(df0).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (stmt.merge) scratch :+= df
       literalEdgeDf = Some(df)
       pg = pg.addEdges(df)
@@ -229,8 +274,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // and every later scan of the unioned edge table share one evaluation
     // of the match.
     val matchLabel: Map[String, Option[String]] = stmt.matchPaths
-      .flatMap(p => (p.first +: p.hops.map(_._2)).flatMap(np => np.name.map(_ -> np.label)))
-      .toMap
+      .flatMap(_.nodes.flatMap(np => np.name.map(_ -> np.label))).toMap
     var edgeDeltas = Seq.empty[(Option[String], String, Option[String], () => Long)]
     if (literalEdges.nonEmpty) {
       // labels of BOTH endpoints come from the statement (merge-matched
@@ -248,7 +292,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         }
     }
     if (matchEdges.nonEmpty) {
-      val m = matchFrame(stmt, matchEdges.flatMap(e => Seq(e.src, e.dst)).distinct)
+      val m = matchFrame(stmt, matchEdges.flatMap(e => Seq(e.src, e.dst)).distinct.map(Ast.Ret(_)))
       matchEdges.foreach { e =>
         val pairs = m.select(col(e.src).as("src"), col(e.dst).as("dst"),
           lit(e.etype).as("etype")).dropDuplicates()
@@ -256,11 +300,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           val t = graph.edges.schema.find(_.name == k).map(_.dataType)
           df.withColumn(k, t.fold(lit(norm(v)))(tt => lit(norm(v)).cast(tt)))
         }
-        // MERGE: anti-join the existing keys — the distributed idempotent
-        // write (re-running the statement appends nothing)
-        val appended = (if (!stmt.merge) withProps
-          else withProps.join(graph.edges.select(col("src"), col("dst"), col("etype")),
-            Seq("src", "dst", "etype"), "left_anti"))
+        val appended = (if (!stmt.merge) withProps else unstoredEdges(withProps))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         scratch :+= appended
         pg = pg.addEdges(appended)
@@ -274,34 +314,18 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // SET (own-property expressions); labels/ids are immutable.
     if (stmt.onCreateSets.nonEmpty || stmt.onMatchSets.nonEmpty) {
       val createdNames = createdNodes.map(_.name).toSet
-      def validate(items: Seq[cypher.Ast.SetItem], clause: String): Unit = items.foreach { s =>
-        if (!stmt.nodes.exists(_.name == s.binding)) throw new cypher.ParseException(
+      def validate(items: Seq[Ast.SetItem], clause: String): Unit = items.foreach { s =>
+        if (!stmt.nodes.exists(_.name == s.binding)) throw new ParseException(
           s"$clause targets ${s.binding}, which is not a merged node in this statement")
-        if (s.prop == "id" || s.prop == "label") throw new cypher.ParseException(
-          s"$clause cannot change the core column ${s.prop}")
-        cypher.Ast.Expr.refs(s.value).foreach { case (b, _) =>
-          if (b != s.binding) throw new cypher.ParseException(
-            s"$clause ${s.binding}.${s.prop}: the value may only read " +
-              s"${s.binding}'s own properties (found $b)")
-        }
+        checkSetItem(s, clause)
       }
       validate(stmt.onCreateSets, "ON CREATE SET")
       validate(stmt.onMatchSets, "ON MATCH SET")
       val applicable =
         stmt.onCreateSets.filter(s => createdNames(s.binding)) ++
           stmt.onMatchSets.filter(s => !createdNames(s.binding))
-      var nodesDf = pg.nodes
-      applicable.foreach { s =>
-        val id = idOf(s.binding)
-        val existing = nodesDf.schema.find(_.name == s.prop).map(_.dataType)
-        val raw = operators.Preds.exprColumn(s.value,
-          (bb, pp) => if (pp.isEmpty) col("id") else col(pp))
-        val v = existing.fold(raw)(t => raw.cast(t))
-        nodesDf = nodesDf.withColumn(s.prop,
-          if (existing.isDefined) when(col("id") === id, v).otherwise(col(s.prop))
-          else when(col("id") === id, v))
-      }
-      pg = pg.withNodes(nodesDf)
+      pg = pg.withNodes(applicable.foldLeft(pg.nodes)((df, s) =>
+        setColumn(df, df.schema, s, col("id") === idOf(s.binding))))
     }
     // incremental stats (reference StatsStore per-insert updates,
     // ConcurrentDirectedGraph.scala:121-124,151-152): exact when every
@@ -345,36 +369,19 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * the match). The value expression may read the binding's OWN joined
     * property columns; stats are unchanged by construction (labels and
     * topology untouched), so the new GraphDB reuses the receiver's. */
-  private def runSet(stmt: cypher.Ast.WriteStmt): GraphDB = {
-    stmt.sets.foreach { s =>
-      cypher.Ast.Expr.refs(s.value).foreach { case (b, _) =>
-        if (b != s.binding) throw new cypher.ParseException(
-          s"SET ${s.binding}.${s.prop}: the value may only read " +
-            s"${s.binding}'s own properties (found $b)")
-      }
-      if (s.prop == "id" || s.prop == "label") throw new cypher.ParseException(
-        s"SET cannot change the core column ${s.prop}")
-    }
+  private def runSet(stmt: Ast.WriteStmt): GraphDB = {
+    stmt.sets.foreach(checkSetItem(_, "SET"))
     val bindings = stmt.sets.map(_.binding).distinct
-    val m = matchFrame(stmt, bindings)
+    val m = matchFrame(stmt, bindings.map(Ast.Ret(_)))
     var nodesDf = graph.nodes
     bindings.foreach { b =>
       val ids = m.select(col(b).as("__set_id")).dropDuplicates()
-      var joined = nodesDf.join(ids, nodesDf("id") === ids("__set_id"), "left")
-      stmt.sets.filter(_.binding == b).foreach { s =>
-        val existing = nodesDf.schema.find(_.name == s.prop).map(_.dataType)
-        // REMOVE (SET to null) of an absent property is a no-op (openCypher)
-        val isRemove = s.value == cypher.Ast.ELit(null)
-        if (!(isRemove && existing.isEmpty)) {
-          val raw = operators.Preds.exprColumn(s.value,
-            (bb, pp) => if (pp.isEmpty) col("id") else col(pp))
-          val v = existing.fold(raw)(t => raw.cast(t))
-          joined = joined.withColumn(s.prop,
-            if (existing.isDefined) when(col("__set_id").isNotNull, v).otherwise(col(s.prop))
-            else when(col("__set_id").isNotNull, v))
-        }
-      }
-      nodesDf = joined.drop("__set_id")
+      val stored = nodesDf.schema
+      // REMOVE (SET to null) of an absent property is a no-op (openCypher)
+      val items = stmt.sets.filter(s => s.binding == b &&
+        !(s.value == Ast.ELit(null) && !stored.fieldNames.contains(s.prop)))
+      nodesDf = items.foldLeft(nodesDf.join(ids, nodesDf("id") === ids("__set_id"), "left"))(
+        (df, s) => setColumn(df, stored, s, col("__set_id").isNotNull)).drop("__set_id")
     }
     new GraphDB(graph.withNodes(nodesDf), statsThunk = Some(() => stats))
   }
@@ -388,8 +395,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * deleted rows' label distribution is measured by joins against the
     * removed set only — work ∝ |deleted|, never a rescan of the surviving
     * graph (the CREATE path's per-insert StatsStore contract, mirrored). */
-  private def runDelete(stmt: cypher.Ast.WriteStmt): GraphDB = {
-    import cypher.Ast
+  private def runDelete(stmt: Ast.WriteStmt): GraphDB = {
     // relationship name → (srcBinding, relPat, dstBinding), walking each path
     val relInfo: Map[String, (Option[String], Ast.RelPat, Option[String])] =
       stmt.matchPaths.flatMap { p =>
@@ -400,16 +406,15 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           entry
         }
       }.toMap
-    val nodeNames: Set[String] = stmt.matchPaths
-      .flatMap(p => p.first.name.toSeq ++ p.hops.flatMap(_._2.name.toSeq)).toSet
+    val nodeNames: Set[String] = stmt.matchPaths.flatMap(_.names).toSet
     val (relTargets, rest) = stmt.deletes.distinct.partition(relInfo.contains)
     val nodeTargets = rest.filter(nodeNames)
-    rest.filterNot(nodeNames).foreach(t => throw new cypher.ParseException(
+    rest.filterNot(nodeNames).foreach(t => throw new ParseException(
       s"DELETE target $t is not a bound node or relationship"))
     relTargets.map(relInfo).foreach { case (s, rp, d) =>
-      if (rp.hops.isDefined) throw new cypher.ParseException(
+      if (rp.hops.isDefined) throw new ParseException(
         "DELETE of a variable-length relationship is not supported")
-      if (s.isEmpty || d.isEmpty) throw new cypher.ParseException(
+      if (s.isEmpty || d.isEmpty) throw new ParseException(
         "DELETE relationship requires named endpoints")
     }
     // The match carries each deleted relationship's IDENTITY out of the
@@ -423,12 +428,10 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // declared-type edge whose own match row failed the WHERE while another
     // edge matched the same pair.
     val relRets = relTargets.flatMap(r => Seq(
-      cypher.Ast.Ret(r, agg = Some("startnode"), alias = Some(s"__del_${r}_s")),
-      cypher.Ast.Ret(r, agg = Some("endnode"), alias = Some(s"__del_${r}_d")),
-      cypher.Ast.Ret(r, agg = Some("type"), alias = Some(s"__del_${r}_t"))))
-    val m = runQuery(cypher.Ast.Query(stmt.matchPaths, Seq.empty, stmt.where,
-        relRets ++ nodeTargets.map(n => cypher.Ast.Ret(n)),
-        distinct = true, Seq.empty, None))
+      Ast.Ret(r, agg = Some("startnode"), alias = Some(s"__del_${r}_s")),
+      Ast.Ret(r, agg = Some("endnode"), alias = Some(s"__del_${r}_d")),
+      Ast.Ret(r, agg = Some("type"), alias = Some(s"__del_${r}_t"))))
+    val m = matchFrame(stmt, relRets ++ nodeTargets.map(Ast.Ret(_)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var pg = graph
     var removedKeys = Seq.empty[DataFrame] // (src, dst, etype) removed keys
@@ -450,7 +453,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
           .select("src", "dst", "etype"))
       if (!stmt.detach) {
-        if (incident.limit(1).count() > 0) throw new cypher.ParseException(
+        if (incident.limit(1).count() > 0) throw new ParseException(
           "DELETE would orphan relationships — use DETACH DELETE")
       } else {
         val inc = incident.dropDuplicates()
@@ -543,7 +546,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // check is name-SET equality, not positional
     val names0 = dfs.head.columns.toSet
     dfs.tail.foreach { d =>
-      if (d.columns.toSet != names0) throw new cypher.ParseException(
+      if (d.columns.toSet != names0) throw new ParseException(
         s"UNION branches must return the same columns: " +
           s"${dfs.head.columns.mkString(",")} vs ${d.columns.mkString(",")}")
     }
@@ -552,25 +555,11 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // semantics); UNION ALL keeps every branch row
     val merged = if (all) u else u.dropDuplicates()
     // the final modifiers resolve sort keys exactly like a branch RETURN
-    // (pre-alias default name or alias); unknown keys fail at parse level,
-    // not as a Spark unresolved-column error
-    val sortKeyToOut = cypher.Ast.Ret.sortKeyMap(last.returns)
-    val unknownSort = last.orderBy.map(_.binding).filterNot(sortKeyToOut.contains)
-    if (unknownSort.nonEmpty) throw new cypher.ParseException(
-      s"ORDER BY over a UNION references non-returned columns: ${unknownSort.mkString(",")}" +
-        (if (last.orderBy.exists(k => k.parts.isDefined && !sortKeyToOut.contains(k.binding)))
-           " (non-returned sort properties are not supported over a UNION)" else ""))
-    val ordered =
-      if (last.orderBy.isEmpty) merged
-      else merged.orderBy(last.orderBy.map { k =>
-        val c = col(sortKeyToOut(k.binding))
-        if (k.asc) c.asc else c.desc
-      }: _*)
-    val skipped = last.skip.fold(ordered)(ordered.offset)
-    last.limit.fold(skipped)(skipped.limit)
+    // (pre-alias default name or alias)
+    queryTail(merged, last, "over a UNION")
   }
 
-  private def runQuery(q0: cypher.Ast.Query): DataFrame =
+  private def runQuery(q0: Ast.Query): DataFrame =
     expandVarlenNamedPath(q0).getOrElse {
       val q = substPathLengths(q0)
       q.shortest match {
@@ -578,7 +567,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         case None =>
           if (q.unwindLit.isDefined) runUnwindLit(q)
           else if (q.unwindRange.isDefined) runUnwindRange(q)
-          else if (q.withClauses.nonEmpty) runWith(q, q.withClauses)
+          else if (q.withClauses.nonEmpty) runWith(q)
           else run(Pattern.fromQuery(q))
       }
     }
@@ -592,8 +581,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * applications (unknown variable, a shortestPath variable, a non-path
     * argument) are rejected loudly; the bare ITEM form `RETURN length(p)`
     * takes the scalar-function path instead and is untouched. */
-  private def substPathLengths(q: cypher.Ast.Query): cypher.Ast.Query = {
-    import cypher.Ast
+  private def substPathLengths(q: Ast.Query): Ast.Query = {
     val f: Ast.Expr => Ast.Expr = {
       case Ast.EFn("length", Seq(Ast.ERef(pv, _))) if q.namedPaths.contains(pv) =>
         Ast.ELit(q.namedPaths(pv)._2.size.toLong)
@@ -605,13 +593,10 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       withClauses = q.withClauses.map(w => w.copy(
         items = w.items.map(r => r.copy(expr = r.expr.map(Ast.Expr.transform(_)(f)))),
         where = w.where.map(Ast.Pred.transformExprs(_)(f)))))
-    val leftover = (q2.where.flatMap(Ast.Pred.fns(_)) ++
-      q2.returns.flatMap(_.expr.toSeq.flatMap(Ast.Expr.fns)) ++
-      q2.withClauses.flatMap(w =>
-        w.items.flatMap(_.expr.toSeq.flatMap(Ast.Expr.fns)) ++
-          w.where.flatMap(Ast.Pred.fns(_))))
-      .exists(_.name == "length")
-    if (leftover) throw new cypher.ParseException(
+    val leftover = (q2.where ++ q2.returns.flatMap(_.expr) ++
+      q2.withClauses.flatMap(w => w.items.flatMap(_.expr) ++ w.where))
+      .flatMap(Ast.fns).exists(_.name == "length")
+    if (leftover) throw new ParseException(
       "length() in an expression takes a named path variable (MATCH p = …)")
     q2
   }
@@ -630,21 +615,20 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
    *
    * @return None when the query has no varlen hop inside a named path
    */
-  private def expandVarlenNamedPath(q: cypher.Ast.Query): Option[DataFrame] = {
-    import cypher.Ast
+  private def expandVarlenNamedPath(q: Ast.Query): Option[DataFrame] = {
     if (q.namedPaths.isEmpty) return None
     val pathRels: Set[String] = q.namedPaths.values.flatMap(_._2).toSet
     val varlenHops = q.paths.flatMap(_.hops).collect {
       case (r, _) if r.hops.isDefined && r.name.exists(pathRels) => r
     }
     if (varlenHops.isEmpty) return None
-    if (varlenHops.sizeIs > 1) throw new cypher.ParseException(
+    if (varlenHops.sizeIs > 1) throw new ParseException(
       "at most one variable-length hop per named path query is supported")
-    if (q.withClauses.nonEmpty) throw new cypher.ParseException(
+    if (q.withClauses.nonEmpty) throw new ParseException(
       "a variable-length named path does not compose with WITH " +
         "(aggregate per fixed length or drop the path variable)")
     if (q.returns.exists(r => r.agg.exists(a => !plans.Pattern.ScalarFns(a))))
-      throw new cypher.ParseException(
+      throw new ParseException(
         "aggregates over a variable-length named path are not supported " +
           "(each length is a separate branch; aggregate over a fixed-length path)")
     val vr = varlenHops.head
@@ -705,19 +689,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           .drop("__asp_len", "__asp_min", "__asp_src", "__asp_dst")
           .dropDuplicates()
       }
-    val sortKeyToOut = Ast.Ret.sortKeyMap(q.returns)
-    val unknownSort = q.orderBy.map(_.binding).filterNot(sortKeyToOut.contains)
-    if (unknownSort.nonEmpty) throw new cypher.ParseException(
-      s"ORDER BY over a variable-length named path references non-returned " +
-        s"columns: ${unknownSort.mkString(",")}")
-    val ordered =
-      if (q.orderBy.isEmpty) u
-      else u.orderBy(q.orderBy.map { k =>
-        val c = col(sortKeyToOut(k.binding))
-        if (k.asc) c.asc else c.desc
-      }: _*)
-    val skipped = q.skip.fold(ordered)(ordered.offset)
-    Some(q.limit.fold(skipped)(skipped.limit))
+    Some(queryTail(u, q, "over a variable-length named path"))
   }
 
   /**
@@ -732,38 +704,24 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
    * chain stays one declarative plan — Catalyst sees N chained
    * project/aggregate/filter blocks, no materialization between stages.
    */
-  private def runWith(q: cypher.Ast.Query, ws: Seq[cypher.Ast.WithClause]): DataFrame = {
-    import graft.cypher.Ast
-    val first = ws.head
+  private def runWith(q: Ast.Query): DataFrame = {
+    val first = q.withClauses.head
     val stage1 = run(Pattern.fromQuery(q.copy(returns = first.items, distinct = first.distinct,
       orderBy = Seq.empty, limit = None, skip = None, withClauses = Seq.empty)))
-    var cols = first.items.map(_.outName)
-    var piped = stagePipe(stage1, cols, first)
-    first.unwind.foreach { case (src, al) =>
-      piped = piped.withColumn(al, explode(col(src))); cols = cols :+ al
-    }
-    ws.tail.foreach { w =>
-      piped = projectStage(piped, cols, w.items, w.distinct, "WITH")
-      cols = w.items.map(_.outName)
-      piped = stagePipe(piped, cols, w)
-      w.unwind.foreach { case (src, al) =>
-        piped = piped.withColumn(al, explode(col(src))); cols = cols :+ al
-      }
-    }
-    finishPipeline(piped, cols, q)
+    runStages(stage1, first.items.map(_.outName), q, firstProjected = true)
   }
 
   /** `UNWIND [lit, …] AS x (WITH …)* RETURN …`: a literal-list row source —
     * one explode over a single driver-side row, then the same bare-column
     * pipeline a WITH chain runs. Lists come back out via collect(); UNWIND
     * is its inverse (openCypher). */
-  private def runUnwindLit(q: cypher.Ast.Query): DataFrame = {
+  private def runUnwindLit(q: Ast.Query): DataFrame = {
     val (vals, alias) = q.unwindLit.get
     val spark = graph.nodes.sparkSession
     // array() picks the least common type (long+double → double); the
     // parser already rejected string/number mixes
     val src = spark.range(1).select(explode(array(vals.map(lit): _*)).as(alias))
-    runBareSource(src, alias, q)
+    runStages(src, Seq(alias), q, firstProjected = false)
   }
 
   /** `UNWIND range(start, end[, step]) AS x (WITH …)* RETURN …`: the
@@ -771,7 +729,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * across executors, so `range(1, 10^9)` never materializes a driver-side
     * list (the literal-list form would). Bounds inclusive (openCypher);
     * an empty interval yields no rows. */
-  private def runUnwindRange(q: cypher.Ast.Query): DataFrame = {
+  private def runUnwindRange(q: Ast.Query): DataFrame = {
     val (start, end, step, alias) = q.unwindRange.get
     val spark = graph.nodes.sparkSession
     // spark.range is end-EXCLUSIVE; openCypher range() is end-inclusive.
@@ -779,7 +737,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // The ±1 below would overflow at Long.MaxValue/MinValue and silently
     // produce an empty/inverted interval — reject those bounds loudly.
     if ((step > 0 && end == Long.MaxValue) || (step < 0 && end == Long.MinValue))
-      throw new cypher.ParseException(
+      throw new ParseException(
         s"range() end bound $end would overflow the inclusive-bound shift " +
           "(Long.MaxValue/MinValue ends are not supported)")
     val stop = if (step > 0) end + 1 else end - 1
@@ -787,63 +745,49 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     val src =
       if (empty) spark.range(0).select(col("id").as(alias))
       else spark.range(start, stop, step).select(col("id").as(alias))
-    runBareSource(src, alias, q)
+    runStages(src, Seq(alias), q, firstProjected = false)
   }
 
-  /** Shared pipeline tail for the non-MATCH row sources (UNWIND literal
-    * list / range): WITH stages over bare columns, then the final RETURN. */
-  private def runBareSource(src: DataFrame, alias: String,
-                            q: cypher.Ast.Query): DataFrame = {
-    var piped = src
-    var cols = Seq(alias)
-    q.withClauses.foreach { w =>
-      piped = projectStage(piped, cols, w.items, w.distinct, "WITH")
-      cols = w.items.map(_.outName)
-      piped = stagePipe(piped, cols, w)
-      w.unwind.foreach { case (src2, al) =>
-        piped = piped.withColumn(al, explode(col(src2))); cols = cols :+ al
-      }
+  /** The bare-column pipeline after a row source (a MATCH … WITH first
+    * stage, an UNWIND list or range): each WITH stage projects or
+    * re-aggregates the previous stage's columns ([[projectStage]]), filters
+    * and bounds its output ([[stagePipe]]) and UNWINDs; then the final
+    * RETURN over the last stage's columns and the query tail. A MATCH
+    * source has already projected its first stage's items through the
+    * match compiler (`firstProjected`). */
+  private def runStages(src: DataFrame, srcCols: Seq[String], q: Ast.Query,
+                        firstProjected: Boolean): DataFrame = {
+    val (piped, cols) = q.withClauses.zipWithIndex.foldLeft((src, srcCols)) {
+      case ((df, cols), (w, ix)) =>
+        val out = w.items.map(_.outName)
+        val projected =
+          if (ix == 0 && firstProjected) df
+          else projectStage(df, cols, w.items, w.distinct, "WITH")
+        val staged = stagePipe(projected, out, w)
+        w.unwind.fold((staged, out)) { case (arr, al) =>
+          (staged.withColumn(al, explode(col(arr))), out :+ al)
+        }
     }
-    finishPipeline(piped, cols, q)
-  }
-
-  /** Final RETURN over a pipeline's bare columns + ORDER BY/SKIP/LIMIT
-    * (sort keys resolve like any RETURN: output name or pre-alias default). */
-  private def finishPipeline(piped: DataFrame, cols: Seq[String],
-                             q: cypher.Ast.Query): DataFrame = {
-    import graft.cypher.Ast
-    val distincted = projectStage(piped, cols, q.returns,
-      distinct = q.distinct, stage = "RETURN")
-    val sortKeyToOut = Ast.Ret.sortKeyMap(q.returns)
-    val unknownSort = q.orderBy.map(_.binding).filterNot(sortKeyToOut.contains)
-    if (unknownSort.nonEmpty) throw new cypher.ParseException(
-      s"ORDER BY references non-returned columns: ${unknownSort.mkString(",")}")
-    val ordered =
-      if (q.orderBy.isEmpty) distincted
-      else distincted.orderBy(q.orderBy.map { k =>
-        val c = col(sortKeyToOut(k.binding)); if (k.asc) c.asc else c.desc
-      }: _*)
-    val skipped = q.skip.fold(ordered)(ordered.offset)
-    q.limit.fold(skipped)(skipped.limit)
+    queryTail(projectStage(piped, cols, q.returns, q.distinct, "RETURN"), q,
+      "over a WITH/UNWIND pipeline")
   }
 
   // HAVING-style filter over a stage's output columns (bare names only)
   private def havingFilter(df: DataFrame, cols: Seq[String],
-                           where: Seq[cypher.Ast.Pred]): DataFrame = {
-    import graft.cypher.Ast
+                           where: Seq[Ast.Pred]): DataFrame = {
     val colSet = cols.toSet
     where.foreach { p =>
-      if (Ast.Pred.patterns(p).nonEmpty) throw new cypher.ParseException(
+      if (Ast.patterns(p).nonEmpty) throw new ParseException(
         "pattern predicates are not supported in WITH … WHERE " +
           "(apply them in the MATCH WHERE, before the pipeline)")
-      if (Ast.Pred.patAggs(p).nonEmpty) throw new cypher.ParseException(
+      if (Ast.patAggs(p).nonEmpty) throw new ParseException(
         "pattern expressions (size(pattern) / pattern comprehensions) are " +
           "MATCH-stage only — compute them in the first WITH items or the MATCH WHERE")
     }
     where.flatMap(Ast.Pred.refs(_)).foreach { case (b, p) =>
-      if (p.nonEmpty) throw new cypher.ParseException(
+      if (p.nonEmpty) throw new ParseException(
         s"WITH … WHERE refers to output columns by bare name; $b.$p is not visible after WITH")
-      if (!colSet(b)) throw new cypher.ParseException(
+      if (!colSet(b)) throw new ParseException(
         s"WITH … WHERE references $b, not among the WITH items: ${cols.mkString(",")}")
     }
     where.foldLeft(df)((acc, p) =>
@@ -852,121 +796,147 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
 
   // project or re-aggregate a stage's bare columns (WITH stages ≥ 2 and
   // the final RETURN share this scope rule)
-  private def projectStage(df: DataFrame, cols: Seq[String], items: Seq[cypher.Ast.Ret],
+  private def projectStage(df: DataFrame, cols: Seq[String], items: Seq[Ast.Ret],
                            distinct: Boolean, stage: String): DataFrame = {
-    import graft.cypher.Ast
-      val colSet = cols.toSet
-      items.foreach { r =>
-        r.expr match {
-          case Some(e) =>
-            if (Ast.Expr.patAggs(e).nonEmpty) throw new cypher.ParseException(
-              "pattern expressions (size(pattern) / pattern comprehensions) are " +
-                "MATCH-stage only — compute them in the first WITH items " +
-                s"(not in $stage over the pipeline)")
-            Ast.Expr.refs(e).foreach { case (b, p) =>
-              if (p.nonEmpty) throw new cypher.ParseException(
-                s"$b.$p: property access is not available after WITH " +
-                  "(project the property in the WITH items instead)")
-              if (!colSet(b)) throw new cypher.ParseException(
-                s"$stage references $b, not among the WITH items: ${cols.mkString(",")}")
-            }
-          case None =>
-            if (r.prop.isDefined) throw new cypher.ParseException(
-              s"${r.binding}.${r.prop.get}: property access is not available after WITH " +
+    val colSet = cols.toSet
+    items.foreach { r =>
+      r.expr match {
+        case Some(e) =>
+          if (Ast.patAggs(e).nonEmpty) throw new ParseException(
+            "pattern expressions (size(pattern) / pattern comprehensions) are " +
+              "MATCH-stage only — compute them in the first WITH items " +
+              s"(not in $stage over the pipeline)")
+          Ast.Expr.refs(e).foreach { case (b, p) =>
+            if (p.nonEmpty) throw new ParseException(
+              s"$b.$p: property access is not available after WITH " +
                 "(project the property in the WITH items instead)")
-            // "*" is count(*)'s pseudo-binding (parser only emits it under count)
-            if (r.binding != "*" && !colSet(r.binding)) throw new cypher.ParseException(
-              s"$stage references ${r.binding}, not among the WITH items: ${cols.mkString(",")}")
-        }
-      }
-      // value functions and general expressions are per-row scalars over the
-      // stage's bare columns — grouping keys, not aggregates (same split as
-      // Pattern.ScalarFns)
-      def bareValue(i: Ast.Ret): Column = i.expr match {
-        case Some(e) => operators.Preds.exprColumn(e, (b, _) => col(b))
-        case None => i.agg match {
-          // openCypher size() covers both strings and lists; the stage's
-          // schema is known here, so a collect()ed array column counts its
-          // elements instead of erroring on length()
-          case Some("size") if df.schema.fields.exists(f =>
-              f.name == i.binding &&
-                f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]) =>
-            size(col(i.binding)).cast("long")
-          case Some(f) if operators.Preds.valueFn.contains(f) =>
-            operators.Preds.valueFn(f)(col(i.binding))
-          case _ => col(i.binding)
-        }
-      }
-      val aggItems = items.filter(i =>
-        i.agg.exists(a => !operators.Preds.valueFn.contains(a)))
-      val groupItems = items.filterNot(aggItems.contains)
-      val projected =
-        if (aggItems.isEmpty) df.select(items.map(i => bareValue(i).as(i.outName)): _*)
-        else {
-          val aggs = aggItems.map { i =>
-            // the aggregate's argument: a bare stage column, or a general
-            // expression over stage columns (`sum(a * b)`)
-            val arg = i.expr.fold(col(i.binding))(e =>
-              operators.Preds.exprColumn(e, (b, _) => col(b)))
-            (i.agg.get match {
-              case "count" =>
-                if (i.binding == "*") count(lit(1))
-                else if (i.aggDistinct) countDistinct(col(i.binding))
-                else count(col(i.binding))
-              case "sum" => if (i.aggDistinct) sum_distinct(arg) else sum(arg)
-              // DISTINCT is a no-op under min/max; avg needs the SQL form
-              case "min" => min(arg)
-              case "max" => max(arg)
-              case "avg" =>
-                if (i.aggDistinct) expr(s"avg(DISTINCT `${i.binding}`)") else avg(arg)
-              // sorted array = deterministic rendering of the collection;
-              // DISTINCT folds to the value set first
-              case "collect" =>
-                if (i.aggDistinct) sort_array(collect_set(arg))
-                else sort_array(collect_list(arg))
-              case "stdev"  => stddev_samp(arg)
-              case "stdevp" => stddev_pop(arg)
-              case "percentilecont" => percentile(arg, lit(i.aggParam.get))
-              case "percentiledisc" =>
-                percentile_approx(arg, lit(i.aggParam.get), lit(Int.MaxValue))
-              case other => throw new cypher.ParseException(s"$other() is not supported after WITH")
-            }).as(i.outName)
+            if (!colSet(b)) throw new ParseException(
+              s"$stage references $b, not among the WITH items: ${cols.mkString(",")}")
           }
-          if (groupItems.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-          else df.groupBy(groupItems.map(i => bareValue(i).as(i.outName)): _*)
-            .agg(aggs.head, aggs.tail: _*)
-        }
-      if (distinct && aggItems.isEmpty) projected.dropDuplicates() else projected
+        case None =>
+          if (r.prop.isDefined) throw new ParseException(
+            s"${r.binding}.${r.prop.get}: property access is not available after WITH " +
+              "(project the property in the WITH items instead)")
+          // "*" is count(*)'s pseudo-binding (parser only emits it under count)
+          if (r.binding != "*" && !colSet(r.binding)) throw new ParseException(
+            s"$stage references ${r.binding}, not among the WITH items: ${cols.mkString(",")}")
+      }
     }
+    // value functions and general expressions are per-row scalars over the
+    // stage's bare columns — grouping keys, not aggregates (same split as
+    // Pattern.ScalarFns)
+    def bareValue(i: Ast.Ret): Column = i.expr match {
+      case Some(e) => operators.Preds.exprColumn(e, (b, _) => col(b))
+      case None => i.agg match {
+        // openCypher size() covers both strings and lists; the stage's
+        // schema is known here, so a collect()ed array column counts its
+        // elements instead of erroring on length()
+        case Some("size") if df.schema.fields.exists(f =>
+            f.name == i.binding &&
+              f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]) =>
+          size(col(i.binding)).cast("long")
+        case Some(f) if operators.Preds.valueFn.contains(f) =>
+          operators.Preds.valueFn(f)(col(i.binding))
+        case _ => col(i.binding)
+      }
+    }
+    val aggItems = items.filter(i =>
+      i.agg.exists(a => !operators.Preds.valueFn.contains(a)))
+    val groupItems = items.filterNot(aggItems.contains)
+    val projected =
+      if (aggItems.isEmpty) df.select(items.map(i => bareValue(i).as(i.outName)): _*)
+      else {
+        // the aggregate's argument: a bare stage column, or a general
+        // expression over stage columns (`sum(a * b)`)
+        val aggs = aggItems.map(i => aggregate(i, i.expr.fold(col(i.binding))(e =>
+          operators.Preds.exprColumn(e, (b, _) => col(b))), overMatch = false))
+        if (groupItems.isEmpty) df.agg(aggs.head, aggs.tail: _*)
+        else df.groupBy(groupItems.map(i => bareValue(i).as(i.outName)): _*)
+          .agg(aggs.head, aggs.tail: _*)
+      }
+    if (distinct && aggItems.isEmpty) projected.dropDuplicates() else projected
+  }
 
-  // per-stage ORDER BY/SKIP/LIMIT (openCypher top-k-then-continue),
-  // applied AFTER the stage's WHERE; sort keys resolve like RETURN's
-  private def stageMods(df: DataFrame, items: Seq[cypher.Ast.Ret],
-                        orderBy: Seq[cypher.Ast.SortKey],
-                        skip: Option[Int], limit: Option[Int]): DataFrame = {
-    if (orderBy.isEmpty && skip.isEmpty && limit.isEmpty) return df
-    val keyToOut = cypher.Ast.Ret.sortKeyMap(items)
-    val unknown = orderBy.map(_.binding).filterNot(keyToOut.contains)
-    if (unknown.nonEmpty) throw new cypher.ParseException(
-      s"WITH … ORDER BY references columns not among the items: ${unknown.mkString(",")}")
+  // WHERE and the stage's ORDER BY/SKIP/LIMIT (openCypher
+  // top-k-then-continue; sort keys resolve like RETURN's) apply in the
+  // textual order the stage wrote them: WHERE-first filters before the
+  // top-k, openCypher's trailing WHERE filters the top-k result
+  private def stagePipe(df: DataFrame, cols: Seq[String], w: Ast.WithClause): DataFrame = {
+    def mods(d: DataFrame) = orderSkipLimit(d, w.orderBy, w.skip, w.limit,
+      Ast.Ret.sortKeyMap(w.items).get, "in a WITH stage")
+    if (w.whereAfterMods) havingFilter(mods(df), cols, w.where)
+    else mods(havingFilter(df, cols, w.where))
+  }
+
+  /** The aggregate-function table of every RETURN and WITH position; `arg`
+    * is the item's per-row value. Only count differs by position: over a
+    * match it counts DISTINCT matches (set semantics); after WITH rows are
+    * plain rows, so it counts rows (`*`) or values (DISTINCT on request —
+    * the parser admits DISTINCT aggregates only after WITH). */
+  private def aggregate(i: Ast.Ret, arg: => Column, overMatch: Boolean): Column =
+    (i.agg.get match {
+      case "count" =>
+        if (overMatch) countDistinct(col(i.binding))
+        else if (i.binding == "*") count(lit(1))
+        else if (i.aggDistinct) countDistinct(col(i.binding))
+        else count(col(i.binding))
+      case "sum" => if (i.aggDistinct) sum_distinct(arg) else sum(arg)
+      // DISTINCT is a no-op under min/max; avg needs the SQL form
+      case "min" => min(arg)
+      case "max" => max(arg)
+      case "avg" => if (i.aggDistinct) expr(s"avg(DISTINCT `${i.binding}`)") else avg(arg)
+      // sorted array = deterministic rendering of the collection;
+      // DISTINCT folds to the value set first
+      case "collect" => sort_array(if (i.aggDistinct) collect_set(arg) else collect_list(arg))
+      case "stdev"  => stddev_samp(arg)
+      case "stdevp" => stddev_pop(arg)
+      // exact linear-interpolated percentile (openCypher CONT); DISC returns
+      // an actual element — percentile_approx at max accuracy is the exact
+      // discrete sketch
+      case "percentilecont" => percentile(arg, lit(i.aggParam.get))
+      case "percentiledisc" => percentile_approx(arg, lit(i.aggParam.get), lit(Int.MaxValue))
+      case other => throw new ParseException(
+        s"$other() is not supported ${if (overMatch) "in this position" else "after WITH"}")
+    }).as(i.outName)
+
+  /** The query tail every form ends in: ORDER BY over output columns (a
+    * TakeOrderedAndProject when LIMIT follows, so the sort never
+    * materializes globally), then SKIP (Cypher's OFFSET: Spark plans
+    * offset + limit together as one global take), then LIMIT. `keyToOut`
+    * resolves a sort key to its output column; an unknown key is a
+    * ParseException naming the query `form`, not a Spark unresolved-column
+    * error. */
+  private def orderSkipLimit(df: DataFrame, orderBy: Seq[Ast.SortKey], skip: Option[Int],
+                             limit: Option[Int], keyToOut: String => Option[String],
+                             form: String): DataFrame = {
+    val unknown = orderBy.filter(k => keyToOut(k.binding).isEmpty)
+    if (unknown.nonEmpty) throw new ParseException(
+      s"ORDER BY $form references non-returned columns: ${unknown.map(_.binding).mkString(",")}" +
+        (if (unknown.exists(_.parts.isDefined))
+           s" (non-returned sort properties are not supported $form)" else ""))
     val ordered =
       if (orderBy.isEmpty) df
       else df.orderBy(orderBy.map { k =>
-        val c = col(keyToOut(k.binding)); if (k.asc) c.asc else c.desc
+        val c = col(keyToOut(k.binding).get); if (k.asc) c.asc else c.desc
       }: _*)
     val skipped = skip.fold(ordered)(ordered.offset)
     limit.fold(skipped)(skipped.limit)
   }
 
-  // WHERE and ORDER BY/SKIP/LIMIT apply in the textual order the stage
-  // wrote them: WHERE-first filters before the top-k, openCypher's
-  // trailing WHERE filters the top-k result
-  private def stagePipe(df: DataFrame, cols: Seq[String],
-                        w: cypher.Ast.WithClause): DataFrame =
-    if (w.whereAfterMods)
-      havingFilter(stageMods(df, w.items, w.orderBy, w.skip, w.limit), cols, w.where)
-    else
-      stageMods(havingFilter(df, cols, w.where), w.items, w.orderBy, w.skip, w.limit)
+  /** [[orderSkipLimit]] with the query's own modifiers; sort keys resolve
+    * like any RETURN ([[Ast.Ret.sortKeyMap]]: output name or pre-alias
+    * default). */
+  private def queryTail(df: DataFrame, q: Ast.Query, form: String): DataFrame =
+    orderSkipLimit(df, q.orderBy, q.skip, q.limit, Ast.Ret.sortKeyMap(q.returns).get, form)
+
+  /** Joins each binding's node properties `ps` back on its id column, as
+    * `<binding>_<prop>` columns (left join: ids always resolve — the
+    * PropertyGraph invariant — but partial node tables stay safe). */
+  private def joinNodeProps(df: DataFrame, props: Iterable[(String, Seq[String])]): DataFrame =
+    props.foldLeft(df) { case (acc, (b, ps)) =>
+      acc.join(graph.nodes.select((col("id").as(b) +: ps.map(p => col(p).as(s"${b}_$p"))): _*),
+        Seq(b), "left")
+    }
 
   /**
    * `MATCH p = shortestPath((a)-[:T*]->(b))`: per endpoint pair, the
@@ -990,23 +960,22 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
    * .harmonicLandmark]]) is the sampled alternative when all-sources
    * distances were the goal.
    */
-  private def runShortest(sp: cypher.Ast.Shortest, q: cypher.Ast.Query): DataFrame = {
-    import graft.cypher.Ast
+  private def runShortest(sp: Ast.Shortest, q: Ast.Query): DataFrame = {
     val srcName = sp.src.name.getOrElse("__src")
     val dstName = sp.dst.name.getOrElse("__dst")
     val lenName = s"length_${sp.pathVar}"
     q.returns.foreach { r =>
-      if (r.expr.isDefined) throw new cypher.ParseException(
+      if (r.expr.isDefined) throw new ParseException(
         "value expressions are not supported with shortestPath")
       r.agg match {
         case Some("length") =>
-          if (r.binding != sp.pathVar) throw new cypher.ParseException(
+          if (r.binding != sp.pathVar) throw new ParseException(
             s"length(${r.binding}): unknown path variable (expected ${sp.pathVar})")
-        case Some(a) => throw new cypher.ParseException(
+        case Some(a) => throw new ParseException(
           s"$a() is not supported with shortestPath")
         case None =>
           if (r.binding != srcName && r.binding != dstName)
-            throw new cypher.ParseException(
+            throw new ParseException(
               s"unknown binding ${r.binding} in shortestPath RETURN")
       }
     }
@@ -1053,31 +1022,13 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         col("level").cast("long").as(lenName))
     val propsNeeded = q.returns.filter(r => r.agg.isEmpty && r.prop.isDefined)
       .groupBy(_.binding).view.mapValues(_.flatMap(_.prop).distinct).toMap
-    val withProps = propsNeeded.foldLeft(matches) { case (acc, (b, ps)) =>
-      val sel = graph.nodes.select(
-        (col("id").as(b) +: ps.map(p => col(p).as(s"${b}_$p"))): _*)
-      acc.join(sel, Seq(b), "left")
-    }
+    val withProps = joinNodeProps(matches, propsNeeded)
     def valueOf(i: Ast.Ret): Column =
       if (i.agg.contains("length")) col(lenName)
       else i.prop.fold(col(i.binding))(p => col(s"${i.binding}_$p"))
     val projected = withProps.select(q.returns.map(i => valueOf(i).as(i.outName)): _*)
     val distincted = if (q.distinct) projected.dropDuplicates() else projected
-    // ORDER BY accepts the pre-alias default name of a renamed item, same
-    // contract as the pattern path (Pattern.fromQuery's sortKeyToOut);
-    // unknown keys fail loudly, not as a Spark unresolved-column error
-    val sortKeyToOut = Ast.Ret.sortKeyMap(q.returns)
-    val unknownSort = q.orderBy.map(_.binding).filterNot(sortKeyToOut.contains)
-    if (unknownSort.nonEmpty) throw new cypher.ParseException(
-      s"ORDER BY references non-returned columns: ${unknownSort.mkString(",")}")
-    val ordered =
-      if (q.orderBy.isEmpty) distincted
-      else distincted.orderBy(q.orderBy.map { k =>
-        val c = col(sortKeyToOut(k.binding))
-        if (k.asc) c.asc else c.desc
-      }: _*)
-    val skipped = q.skip.fold(ordered)(ordered.offset)
-    val result = q.limit.fold(skipped)(skipped.limit)
+    val result = queryTail(distincted, q, "over shortestPath")
     // first action on the result releases the seed cache (bfsPerSource has
     // already consumed it eagerly; the lineage of shallow BFS runs — fewer
     // iterations than the Cutter's checkpoint stride — may still read it)
@@ -1091,27 +1042,24 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // trees are rewritten to read the joined column (a bare __paggN ref),
     // so every downstream compile stage sees ordinary references
     val patAggList =
-      (pg0.items.flatMap(_.expr.toSeq.flatMap(cypher.Ast.Expr.patAggs)) ++
-        pg0.residual.flatMap(cypher.Ast.Pred.patAggs(_))).distinct
+      (pg0.items.flatMap(_.expr) ++ pg0.residual).flatMap(Ast.patAggs).distinct
     val patAggCol = patAggList.zipWithIndex
       .map { case (pa, ix) => pa -> s"__pagg$ix" }.toMap
-    val patAggRewrite: cypher.Ast.Expr => cypher.Ast.Expr = {
-      case pa: cypher.Ast.EPatAgg => cypher.Ast.ERef(patAggCol(pa), None)
+    val patAggRewrite: Ast.Expr => Ast.Expr = {
+      case pa: Ast.EPatAgg => Ast.ERef(patAggCol(pa), None)
       case other => other
     }
     val pg =
       if (patAggList.isEmpty) pg0
       else pg0.copy(
         items = pg0.items.map(i =>
-          i.copy(expr = i.expr.map(cypher.Ast.Expr.transform(_)(patAggRewrite)))),
-        residual = pg0.residual.map(cypher.Ast.Pred.transformExprs(_)(patAggRewrite)))
+          i.copy(expr = i.expr.map(Ast.Expr.transform(_)(patAggRewrite)))),
+        residual = pg0.residual.map(Ast.Pred.transformExprs(_)(patAggRewrite)))
     // item-side pattern aggs anchor the RESULT granularity (they behave
     // like a property read of their anchors), so those anchors join
     // baseNeeded — the dedup keys — not just the carry set
-    val itemPatAggAnchors =
-      pg0.items.flatMap(_.expr.toSeq.flatMap(cypher.Ast.Expr.patAggs))
-        .flatMap(pa => (pa.pat.path.first.name.toSeq ++
-          pa.pat.path.hops.flatMap(_._2.name)).distinct.filter(pg0.bindings))
+    val itemPatAggAnchors = pg0.items.flatMap(_.expr).flatMap(Ast.patAggs)
+      .flatMap(_.pat.path.names.distinct.filter(pg0.bindings))
     // the required pattern must carry everything the result needs from it,
     // plus every optional group's join keys, plus the bindings the residual
     // WHERE predicates read (possibly beyond the returned set). A residual
@@ -1131,7 +1079,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // expression items read (binding, prop) pairs — node refs join like
     // item properties, edge refs like residual edge refs; bare refs (prop
     // "") resolve to the binding's id column, already carried
-    val exprRefs = pg.items.flatMap(_.expr.toSeq.flatMap(cypher.Ast.Expr.refs)).distinct
+    val exprRefs = pg.items.flatMap(_.expr.toSeq.flatMap(Ast.Expr.refs)).distinct
     val (exprEdgeRefs, exprNodeRefs) = exprRefs.partition(r => edgeByName.contains(r._1))
     // RETURN r.prop / agg(r.prop) on a single-hop relationship variable:
     // rendered by the same endpoint-pair join-back as residual edge refs
@@ -1144,9 +1092,8 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // columns via the identity join-back below.
     val allKeysBindings =
       (pg.items.filter(_.agg.contains("keys")).map(_.binding) ++
-        (pg.items.flatMap(_.expr.toSeq.flatMap(cypher.Ast.Expr.fns)) ++
-          pg.residual.flatMap(cypher.Ast.Pred.fns(_)))
-          .collect { case cypher.Ast.EFn("keys", Seq(cypher.Ast.ERef(b, _))) => b }).distinct
+        (pg.items.flatMap(_.expr) ++ pg.residual).flatMap(Ast.fns)
+          .collect { case Ast.EFn("keys", Seq(Ast.ERef(b, _))) => b }).distinct
     val keysEdgeNames = allKeysBindings.filter(edgeByName.contains)
     // type(r)/startNode(r)/endNode(r)/keys(r) project the matched
     // relationship's identity (and, for keys, property) columns — same
@@ -1154,16 +1101,14 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     val typeRefNames = (pg.items
       .filter(_.agg.exists(Set("type", "startnode", "endnode")))
       .map(_.binding) ++ pathRelNames ++ keysEdgeNames).distinct
-    val resRefs = pg.residual.flatMap(cypher.Ast.Pred.refs(_)).distinct
+    val resRefs = pg.residual.flatMap(Ast.Pred.refs(_)).distinct
     val (resEdgeRefs, resNodeRefs) = resRefs.partition(r => edgeByName.contains(r._1))
     val edgeRefNames =
       (resEdgeRefs.map(_._1) ++ itemEdgeRefs.map(_._1) ++ typeRefNames).distinct
     // pattern predicates anchor on main-pattern bindings — carried through
     // the match so the semi/anti/flag joins below have their key columns
-    val patPreds = pg.residual.flatMap(cypher.Ast.Pred.patterns(_)).distinct
-    def patAnchors(pp: cypher.Ast.PatPred): Seq[String] =
-      (pp.path.first.name.toSeq ++ pp.path.hops.flatMap(_._2.name))
-        .distinct.filter(pg.bindings)
+    val patPreds = pg.residual.flatMap(Ast.patterns).distinct
+    def patAnchors(pp: Ast.PatPred): Seq[String] = pp.path.names.distinct.filter(pg.bindings)
     // __paggN refs resolve to columns JOINED below, never to match
     // bindings; their sub-patterns' anchor bindings must be carried instead
     val resBindings = (resNodeRefs.map(_._1).filterNot(patAggCol.valuesIterator.toSet) ++
@@ -1171,7 +1116,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       patPreds.flatMap(patAnchors) ++
       patAggList.flatMap(pa => patAnchors(pa.pat))).distinct
     val mainNeeded = (baseNeeded ++ resBindings).distinct
-    val mainPg = pg.copy(items = mainNeeded.map(b => cypher.Ast.Ret(b)),
+    val mainPg = pg.copy(items = mainNeeded.map(b => Ast.Ret(b)),
       optional = Seq.empty, distinct = false, orderBy = Seq.empty, limit = None,
       skip = None, residual = Seq.empty)
     val root = Planner.plan(mainPg, stats)
@@ -1189,7 +1134,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       val fragNeeded =
         (g.shared ++ pg.referenced.filter(b => g.bindings(b) && !pg.bindings(b))).distinct
       val fragPg = Pattern.PatternGraph(g.labels, g.edges, g.preds,
-        fragNeeded.map(b => cypher.Ast.Ret(b)), distinct = false, Seq.empty, None,
+        fragNeeded.map(b => Ast.Ret(b)), distinct = false, Seq.empty, None,
         edgePredicates = g.edgePreds)
       val fr = Planner.plan(fragPg, stats)
       val fc = PatternExec.compileTracked(fr, graph)
@@ -1224,11 +1169,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // bare refs (prop "") are id columns, not property joins
     val propsNeeded = (itemProps ++ resNodeRefs).distinct.filter(_._2.nonEmpty)
       .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-    val withNodeProps = propsNeeded.foldLeft(matches) { case (acc, (b, ps)) =>
-      val sel = graph.nodes.select(
-        (col("id").as(b) +: ps.map(p => col(p).as(s"${b}_$p"))): _*)
-      acc.join(sel, Seq(b), "left")
-    }
+    val withNodeProps = joinNodeProps(matches, propsNeeded)
     // relationship properties referenced by residual predicates or RETURN
     // items join back on the edge's endpoint pair — 1:1 per type by the
     // (src,dst,etype) uniqueness invariant. Multi-type or undirected rels
@@ -1278,36 +1219,36 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // broadcasts the (anchor-projected) build side when small. Only a
     // pattern nested deeper (under OR / inside a conjunction) pays the
     // exists-flag left join: distinct anchor keys, so strictly 1:1.
-    def existsFrame(pp: cypher.Ast.PatPred): (DataFrame, Seq[String]) = {
+    def existsFrame(pp: Ast.PatPred): (DataFrame, Seq[String]) = {
       // an unlabeled anchor inherits the main pattern's label constraint —
       // narrows the existential scan for free (the anchor's VALUES are
       // already label-constrained by the outer match, so this is purely a
       // scan-size optimization, never a semantics change)
-      def seed(n: cypher.Ast.NodePat): cypher.Ast.NodePat =
+      def seed(n: Ast.NodePat): Ast.NodePat =
         if (n.label.isEmpty) n.copy(label = n.name.flatMap(pg.labels.get).flatten) else n
-      val seeded = cypher.Ast.Path(seed(pp.path.first),
+      val seeded = Ast.Path(seed(pp.path.first),
         pp.path.hops.map { case (r, n) => (r, seed(n)) })
       val anchors = patAnchors(pp)
-      val sub = cypher.Ast.Query(Seq(seeded), Seq.empty, pp.preds,
-        anchors.map(b => cypher.Ast.Ret(b)), distinct = false, Seq.empty, None)
+      val sub = Ast.Query(Seq(seeded), Seq.empty, pp.preds,
+        anchors.map(b => Ast.Ret(b)), distinct = false, Seq.empty, None)
       val sc = PatternExec.compileTracked(Planner.plan(Pattern.fromQuery(sub), stats), graph)
       (sc.df.select(anchors.map(col): _*), anchors)
     }
-    val (bareSemi, rest0) = pg.residual.partition(_.isInstanceOf[cypher.Ast.PatPred])
+    val (bareSemi, rest0) = pg.residual.partition(_.isInstanceOf[Ast.PatPred])
     val (bareAnti, restResidual) = rest0.partition {
-      case cypher.Ast.Not(_: cypher.Ast.PatPred) => true
+      case Ast.Not(_: Ast.PatPred) => true
       case _ => false
     }
     val withSemi = bareSemi.foldLeft(withAllProps) { (acc, p) =>
-      val (df, keys) = existsFrame(p.asInstanceOf[cypher.Ast.PatPred])
+      val (df, keys) = existsFrame(p.asInstanceOf[Ast.PatPred])
       acc.join(df, keys, "left_semi")
     }
     val withAnti = bareAnti.foldLeft(withSemi) { (acc, p) =>
-      val cypher.Ast.Not(pp: cypher.Ast.PatPred) = p: @unchecked
+      val Ast.Not(pp: Ast.PatPred) = p: @unchecked
       val (df, keys) = existsFrame(pp)
       acc.join(df, keys, "left_anti")
     }
-    val nestedPats = restResidual.flatMap(cypher.Ast.Pred.patterns(_)).distinct
+    val nestedPats = restResidual.flatMap(Ast.patterns).distinct
     val patFlag = nestedPats.zipWithIndex.map { case (pp, ix) => pp -> s"__pp$ix" }.toMap
     val withPatFlags = nestedPats.foldLeft(withAnti) { (acc, pp) =>
       val (df, keys) = existsFrame(pp)
@@ -1323,8 +1264,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     // assignment counts as a match (the set-semantics analogue of
     // openCypher's per-path counting; parallel same-endpoint relationships
     // still collapse — the engine-wide Boolean-matrix contract).
-    def patAggFrame(pa: cypher.Ast.EPatAgg, outCol: String): (DataFrame, Seq[String]) = {
-      import cypher.Ast
+    def patAggFrame(pa: Ast.EPatAgg, outCol: String): (DataFrame, Seq[String]) = {
       var n = 0
       def named(np: Ast.NodePat): Ast.NodePat =
         if (np.name.isDefined) np else { n += 1; np.copy(name = Some(s"__pae$n")) }
@@ -1335,9 +1275,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       val path = Ast.Path(seedL(named(p0.first)),
         p0.hops.map { case (r, np) => (r, seedL(named(np))) })
       val anchors = patAnchors(pa.pat)
-      val nodeBindings =
-        (path.first.name.toSeq ++ path.hops.flatMap(_._2.name)).distinct
-      val items = nodeBindings.map(b => Ast.Ret(b)) ++
+      val items = path.names.distinct.map(b => Ast.Ret(b)) ++
         pa.map.map(m => Ast.Ret("", expr = Some(m), alias = Some("__pv"))).toSeq
       val sub = Ast.Query(Seq(path), Seq.empty, pa.pat.preds, items,
         distinct = false, Seq.empty, None)
@@ -1405,7 +1343,7 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           .flatMap(r => Seq(s"__rel_${r}_s", s"__rel_${r}_d", s"__rel_${r}_t"))
         filtered.dropDuplicates(baseNeeded ++ optCols ++ relIdCols)
       } else filtered
-    def valueOf(i: cypher.Ast.Ret): Column = i.expr match {
+    def valueOf(i: Ast.Ret): Column = i.expr match {
       // general value expression (arithmetic / CASE / coalesce …): one
       // codegen'd Column over the joined-back property columns
       case Some(e) => operators.Preds.exprColumn(e, matchResolve)
@@ -1449,26 +1387,8 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       if (pg.aggItems.isEmpty)
         withProps.select(pg.groupItems.map(i => valueOf(i).as(i.outName)): _*)
       else {
-        val aggs = pg.aggItems.map { i =>
-          (i.agg.get match {
-            case "count"   => countDistinct(col(i.binding))
-            case "sum"     => sum(valueOf(i))
-            case "min"     => min(valueOf(i))
-            case "max"     => max(valueOf(i))
-            case "avg"     => avg(valueOf(i))
-            case "collect" => sort_array(collect_list(valueOf(i)))
-            case "stdev"   => stddev_samp(valueOf(i))
-            case "stdevp"  => stddev_pop(valueOf(i))
-            // exact linear-interpolated percentile (openCypher CONT); DISC
-            // returns an actual element — percentile_approx at max accuracy
-            // is the exact discrete sketch
-            case "percentilecont" => percentile(valueOf(i), lit(i.aggParam.get))
-            case "percentiledisc" =>
-              percentile_approx(valueOf(i), lit(i.aggParam.get), lit(Int.MaxValue))
-            case other => throw new cypher.ParseException(
-              s"$other() is not supported in this position")
-          }).as(i.outName)
-        }
+        val aggs = pg.aggItems.map(i =>
+          aggregate(i, valueOf(i), overMatch = true))
         if (pg.groupItems.isEmpty) withProps.agg(aggs.head, aggs.tail: _*)
         else withProps.groupBy(pg.groupItems.map(i => valueOf(i).as(i.outName)): _*)
           .agg(aggs.head, aggs.tail: _*)
@@ -1483,12 +1403,6 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
             i.expr.isDefined))
         aggregated.dropDuplicates()
       else aggregated
-    // ORDER BY over output columns (beyond the reference — relational surface
-    // Spark gives for free; a TakeOrderedAndProject when LIMIT follows, so
-    // the sort never materializes globally). SKIP (Cypher's OFFSET) drops
-    // rows after the sort, before LIMIT — Spark plans offset+limit together
-    // as one global take, so a paged query still never materializes the
-    // full sorted result.
     // non-returned sort properties (RETURN b ORDER BY b.name): joined on the
     // output id column purely for the sort — functionally dependent on the
     // returned binding, so granularity is untouched — and dropped after
@@ -1496,12 +1410,8 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       acc.join(graph.nodes.select(col("id").as(b), col(p).as(s"__sort_${b}_$p")),
         Seq(b), "left")
     }
-    val ordered =
-      if (pg.orderBy.isEmpty) sortJoined
-      else sortJoined.orderBy(pg.orderBy.map(k =>
-        if (k.asc) col(k.binding).asc else col(k.binding).desc): _*)
-    val skipped = pg.skip.fold(ordered)(ordered.offset)
-    val limited = pg.limit.fold(skipped)(skipped.limit)
+    // sort keys arrive resolved to output columns (Pattern.fromQuery)
+    val limited = orderSkipLimit(sortJoined, pg.orderBy, pg.skip, pg.limit, Some(_), "")
     if (pg.extraSortProps.isEmpty) limited
     else limited.drop(pg.extraSortProps.map { case (b, p) => s"__sort_${b}_$p" }: _*)
   }
@@ -1517,10 +1427,6 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     val outs = pg.items.collect {
       case r if r.prop.isEmpty && r.agg.isEmpty && r.expr.isEmpty => r.outName
     }
-    outs.foldLeft(run(pg)) { (acc, b) =>
-      val props = graph.nodes.columns.filter(_ != "id")
-        .map(c => col(c).as(s"${b}_$c"))
-      acc.join(graph.nodes.select((col("id").as(b) +: props.toSeq): _*), Seq(b), "left")
-    }
+    joinNodeProps(run(pg), outs.map(_ -> graph.nodes.columns.toSeq.filter(_ != "id")))
   }
 }

@@ -2672,15 +2672,11 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     *
-    * Every query with DOUBLE outputs ([[NegZeroCols]]) is wrapped in a
-    * `* REPLACE (c + 0)` projection and [[Verify]] applies the same
+    * [[Verify]] wraps each query's oracle in a `* REPLACE (c + 0)`
+    * projection over the query result's DOUBLE columns and applies the same
     * `+ 0.0` Spark-side — canonicalizing −0.0 to +0.0 on both engines
     * before the driver's byte-hash compare (see [[graft.util.NegZero]]). */
-  def oracleSql: Map[String, String] = rawOracleSql.map { case (k, sql) =>
-    k -> graft.util.NegZero.wrapOracle(sql, NegZeroCols.cols.getOrElse(k, Seq.empty))
-  }
-
-  private def rawOracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = Map(
     "bpe_merges" -> bpeMergesOracle(8),
     "bpe_encode" -> bpeEncodeOracle(8),
     "cy_expand_1hop" ->

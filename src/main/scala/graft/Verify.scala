@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for a DuckDB compare. Each oracle is wrapped over the
+  * DOUBLE columns of its query's result ([[graft.util.NegZero]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -18,16 +19,20 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    wanted.foreach { case (name, fn) =>
-      // NegZero.normalize: −0.0 → +0.0 on double outputs, mirroring the
-      // `* REPLACE (c + 0)` wrap on the oracle side — the driver hashes
-      // BYTES, and the two engines disagree on round()'s sign of zero
-      try graft.util.NegZero.normalize(fn(spark, sfDir)).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // NegZero.normalize: −0.0 → +0.0 on double outputs, mirroring the
+    // `* REPLACE (c + 0)` wrap on the oracle side — the compare hashes
+    // BYTES, and the two engines disagree on round()'s sign of zero
+    val doubleCols = wanted.toSeq.flatMap { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        graft.util.NegZero.normalize(df).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name")
+        Some(name -> graft.util.NegZero.doubleCols(df))
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        None
       }
-    }
+    }.toMap
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,8 +45,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${q(k)}: ${q(graft.util.NegZero.wrapOracle(v, doubleCols.getOrElse(k, Seq.empty)))}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -462,8 +462,10 @@ object Algorithms {
     if (local.nonEmpty) return local.get
     e0.unpersist(false)
     val vs = vertices.select(col("id")).distinct().localCheckpoint(true)
-    val sym = edges.select("src", "dst").filter(col("src") =!= col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    // self-loops dropped on BOTH legs: a reversed (v, v) would make v its
+    // own neighbour, and v could never win
+    val fwd = edges.select("src", "dst").filter(col("src") =!= col("dst"))
+    val sym = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint(true)
     var active = vs
     val winnersAcc = scala.collection.mutable.Buffer[DataFrame]()

@@ -32,7 +32,15 @@ object Ast {
     * keeps no relationship variables at all — QueryGraph.scala:54-67). */
   final case class RelPat(types: Seq[String], dir: Dir, hops: Option[(Int, Int)] = None,
                           name: Option[String] = None)
-  final case class Path(first: NodePat, hops: Seq[(RelPat, NodePat)])
+  final case class Path(first: NodePat, hops: Seq[(RelPat, NodePat)]) {
+    /** The node patterns in path order. */
+    def nodes: Seq[NodePat] = first +: hops.map(_._2)
+    /** The named nodes' bindings in path order (anonymous nodes skipped). */
+    def names: Seq[String] = nodes.flatMap(_.name)
+  }
+  /** An expression or predicate — the unit [[children]] and [[collect]]
+    * walk. */
+  sealed trait Node
   /** WHERE predicate tree. A bare `Cmp` conjunct compiles to a pushed-down
     * per-binding semi-join (PropFilter / edge-scan filter); boolean
     * structure (`Or`/`Not`/nested `And`) and `IsNull` become a RESIDUAL
@@ -41,7 +49,7 @@ object Ast {
     * conjuncts to scans and keeps disjunctions at the Filter node.
     * `Cmp.op` ∈ { = <> < <= > >=, STARTS WITH, ENDS WITH, CONTAINS, IN }
     * (IN carries a Seq[Any] of literals). */
-  sealed trait Pred
+  sealed trait Pred extends Node
   final case class Cmp(binding: String, prop: String, op: String, value: Any) extends Pred
   final case class And(l: Pred, r: Pred) extends Pred
   final case class Or(l: Pred, r: Pred) extends Pred
@@ -73,7 +81,7 @@ object Ast {
     * Column ([[graft.operators.Preds.exprColumn]]) — stays inside
     * whole-stage codegen. Beyond the reference (ids-only surface); the
     * relational expression algebra Spark gives us for free. */
-  sealed trait Expr
+  sealed trait Expr extends Node
   /** `b` (binding id / bare post-WITH column when prop empty) or `b.prop`. */
   final case class ERef(binding: String, prop: Option[String]) extends Expr
   /** Number (Long when written integral, Double otherwise) or String. */
@@ -134,55 +142,6 @@ object Ast {
       // carry (patAggs), never as outer property refs
       case EPatAgg(_, _, _) => Seq.empty
     }
-    /** Every pattern-valued expression ([[EPatAgg]]) at THIS scope level —
-      * nested occurrences inside an EPatAgg's own projection belong to the
-      * sub-match and are handled by its recursive compile. */
-    def patAggs(e: Expr): Seq[EPatAgg] = e match {
-      case pa: EPatAgg   => Seq(pa)
-      case EBin(_, l, r) => patAggs(l) ++ patAggs(r)
-      case ENeg(x)       => patAggs(x)
-      case EFn(_, args)  => args.flatMap(patAggs)
-      case ECase(ws, d)  =>
-        ws.flatMap { case (p, v) => Pred.patAggs(p) ++ patAggs(v) } ++
-          d.toSeq.flatMap(patAggs)
-      case EListPred(_, _, l, p)  => patAggs(l) ++ Pred.patAggs(p)
-      case EListComp(_, l, p, pr) =>
-        patAggs(l) ++ p.toSeq.flatMap(Pred.patAggs) ++ pr.toSeq.flatMap(patAggs)
-      case EReduce(_, init, _, l, body) =>
-        patAggs(init) ++ patAggs(l) ++ patAggs(body)
-      case _             => Seq.empty
-    }
-    /** Pattern predicates nested in CASE conditions (rejected in items —
-      * the exists-flag machinery is residual-WHERE-only). */
-    def patterns(e: Expr): Seq[PatPred] = e match {
-      case ECase(ws, d) =>
-        ws.flatMap { case (p, v) => Pred.patterns(p) ++ patterns(v) } ++
-          d.toSeq.flatMap(patterns)
-      case EBin(_, l, r) => patterns(l) ++ patterns(r)
-      case ENeg(x)       => patterns(x)
-      case EFn(_, args)  => args.flatMap(patterns)
-      case EListPred(_, _, l, p)  => patterns(l) ++ Pred.patterns(p)
-      case EListComp(_, l, p, pr) =>
-        patterns(l) ++ p.toSeq.flatMap(Pred.patterns) ++ pr.toSeq.flatMap(patterns)
-      case EReduce(_, init, _, l, body) =>
-        patterns(init) ++ patterns(l) ++ patterns(body)
-      case _             => Seq.empty
-    }
-    /** Every function application in the expression, nested included —
-      * the match compiler scans these for keys() (which needs the whole
-      * property set joined back) and the parser for scope validation. */
-    def fns(e: Expr): Seq[EFn] = e match {
-      case f @ EFn(_, args) => f +: args.flatMap(fns)
-      case EBin(_, l, r)    => fns(l) ++ fns(r)
-      case ENeg(x)          => fns(x)
-      case ECase(ws, d)     =>
-        ws.flatMap { case (p, v) => Pred.fns(p) ++ fns(v) } ++ d.toSeq.flatMap(fns)
-      case EListPred(_, _, l, p)  => fns(l) ++ Pred.fns(p)
-      case EListComp(_, l, p, pr) =>
-        fns(l) ++ p.toSeq.flatMap(Pred.fns) ++ pr.toSeq.flatMap(fns)
-      case EReduce(_, init, _, l, body) => fns(init) ++ fns(l) ++ fns(body)
-      case _                => Seq.empty
-    }
     /** Bottom-up structural rewrite: children first, then `f` on the
       * rebuilt node. Nested predicates (CASE conditions, lambda bodies)
       * rewrite their expression operands too. */
@@ -213,7 +172,7 @@ object Ast {
     }
     /** Every (binding, prop) pair the predicate reads. Pattern predicates
       * read no property COLUMNS of the outer match (their anchor bindings
-      * are surfaced by [[patterns]] instead). */
+      * are surfaced by [[Ast.patterns]] instead). */
     def refs(p: Pred): Seq[(String, String)] = p match {
       case Cmp(b, pr, _, _)  => Seq(b -> pr)
       case IsNull(b, pr, _)  => Seq(b -> pr)
@@ -222,31 +181,6 @@ object Ast {
       case Or(l, r)          => refs(l) ++ refs(r)
       case Not(x)            => refs(x)
       case PatPred(_, _)     => Seq.empty
-    }
-    /** Every pattern predicate nested anywhere in the tree. */
-    def patterns(p: Pred): Seq[PatPred] = p match {
-      case pp: PatPred   => Seq(pp)
-      case And(l, r)     => patterns(l) ++ patterns(r)
-      case Or(l, r)      => patterns(l) ++ patterns(r)
-      case Not(x)        => patterns(x)
-      case CmpE(l, _, r) => Expr.patterns(l) ++ Expr.patterns(r)
-      case _             => Seq.empty
-    }
-    /** Every function application nested in expression operands. */
-    def fns(p: Pred): Seq[EFn] = p match {
-      case And(l, r)     => fns(l) ++ fns(r)
-      case Or(l, r)      => fns(l) ++ fns(r)
-      case Not(x)        => fns(x)
-      case CmpE(l, _, r) => Expr.fns(l) ++ Expr.fns(r)
-      case _             => Seq.empty
-    }
-    /** Every pattern-valued expression in the predicate's operands. */
-    def patAggs(p: Pred): Seq[EPatAgg] = p match {
-      case And(l, r)     => patAggs(l) ++ patAggs(r)
-      case Or(l, r)      => patAggs(l) ++ patAggs(r)
-      case Not(x)        => patAggs(x)
-      case CmpE(l, _, r) => Expr.patAggs(l) ++ Expr.patAggs(r)
-      case _             => Seq.empty
     }
     /** Rewrite every expression operand in the predicate tree with
       * [[Expr.transform]]'s `f`. Pattern predicates are left as-is (their
@@ -259,6 +193,38 @@ object Ast {
       case other          => other
     }
   }
+
+  /** The direct sub-expressions and sub-predicates of `n`, in source order
+    * (CASE: p0, v0, p1, v1, …, default). A pattern predicate and a
+    * pattern-valued expression are scope boundaries: their own preds and
+    * projection belong to the sub-match, so they have no children here. */
+  def children(n: Node): Seq[Node] = n match {
+    case EBin(_, l, r)                => Seq(l, r)
+    case ENeg(x)                      => Seq(x)
+    case EFn(_, args)                 => args
+    case ECase(ws, d)                 => ws.flatMap { case (p, v) => Seq(p, v) } ++ d
+    case EListPred(_, _, l, p)        => Seq(l, p)
+    case EListComp(_, l, p, pr)       => l +: (p.toSeq ++ pr)
+    case EReduce(_, init, _, l, body) => Seq(init, l, body)
+    case And(l, r)                    => Seq(l, r)
+    case Or(l, r)                     => Seq(l, r)
+    case Not(x)                       => Seq(x)
+    case CmpE(l, _, r)                => Seq(l, r)
+    case _                            => Seq.empty
+  }
+  /** Pre-order walk of `n` and its descendants ([[children]]), keeping
+    * every node `pf` matches. The order is stable: generated column names
+    * (`__paggN`, `__ppN`) are numbered by it. */
+  def collect[A](n: Node)(pf: PartialFunction[Node, A]): Seq[A] =
+    pf.lift(n).toSeq ++ children(n).flatMap(collect(_)(pf))
+  /** Pattern-valued expressions ([[EPatAgg]]) at this scope level. */
+  def patAggs(n: Node): Seq[EPatAgg] = collect(n) { case pa: EPatAgg => pa }
+  /** Pattern predicates at this scope level. */
+  def patterns(n: Node): Seq[PatPred] = collect(n) { case pp: PatPred => pp }
+  /** Function applications, nested ones included — scanned for keys()
+    * (which needs the whole property set joined back), length() and
+    * scope validation. */
+  def fns(n: Node): Seq[EFn] = collect(n) { case f: EFn => f }
   /** (key, ascending) — ORDER BY keys; `key` is the OUTPUT column name of a
     * returned item (`a`, `a_prop`, `count_a`, `sum_a_prop`). `parts` keeps
     * the raw `(binding, prop)` split of a dotted key so a NON-returned
@@ -812,8 +778,7 @@ object CypherParser {
           eat(')')
           val named = Path(nodeNamedA(p0.first),
             p0.hops.map { case (r, n) => (relNamedA(r), nodeNamedA(n)) })
-          namedPaths += pv -> ((named.first.name.get +: named.hops.map(_._2.name.get),
-            named.hops.map(_._1.name.get)))
+          namedPaths += pv -> ((named.names, named.hops.map(_._1.name.get)))
           allShortestVars += pv
           paths += named
           var more = true
@@ -841,8 +806,7 @@ object CypherParser {
           val p0 = path()
           val named = Path(nodeNamed(p0.first),
             p0.hops.map { case (r, n) => (relNamed(r), nodeNamed(n)) })
-          namedPaths += pv -> ((named.first.name.get +: named.hops.map(_._2.name.get),
-            named.hops.map(_._1.name.get)))
+          namedPaths += pv -> ((named.names, named.hops.map(_._1.name.get)))
           paths += named
           while (tryEat(',')) paths += path()
           var more = true
@@ -927,9 +891,9 @@ object CypherParser {
       // CASE conditions (the exists-flag machinery is residual-WHERE-only),
       // no property access in post-WITH scope
       def checkItemExpr(e: Expr, afterWith: Boolean, what: String): Unit = {
-        if (Expr.patterns(e).nonEmpty)
+        if (patterns(e).nonEmpty)
           err(s"pattern predicates are not supported inside $what (use WHERE)")
-        if (afterWith && Expr.fns(e).exists(_.name == "keys"))
+        if (afterWith && fns(e).exists(_.name == "keys"))
           err("keys() is not available after WITH (project it in the WITH items instead)")
         if (afterWith)
           Expr.refs(e).collectFirst { case (b, p) if p.nonEmpty => s"$b.$p" }.foreach { r =>
@@ -1080,7 +1044,7 @@ object CypherParser {
         else unwindLit.map(u => Seq(u._2))
           .orElse(unwindRange.map(u => Seq(u._4))).getOrElse(
           (paths.toSeq ++ optional.toSeq.flatten)
-            .flatMap(pt => pt.first.name.toSeq ++ pt.hops.flatMap(h => h._2.name.toSeq))
+            .flatMap(_.names)
             .filterNot(_.startsWith("__")).distinct)
       while (kw("WITH")) {
         if (shortest.isDefined) err("WITH is not supported with shortestPath")
@@ -1152,7 +1116,7 @@ object CypherParser {
             else if (unwindLit.isDefined) Seq(unwindLit.get._2)
             else if (unwindRange.isDefined) Seq(unwindRange.get._4)
             else (paths.toSeq ++ optional.toSeq.flatten)
-              .flatMap(pt => pt.first.name.toSeq ++ pt.hops.flatMap(h => h._2.name.toSeq))
+              .flatMap(_.names)
               .filterNot(_.startsWith("__")).distinct
           if (names.isEmpty) err("RETURN *: no named bindings in scope")
           scala.collection.mutable.ArrayBuffer(names.map(n => Ret(n)): _*)

@@ -472,8 +472,7 @@ object EventOps {
     // off the oracle's. Same grid contract as StreamOps.tsToOracleSecond;
     // bit-neutral at the checked SFs (no event sits on such a boundary
     // there), r15 alignment.
-    val sec = floor((unix_micros(col(time).cast("timestamp")) + lit(500000L)) /
-      lit(1000000.0))
+    val sec = graft.streaming.StreamOps.epochSecondRounded(col(time).cast("timestamp"))
     val ref = df.agg(max(sec).as("__ref"))
     df.filter(col(time).isNotNull)
       .crossJoin(broadcast(ref))

@@ -219,7 +219,7 @@ object Pattern {
         // a bare relationship ref is legal exactly when it is the argument
         // of keys() — keys(r) reads the edge's property columns, not an
         // entity value
-        val keysArgs = Ast.Expr.fns(e)
+        val keysArgs = Ast.fns(e)
           .collect { case Ast.EFn("keys", Seq(Ast.ERef(b, _))) => b }.toSet
         Ast.Expr.refs(e).foreach { case (b, p) =>
           if (!allBindings(b)) {
@@ -356,9 +356,8 @@ object Pattern {
     // variables inside the predicate have nothing to bind to outside it.
     // `__m*` names are the parser's own anonymous property-map bindings —
     // internal to the predicate's existential match.
-    residual.flatMap(Ast.Pred.patterns(_)).foreach { pp =>
-      val names = (pp.path.first.name.toSeq ++ pp.path.hops.flatMap(_._2.name))
-        .filterNot(_.startsWith("__m"))
+    residual.flatMap(Ast.patterns).foreach { pp =>
+      val names = pp.path.names.filterNot(_.startsWith("__m"))
       if (!names.exists(mainLabels.contains))
         throw new graft.cypher.ParseException(
           "a pattern predicate must anchor on at least one MATCH binding " +

@@ -246,8 +246,7 @@ object Sketches {
     // StreamOps.tsToOracleSecond — an event within 0.5 s below a slide
     // boundary belongs to the NEXT slide; bit-neutral at the checked SFs,
     // which have no such event, r15 alignment)
-    val sec = floor((unix_micros(time.cast("timestamp")) + lit(500000L)) /
-      lit(1000000.0))
+    val sec = graft.streaming.StreamOps.epochSecondRounded(time.cast("timestamp"))
     val bucket = floor(sec / slideSec).cast("long")
     val regs = hllRegisters(df.withColumn("__b", bucket), Seq("__b"), value, p)
     val merged = regs.withColumn("__o", explode(sequence(lit(0), lit(slides - 1))))

@@ -73,13 +73,24 @@ object StreamOps {
     * rounding is bit-neutral at the checked SFs and closes the divergence
     * at sf0.1 and beyond). Integer micros math, exact for every epoch ≥ 0
     * (floor(+0.5 s) = half-away-from-zero on the non-negative domain all
-    * event data lives in; `floor((m+5e5)/1e6)` is exact in double for every
-    * |m| < 2^53 because ties land on representable integers).
+    * event data lives in).
     * Tumbling operators are NOT rounded: their oracles use
     * `date_trunc`, which truncates the raw timestamp exactly as `window()`
     * does. */
   private[graft] def tsToOracleSecond(ts: Column): Column =
-    timestamp_seconds(floor((unix_micros(ts) + lit(500000L)) / lit(1000000.0)))
+    timestamp_seconds(epochSecondRounded(ts))
+
+  /** Epoch seconds of `ts` rounded half up — the oracle's
+    * `epoch(ts)::BIGINT`, whose double→BIGINT cast rounds half away from
+    * zero. Contract: NON-NEGATIVE epochs only (pre-1970 event times are out
+    * of contract) — there half up equals half away from zero; a negative
+    * epoch rounds a tie toward +∞ and can land one second off the oracle.
+    * Integer micros math: `floor((m + 5e5) / 1e6)` is exact in double for
+    * every |m| < 2^53 because ties land on representable integers. The one
+    * shared rounding of the sliding-window, sliding-HLL and decay
+    * operators. */
+  private[graft] def epochSecondRounded(ts: Column): Column =
+    floor((unix_micros(ts) + lit(500000L)) / lit(1000000.0))
 
   /**
    * Tumbling-window aggregate per event type: count + exact decimal mean.

@@ -860,10 +860,9 @@ object TextOps {
     require(bandBits >= 1 && bandBits <= 64 && 64 % bandBits == 0,
       s"bandBits must divide 64, got $bandBits")
     val sh = shingles(df, idCol, textCol, n).cache()
-    // global doc frequency per shingle: the window's hash(shingle) exchange
-    // also co-locates both sides of the prefix self-join below (the
-    // jaccardPairs device) — the ordering key costs no extra shuffle on
-    // the join path
+    // global doc frequency per shingle — the prefix ordering key. The
+    // per-document windows below re-partition by idCol, so the prefix
+    // self-join on shingle shuffles both of its sides again
     val withF = sh.withColumn("__f", count(lit(1)).over(Window.partitionBy("shingle")))
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("__f").asc, col("shingle").asc)
     val ranked = withF

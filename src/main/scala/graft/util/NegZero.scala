@@ -14,16 +14,19 @@ import org.apache.spark.sql.types.{DoubleType, StructField}
  * `x + 0.0` maps −0.0 → +0.0 under round-to-nearest and is the
  * identity on every other double (NaN stays NaN, null stays null), so
  * applying it on BOTH engines canonicalizes the sign of zero without
- * changing any value. [[graft.NegZeroCols]] records which output
- * columns are doubles; NegZeroAuditSpec keeps that record honest.
+ * changing any value. [[graft.Verify]] reads each query's double
+ * columns off its result schema ([[doubleCols]]) for both sides.
  */
 object NegZero {
 
-  /** Spark side: `c + 0.0` on every top-level DOUBLE column (the audit
+  /** The top-level DOUBLE columns of `df`, in schema order (the audit
     * spec proves top-level doubles are the only float-typed outputs). */
+  def doubleCols(df: DataFrame): Seq[String] =
+    df.schema.fields.toSeq.collect { case StructField(n, DoubleType, _, _) => n }
+
+  /** Spark side: `c + 0.0` on every top-level DOUBLE column. */
   def normalize(df: DataFrame): DataFrame = {
-    val hasDouble = df.schema.fields.exists(_.dataType == DoubleType)
-    if (!hasDouble) df
+    if (doubleCols(df).isEmpty) df
     else df.select(df.schema.fields.map {
       case StructField(n, DoubleType, _, _) => (col(n) + lit(0.0)).as(n)
       case f => col(f.name)

@@ -541,6 +541,13 @@ class AlgorithmsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       eq("betweennessLandmark", seed)(btL, btD)
     }
+    // self-loops are dropped on both sides: a vertex whose only edge is
+    // (v, v) is a trivial winner, not a budget exhaustion
+    val loops = Seq((0L, 0L), (1L, 2L), (2L, 2L)).toDF("src", "dst")
+    val (slL, slD) = bothSides(Algorithms.maximalIndependentSet((0L to 3L).toDF("id"), loops)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
+    assert(slL == slD, "mis with self-loops")
+    assert(slD(0L) && slD(3L) && (slD(1L) != slD(2L)), s"mis with self-loops: $slD")
     // budget parity: the local loops throw at the same round counts
     val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[Algorithms.BudgetExhausted] {

@@ -9,26 +9,11 @@ import org.apache.spark.sql.types._
  * round() yields +0.0 where DuckDB's yields −0.0 — equal values,
  * different bytes, so the driver's byte-hash gate stays red. The fix is
  * double-sided canonicalization ([[graft.util.NegZero]]): Verify adds
- * `+ 0.0` to every double output column, oracleSql wraps each query in
- * `* REPLACE (CAST(c + 0 AS DOUBLE) AS c)`. Both sides key off the
- * GENERATED [[NegZeroCols]] map — this spec re-derives that map from
- * the live query schemas so it can never go stale silently.
+ * `+ 0.0` to every double output column and wraps the query's oracle in
+ * `* REPLACE (CAST(c + 0 AS DOUBLE) AS c)` over the same columns, both
+ * read off the query result's schema.
  */
 class NegZeroAuditSpec extends SparkSpec {
-
-  test("NegZeroCols matches every query's live double-output columns") {
-    val stale = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val schema = fn(spark, SF).schema
-      val live = schema.fields.collect { case StructField(n, DoubleType, _, _) => n }.toSeq
-      val recorded = NegZeroCols.cols.getOrElse(name, Seq.empty)
-      if (live.sorted != recorded.sorted)
-        Some(s"$name: live=${live.mkString(",")} recorded=${recorded.mkString(",")}")
-      else None
-    }
-    assert(stale.isEmpty,
-      "NegZeroCols.scala is stale — rerun Verify at sf0.001 + tools/gen_negzero_cols.py:\n" +
-        stale.mkString("\n"))
-  }
 
   test("no query emits float32 / float-array / float-struct outputs (wrap covers top-level doubles only)") {
     def floatsBelow(dt: DataType): Boolean = dt match {
@@ -48,16 +33,15 @@ class NegZeroAuditSpec extends SparkSpec {
       s"non-top-level-double float outputs need NegZero.wrapOracle extended: ${offenders.mkString(", ")}")
   }
 
-  test("every oracle with recorded double columns is wrapped; others untouched") {
-    val oracles = SparkEntry.oracleSql
-    for ((name, sql) <- oracles) {
-      val dcols = NegZeroCols.cols.getOrElse(name, Seq.empty)
-      if (dcols.nonEmpty) {
-        assert(sql.startsWith("SELECT * REPLACE ("), s"$name oracle not wrapped")
-        dcols.foreach(c => assert(sql.contains(s"""CAST("$c" + 0 AS DOUBLE) AS "$c""""),
-          s"$name oracle wrap missing column $c"))
-      } else assert(!sql.contains("__negzero"), s"$name oracle wrapped without double cols")
-    }
+  test("wrapOracle wraps exactly the result's top-level DOUBLE columns") {
+    val df = spark.range(1).select(col("id"), lit(1.5).as("x"), lit("s").as("s"),
+      lit(-0.0).as("y"))
+    val cols = graft.util.NegZero.doubleCols(df)
+    assert(cols == Seq("x", "y"))
+    assert(graft.util.NegZero.wrapOracle("SELECT 1", cols) ==
+      """SELECT * REPLACE (CAST("x" + 0 AS DOUBLE) AS "x", CAST("y" + 0 AS DOUBLE) AS "y") """ +
+        "FROM (SELECT 1) __negzero")
+    assert(graft.util.NegZero.wrapOracle("SELECT 1", Seq.empty) == "SELECT 1")
   }
 
   test("NegZero.normalize canonicalizes -0.0 and preserves null/NaN/values") {

@@ -79,7 +79,16 @@ class PlanGoldenSpec extends SparkSpec {
     "dedup_keep_best" -> "BroadcastHashJoin=3 ShuffleExchange=2 BroadcastExchange=3 ReusedExchange=0",
     "mxm_minplus" -> "BroadcastHashJoin=1 ShuffleExchange=3 BroadcastExchange=1 ReusedExchange=0",
     "sssp_minplus" -> "ShuffleExchange=0 BroadcastExchange=0 ReusedExchange=0",
-    "wcc_apply" -> "BroadcastHashJoin=16 ShuffleExchange=10 BroadcastExchange=16 ReusedExchange=0")
+    "wcc_apply" -> "BroadcastHashJoin=16 ShuffleExchange=10 BroadcastExchange=16 ReusedExchange=0",
+    // the Cypher forms that share GraphDB's query tail, WITH-stage loop
+    // and SET/MERGE rewrites
+    "cy_merge" -> "ShuffleExchange=1 BroadcastExchange=0 ReusedExchange=0",
+    "cy_path_varlen" -> "BroadcastHashJoin=3 ShuffleExchange=3 BroadcastExchange=3 ReusedExchange=0",
+    "cy_set" -> "BroadcastHashJoin=7 SortMergeJoin=3 ShuffleExchange=5 BroadcastExchange=7 ReusedExchange=0",
+    "cy_shortest" -> "BroadcastHashJoin=1 ShuffleExchange=0 BroadcastExchange=1 ReusedExchange=0",
+    "cy_union_orderby" -> "BroadcastHashJoin=4 ShuffleExchange=2 BroadcastExchange=4 ReusedExchange=0",
+    "cy_upsert" -> "BroadcastHashJoin=1 ShuffleExchange=0 BroadcastExchange=1 ReusedExchange=0",
+    "cy_with_topk" -> "BroadcastHashJoin=3 ShuffleExchange=2 BroadcastExchange=3 ReusedExchange=0")
 
   test("top-10 query plans match their golden join/exchange fingerprints") {
     val dump = sys.env.get("GRAFT_PLAN_DUMP").contains("1")
