@@ -27,7 +27,8 @@ import graft.operators.PatternExec
  *  - SET items (SET and MERGE's ON CREATE / ON MATCH SET): `checkSetItem`
  *    and `setColumn`
  *  - MERGE's `(src, dst, etype)` anti-join: `unstoredEdges`
- *  - the match of a write statement: `matchFrame`
+ *  - the match of a write statement: `matchFrame`; the delta it adds,
+ *    removes or rewrites is materialized once by `freeze`
  * The AST walks live in [[graft.cypher.Ast]]: `children`/`collect` (one
  * walk behind `patAggs`, `patterns` and `fns`) and `Path.names`.
  */
@@ -43,9 +44,9 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
                     statsThunk: Option[() => GraphStats] = None) {
 
   /** `precomputed` wins, then `statsThunk` (a LAZY derivation — [[execute]]
-    * uses it to update stats incrementally from the pre-mutation snapshot,
-    * the reference's per-insert StatsStore contract without a graph scan),
-    * else a full distributed recompute. */
+    * uses it to update stats incrementally from the pre-mutation snapshot
+    * and the write's frozen delta, the reference's per-insert StatsStore
+    * contract without a graph scan), else a full distributed recompute. */
   lazy val stats: GraphStats =
     precomputed.orElse(statsThunk.map(_())).getOrElse(graph.computeStats())
 
@@ -86,8 +87,18 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * counter (DataStore.scala:44-49); an explicit `id` property skips the
     * job. Per-match-row NODE creation is rejected loudly (bulk loads go
     * through addNodes with a real DataFrame); every per-match-row write
-    * (edges, SET, DELETE) is one distributed plan — match → projected ids →
-    * join/anti-join against the stored tables. */
+    * (edges, SET, DELETE) is one distributed match → projected ids, frozen,
+    * then joined or anti-joined against the stored tables.
+    *
+    * A version is its parent plus a frozen delta: `execute` runs the
+    * write's match once, eagerly, and materializes what the write adds,
+    * removes or rewrites (see [[freeze]]); the new version's tables join or
+    * union the parent's tables with that delta, so no later read replays
+    * an earlier write's match and a version's plan does not grow with its
+    * depth. A match error therefore surfaces at `execute`, not at the
+    * first read. A delta too large to broadcast is a local checkpoint,
+    * whose blocks live as long as a version that references it is
+    * reachable; a small one holds no cache. */
   def execute(text: String, params: Map[String, Any]): GraphDB = {
     val stmt = CypherParser.parseWrite(text, params)
     if (stmt.sets.nonEmpty) runSet(stmt)
@@ -100,11 +111,41 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     runQuery(Ast.Query(stmt.matchPaths, Seq.empty, stmt.where, items,
       distinct = true, Seq.empty, None))
 
+  /** A write's delta (the rows it adds, removes or rewrites), evaluated
+    * once so that the new version's tables are the parent's joined or
+    * unioned with a materialized relation, not a plan that replays the
+    * write's match on every later read. One bounded collect decides: a
+    * delta within `spark.sql.autoBroadcastJoinThreshold` by Catalyst's own
+    * estimate for a local relation ((8 + row default size) bytes a row)
+    * becomes one. Its statistics are exact, so every join against it is a
+    * broadcast that leaves the base tables unshuffled, and it holds no
+    * cache. A larger delta, or any delta under a threshold ≤ 0, is an eager
+    * `localCheckpoint` instead, whose blocks live as long as a version that
+    * references them is reachable. A checkpoint alone would not serve the
+    * small case: it keeps its origin's size estimate, so joins against a
+    * one-row delta would still shuffle the base tables. */
+  private def freeze(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val maxRows = spark.sessionState.conf.autoBroadcastJoinThreshold / (8L + df.schema.defaultSize)
+    if (maxRows > 0) {
+      val rows = df.limit((maxRows min (Int.MaxValue - 1L)).toInt + 1).collect()
+      if (rows.length <= maxRows)
+        return spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    }
+    df.localCheckpoint(eager = true)
+  }
+
   /** The rows of `df` whose (src, dst, etype) key is not stored yet —
-    * MERGE's idempotent edge append (re-running it appends nothing). */
-  private def unstoredEdges(df: DataFrame): DataFrame =
-    df.join(graph.edges.select(col("src"), col("dst"), col("etype")),
-      Seq("src", "dst", "etype"), "left_anti")
+    * MERGE's idempotent edge append (re-running it appends nothing). The
+    * stored keys are first narrowed to `df`'s by a semi-join, which
+    * broadcasts a small `df`, so the anti-join does not shuffle the whole
+    * edge table. */
+  private def unstoredEdges(df: DataFrame): DataFrame = {
+    val key = Seq("src", "dst", "etype")
+    val stored = graph.edges.select(key.map(col): _*)
+      .join(df.select(key.map(col): _*), key, "left_semi")
+    df.join(stored, key, "left_anti")
+  }
 
   /** The checks every SET item passes (SET and MERGE's ON CREATE/ON MATCH
     * SET): the core columns are immutable, and the value reads only the
@@ -251,36 +292,28 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     val (matchEdges, literalEdges) = stmt.edges.partition(
       e => matchBound(e.src) || matchBound(e.dst))
     var literalEdgeDf: Option[DataFrame] = None
-    // persisted scratch frames, released via CacheLifecycle once the mutated
-    // edge table is first acted on — a long-lived session issuing many write
-    // statements must not accumulate cached blocks unboundedly
-    var scratch = Seq.empty[DataFrame]
     if (literalEdges.nonEmpty) {
       val df0 = literalDf(
         Seq("src" -> LongType, "dst" -> LongType, "etype" -> StringType),
         literalEdges.map(e => Seq[Any](idOf(e.src), idOf(e.dst), e.etype)),
         literalEdges.map(_.props), graph.edges)
       // MERGE: only the keys not already stored are appended (idempotent)
-      val df = if (!stmt.merge) df0
-        else unstoredEdges(df0).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (stmt.merge) scratch :+= df
+      val df = if (!stmt.merge) df0 else freeze(unstoredEdges(df0))
       literalEdgeDf = Some(df)
       pg = pg.addEdges(df)
     }
     // match-created edges: the statement carries the endpoint labels when
     // the pattern declares them, so the stats delta is knowable without a
     // graph scan — only the created-pair COUNT needs a job, deferred into
-    // the stats thunk. The pair set is persisted (lazily): the count job
-    // and every later scan of the unioned edge table share one evaluation
-    // of the match.
+    // the stats thunk, over the frozen appended rows.
     val matchLabel: Map[String, Option[String]] = stmt.matchPaths
       .flatMap(_.nodes.flatMap(np => np.name.map(_ -> np.label))).toMap
     var edgeDeltas = Seq.empty[(Option[String], String, Option[String], () => Long)]
     if (literalEdges.nonEmpty) {
       // labels of BOTH endpoints come from the statement (merge-matched
       // nodes declared theirs too). Under MERGE the per-group created count
-      // is whatever survived the anti-join — one collect of the tiny
-      // persisted frame, shared by every group's thunk.
+      // is whatever survived the anti-join — one collect of the frozen
+      // frame, shared by every group's thunk.
       lazy val kept: Set[(Long, Long, String)] = literalEdgeDf.get
         .select("src", "dst", "etype").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
@@ -292,17 +325,18 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         }
     }
     if (matchEdges.nonEmpty) {
-      val m = matchFrame(stmt, matchEdges.flatMap(e => Seq(e.src, e.dst)).distinct.map(Ast.Ret(_)))
+      val ends = matchEdges.flatMap(e => Seq(e.src, e.dst)).distinct
+      val m = freeze(matchFrame(stmt, ends.map(Ast.Ret(_))))
       matchEdges.foreach { e =>
-        val pairs = m.select(col(e.src).as("src"), col(e.dst).as("dst"),
-          lit(e.etype).as("etype")).dropDuplicates()
+        val pairs0 = m.select(col(e.src).as("src"), col(e.dst).as("dst"), lit(e.etype).as("etype"))
+        // m is DISTINCT over `ends`, so an edge that binds all of them
+        // already has distinct pairs
+        val pairs = if (Set(e.src, e.dst) == ends.toSet) pairs0 else pairs0.dropDuplicates()
         val withProps = e.props.foldLeft(pairs) { case (df, (k, v)) =>
           val t = graph.edges.schema.find(_.name == k).map(_.dataType)
           df.withColumn(k, t.fold(lit(norm(v)))(tt => lit(norm(v)).cast(tt)))
         }
-        val appended = (if (!stmt.merge) withProps else unstoredEdges(withProps))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        scratch :+= appended
+        val appended = freeze(if (!stmt.merge) withProps else unstoredEdges(withProps))
         pg = pg.addEdges(appended)
         edgeDeltas :+= ((matchLabel.getOrElse(e.src, None), e.etype,
           matchLabel.getOrElse(e.dst, None), () => appended.count()))
@@ -354,17 +388,11 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
         }
         GraphStats(base.nodesTotal + createdNodes.size, eTotal, nc, ec, tc)
       })
-    // scratch caches do their whole job inside the first action that scans
-    // the mutated edge table (the appended subtrees are in its lineage);
-    // afterwards they release and later scans recompute — bounded memory
-    // over a long write session (the CacheLifecycle default contract)
-    if (scratch.nonEmpty)
-      graft.util.CacheLifecycle.releaseOnFirstAction(pg.edges, scratch: _*)
     new GraphDB(pg, statsThunk = thunk)
   }
 
   /** `MATCH … SET b.prop = expr (, …)`: a distributed column rewrite —
-    * matched ids left-join the node table, each SET prop becomes
+    * the frozen matched ids left-join the node table, each SET prop becomes
     * `when(matched, value).otherwise(old)` (new columns null-fill outside
     * the match). The value expression may read the binding's OWN joined
     * property columns; stats are unchanged by construction (labels and
@@ -372,10 +400,13 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
   private def runSet(stmt: Ast.WriteStmt): GraphDB = {
     stmt.sets.foreach(checkSetItem(_, "SET"))
     val bindings = stmt.sets.map(_.binding).distinct
-    val m = matchFrame(stmt, bindings.map(Ast.Ret(_)))
+    val m = freeze(matchFrame(stmt, bindings.map(Ast.Ret(_))))
     var nodesDf = graph.nodes
     bindings.foreach { b =>
-      val ids = m.select(col(b).as("__set_id")).dropDuplicates()
+      // m is DISTINCT over all the bindings, so one binding's ids are
+      // distinct by themselves only when it is the sole binding
+      val ids0 = m.select(col(b).as("__set_id"))
+      val ids = if (bindings.lengthIs == 1) ids0 else freeze(ids0.dropDuplicates())
       val stored = nodesDf.schema
       // REMOVE (SET to null) of an absent property is a no-op (openCypher)
       val items = stmt.sets.filter(s => s.binding == b &&
@@ -431,59 +462,60 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       Ast.Ret(r, agg = Some("startnode"), alias = Some(s"__del_${r}_s")),
       Ast.Ret(r, agg = Some("endnode"), alias = Some(s"__del_${r}_d")),
       Ast.Ret(r, agg = Some("type"), alias = Some(s"__del_${r}_t"))))
-    val m = matchFrame(stmt, relRets ++ nodeTargets.map(Ast.Ret(_)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // removal keys and ids feed only anti- and semi-joins, which ignore
+    // duplicates: no dedup of the frozen match
+    val m = freeze(matchFrame(stmt, relRets ++ nodeTargets.map(Ast.Ret(_))))
     var pg = graph
     var removedKeys = Seq.empty[DataFrame] // (src, dst, etype) removed keys
     var removedIds: Option[DataFrame] = None
     relTargets.foreach { r =>
       val keys = m.select(col(s"__del_${r}_s").as("src"),
-          col(s"__del_${r}_d").as("dst"), col(s"__del_${r}_t").as("etype"))
-        .dropDuplicates()
+        col(s"__del_${r}_d").as("dst"), col(s"__del_${r}_t").as("etype"))
       pg = pg.removeEdges(keys)
       removedKeys :+= keys
     }
     if (nodeTargets.nonEmpty) {
-      val ids = nodeTargets.map(n => m.select(col(n).as("id")))
-        .reduce(_.unionByName(_)).dropDuplicates()
-      val incident = pg.edges
-        .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .select("src", "dst", "etype")
-        .unionByName(pg.edges
-          .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst", "etype"))
+      val ids = nodeTargets.map(n => m.select(col(n).as("id"))).reduce(_.unionByName(_))
+      // one scan of the edge table: each edge key once per endpoint,
+      // semi-joined on the endpoint against the removed ids
+      val incident = pg.edges.select(col("src"), col("dst"), col("etype"),
+          explode(array(col("src"), col("dst"))).as("id"))
+        .join(ids, Seq("id"), "left_semi").drop("id")
       if (!stmt.detach) {
         if (incident.limit(1).count() > 0) throw new ParseException(
           "DELETE would orphan relationships — use DETACH DELETE")
       } else {
-        val inc = incident.dropDuplicates()
+        val inc = freeze(incident.dropDuplicates())
         pg = pg.removeEdges(inc)
         removedKeys :+= inc
       }
       pg = pg.removeNodes(ids)
       removedIds = Some(ids)
     }
-    // incremental stats: measure the REMOVED rows (labels joined over the
-    // pre-delete graph — work ∝ |deleted|) and subtract from the snapshot;
-    // zeroed entries drop so the result is structurally identical to a
-    // full recompute over the survivors.
+    // incremental stats: measure the REMOVED rows and subtract from the
+    // snapshot; zeroed entries drop so the result is structurally identical
+    // to a full recompute over the survivors. Labels are looked up only for
+    // the removed ids and the removed keys' endpoints (a frozen slice of the
+    // pre-delete node table); the removed keys semi-join the pre-delete edge
+    // table, so every stored copy of a key counts (multigraph multiplicity).
     val thunk: () => GraphStats = () => {
       val base = stats
-      val tripDeltas: Seq[((String, String, String), Long)] =
-        if (removedKeys.isEmpty) Seq.empty
-        else {
-          val keys = removedKeys.map(_.select("src", "dst", "etype"))
-            .reduce(_.unionByName(_)).dropDuplicates()
-          val lab = graph.nodes.select(col("id"), col("label"))
+      val keys = removedKeys.reduceOption(_.unionByName(_))
+      val touched = (keys.toSeq.flatMap(k =>
+          Seq(k.select(col("src").as("id")), k.select(col("dst").as("id")))) ++ removedIds)
+        .reduce(_.unionByName(_))
+      val lab = freeze(graph.nodes.select(col("id"), col("label"))
+        .join(touched, Seq("id"), "left_semi"))
+      val tripDeltas: Seq[((String, String, String), Long)] = keys.fold(
+        Seq.empty[((String, String, String), Long)])(k =>
           graph.edges.select("src", "dst", "etype")
-            .join(keys, Seq("src", "dst", "etype"), "left_semi")
+            .join(k, Seq("src", "dst", "etype"), "left_semi")
             .join(lab.withColumnRenamed("id", "src").withColumnRenamed("label", "sl"), "src")
             .join(lab.withColumnRenamed("id", "dst").withColumnRenamed("label", "dl"), "dst")
             .groupBy("sl", "etype", "dl").count().collect()
-            .map(r => ((r.getString(0), r.getString(1), r.getString(2)), r.getLong(3))).toSeq
-        }
+            .map(r => ((r.getString(0), r.getString(1), r.getString(2)), r.getLong(3))).toSeq)
       val nodeDeltas: Seq[(String, Long)] = removedIds.fold(Seq.empty[(String, Long)])(ids =>
-        graph.nodes.join(ids, Seq("id"), "left_semi").groupBy("label").count()
+        lab.join(ids, Seq("id"), "left_semi").groupBy("label").count()
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
       var nc = base.nodeCounts; var ec = base.edgeCounts; var tc = base.tripletCounts
       var eTot = base.edgesTotal; var nTot = base.nodesTotal
@@ -496,15 +528,6 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       GraphStats(nTot, eTot,
         nc.filter(_._2 != 0), ec.filter(_._2 != 0), tc.filter(_._2 != 0))
     }
-    // the persisted match releases once the mutated edge table (whose
-    // anti-join lineage contains it) is first acted on — bounded memory
-    // over a long write session. NOTE (r14, built-measured-rejected):
-    // caching the mutated graph (pg.cache()) to dedupe the read query's
-    // per-leg removal subtrees made cy_delete SLOWER (4.4 → 5.8-7.3 s at
-    // sf0.1) — the cache materializes every column of every row, while the
-    // uncached legs push label filters + column pruning into the already-
-    // cached BASE graph and recompute only narrow slices.
-    graft.util.CacheLifecycle.releaseOnFirstAction(pg.edges, m)
     new GraphDB(pg, statsThunk = Some(thunk))
   }
 
