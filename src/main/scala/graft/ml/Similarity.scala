@@ -47,14 +47,28 @@ object Similarity {
    * shuffle of the corpus itself — correct at 100 TB when |queries| is
    * bounded. For large query sets use [[lshKnn]].
    */
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val c = corpus.select(col("vec_id"), col("embedding"))
-    val scored = c.crossJoin(broadcast(q))
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKPerQuery(allPairs(corpus, queries), col("sim").desc, k)
+
+  /** Queries as (q_id, q_emb): the query side of every ANN operator. */
+  private def queryVectors(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Every (query, corpus vector) pair but the self-match, scored by rounded
+    * cosine: one corpus pass against the broadcast query set.
+    * @return (q_id, vec_id, sim) */
+  private def allPairs(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(queryVectors(queries)))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("q_emb"), col("embedding")), 6).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
+
+  /** The per-query rank tail of every top-k operator: `row_number` over
+    * `q_id`, ordered by `score` (its direction included) and then `vec_id`
+    * ascending, keeping rank ≤ k. */
+  private def topKPerQuery(scored: DataFrame, score: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(score, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
@@ -91,15 +105,8 @@ object Similarity {
    * threshold filter instead of a per-query window, so no rank shuffle at
    * all: the plan is scan → broadcast join → filter.
    */
-  def rangeSearch(corpus: DataFrame, queries: DataFrame, minSim: Double): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    corpus.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("sim"))
-      .filter(col("sim") >= minSim)
-  }
+  def rangeSearch(corpus: DataFrame, queries: DataFrame, minSim: Double): DataFrame =
+    allPairs(corpus, queries).filter(col("sim") >= minSim)
 
   /**
    * Near-duplicate pairs by cosine ≥ threshold — EXACT contract, computed as
@@ -221,22 +228,26 @@ object Similarity {
     // TakeOrdered derivation twice per action (r15)
     val centroids = ivfCentroids(corpus, numCells)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inverted = ivfAssignWith(corpus, centroids)
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val qw = Window.partitionBy("q_id").orderBy(col("c_sim").desc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("cell"),
-        round(cosine(col("q_emb"), col("c_emb")), 6).as("c_sim"))
-      .withColumn("rk", row_number().over(qw)).filter(col("rk") <= nprobe)
-      .select("q_id", "q_emb", "cell")
-    val scored = probed.join(inverted, Seq("cell"))
+    val scored = probeCells(queryVectors(queries), centroids, nprobe)
+      .join(ivfAssignWith(corpus, centroids), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("q_emb"), col("embedding")), 6).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
     graft.util.CacheLifecycle.releaseOnFirstAction(
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k),
-      centroids)
+      topKPerQuery(scored, col("sim").desc, k), centroids)
+  }
+
+  /** The `nprobe` coarse cells nearest each query (q_id, q_emb) by rounded
+    * cosine to their centroids, ties to the lower cell id — the probe
+    * ranking of [[ivfKnn]] and [[ivfPqKnn]].
+    * @return (q_id, q_emb, cell) */
+  private def probeCells(q: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("c_sim").desc, col("cell").asc)
+    q.crossJoin(broadcast(centroids))
+      .select(col("q_id"), col("q_emb"), col("cell"),
+        round(cosine(col("q_emb"), col("c_emb")), 6).as("c_sim"))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= nprobe)
+      .select("q_id", "q_emb", "cell")
   }
 
   /**
@@ -553,9 +564,40 @@ object Similarity {
    */
   def powerIteration(cov: DataFrame, dim: Int, iters: Int): DataFrame = {
     require(dim >= 1 && iters >= 1, s"powerIteration: dim=$dim iters=$iters")
-    if (dim <= DriverEigensolveMaxDim) powerIterationLocal(cov, dim, iters)
-    else powerIterationDistributed(cov, dim, iters)
+    eigensolve(cov, None, dim, iters)
   }
+
+  /**
+   * Second principal component via DEFLATION: power iteration on the
+   * implicitly-deflated operator `A − λ₁v₁v₁ᵀ` — the matrix is never
+   * materialized; each round applies `y = A·x − λ₁·v₁·(v₁ᵀx)`, i.e. the
+   * same sparse mat-vec as [[powerIteration]] plus one broadcast dot
+   * product and a dim-row projection. Extending to component k repeats
+   * the device with k−1 deflation terms (k stays small — this is the
+   * top-few-components story, not full SVD).
+   *
+   * `comp1` is the PUBLISHED round-6 component — deflation runs against
+   * the same numbers any external engine holds, so the recurrence is
+   * engine-reproducible (the in-flight round-9 vector would be exacter
+   * but private). Same DECIMAL-sum/round-9/checkpoint devices per round.
+   *
+   * @return (d, comp) — the second eigenvector, rounded to 6
+   */
+  def powerIterationDeflated(cov: DataFrame, comp1: DataFrame, dim: Int,
+                             iters: Int): DataFrame = {
+    require(dim >= 1 && iters >= 1, s"powerIterationDeflated: dim=$dim iters=$iters")
+    eigensolve(cov, Some(comp1), dim, iters)
+  }
+
+  /** The one size gate of the eigensolve: at or below
+    * [[DriverEigensolveMaxDim]] the recurrence runs in the driver JVM
+    * ([[powerIterationLocal]]), above it as DataFrame rounds
+    * ([[powerIterationDistributed]]). `comp1` = None is [[powerIteration]],
+    * Some(v₁) is [[powerIterationDeflated]]. */
+  private def eigensolve(cov: DataFrame, comp1: Option[DataFrame], dim: Int,
+                         iters: Int): DataFrame =
+    if (dim <= DriverEigensolveMaxDim) powerIterationLocal(cov, comp1, dim, iters)
+    else powerIterationDistributed(cov, comp1, dim, iters)
 
   /** Above this dimension the covariance (≤ dim² rows) stops being
     * "vocabulary-sized" and the eigensolve stays distributed; at or below
@@ -612,130 +654,27 @@ object Similarity {
 
   /** In-JVM replay of [[powerIterationDistributed]]'s EXACT recurrence —
     * decimal(38,12) product sums, sqrt-of-decimal norm, per-round
-    * round-9, final round-6 — bit-for-bit identical output (spec-pinned
-    * against the distributed path), minus the per-round Spark job floor.
+    * round-9, final round-6, and with `comp1` the deflation term in the
+    * same expression order (`ay − λ·v₁·dp`, left-associated) —
+    * bit-for-bit identical output (spec-pinned against the distributed
+    * path), minus the per-round Spark job floor.
     *
-    * Degenerate-input semantics mirror the SQL plan under ANSI: null cov
-    * cells / null vector elements propagate as SQL nulls (skipped by the
-    * decimal sums, nulling the quotient), and a ZERO norm throws — the
-    * distributed division `__y / 0.0` is an ANSI DIVIDE_BY_ZERO error,
-    * not a NaN. */
-  private[graft] def powerIterationLocal(cov: DataFrame, dim: Int, iters: Int): DataFrame = {
+    * Degenerate-input semantics mirror the SQL plan under ANSI: a vector
+    * element is either absent (no row: the SQL joins drop it, and a
+    * deflation term exists only where BOTH the mat-vec row and v₁ have the
+    * index) or present with a null value (null cov cells / null comps
+    * propagate as SQL nulls, skipped by the decimal sums, nulling the
+    * quotient), and a ZERO norm throws — the distributed division
+    * `__y / 0.0` is an ANSI DIVIDE_BY_ZERO error, not a NaN. */
+  private[graft] def powerIterationLocal(cov: DataFrame, comp1: Option[DataFrame],
+                                         dim: Int, iters: Int): DataFrame = {
     val spark = cov.sparkSession
     val entries = collectEntries(cov)
-    // x(i) = null ≡ SQL NULL; present(i) = "row i exists in the vector"
-    var x: Array[java.lang.Double] =
-      Array.fill(dim)(Double.box(roundHalfUp(1.0 / math.sqrt(dim.toDouble), 9)))
-    var present = Array.fill(dim)(true)
-    for (_ <- 1 to iters) {
-      val sums = new Array[java.math.BigDecimal](dim) // null ≡ SQL null sum
-      val hit = new Array[Boolean](dim)
-      entries.foreach { case (i, j, c) =>
-        if (present(j)) {
-          hit(i) = true // the join row exists even when the product is null
-          val xj = x(j)
-          if (c != null && xj != null) {
-            val p = dec12(c * xj)
-            if (p != null) sums(i) = if (sums(i) == null) p else sums(i).add(p)
-          }
-        }
-      }
-      var nsum: java.math.BigDecimal = null
-      for (i <- 0 until dim if hit(i) && sums(i) != null) {
-        val y = sums(i).doubleValue
-        val p = dec12(y * y)
-        if (p != null) nsum = if (nsum == null) p else nsum.add(p)
-      }
-      val norm: java.lang.Double =
-        if (nsum == null) null else Double.box(math.sqrt(nsum.doubleValue))
-      if (norm != null && norm.doubleValue == 0.0) throw new ArithmeticException(
-        "powerIteration: zero norm (degenerate covariance spectrum) — " +
-          "matches the distributed path's ANSI DIVIDE_BY_ZERO")
-      x = Array.tabulate(dim) { i =>
-        if (!hit(i) || sums(i) == null || norm == null) null
-        else Double.box(roundHalfUp(sums(i).doubleValue / norm.doubleValue, 9))
-      }
-      present = hit
-    }
-    val out = (0 until dim).filter(present)
-      .map(i => (i, Option(x(i)).map(v => roundHalfUp(v.doubleValue, 6))))
-    import spark.implicits._
-    out.toDF("d", "comp")
-  }
-
-  private[graft] def powerIterationDistributed(cov: DataFrame, dim: Int, iters: Int): DataFrame = {
-    val spark = cov.sparkSession
-    val full = cov.select(col("i"), col("j"), col("cov"))
-      .unionByName(cov.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val v0 = spark.range(dim).select(col("id").cast("int").as("d"),
-      round(lit(1.0) / sqrt(lit(dim.toDouble)), 9).as("x"))
-    val vFinal = (1 to iters).foldLeft(v0) { (v, _) =>
-      val av = full.join(broadcast(v), full("j") === v("d"))
-        .groupBy(col("i").as("__d"))
-        .agg(sum((col("cov") * col("x")).cast("decimal(38,12)")).as("__y"))
-        .select(col("__d"), col("__y").cast("double").as("__y"))
-      val norm = av.agg(
-        sqrt(sum((col("__y") * col("__y")).cast("decimal(38,12)")).cast("double"))
-          .as("__n"))
-      // eager per-round checkpoint: the dim-row vector materializes NOW and
-      // the next round's plan reads it instead of re-deriving every earlier
-      // round inside its broadcast subtrees (measured: the nested lineage
-      // re-executed the covariance input once per round — O(iters²) work)
-      av.crossJoin(broadcast(norm))
-        .select(col("__d").as("d"), round(col("__y") / col("__n"), 9).as("x"))
-        .localCheckpoint()
-    }
-    val out = vFinal.select(col("d"), round(col("x"), 6).as("comp"))
-    graft.util.CacheLifecycle.releaseOnFirstAction(out, full)
-  }
-
-  /**
-   * Second principal component via DEFLATION: power iteration on the
-   * implicitly-deflated operator `A − λ₁v₁v₁ᵀ` — the matrix is never
-   * materialized; each round applies `y = A·x − λ₁·v₁·(v₁ᵀx)`, i.e. the
-   * same sparse mat-vec as [[powerIteration]] plus one broadcast dot
-   * product and a dim-row projection. Extending to component k repeats
-   * the device with k−1 deflation terms (k stays small — this is the
-   * top-few-components story, not full SVD).
-   *
-   * `comp1` is the PUBLISHED round-6 component — deflation runs against
-   * the same numbers any external engine holds, so the recurrence is
-   * engine-reproducible (the in-flight round-9 vector would be exacter
-   * but private). Same DECIMAL-sum/round-9/checkpoint devices per round.
-   *
-   * @return (d, comp) — the second eigenvector, rounded to 6
-   */
-  def powerIterationDeflated(cov: DataFrame, comp1: DataFrame, dim: Int,
-                             iters: Int): DataFrame = {
-    require(dim >= 1 && iters >= 1, s"powerIterationDeflated: dim=$dim iters=$iters")
-    if (dim <= DriverEigensolveMaxDim) powerIterationDeflatedLocal(cov, comp1, dim, iters)
-    else powerIterationDeflatedDistributed(cov, comp1, dim, iters)
-  }
-
-  /** In-JVM replay of [[powerIterationDeflatedDistributed]] — identical
-    * join/intersection semantics (a deflation term exists only where BOTH
-    * the mat-vec row and v₁ have the index), identical decimal sums and
-    * expression order (`ay − λ·v₁·dp`, left-associated), bit-for-bit
-    * output. */
-  private[graft] def powerIterationDeflatedLocal(cov: DataFrame, comp1: DataFrame,
-                                                 dim: Int, iters: Int): DataFrame = {
-    val spark = cov.sparkSession
-    val entries = collectEntries(cov)
-    // v1(d) = null ≡ SQL NULL comp; hasV1(d) = "comp1 has row d" — the
-    // same null-vs-absent split the SQL joins make
-    val v1 = new Array[java.lang.Double](dim)
-    val hasV1 = new Array[Boolean](dim)
-    comp1.select(col("d").cast("int"), col("comp").cast("double")).collect()
-      .foreach { r =>
-        val d = r.getInt(0); hasV1(d) = true
-        v1(d) = if (r.isNullAt(1)) null else Double.box(r.getDouble(1))
-      }
-    // matvec over an input vector with a presence mask; values null-faithful
+    // A·v over a vector with a presence mask: row i exists when an entry
+    // (i, j) meets a present j, even when every product is null
     def matvec(v: Array[java.lang.Double], vp: Array[Boolean])
         : (Array[java.lang.Double], Array[Boolean]) = {
-      val sums = new Array[java.math.BigDecimal](dim)
+      val sums = new Array[java.math.BigDecimal](dim) // null ≡ SQL null sum
       val hit = new Array[Boolean](dim)
       entries.foreach { case (i, j, c) =>
         if (vp(j)) {
@@ -761,73 +700,101 @@ object Similarity {
       }
       if (s == null) null else Double.box(s.doubleValue)
     }
-    val (av1, av1Hit) = matvec(v1, hasV1)
-    val lam = dot(v1, av1, d => av1Hit(d) && hasV1(d))
-    var w: Array[java.lang.Double] =
+    // deflation state: v₁ (null ≡ SQL NULL comp), hasV1 ("comp1 has row
+    // d" — the null-vs-absent split the SQL joins make) and λ₁ = v₁ᵀ·A·v₁
+    val deflation = comp1.map { c =>
+      val v1 = new Array[java.lang.Double](dim)
+      val hasV1 = new Array[Boolean](dim)
+      c.select(col("d").cast("int"), col("comp").cast("double")).collect()
+        .foreach { r =>
+          val d = r.getInt(0); hasV1(d) = true
+          v1(d) = if (r.isNullAt(1)) null else Double.box(r.getDouble(1))
+        }
+      val (av1, av1Hit) = matvec(v1, hasV1)
+      (v1, hasV1, dot(v1, av1, d => av1Hit(d) && hasV1(d)))
+    }
+    // x(d) = null ≡ SQL NULL; present(d) = "row d exists in the vector"
+    var x: Array[java.lang.Double] =
       Array.fill(dim)(Double.box(roundHalfUp(1.0 / math.sqrt(dim.toDouble), 9)))
     var present = Array.fill(dim)(true)
     for (_ <- 1 to iters) {
-      val (aw, awHit) = matvec(w, present)
-      val dp = dot(v1, w, d => present(d) && hasV1(d))
-      val bHit = Array.tabulate(dim)(d => awHit(d) && hasV1(d))
-      // y = __ay − __l·comp·__dp, null-propagating like the SQL expression
-      val y: Array[java.lang.Double] = Array.tabulate(dim) { d =>
-        if (!bHit(d) || aw(d) == null || lam == null || v1(d) == null || dp == null) null
-        else Double.box(
-          aw(d).doubleValue - lam.doubleValue * v1(d).doubleValue * dp.doubleValue)
+      val (ax, axHit) = matvec(x, present)
+      val (y, hit) = deflation match {
+        case None => (ax, axHit)
+        case Some((v1, hasV1, lam)) =>
+          val dp = dot(v1, x, d => present(d) && hasV1(d))
+          val bHit = Array.tabulate(dim)(d => axHit(d) && hasV1(d))
+          // y = __ay − __l·comp·__dp, null-propagating like the SQL expression
+          (Array.tabulate[java.lang.Double](dim) { d =>
+            if (!bHit(d) || ax(d) == null || lam == null || v1(d) == null || dp == null) null
+            else Double.box(
+              ax(d).doubleValue - lam.doubleValue * v1(d).doubleValue * dp.doubleValue)
+          }, bHit)
       }
-      var nsum: java.math.BigDecimal = null
-      for (d <- 0 until dim if bHit(d) && y(d) != null) {
-        val p = dec12(y(d).doubleValue * y(d).doubleValue)
-        if (p != null) nsum = if (nsum == null) p else nsum.add(p)
-      }
+      val nsum = dot(y, y, hit)
       val norm: java.lang.Double =
         if (nsum == null) null else Double.box(math.sqrt(nsum.doubleValue))
       if (norm != null && norm.doubleValue == 0.0) throw new ArithmeticException(
-        "powerIterationDeflated: zero norm (degenerate deflated spectrum) — " +
-          "matches the distributed path's ANSI DIVIDE_BY_ZERO")
-      w = Array.tabulate(dim) { d =>
-        if (!bHit(d) || y(d) == null || norm == null) null
+        (if (comp1.isEmpty) "powerIteration: zero norm (degenerate covariance spectrum)"
+         else "powerIterationDeflated: zero norm (degenerate deflated spectrum)") +
+          " — matches the distributed path's ANSI DIVIDE_BY_ZERO")
+      x = Array.tabulate(dim) { d =>
+        if (!hit(d) || y(d) == null || norm == null) null
         else Double.box(roundHalfUp(y(d).doubleValue / norm.doubleValue, 9))
       }
-      present = bHit
+      present = hit
     }
     val out = (0 until dim).filter(present)
-      .map(d => (d, Option(w(d)).map(v => roundHalfUp(v.doubleValue, 6))))
+      .map(d => (d, Option(x(d)).map(v => roundHalfUp(v.doubleValue, 6))))
     import spark.implicits._
     out.toDF("d", "comp")
   }
 
-  private[graft] def powerIterationDeflatedDistributed(cov: DataFrame, comp1: DataFrame,
-                                                       dim: Int, iters: Int): DataFrame = {
+  /** The published recurrence as DataFrame rounds; with `comp1`, each
+    * round subtracts the deflation term `λ₁·v₁·(v₁ᵀx)` from the mat-vec on
+    * the indices v₁ has. */
+  private[graft] def powerIterationDistributed(cov: DataFrame, comp1: Option[DataFrame],
+                                               dim: Int, iters: Int): DataFrame = {
     val spark = cov.sparkSession
     val full = cov.select(col("i"), col("j"), col("cov"))
       .unionByName(cov.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("cov")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val v1 = comp1.select(col("d"), col("comp"))
     def matvec(v: DataFrame): DataFrame =
       full.join(broadcast(v), full("j") === v("d"))
         .groupBy(col("i").as("d"))
         .agg(sum((col("cov") * col("x")).cast("decimal(38,12)"))
           .cast("double").as("__ay"))
-    val lam = matvec(v1.select(col("d"), col("comp").as("x")))
-      .join(broadcast(v1), Seq("d"))
-      .agg(sum((col("comp") * col("__ay")).cast("decimal(38,12)"))
-        .cast("double").as("__l"))
+    // deflation state: v₁ and the one-row λ₁ = v₁ᵀ·A·v₁
+    val deflation = comp1.map { c =>
+      val v1 = c.select(col("d"), col("comp"))
+      val lam = matvec(v1.select(col("d"), col("comp").as("x")))
+        .join(broadcast(v1), Seq("d"))
+        .agg(sum((col("comp") * col("__ay")).cast("decimal(38,12)"))
+          .cast("double").as("__l"))
+      (v1, lam)
+    }
     val v0 = spark.range(dim).select(col("id").cast("int").as("d"),
       round(lit(1.0) / sqrt(lit(dim.toDouble)), 9).as("x"))
     val vFinal = (1 to iters).foldLeft(v0) { (v, _) =>
       val ax = matvec(v)
-      val dp = v.join(broadcast(v1), Seq("d"))
-        .agg(sum((col("comp") * col("x")).cast("decimal(38,12)"))
-          .cast("double").as("__dp"))
-      val y = ax.join(broadcast(v1), Seq("d"))
-        .crossJoin(broadcast(lam)).crossJoin(broadcast(dp))
-        .select(col("d"), (col("__ay") - col("__l") * col("comp") * col("__dp")).as("__y"))
+      val y = deflation match {
+        case None => ax.select(col("d"), col("__ay").as("__y"))
+        case Some((v1, lam)) =>
+          val dp = v.join(broadcast(v1), Seq("d"))
+            .agg(sum((col("comp") * col("x")).cast("decimal(38,12)"))
+              .cast("double").as("__dp"))
+          ax.join(broadcast(v1), Seq("d"))
+            .crossJoin(broadcast(lam)).crossJoin(broadcast(dp))
+            .select(col("d"), (col("__ay") - col("__l") * col("comp") * col("__dp")).as("__y"))
+      }
       val norm = y.agg(
         sqrt(sum((col("__y") * col("__y")).cast("decimal(38,12)")).cast("double"))
           .as("__n"))
+      // eager per-round checkpoint: the dim-row vector materializes NOW and
+      // the next round's plan reads it instead of re-deriving every earlier
+      // round inside its broadcast subtrees (measured: the nested lineage
+      // re-executed the covariance input once per round — O(iters²) work)
       y.crossJoin(broadcast(norm))
         .select(col("d"), round(col("__y") / col("__n"), 9).as("x"))
         .localCheckpoint()
@@ -924,9 +891,9 @@ object Similarity {
    *
    * Sizing (MEASURED on a Gaussian-cluster corpus, n=40k, 64 centers,
    * spread 0.3 — the clustered regime real embeddings live in; see
-   * NOTES_r13 §7 and `tools.AnnScale gencluster`): recall@10 falls
-   * 0.97 → 0.93 → 0.86 → 0.78 → 0.66 as numBits goes 4→12 while
-   * candidate work falls geometrically — `numBits ≈ log₂(n) − 7` holds
+   * NOTES_r13 §7): recall@10 falls 0.97 → 0.93 → 0.86 → 0.78 → 0.66 as
+   * numBits goes 4→12 while candidate work falls geometrically —
+   * `numBits ≈ log₂(n) − 7` holds
    * ~0.86 recall on plain LSH. Prefer [[lshMultiProbeKnn]] when recall
    * matters: it held 0.97-1.00 across the SAME sweep at identical index
    * size. (On near-uniform random vectors — the sf* synthetic tables —
@@ -934,31 +901,38 @@ object Similarity {
    * is the calibration anchor.)
    */
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-             dim: Int, numBits: Int = 12, tables: Int = 4): DataFrame = {
+             dim: Int, numBits: Int = 12, tables: Int = 4): DataFrame =
+    topKPerQuery(lshCandidates(corpus, queries, dim, numBits, tables, multiProbe = false),
+      col("sim").desc, k)
+
+  /** The LSH candidate generator of [[lshKnn]] and [[lshMultiProbeKnn]]:
+    * query and corpus vectors meet on a shared (table, bucket) key, one
+    * bucket row per (vector, table) on the corpus side; `multiProbe` adds
+    * the `numBits` single-bit-flip buckets per table on the query side.
+    * The bucket join and the distinct move IDS ONLY — carrying the two
+    * embedding arrays through them multiplies the shuffle by the vector
+    * width (measured 3x wall on the corpus-vs-corpus join); the vectors
+    * join back by id exactly once each for the scoring pass, the same
+    * render-late discipline as the pattern engine's MatrixTuples.
+    * @return (q_id, vec_id, sim) — every candidate, scored */
+  private def lshCandidates(corpus: DataFrame, queries: DataFrame, dim: Int,
+                            numBits: Int, tables: Int, multiProbe: Boolean): DataFrame = {
     def withBuckets(df: DataFrame, idAs: String): DataFrame =
       df.select(col("vec_id").as(idAs),
         posexplode(array((0 until tables).map(t =>
           lshBucket(col("embedding"), dim, numBits, seed = t)): _*))
           .as(Seq("table", "bucket")))
-    // table offset folded into the bucket: join key is (table, bucket).
-    // The bucket join and the distinct move IDS ONLY — carrying the two
-    // embedding arrays through them multiplies the shuffle by the vector
-    // width (measured 3x wall on the corpus-vs-corpus join); the vectors
-    // join back by id exactly once each for the scoring pass, the same
-    // render-late discipline as the pattern engine's MatrixTuples.
-    val cb = withBuckets(corpus, "vec_id")
     val qb = withBuckets(queries, "q_id")
-    val cands = qb.join(cb, Seq("table", "bucket"))
+    val probes = if (!multiProbe) qb else qb.select(col("q_id"), col("table"),
+      explode(array(col("bucket") +: (0 until numBits).map(b =>
+        col("bucket").bitwiseXOR(lit(1L << b))): _*)).as("bucket"))
+    probes.join(withBuckets(corpus, "vec_id"), Seq("table", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id").distinct()
-    val scored = cands
       .join(corpus.select(col("vec_id"), col("embedding").as("emb")), Seq("vec_id"))
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-        Seq("q_id"))
+      .join(queryVectors(queries), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosine(col("q_emb"), col("emb")), 6).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /**
@@ -981,30 +955,9 @@ object Similarity {
    * @return (q_id, vec_id, sim, rank ≤ k)
    */
   def lshMultiProbeKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                       dim: Int, numBits: Int = 12, tables: Int = 4): DataFrame = {
-    val cb = corpus.select(col("vec_id"),
-      posexplode(array((0 until tables).map(t =>
-        lshBucket(col("embedding"), dim, numBits, seed = t)): _*))
-        .as(Seq("table", "bucket")))
-    val qb = queries.select(col("vec_id").as("q_id"),
-        posexplode(array((0 until tables).map(t =>
-          lshBucket(col("embedding"), dim, numBits, seed = t)): _*))
-          .as(Seq("table", "__b0")))
-      .select(col("q_id"), col("table"),
-        explode(array(col("__b0") +: (0 until numBits).map(b =>
-          col("__b0").bitwiseXOR(lit(1L << b))): _*)).as("bucket"))
-    val cands = qb.join(cb, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "vec_id").distinct()
-    val scored = cands
-      .join(corpus.select(col("vec_id"), col("embedding").as("emb")), Seq("vec_id"))
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-        Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+                       dim: Int, numBits: Int = 12, tables: Int = 4): DataFrame =
+    topKPerQuery(lshCandidates(corpus, queries, dim, numBits, tables, multiProbe = true),
+      col("sim").desc, k)
 
   // --- product quantization (PQ): the embedding MEMORY story at 100 TB ---
   // A 768-dim float32 vector is 3 KB; its m PQ codes are m bytes. Encoding
@@ -1113,20 +1066,30 @@ object Similarity {
     // the result's first action (bounded memory in a long session)
     val cent = pqTrain(corpus, dim, m, ksub, iters)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = pqEncodeWith(corpus, cent, dim, m)
-    val qsv = subVectors(queries.select(col("vec_id"), col("embedding")), m, dim / m)
+    val result = adcTopK(pqEncodeWith(corpus, cent, dim, m), queries, cent, k, dim, m)
+    graft.util.CacheLifecycle.releaseOnFirstAction(result, cent)
+  }
+
+  /** The ADC scorer of [[pqKnn]] and [[ivfPqKnn]]: the per-query distance
+    * table (each query subvector against every codebook centroid, L2² in
+    * integer micros) is broadcast against the candidate codes on (sub,
+    * code), and also on q_id when the candidates already carry one; each
+    * (q_id, vec_id) pair scores the exact integer sum of its m entries and
+    * ranks ascending.
+    * @param cands (vec_id, sub, code[, q_id, …]) candidate code rows */
+  private def adcTopK(cands: DataFrame, queries: DataFrame, cent: DataFrame,
+                      k: Int, dim: Int, m: Int): DataFrame = {
+    val distTable = subVectors(queries.select(col("vec_id"), col("embedding")), m, dim / m)
       .select(col("vec_id").as("q_id"), col("sub"), col("v"))
-    val distTable = qsv.join(broadcast(cent), Seq("sub"))
+      .join(broadcast(cent), Seq("sub"))
       .select(col("q_id"), col("sub"), col("cell").as("code"),
         round(l2sq(col("v"), col("c_sub")) * 1e6).cast("long").as("dm"))
-    val scored = codes.join(broadcast(distTable), Seq("sub", "code"))
+    val scored = cands
+      .join(broadcast(distTable), Seq("q_id", "sub", "code").filter(cands.columns.contains))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("dm")).as("d2_micros"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2_micros").asc, col("vec_id").asc)
-    val result = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-    graft.util.CacheLifecycle.releaseOnFirstAction(result, cent)
-    result
+    topKPerQuery(scored, col("d2_micros").asc, k)
   }
 
   /**
@@ -1172,29 +1135,11 @@ object Similarity {
     // centroid derivation sat in the plan twice (r15)
     val coarseCent = ivfCentroids(corpus, numCells)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val coarse = ivfAssignWith(corpus, coarseCent)
-      .select(col("vec_id"), col("cell").as("ivf_cell"))
-    val codes = pqEncodeWith(corpus, cent, dim, m).join(coarse, Seq("vec_id"))
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val qw = Window.partitionBy("q_id").orderBy(col("c_sim").desc, col("ivf_cell").asc)
-    val probed = q.crossJoin(broadcast(coarseCent))
-      .select(col("q_id"), col("cell").as("ivf_cell"),
-        round(cosine(col("q_emb"), col("c_emb")), 6).as("c_sim"))
-      .withColumn("rk", row_number().over(qw)).filter(col("rk") <= nprobe)
-      .select("q_id", "ivf_cell")
-    val qsv = subVectors(queries.select(col("vec_id"), col("embedding")), m, dim / m)
-      .select(col("vec_id").as("q_id"), col("sub"), col("v"))
-    val distTable = qsv.join(broadcast(cent), Seq("sub"))
-      .select(col("q_id"), col("sub"), col("cell").as("code"),
-        round(l2sq(col("v"), col("c_sub")) * 1e6).cast("long").as("dm"))
-    val scored = codes.join(broadcast(probed), Seq("ivf_cell"))
-      .join(broadcast(distTable), Seq("q_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("dm")).as("d2_micros"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2_micros").asc, col("vec_id").asc)
-    val result = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val coarse = ivfAssignWith(corpus, coarseCent).select(col("vec_id"), col("cell"))
+    val probed = probeCells(queryVectors(queries), coarseCent, nprobe).select("q_id", "cell")
+    val cands = pqEncodeWith(corpus, cent, dim, m).join(coarse, Seq("vec_id"))
+      .join(broadcast(probed), Seq("cell"))
+    val result = adcTopK(cands, queries, cent, k, dim, m)
     graft.util.CacheLifecycle.releaseOnFirstAction(result, cent, coarseCent)
-    result
   }
 }

@@ -827,9 +827,9 @@ object TextOps {
    * pairs with Jaccard ≥ `threshold`, at every corpus size.
    *
    * Through round 14 this operator blocked on SimHash bands (8-bit bands
-   * of a 64-bit vote signature, hamming ≤ maxHamming prefilter). That
+   * of a 64-bit vote signature, hamming ≤ 16 prefilter). That
    * blocking is probabilistic: the pigeonhole bound only guarantees a
-   * shared band for hamming < 64/bandBits = 8 while qualifying pairs
+   * shared band for hamming < 64/8 = 8 while qualifying pairs
    * legitimately land anywhere (measured: one Jaccard-0.5 pair at sf0.1
    * with hamming ∈ [8,16] shared no band and was silently dropped — the
    * r14 sf0.1 oracle divergence, a recall hole that can only widen with
@@ -847,18 +847,10 @@ object TextOps {
    * to the exact verify. Rarest-first ordering makes the prefix join
    * sparse (the frequent shingles that would fan out never enter a
    * prefix); at t = 0.5 the prefix is ~half of each doc's shingles.
-   *
-   * `bandBits` / `maxHamming` are the superseded banding prefilter's
-   * knobs, retained for source compatibility (and the documented
-   * argument contract); they no longer influence the candidate set —
-   * with a lossless blocker the declared output depends only on
-   * (n, threshold).
+   * The output depends only on (n, threshold).
    */
   def simhashDedup(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 5, bandBits: Int = 8, maxHamming: Int = 16,
-                   threshold: Double = 0.5): DataFrame = {
-    require(bandBits >= 1 && bandBits <= 64 && 64 % bandBits == 0,
-      s"bandBits must divide 64, got $bandBits")
+                   n: Int = 5, threshold: Double = 0.5): DataFrame = {
     val sh = shingles(df, idCol, textCol, n).cache()
     // global doc frequency per shingle — the prefix ordering key. The
     // per-document windows below re-partition by idCol, so the prefix

@@ -39,7 +39,7 @@ object CacheLifecycle {
    * A result that is constructed but never acted on cannot hold its
    * listener forever: each registered listener pays a `sameResult` tree-walk
    * on EVERY later query in the session, so abandoned results would
-   * accumulate per-query overhead. After the expiry budget of non-matching
+   * accumulate per-query overhead. After [[ExpiryBudget]] non-matching
    * query executions the listener gives up — it releases the scratch and
    * deregisters. That is safe by the recomputability contract above: if the
    * abandoned result IS acted on even later, it recomputes the scratch
@@ -49,17 +49,11 @@ object CacheLifecycle {
    * The budget counts EVERY query execution in the session — including
    * graft's own internal eager actions (per-round CC checkpoints/counts,
    * algorithm gate actions) — so a result built just before a long iterative
-   * run can expire before its first action and silently recompute. Two
-   * mitigations: expiry is LOGGED (warn level, names the budget conf), and
-   * the budget is session-configurable via [[ExpiryBudgetKey]] for
-   * interactive sessions that build results long before acting on them
-   * (alongside the [[RetainScratchKey]] full opt-out).
+   * run can expire before its first action and silently recompute. Expiry
+   * is therefore LOGGED (warn level), and a session that builds results
+   * long before acting on them opts out with [[RetainScratchKey]].
    */
-  private val DefaultExpiryBudget = 256
-
-  /** Session conf: number of non-matching query executions before an
-    * un-acted-on result's scratch caches are released early. */
-  val ExpiryBudgetKey = "spark.graft.scratchExpiryBudget"
+  private val ExpiryBudget = 256
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -75,22 +69,17 @@ object CacheLifecycle {
     val spark = result.sparkSession
     if (spark.conf.getOption(RetainScratchKey).exists(_.toBoolean)) return result
     val target = result.queryExecution.analyzed
-    val budget = spark.conf.getOption(ExpiryBudgetKey)
-      .map(v => try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$ExpiryBudgetKey must be an int, got '$v'") })
-      .getOrElse(DefaultExpiryBudget)
     val listener = new QueryExecutionListener {
       // listener-bus delivery is single-threaded per listener → plain var
-      private var remaining = budget
+      private var remaining = ExpiryBudget
       private def maybeRelease(qe: QueryExecution): Unit = {
         remaining -= 1
         val matched = qe.analyzed.exists(_.sameResult(target))
         if (remaining <= 0 || matched) {
           if (!matched) log.warn(
             s"releasing ${scratch.size} scratch cache(s) for a result not acted on within " +
-              s"$budget query executions; its first action will recompute without them " +
-              s"(raise $ExpiryBudgetKey or set $RetainScratchKey=true to keep them)")
+              s"$ExpiryBudget query executions; its first action will recompute without them " +
+              s"(set $RetainScratchKey=true to keep them)")
           scratch.foreach(_.unpersist(blocking = false))
           spark.listenerManager.unregister(this)
         }

@@ -240,6 +240,46 @@ class SimilaritySpec extends SparkSpec {
     assert(pruned.groupBy(_.getLong(0)).values.forall(_.length <= 4))
   }
 
+  test("top-k operators: ranks 1..min(k, candidates), no self-match, ordered by score then vec_id") {
+    val corpus = (0L until 40L).map { id =>
+      (id, Array.tabulate(16)(j => (((id * 19 + j * 7) % 61).toFloat / 61f)))
+    }.toDF("vec_id", "embedding")
+    val qs = corpus.filter($"vec_id" < 4L)
+    // (operator, top-k at k, score column, higher score ranks first)
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame, String, Boolean)] = Seq(
+      ("bruteForceKnn", k => Similarity.bruteForceKnn(corpus, qs, k), "sim", true),
+      ("ivfKnn", k => Similarity.ivfKnn(corpus, qs, k, numCells = 4, nprobe = 2), "sim", true),
+      ("lshKnn", k => Similarity.lshKnn(corpus, qs, k, dim = 16, numBits = 4, tables = 2),
+        "sim", true),
+      ("lshMultiProbeKnn", k => Similarity.lshMultiProbeKnn(corpus, qs, k, dim = 16,
+        numBits = 4, tables = 2), "sim", true),
+      ("pqKnn", k => Similarity.pqKnn(corpus, qs, k, dim = 16), "d2_micros", false),
+      ("ivfPqKnn", k => Similarity.ivfPqKnn(corpus, qs, k, dim = 16, numCells = 4, nprobe = 2),
+        "d2_micros", false))
+    val k = 5
+    for ((name, op, score, desc) <- ops) {
+      def byQuery(kk: Int): Map[Long, Seq[(Long, Double, Int)]] = op(kk).collect().toSeq
+        .groupBy(_.getAs[Long]("q_id")).map { case (q, rs) =>
+          q -> rs.map(r => (r.getAs[Long]("vec_id"), r.getAs[Number](score).doubleValue,
+            r.getAs[Int]("rank"))).sortBy(_._3)
+        }
+      // k at the corpus size ranks every candidate of a query
+      val all = byQuery(40)
+      val top = byQuery(k)
+      assert(top.keySet == all.keySet, s"$name: queries with candidates differ")
+      for ((q, cands) <- all) {
+        assert(cands.map(_._3) == (1 to cands.size), s"$name q=$q: ranks $cands")
+        assert(top(q).map(_._3) == (1 to math.min(k, cands.size)), s"$name q=$q: ${top(q)}")
+        assert(top(q) == cands.take(k), s"$name q=$q: top-k is not the ranked prefix")
+        assert(cands.forall(_._1 != q), s"$name q=$q: self-match")
+        cands.zip(cands.drop(1)).foreach { case ((va, sa, _), (vb, sb, _)) =>
+          val ordered = if (sa != sb) (if (desc) sa > sb else sa < sb) else va < vb
+          assert(ordered, s"$name q=$q: ($va, $sa) ranked before ($vb, $sb)")
+        }
+      }
+    }
+  }
+
   test("CovSum scaled-long fast path is value-identical to the dec28 reference") {
     import graft.ml.Similarity.CovSum
     // adversarial singles: exact scale-13 ties (must route to the slow
@@ -375,12 +415,12 @@ class SimilaritySpec extends SparkSpec {
     def bits(df: org.apache.spark.sql.DataFrame): Map[Int, Long] =
       df.collect().map(r =>
         r.getInt(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
-    val localV1 = Similarity.powerIterationLocal(cov, 64, 6)
-    assert(bits(localV1) == bits(Similarity.powerIterationDistributed(cov, 64, 6)),
+    val localV1 = Similarity.powerIterationLocal(cov, None, 64, 6)
+    assert(bits(localV1) == bits(Similarity.powerIterationDistributed(cov, None, 64, 6)),
       "powerIteration local/distributed bit divergence")
-    val local2 = Similarity.powerIterationDeflatedLocal(cov, localV1, 64, 3)
+    val local2 = Similarity.powerIterationLocal(cov, Some(localV1), 64, 3)
     assert(bits(local2) ==
-      bits(Similarity.powerIterationDeflatedDistributed(cov, localV1, 64, 3)),
+      bits(Similarity.powerIterationDistributed(cov, Some(localV1), 64, 3)),
       "powerIterationDeflated local/distributed bit divergence")
     cov.unpersist()
   }
@@ -392,8 +432,8 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Map[Int, Long] =
       df.collect().map(r =>
         r.getInt(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
-    val loc = rows(Similarity.powerIterationLocal(cov, 3, 4))
-    val dist = rows(Similarity.powerIterationDistributed(cov, 3, 4))
+    val loc = rows(Similarity.powerIterationLocal(cov, None, 3, 4))
+    val dist = rows(Similarity.powerIterationDistributed(cov, None, 3, 4))
     assert(loc.keySet == Set(0, 1) && loc == dist)
   }
 
@@ -407,21 +447,28 @@ class SimilaritySpec extends SparkSpec {
       df.collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) None
          else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1))))).toMap
-    val loc = rows(Similarity.powerIterationLocal(cov, 3, 3))
-    val dist = rows(Similarity.powerIterationDistributed(cov, 3, 3))
+    val loc = rows(Similarity.powerIterationLocal(cov, None, 3, 3))
+    val dist = rows(Similarity.powerIterationDistributed(cov, None, 3, 3))
     assert(loc == dist, s"local $loc vs distributed $dist")
     // deflation against a component carrying a null comp row: same contract
-    val v1loc = Similarity.powerIterationLocal(cov, 3, 1)
-    val loc2 = rows(Similarity.powerIterationDeflatedLocal(cov, v1loc, 3, 2))
-    val dist2 = rows(Similarity.powerIterationDeflatedDistributed(cov, v1loc, 3, 2))
+    val v1loc = Similarity.powerIterationLocal(cov, None, 3, 1)
+    val loc2 = rows(Similarity.powerIterationLocal(cov, Some(v1loc), 3, 2))
+    val dist2 = rows(Similarity.powerIterationDistributed(cov, Some(v1loc), 3, 2))
     assert(loc2 == dist2, s"deflated local $loc2 vs distributed $dist2")
   }
 
   test("eigensolve gate: an all-zero covariance errors on BOTH paths (ANSI divide-by-zero)") {
     val cov = Seq((0, 0, 0.0), (0, 1, 0.0), (1, 1, 0.0)).toDF("i", "j", "cov")
     assertThrows[ArithmeticException](
-      Similarity.powerIterationLocal(cov, 2, 3).collect())
+      Similarity.powerIterationLocal(cov, None, 2, 3).collect())
     assertThrows[ArithmeticException](
-      Similarity.powerIterationDistributed(cov, 2, 3).collect())
+      Similarity.powerIterationDistributed(cov, None, 2, 3).collect())
+    // the deflated recurrence against a supplied unit comp1: A = 0 gives
+    // λ₁ = 0 and y = 0 on every row, so its norm is zero on both paths too
+    val comp1 = Seq((0, 1.0), (1, 0.0)).toDF("d", "comp")
+    assertThrows[ArithmeticException](
+      Similarity.powerIterationLocal(cov, Some(comp1), 2, 3).collect())
+    assertThrows[ArithmeticException](
+      Similarity.powerIterationDistributed(cov, Some(comp1), 2, 3).collect())
   }
 }

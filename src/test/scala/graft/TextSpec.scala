@@ -580,10 +580,6 @@ class TextSpec extends SparkSpec {
   }
 
   test("simhashDedup/packSequences argument contracts") {
-    val d = Seq((1L, "a b c")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      TextOps.simhashDedup(d, "doc_id", "text", bandBits = 12) // 64 % 12 != 0
-    }
     val sd = Seq(("doc_1", "a b c")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
       TextOps.packSequences(sd, "doc_id", "text", budget = 10) // string id

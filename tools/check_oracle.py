@@ -11,18 +11,39 @@ here, but the driver's byte hash failed. Never weaken this back.
 
 Usage: check_oracle.py <sfDir> <verifyOutDir> [query ...]
 """
-import sys, json, glob, os
+import sys, json, glob, os, re
 import duckdb, numpy as np, pandas as pd
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
 
-con = duckdb.connect()
+# capped, so an oracle too heavy for the cap fails with DuckDB's out-of-memory
+# error (retried below) instead of exhausting the host
+con = duckdb.connect(config={"memory_limit": "2GB", "threads": "2"})
 for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
     name = os.path.basename(p)[:-len(".parquet")]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+
+
+def materialized(sql):
+    """The same SQL with every CTE marked MATERIALIZED. DuckDB inlines a CTE
+    at each reference, so an oracle that unrolls an iteration as a CTE chain
+    (each round's vector read twice: by the next mat-vec and by its own
+    norm) evaluates its first round 2^rounds times — the emb_pca* oracles
+    exhaust the memory cap that way. Evaluating each CTE once changes no
+    result."""
+    return re.sub(r"(\bWITH\s+|,\s*)(\w+)\s+AS\s+\((?=\s*SELECT\b)",
+                  r"\1\2 AS MATERIALIZED (", sql, flags=re.I)
+
+
+def run_oracle(sql):
+    try:
+        return con.execute(sql).fetchdf()
+    except duckdb.OutOfMemoryException:
+        return con.execute(materialized(sql)).fetchdf()
+
 
 def canon(df, round_floats=True):
     df = df[sorted(df.columns)]
@@ -99,7 +120,7 @@ for name in sorted(os.listdir(out_dir)):
         skips.append(name)
         continue
     try:
-        oracle_df = con.execute(oracle[name]).fetchdf()
+        oracle_df = run_oracle(oracle[name])
     except Exception as e:
         fails.append((name, f"oracle sql error: {e}"))
         continue
