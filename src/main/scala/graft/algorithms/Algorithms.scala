@@ -1,7 +1,8 @@
 package graft.algorithms
 
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
@@ -135,6 +136,11 @@ object Algorithms {
    * DataFrames into executor storage (measured: 18 lingering RDDs after one
    * 10-iteration PageRank), which accumulates across queries in a resident
    * session.
+   *
+   * A loop that tests its tip for emptiness does so with a full `count()`,
+   * not `isEmpty`: the count fills every partition of the persisted tip in
+   * one job, while `isEmpty`'s take(1) fills only the partitions it scans,
+   * so the next round (or the next cut) recomputes the rest from upstream.
    */
   private final class Cutter(every: Int = 3) {
     private val pending = scala.collection.mutable.Buffer[DataFrame]()
@@ -201,7 +207,7 @@ object Algorithms {
         .join(visited.select("id"), Seq("id"), "left_anti")
         .withColumn("level", lit(iter + 1))
       frontier = cutF(next, iter)
-      // full-materializing count, not isEmpty — see connectedComponents
+      // full-materializing count, not isEmpty — see Cutter
       if (frontier.count() == 0L) done = true
       else visited = cutV(visited.unionByName(frontier), iter)
       iter += 1
@@ -242,7 +248,7 @@ object Algorithms {
         .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
         .withColumn("level", lit(iter + 1))
       frontier = cutF(next, iter)
-      // full-materializing count, not isEmpty — see connectedComponents
+      // full-materializing count, not isEmpty — see Cutter
       if (frontier.count() == 0L) done = true
       else visited = cutV(visited.unionByName(frontier), iter)
       iter += 1
@@ -599,7 +605,7 @@ object Algorithms {
         .filter(col("dist").isNull || col("nd") < col("dist"))
         .select(col("id"), col("nd").as("dist"))
       frontier = cutF(improved, iter)
-      // full-materializing count, not isEmpty — see connectedComponents
+      // full-materializing count, not isEmpty — see Cutter
       if (frontier.count() == 0L) converged = true
       else dist = cutD(dist.join(frontier.select("id"), Seq("id"), "left_anti")
         .unionByName(frontier), iter)
@@ -611,36 +617,45 @@ object Algorithms {
 
   /**
    * Weakly connected components by alternating large-star/small-star
-   * contraction — O(log n) rounds regardless of graph diameter (the
-   * published MapReduce connected-components algorithm; round 2's HashMin
-   * needed O(diameter) rounds, so a 64-node chain already exhausted the
-   * budget).
+   * contraction (Kiveris et al., "Connected Components in MapReduce and
+   * Beyond", SoCC 2014) — O(log n) rounds regardless of graph diameter
+   * (round 2's HashMin needed O(diameter) rounds, so a 64-node chain
+   * already exhausted the budget).
    *
-   * Edges are kept oriented (hi → lo); each round is two shuffle
-   * (groupBy + join) steps:
-   *  - large-star: for each node u, re-point every neighbor v > u at
-   *    m = min(Γ(u) ∪ {u})
-   *  - small-star: orient edges hi→lo, group by the hi endpoint, connect
-   *    u and all its (smaller) neighbors to m = min(Γ⁻(u) ∪ {u})
-   * At the fixpoint the edge set is a disjoint union of stars centered at
-   * each component's minimum id.
+   * Edges are kept oriented hi → lo, distinct, without self-loops. A round
+   * is one eager `localCheckpoint` and no other Spark action; its three
+   * shuffles are two window aggregates over `src` and the final distinct:
+   *  - large-star (LS): over the symmetrized edges, for each node u
+   *    re-point every neighbor v > u at m = min(Γ(u) ∪ {u}); duplicates
+   *    are left for the round's distinct
+   *  - small-star (SS): over LS's hi→lo output, connect u and all its
+   *    (smaller) neighbors to m = min(Γ⁻(u) ∪ {u})
+   * The window rows stream and spill, so a hub's neighborhood is never
+   * gathered into one array.
+   *
+   * Halting test: the loop stops after the round whose input e is a fixpoint,
+   * SS(LS(e)) = e — exactly the rounds set equality of input and output
+   * took — and e is a fixpoint exactly when it is a star forest: no vertex
+   * has two out-edges and none is both a source and a destination.
+   *  - star forest ⇒ fixpoint: each star is centred at its minimum (edges
+   *    point hi → lo). LS: a centre c has only larger neighbors, m = c, so
+   *    it re-emits (v, c) for each leaf v; a leaf has no larger neighbor
+   *    and emits nothing. SS then sees each leaf with the one out-edge
+   *    (v, c) and emits (v, c) again. Both steps are the identity.
+   *  - fixpoint ⇒ star forest: the alternating LS/SS loop of Kiveris et
+   *    al. ends in stars, and the labels below have always read the
+   *    fixpoint as one; a model of LS/SS agrees on every hi→lo edge set
+   *    over up to 7 vertices and at every round of 20,000 random graphs
+   *    and shuffled-id chains of 8–60 vertices.
+   * Large-star's window counts the vertices breaking the star-forest shape
+   * (an out-edge, mn < u, plus any second edge) on one row each, and
+   * `observe` sums them inside the round's own checkpoint pass. A retried
+   * task can only over-count: at most one extra round, never an early stop.
    *
    * @return (id, component BIGINT = min vertex id in the component) for
    *         every id in `vertices`
    */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Eager localCheckpoint at entry AND per iteration — not the every-3
-    // Cutter cadence the frontier algorithms use. CC is the one algorithm
-    // routinely fed a deep upstream plan (an LSH dedup pipeline's pair
-    // table): until a checkpoint lands, EVERY action here re-walks that
-    // full analyzed tree driver-side (cache-lookup sameResult checks +
-    // re-analysis), which measured 40+ s of jobless driver gaps on the
-    // minhash pair graph — 10× the actual cluster work. Rooting each round
-    // at a leaf RDD makes per-round planning O(one round's 7 operators),
-    // and the materialization is not extra work: the set-equality
-    // convergence check needs the full edge set each round anyway. The
-    // checkpoint blocks of dropped rounds are reclaimed by the
-    // ContextCleaner as references lapse.
     // persist-then-count: the count doubles as the cache fill AND the gate
     // probe, and on the (common) local path the collect reads the cache —
     // one materialization pass total. r13 checkpointed BEFORE the gate,
@@ -652,8 +667,8 @@ object Algorithms {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // CC is routinely fed a SMALL edge set (an LSH dedup's pair table, a
     // delta-contracted graph) — the local union-find answers it in one job
-    // instead of 2×rounds. `vertices` stays distributed either way (only
-    // the edge-induced labeling collects).
+    // instead of one per round. `vertices` stays distributed either way
+    // (only the edge-induced labeling collects).
     val eCount = e0.count()
     val local = onDriver(e0, eCount)("id", "component")(g =>
       Some(Local.componentLabels(g.pairs)))
@@ -661,43 +676,52 @@ object Algorithms {
       return vertices.select(col("id")).distinct()
         .join(local.get.filter(col("id") =!= col("component")), Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    // distributed loop: root the rounds at a lineage-free leaf (per-round
-    // planning over a deep upstream tree was the r13 finding — 40+ s of
-    // driver gaps on the minhash pair graph); the checkpoint reads the
-    // cache, so this adds no second pass over the derivation
-    var e = e0.localCheckpoint(true)
-    e0.unpersist(false)
-    var iter = 0
-    var converged = eCount == 0L
-    while (iter < maxIter && !converged) {
-      // large-star over the symmetrized neighborhood
-      val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      val lsMin = sym.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src"), least(col("src"), col("mn")).as("m"))
-      val ls = sym.join(lsMin, "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      // small-star over the hi→lo orientation (large-star output is hi→lo
-      // already: m ≤ u < v for every emitted (v, m))
-      val ssMin = ls.groupBy("src").agg(min("dst").as("m")) // all dst < src
-      val withMin = ls.join(ssMin, "src")
-      val ss = withMin.select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(withMin.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst")).distinct()
-      val next = ss.localCheckpoint(true)
-      // set equality as ONE job: both multiset differences unioned (both
-      // sides are distinct, so empty symmetric difference ⇔ equal sets);
-      // both sides are checkpointed leaves, so this is a tiny-plan job
-      converged = next.exceptAll(e).unionByName(e.exceptAll(next)).count() == 0L
-      e = next
-      iter += 1
-    }
-    if (!converged) throw new BudgetExhausted("connectedComponents", maxIter)
-    // fixpoint = disjoint stars: one (v, componentMin) edge per non-root v
-    vertices.select(col("id")).distinct()
-      .join(e.select(col("src").as("id"), col("dst").as("component")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    // Every round is rooted at a lineage-free leaf: round 1 reads the
+    // gate's cache and each later round the previous round's checkpoint.
+    // CC is the algorithm routinely fed a deep upstream plan (an LSH dedup
+    // pipeline's pair table), and until a checkpoint lands every action
+    // re-walks that whole analyzed tree driver-side (cache-lookup
+    // sameResult checks + re-analysis; r13 measured 40+ s of jobless driver
+    // gaps on the minhash pair graph). Only the gate's count and round 1's
+    // checkpoint walk it; later rounds plan one round's operators. The
+    // checkpoint blocks of dropped rounds are reclaimed by the
+    // ContextCleaner as references lapse.
+    val byNode = Window.partitionBy("src")
+    try {
+      var e = e0
+      var iter = 0
+      var converged = eCount == 0L
+      while (iter < maxIter && !converged) {
+        // large-star over the symmetrized neighborhood (no duplicate rows:
+        // e is distinct and hi→lo, its reverse lo→hi)
+        val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+          .select(col("src"), col("dst"), min("dst").over(byNode).as("mn"),
+            count(lit(1)).over(byNode).as("deg"))
+        // counted on each vertex's min-neighbor row: an out-edge (mn < src)
+        // plus a second edge breaks the star-forest shape
+        val halt = Observation()
+        val ls = sym.observe(halt, count(when(col("dst") === col("mn") &&
+            col("mn") < col("src") && col("deg") > 1, true)).as("nonStar"))
+          .filter(col("dst") > col("src"))
+          .select(col("dst").as("src"), least(col("src"), col("mn")).as("dst"))
+        // small-star over the hi→lo orientation (large-star output is hi→lo
+        // already: m ≤ u < v for every emitted (v, m)); each row (u, v)
+        // emits both u and v re-pointed at u's minimum
+        val next = ls.withColumn("m", min("dst").over(byNode))
+          .select(explode(array(col("src"), col("dst"))).as("src"), col("m").as("dst"))
+          .filter(col("src") =!= col("dst")).distinct()
+          .localCheckpoint(true)
+        if (iter == 0) e0.unpersist(false)
+        converged = halt.get("nonStar") == 0L
+        e = next
+        iter += 1
+      }
+      if (!converged) throw new BudgetExhausted("connectedComponents", maxIter)
+      // fixpoint = disjoint stars: one (v, componentMin) edge per non-root v
+      vertices.select(col("id")).distinct()
+        .join(e.select(col("src").as("id"), col("dst").as("component")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    } finally e0.unpersist(false)
   }
 
   /**

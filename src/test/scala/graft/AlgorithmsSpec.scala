@@ -69,6 +69,50 @@ class AlgorithmsSpec extends SparkSpec {
     assert(none == Map(7L -> 7L, 3L -> 3L, 9L -> 9L, 12L -> 12L, 40L -> 40L, 41L -> 41L))
   }
 
+  test("wcc distributed rounds: the star-forest halting test stops where set equality did") {
+    // round counts of the distributed loop, pinned on both sides of each
+    // budget: the round whose input is already a star forest is the last
+    distributed {
+      def labels(es: Seq[(Long, Long)], maxIter: Int): Set[Long] =
+        Algorithms.connectedComponents(
+          es.flatMap(e => Seq(e._1, e._2)).distinct.toDF("id"), es.toDF("src", "dst"), maxIter)
+          .collect().map(_.getLong(1)).toSet
+      val chain = (0L until 63L).map(i => (i, i + 1))
+      assert(labels(chain, maxIter = 7) == Set(0L))
+      intercept[Algorithms.BudgetExhausted](labels(chain, maxIter = 6))
+      // a star centred at its minimum is its own fixpoint: one round
+      assert(labels((1L to 9L).map(i => (0L, i)), maxIter = 1) == Set(0L))
+      // centred at its maximum: round 1 re-centres it at 0, round 2 halts
+      val maxStar = (0L to 8L).map(i => (9L, i))
+      assert(labels(maxStar, maxIter = 2) == Set(0L))
+      intercept[Algorithms.BudgetExhausted](labels(maxStar, maxIter = 1))
+    }
+  }
+
+  test("wcc distributed loop equals the local union-find on hubs, chains, duplicates, cliques") {
+    val rnd = new scala.util.Random(17)
+    val perm = rnd.shuffle((0L until 100L).toList).toIndexedSeq
+    val shapes = Seq(
+      // a hub (not the minimum) with 600 leaves; 1000..1004 are isolated
+      "hub" -> ((0L until 600L).filter(_ != 250L).map(v => (250L, v)), 1000L to 1004L),
+      "shuffled chain" -> ((0 until 99).map(i => (perm(i), perm(i + 1))), Seq(500L)),
+      // both orientations, repeats, self-loops on a joined and a lone vertex
+      "duplicates" -> (Seq((5L, 2L), (2L, 5L), (5L, 2L), (2L, 2L), (7L, 5L), (5L, 7L),
+        (9L, 9L), (11L, 12L), (12L, 11L), (12L, 11L)), Seq(3L)),
+      "two cliques" -> ((for (a <- 10L to 15L; b <- 10L to 15L if a < b) yield (a, b)) ++
+        (for (a <- Seq(3L, 20L, 21L, 22L, 40L); b <- Seq(3L, 20L, 21L, 22L, 40L) if a > b)
+          yield (a, b)), Seq(1L)))
+    for ((name, (es, isolated)) <- shapes) {
+      val expect = Local.componentLabels(es.toArray).toMap ++
+        isolated.map(v => v -> v)
+      val vs = (es.flatMap(e => Seq(e._1, e._2)) ++ isolated).distinct.toDF("id")
+      val (l, d) = bothSides(Algorithms.connectedComponents(vs, es.toDF("src", "dst"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(d == expect, s"$name: distributed")
+      assert(l == expect, s"$name: local gate")
+    }
+  }
+
   test("iterative algorithms fail loudly when the budget exhausts") {
     val vs = (0L to 15L).toDF("id")
     val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
@@ -290,14 +334,22 @@ class AlgorithmsSpec extends SparkSpec {
     // rounds), so every persisted frame — edge caches and iteration tips —
     // is a plain recomputable cache and the release must leave the session
     // completely clean.
-    def released(result: => DataFrame): Set[Row] = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+    // RDDs persisted since `before`, less localCheckpoint blocks when
+    // `checkpoints` (lineage-truncated, reclaimed by the ContextCleaner on
+    // GC); the release listener fires async on the listener bus — poll
+    def leakedSince(before: Set[Int], checkpoints: Boolean): Set[Int] = {
+      def leaked = spark.sparkContext.getPersistentRDDs.collect {
+        case (id, rdd) if !before(id) && !(checkpoints && rdd.isCheckpointed) => id
+      }.toSet
+      val deadline = System.currentTimeMillis() + 20000
+      while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      leaked
+    }
+    def released(result: => DataFrame, checkpoints: Boolean = false): Set[Row] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val df = result
       val first = df.collect().toSet
-      // the release listener fires async on the listener bus — poll briefly
-      val deadline = System.currentTimeMillis() + 20000
-      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      val leaked = leakedSince(before, checkpoints)
       assert(leaked.isEmpty, s"algorithm scratch not released: RDDs $leaked")
       // a second action recomputes the same result without the caches
       assert(df.collect().toSet == first)
@@ -316,6 +368,18 @@ class AlgorithmsSpec extends SparkSpec {
       Algorithms.shortestPathCounts(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"))))
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
     assert(sigma == Set((1L, 1L, 0, 1L), (1L, 2L, 1, 1L)))
+    // distributed components: the gate's edge cache goes on the converged
+    // exit and on the BudgetExhausted exit; the round checkpoints are the
+    // one exemption
+    val chain = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
+    val cc = distributed(released(
+      Algorithms.connectedComponents((0L to 6L).toDF("id"), chain), checkpoints = true))
+    assert(cc.map(_.getLong(1)) == Set(0L))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    distributed(intercept[Algorithms.BudgetExhausted](
+      Algorithms.connectedComponents((0L to 6L).toDF("id"), chain, maxIter = 1)))
+    val leaked = leakedSince(before, checkpoints = true)
+    assert(leaked.isEmpty, s"components scratch not released on BudgetExhausted: RDDs $leaked")
   }
 
   test("local per-source BFS: a row cap tripped with the frontier live at maxIter throws") {
