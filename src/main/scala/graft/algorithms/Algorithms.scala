@@ -85,9 +85,10 @@ object Algorithms {
    * BIGINT checks pass — it is the cache fill, so the gate adds no job).
    * When the graph passes the gate, `run` gets it collected and its answer
    * comes back as a DataFrame with columns `cols`; `e` and every id list
-   * are then released. None means: run the distributed loop (the caller's
-   * frames stay persisted for it). Frames the dispatch persisted itself are
-   * released on every exit.
+   * are then released, as they are when `run` throws (a local
+   * [[BudgetExhausted]]). None means: run the distributed loop (the
+   * caller's frames stay persisted for it). Frames the dispatch persisted
+   * itself are released on every exit.
    */
   private def onDriver[T <: Product : TypeTag](e: DataFrame, edgeCount: => Long, ids: Ids*)(
       cols: String*)(run: Collected => Option[Array[T]]): Option[DataFrame] = {
@@ -98,6 +99,7 @@ object Algorithms {
         edgeCount > spark.conf.getOption("graft.localGraphMaxEdges")
           .map(_.toLong).getOrElse(LocalGraphMaxEdges)) return None
     val owned = scala.collection.mutable.Buffer[DataFrame]()
+    def release(): Unit = { e.unpersist(false); ids.foreach(_.df.unpersist(false)) }
     try {
       val lists = ids.map {
         case Fresh(df) =>
@@ -107,8 +109,8 @@ object Algorithms {
         case Held(df, _) => df.select(col("id"))
       }
       if (owned.exists(_.count() > LocalGraphMaxVertices)) return None
-      val answer = run(new Collected(e, lists))
-      if (answer.nonEmpty) { e.unpersist(false); ids.foreach(_.df.unpersist(false)) }
+      val answer = try run(new Collected(e, lists)) catch { case x: Throwable => release(); throw x }
+      if (answer.nonEmpty) release()
       import spark.implicits._
       answer.map(_.toSeq.toDF(cols: _*))
     } finally owned.foreach(_.unpersist(false))
@@ -135,12 +137,8 @@ object Algorithms {
    * point. Without the unpersist, a k-iteration algorithm leaks k cached
    * DataFrames into executor storage (measured: 18 lingering RDDs after one
    * 10-iteration PageRank), which accumulates across queries in a resident
-   * session.
-   *
-   * A loop that tests its tip for emptiness does so with a full `count()`,
-   * not `isEmpty`: the count fills every partition of the persisted tip in
-   * one job, while `isEmpty`'s take(1) fills only the partitions it scans,
-   * so the next round (or the next cut) recomputes the rest from upstream.
+   * session. A Cutter carries no halting rule: [[frontierLoop]] and
+   * [[peel]] state theirs.
    */
   private final class Cutter(every: Int = 3) {
     private val pending = scala.collection.mutable.Buffer[DataFrame]()
@@ -178,10 +176,61 @@ object Algorithms {
     // a run — up to `every` of them back the returned result's lineage.
     // Each algorithm hands these plus its edge caches to
     // releaseOnFirstAction, so the first caller action runs fully cached
-    // and the session is left clean (localCheckpoint blocks are the one
+    // and the session is left clean, or unpersists them at once when it
+    // throws BudgetExhausted (localCheckpoint blocks are the one
     // exception: lineage-truncated, reclaimed by the ContextCleaner on GC).
     def leftovers: Seq[DataFrame] = pending.toList
   }
+
+  /**
+   * The frontier loop of [[bfs]], [[bfsPerSource]], [[shortestPathCounts]],
+   * [[sssp]] and [[betweennessLandmark]]'s forward pass: frontier ⊕.⊗ A
+   * until the frontier is empty, where only the semiring changes (the
+   * reference's BFS and SSSP, DocSpec.scala:31-101). Round `iter` computes
+   * `step(frontier, state, iter)`; an empty result halts the loop, anything
+   * else is folded into the state by `absorb`. Both chains are cut by one
+   * iteration-synchronized Cutter pair (see [[Cutter]] on why they must cut
+   * in the same round).
+   *
+   * The halting test is a full `count()`, not `isEmpty`: the count fills
+   * every partition of the persisted tip in one job, while `isEmpty`'s
+   * take(1) fills only the partitions it scans, so the next round (or the
+   * next cut) recomputes the rest from upstream.
+   *
+   * Returns the fixpoint state and the frames to release with it: `scratch`
+   * plus both chains' pending tips. When the budget runs out they are
+   * released before [[BudgetExhausted]] is thrown.
+   */
+  private def frontierLoop(algo: String, seed: DataFrame, maxIter: Int, scratch: Seq[DataFrame],
+      absorb: (DataFrame, DataFrame) => DataFrame = _.unionByName(_))(
+      step: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val cutF = new Cutter; val cutS = new Cutter
+    var state = seed
+    var frontier = seed
+    var iter = 0
+    var done = false
+    while (iter < maxIter && !done) {
+      frontier = cutF(step(frontier, state, iter), iter)
+      if (frontier.count() == 0L) done = true
+      else state = cutS(absorb(state, frontier), iter)
+      iter += 1
+    }
+    val held = scratch ++ cutF.leftovers ++ cutS.leftovers
+    if (!done) { held.foreach(_.unpersist(false)); throw new BudgetExhausted(algo, maxIter) }
+    (state, held)
+  }
+
+  /**
+   * One σ round of a per-source BFS over `e` (e_src, e_dst): σ sums over
+   * the level-(L−1) DAG parents, and (src, id) pairs already visited drop.
+   * [[shortestPathCounts]] and [[betweennessLandmark]] both run it.
+   */
+  private def sigmaStep(e: DataFrame)(frontier: DataFrame, visited: DataFrame, iter: Int): DataFrame =
+    frontier.join(e, frontier("id") === col("e_src"))
+      .select(col("src"), col("e_dst").as("id"), col("sigma"))
+      .groupBy("src", "id").agg(sum("sigma").as("sigma"))
+      .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
+      .withColumn("level", lit(iter + 1))
 
   /**
    * Multi-source BFS levels: frontier ⊕.⊗ adjacency over the (lor, land)
@@ -196,24 +245,15 @@ object Algorithms {
     val local = onDriver(e, e.count(), Fresh(sources))("id", "level")(g =>
       Some(Local.bfsLevels(g.pairs, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
-    val cutF = new Cutter; val cutV = new Cutter
-    var visited = sources.select(col("id")).distinct().withColumn("level", lit(0))
-    var frontier = visited
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .withColumn("level", lit(iter + 1))
-      frontier = cutF(next, iter)
-      // full-materializing count, not isEmpty — see Cutter
-      if (frontier.count() == 0L) done = true
-      else visited = cutV(visited.unionByName(frontier), iter)
-      iter += 1
+    val (visited, held) = frontierLoop("bfs",
+        sources.select(col("id")).distinct().withColumn("level", lit(0)), maxIter, Seq(e)) {
+      (frontier, visited, iter) =>
+        frontier.join(e, frontier("id") === e("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(visited.select("id"), Seq("id"), "left_anti")
+          .withColumn("level", lit(iter + 1))
     }
-    if (!done) throw new BudgetExhausted("bfs", maxIter)
-    releaseOnFirstAction(visited, e +: (cutF.leftovers ++ cutV.leftovers): _*)
+    releaseOnFirstAction(visited, held: _*)
   }
 
   /**
@@ -236,25 +276,15 @@ object Algorithms {
     val local = onDriver(e, e.count(), Fresh(sources))("src", "id", "level")(g =>
       Local.bfsPerSource(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
     if (local.nonEmpty) return local.get
-    val cutF = new Cutter; val cutV = new Cutter
-    var visited = sources.select(col("id")).distinct()
-      .select(col("id").as("src"), col("id"), lit(0).as("level"))
-    var frontier = visited
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val next = frontier.join(e, frontier("id") === col("e_src"))
-        .select(col("src"), col("e_dst").as("id")).distinct()
-        .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
-        .withColumn("level", lit(iter + 1))
-      frontier = cutF(next, iter)
-      // full-materializing count, not isEmpty — see Cutter
-      if (frontier.count() == 0L) done = true
-      else visited = cutV(visited.unionByName(frontier), iter)
-      iter += 1
+    val (visited, held) = frontierLoop("bfsPerSource", sources.select(col("id")).distinct()
+        .select(col("id").as("src"), col("id"), lit(0).as("level")), maxIter, Seq(e)) {
+      (frontier, visited, iter) =>
+        frontier.join(e, frontier("id") === col("e_src"))
+          .select(col("src"), col("e_dst").as("id")).distinct()
+          .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
+          .withColumn("level", lit(iter + 1))
     }
-    if (!done) throw new BudgetExhausted("bfsPerSource", maxIter)
-    releaseOnFirstAction(visited, e +: (cutF.leftovers ++ cutV.leftovers): _*)
+    releaseOnFirstAction(visited, held: _*)
   }
 
   /**
@@ -348,9 +378,10 @@ object Algorithms {
    * O(k · reachability), the same contract as [[harmonicLandmark]], and
    * the md5 sample is deterministic so results stay oracle-checkable.
    *
-   * Forward: one multi-source BFS keyed (src, id) carrying σ — the
-   * shortest-path count, summed over the level-(L-1) DAG parents (the
-   * [[bfsPerSource]] frontier shape plus one aggregate column). Backward:
+   * Forward: the σ table of [[shortestPathCounts]], one multi-source BFS
+   * keyed (src, id) carrying the shortest-path count — the same
+   * [[sigmaStep]] in the same [[frontierLoop]], over this method's own
+   * (not pre-partitioned) edge cache. Backward:
    * levels descend from the BFS depth; each round joins the current
    * level's dependency δ(w) to its DAG parents p:
    * δ(p) = σ(p) · Σ_w (1 + δ(w)) / σ(w). Rounds = 2 × BFS depth, each a
@@ -380,24 +411,9 @@ object Algorithms {
       return vs.join(local.get, Seq("id"), "left")
         .select(col("id"),
           (coalesce(col("dsum"), lit(0.0)) * lit(n.toDouble / kk)).as("betweenness"))
-    val cutF = new Cutter; val cutV = new Cutter
-    var visited = landmarks
-      .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma"))
-    var frontier = visited
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val next = frontier.join(e, frontier("id") === col("e_src"))
-        .select(col("src"), col("e_dst").as("id"), col("sigma"))
-        .groupBy("src", "id").agg(sum("sigma").as("sigma"))
-        .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
-        .withColumn("level", lit(iter + 1))
-      frontier = cutF(next, iter)
-      if (frontier.count() == 0L) done = true
-      else visited = cutV(visited.unionByName(frontier), iter)
-      iter += 1
-    }
-    if (!done) throw new BudgetExhausted("betweennessLandmark", maxIter)
+    val (visited, held) = frontierLoop("betweennessLandmark", landmarks
+        .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma")),
+      maxIter, Seq(e))(sigmaStep(e))
     val vis = visited.persist(StorageLevel.MEMORY_AND_DISK)
     // max over an EMPTY visited set (zero-vertex graph → no landmarks) is
     // SQL null — treat as level 0 so the all-zeros path below returns the
@@ -406,7 +422,7 @@ object Algorithms {
     val maxLevel = if (maxRow.isNullAt(0)) 0 else maxRow.getInt(0)
     if (maxLevel == 0) { // no landmark reaches anything: all zeros
       val zero = vs.select(col("id"), lit(0.0).as("betweenness"))
-      return releaseOnFirstAction(zero, (e +: vis +: cutF.leftovers): _*)
+      return releaseOnFirstAction(zero, vis +: held: _*)
     }
     val cutB = new Cutter
     var curDelta = vis.filter(col("level") === maxLevel)
@@ -437,8 +453,7 @@ object Algorithms {
     val result = vs.join(bc, Seq("id"), "left")
       .select(col("id"),
         (coalesce(col("dsum"), lit(0.0)) * lit(n.toDouble / kk)).as("betweenness"))
-    releaseOnFirstAction(result,
-      (e +: vis +: (cutF.leftovers ++ cutV.leftovers ++ cutB.leftovers)): _*)
+    releaseOnFirstAction(result, vis +: (held ++ cutB.leftovers): _*)
   }
 
   /**
@@ -541,31 +556,15 @@ object Algorithms {
     // e0 is released with the other scratch caches on the first action)
     val e = e0.select(col("src").as("e_src"), col("dst").as("e_dst"))
       .repartition(col("e_src")).cache()
-    val cutF = new Cutter; val cutV = new Cutter
-    var visited = sources.select(col("id")).distinct()
-      .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma"))
-    var frontier = visited
-    // NOTE an explicit broadcast(frontier) hint here was measured and
-    // REJECTED: each round then pays a driver collect + broadcast rebuild
-    // of the frontier, while the shuffled join it replaces moves only the
-    // cached 32-partition edge table — graph_sigma 11.9 → 17-22 s at
-    // sf0.1. AQE already broadcast-converts when runtime sizes favor it.
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val next = frontier.join(e, frontier("id") === col("e_src"))
-        .select(col("src"), col("e_dst").as("id"), col("sigma"))
-        .groupBy("src", "id").agg(sum("sigma").as("sigma"))
-        .join(visited.select("src", "id"), Seq("src", "id"), "left_anti")
-        .withColumn("level", lit(iter + 1))
-        .select("src", "id", "level", "sigma")
-      frontier = cutF(next, iter)
-      if (frontier.count() == 0L) done = true
-      else visited = cutV(visited.unionByName(frontier), iter)
-      iter += 1
-    }
-    if (!done) throw new BudgetExhausted("shortestPathCounts", maxIter)
-    releaseOnFirstAction(visited, Seq(e, e0) ++ cutF.leftovers ++ cutV.leftovers: _*)
+    // NOTE an explicit broadcast(frontier) hint in the σ step was measured
+    // and REJECTED: each round then pays a driver collect + broadcast
+    // rebuild of the frontier, while the shuffled join it replaces moves
+    // only the cached 32-partition edge table — graph_sigma 11.9 → 17-22 s
+    // at sf0.1. AQE already broadcast-converts when runtime sizes favor it.
+    val (visited, held) = frontierLoop("shortestPathCounts", sources.select(col("id")).distinct()
+        .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma")),
+      maxIter, Seq(e, e0))(sigmaStep(e))
+    releaseOnFirstAction(visited, held: _*)
   }
 
   /**
@@ -592,27 +591,20 @@ object Algorithms {
     val local = onDriver(e, e.count(), Fresh(sources))("id", "dist")(g =>
       g.weights.map(w => Local.sssp(g.pairs, w, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
-    val cutD = new Cutter; val cutF = new Cutter
-    var dist = sources.select(col("id")).distinct().withColumn("dist", lit(0.0))
-    var frontier = dist
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val cand = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
-        .groupBy("id").agg(min("nd").as("nd"))
-      val improved = cand.join(dist, Seq("id"), "left_outer")
-        .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("id"), col("nd").as("dist"))
-      frontier = cutF(improved, iter)
-      // full-materializing count, not isEmpty — see Cutter
-      if (frontier.count() == 0L) converged = true
-      else dist = cutD(dist.join(frontier.select("id"), Seq("id"), "left_anti")
-        .unionByName(frontier), iter)
-      iter += 1
+    // the improved set is the frontier; it replaces those vertices' rows
+    val (dist, held) = frontierLoop("sssp",
+        sources.select(col("id")).distinct().withColumn("dist", lit(0.0)), maxIter, Seq(e),
+        (dist, improved) =>
+          dist.join(improved.select("id"), Seq("id"), "left_anti").unionByName(improved)) {
+      (frontier, dist, _) =>
+        frontier.join(e, frontier("id") === e("src"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
+          .groupBy("id").agg(min("nd").as("nd"))
+          .join(dist, Seq("id"), "left_outer")
+          .filter(col("dist").isNull || col("nd") < col("dist"))
+          .select(col("id"), col("nd").as("dist"))
     }
-    if (!converged) throw new BudgetExhausted("sssp", maxIter)
-    releaseOnFirstAction(dist, e +: (cutD.leftovers ++ cutF.leftovers): _*)
+    releaseOnFirstAction(dist, held: _*)
   }
 
   /**
@@ -928,12 +920,9 @@ object Algorithms {
    * under degree k and the edges touching them, until nothing changes.
    * Rounds are bounded by the peel depth (≤ degeneracy ordering length),
    * not the diameter; each round is one degree aggregation + two semi-joins.
-   * Peeling only removes edges (pruned ⊆ e), so fixpoint ⇔ the edge COUNT
-   * is unchanged — the per-round `count()` on the freshly-persisted state
-   * doubles as the convergence probe AND fully populates its cache before
-   * the next round references it 4× (degree union twice, both semi-joins);
-   * an `exceptAll` probe would shuffle both full edge sets every round for
-   * the same answer.
+   * The loop is [[peel]]'s: its per-round count fills the cache the next
+   * round reads 4× (degree union twice, both semi-joins); an `exceptAll`
+   * probe would shuffle both full edge sets every round for the same answer.
    *
    * DEGREE-DELTA peeling (maintain degrees incrementally, subtract dropped
    * edges' endpoint contributions, anti-join-prune by the removed set) was
@@ -951,34 +940,17 @@ object Algorithms {
    */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
-    val cutter = new Cutter
-    var e = cutter(canonicalEdges(edges), 0)
-    var n = e.count()
-    val local = onDriver(e, n)("id")(g =>
-      Some(Local.kCore(g.pairs, k, maxIter).map(Tuple1(_))))
-    if (local.nonEmpty) return local.get
-    var iter = 0
-    var converged = n == 0
-    while (iter < maxIter && !converged) {
+    peel("kCore", edges, maxIter)(
+      (e, n) => onDriver(e, n)("id")(g => Some(Local.kCore(g.pairs, k, maxIter).map(Tuple1(_)))),
+      // every k-core vertex (k ≥ 1) is incident to a surviving edge
+      e => e.select(col("a").as("id")).unionByName(e.select(col("b").as("id"))).distinct()) { e =>
       val alive = e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("id")
-      val pruned = e
-        .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
+      e.join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
         .select("a", "b")
-      val next = cutter(pruned, iter + 1)
-      val m = next.count()
-      converged = m == n
-      e = next
-      n = m
-      iter += 1
     }
-    if (!converged) throw new BudgetExhausted("kCore", maxIter)
-    // every k-core vertex (k ≥ 1) is incident to a surviving edge
-    releaseOnFirstAction(
-      e.select(col("a").as("id")).unionByName(e.select(col("b").as("id"))).distinct(),
-      cutter.leftovers: _*)
   }
 
   /**
@@ -1004,14 +976,9 @@ object Algorithms {
    */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
-    val cutter = new Cutter
-    var e = cutter(canonicalEdges(edges), 0)
-    var n = e.count()
-    val local = onDriver(e, n)("a", "b")(g => Some(Local.kTruss(g.pairs, k, maxIter)))
-    if (local.nonEmpty) return local.get
-    var iter = 0
-    var converged = n == 0
-    while (iter < maxIter && !converged) {
+    peel("kTruss", edges, maxIter)(
+      (e, n) => onDriver(e, n)("a", "b")(g => Some(Local.kTruss(g.pairs, k, maxIter))),
+      identity) { e =>
       val nbr = e.select(col("a").as("v"), col("b").as("n"))
         .unionByName(e.select(col("b").as("v"), col("a").as("n")))
       // support(a,b) = |N(a) ∩ N(b)|: both endpoints' neighbor lists joined
@@ -1023,18 +990,46 @@ object Algorithms {
         .join(nbr.as("y"), col("e.b") === col("y.v") && col("x.n") === col("y.n"))
         .groupBy(col("e.a").as("a"), col("e.b").as("b"))
         .agg(count(lit(1)).as("sup"))
-      val pruned =
-        if (k == 2) e
-        else sup.filter(col("sup") >= k - 2).select("a", "b")
-      val next = cutter(pruned, iter + 1)
+      if (k == 2) e
+      else sup.filter(col("sup") >= k - 2).select("a", "b")
+    }
+  }
+
+  /**
+   * The peel loop of [[kCore]] and [[kTruss]]: the canonical edge set is
+   * cached and counted, offered to the caller's driver-local `gate`, and
+   * otherwise peeled round by round — `pruned` keeps a subset of its input,
+   * so the fixpoint is exactly the round whose survivor count is unchanged.
+   * That per-round `count()` on the freshly-persisted tip doubles as the
+   * convergence probe AND fills its cache before the next round reads it.
+   * Round `iter` is cut at index `iter + 1` (the edge cache took 0). `out`
+   * reads the answer off the surviving edges; the pending tips are released
+   * on its first action, or at once when [[BudgetExhausted]] is thrown (a
+   * gate that answers or throws releases the edge cache itself).
+   */
+  private def peel(algo: String, edges: DataFrame, maxIter: Int)(
+      gate: (DataFrame, Long) => Option[DataFrame], out: DataFrame => DataFrame)(
+      pruned: DataFrame => DataFrame): DataFrame = {
+    val cutter = new Cutter
+    var e = cutter(canonicalEdges(edges), 0)
+    var n = e.count()
+    val local = gate(e, n)
+    if (local.nonEmpty) return local.get
+    var iter = 0
+    var converged = n == 0
+    while (iter < maxIter && !converged) {
+      val next = cutter(pruned(e), iter + 1)
       val m = next.count()
       converged = m == n
       e = next
       n = m
       iter += 1
     }
-    if (!converged) throw new BudgetExhausted("kTruss", maxIter)
-    releaseOnFirstAction(e, cutter.leftovers: _*)
+    if (!converged) {
+      cutter.leftovers.foreach(_.unpersist(false))
+      throw new BudgetExhausted(algo, maxIter)
+    }
+    releaseOnFirstAction(out(e), cutter.leftovers: _*)
   }
 
   /**

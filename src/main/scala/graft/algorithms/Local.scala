@@ -89,6 +89,22 @@ private[graft] object Local {
       a
     }
     def outFrom(v: Int): Range = off(v) until off(v + 1)
+    /** Reverse CSR, built on first use: the sources of the edges into each
+      * vertex, in ascending source order (multiplicity preserved). */
+    lazy val inOff: Array[Int] = {
+      val o = new Array[Int](n + 1)
+      adj.foreach(w => o(w + 1) += 1)
+      var i = 0
+      while (i < n) { o(i + 1) += o(i); i += 1 }
+      o
+    }
+    lazy val inAdj: Array[Int] = {
+      val a = new Array[Int](inOff(n))
+      val fill = inOff.clone()
+      for (v <- 0 until n; ei <- outFrom(v)) { val w = adj(ei); a(fill(w)) = v; fill(w) += 1 }
+      a
+    }
+    def inTo(v: Int): Range = inOff(v) until inOff(v + 1)
   }
 
   /** Multi-source BFS levels — [[Algorithms.bfs]]'s fixpoint. */
@@ -173,24 +189,8 @@ private[graft] object Local {
       var frontier = Array(si)
       var iter = 0
       while (frontier.nonEmpty && iter < maxIter) {
-        // candidate σ sums for this level, over edges out of the frontier
-        val cand = new mutable.LongMap[Long]()
-        frontier.foreach { v =>
-          g.outFrom(v).foreach { ei =>
-            val w = g.adj(ei)
-            if (level(w) < 0) {
-              val k = w.toLong
-              cand.update(k, cand.getOrElse(k, 0L) + sigma(v))
-            }
-          }
-        }
-        val next = new mutable.ArrayBuffer[Int]()
-        cand.foreach { case (wi, sg) =>
-          val w = wi.toInt
-          level(w) = iter + 1; sigma(w) = sg; next += w
-          out += ((s, g.ids(w), iter + 1, sg))
-        }
-        frontier = next.toArray
+        frontier = sigmaRound(g, level, sigma, frontier, iter + 1)
+        frontier.foreach(w => out += ((s, g.ids(w), iter + 1, sigma(w))))
         iter += 1
         // per-ROUND cap check and budget precedence — see [[bfsPerSource]]
         if (out.length > maxRows && (frontier.isEmpty || iter < maxIter)) return None
@@ -198,6 +198,27 @@ private[graft] object Local {
       if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("shortestPathCounts", maxIter)
     }
     Some(out.toArray)
+  }
+
+  /** One level of a per-source σ-BFS — [[sigmaCounts]] and
+    * [[betweennessDeltas]]: every unvisited out-neighbour of `frontier`
+    * gets level `lvl` and σ = Σ σ over its frontier parents. Returns the new
+    * level's vertices in the candidate map's iteration order. */
+  private def sigmaRound(g: Csr, level: Array[Int], sigma: Array[Long], frontier: Array[Int],
+                         lvl: Int): Array[Int] = {
+    val cand = new mutable.LongMap[Long]()
+    frontier.foreach { v =>
+      g.outFrom(v).foreach { ei =>
+        val w = g.adj(ei)
+        if (level(w) < 0) cand.update(w.toLong, cand.getOrElse(w.toLong, 0L) + sigma(v))
+      }
+    }
+    val next = new mutable.ArrayBuffer[Int]()
+    cand.foreach { case (wi, sg) =>
+      val w = wi.toInt
+      level(w) = lvl; sigma(w) = sg; next += w
+    }
+    next.toArray
   }
 
   /** Frontier Bellman–Ford — [[Algorithms.sssp]], `w` parallel to
@@ -498,21 +519,6 @@ private[graft] object Local {
   def betweennessDeltas(edges: Array[(Long, Long)], landmarks: Array[Long],
                         maxIter: Int): mutable.LongMap[Double] = {
     val g = new Csr(edges, landmarks)
-    // reverse adjacency for the backward sweep (multiplicity preserved —
-    // the distributed contrib join fans out per parallel edge)
-    val rdeg = new Array[Int](g.n)
-    var ei = 0
-    while (ei < g.adj.length) { rdeg(g.adj(ei)) += 1; ei += 1 }
-    val roff = new Array[Int](g.n + 1)
-    var ri = 0
-    while (ri < g.n) { roff(ri + 1) = roff(ri) + rdeg(ri); ri += 1 }
-    val radj = new Array[Int](roff(g.n))
-    val rfill = roff.clone()
-    var rv = 0
-    while (rv < g.n) {
-      g.outFrom(rv).foreach { e => val w = g.adj(e); radj(rfill(w)) = rv; rfill(w) += 1 }
-      rv += 1
-    }
     val dsum = new mutable.LongMap[Double]()
     val level = new Array[Int](g.n)
     val sigma = new Array[Long](g.n)
@@ -524,19 +530,7 @@ private[graft] object Local {
       var frontier = Array(si)
       var iter = 0
       while (frontier.nonEmpty && iter < maxIter) {
-        val cand = new mutable.LongMap[Long]()
-        frontier.foreach { v =>
-          g.outFrom(v).foreach { e =>
-            val w = g.adj(e)
-            if (level(w) < 0) cand.update(w.toLong, cand.getOrElse(w.toLong, 0L) + sigma(v))
-          }
-        }
-        val next = new mutable.ArrayBuffer[Int]()
-        cand.foreach { case (wi, sg) =>
-          val w = wi.toInt
-          level(w) = iter + 1; sigma(w) = sg; next += w
-        }
-        frontier = next.toArray
+        frontier = sigmaRound(g, level, sigma, frontier, iter + 1)
         if (frontier.nonEmpty) levels ::= frontier
         iter += 1
       }
@@ -551,15 +545,14 @@ private[graft] object Local {
         }
         val lvl = level(lvlVerts(0))
         if (lvl >= 2) {
-          // contributions flow to level lvl−1 parents only
+          // contributions flow to level lvl−1 parents only, once per
+          // parallel edge (the distributed contrib join fans out per edge)
           val csum = new mutable.LongMap[Double]()
           lvlVerts.foreach { w =>
             val c = (1.0 + delta(w)) / sigma(w).toDouble
-            var re = roff(w)
-            while (re < roff(w + 1)) {
-              val p = radj(re)
+            g.inTo(w).foreach { re =>
+              val p = g.inAdj(re)
               if (level(p) == lvl - 1) csum.update(p.toLong, csum.getOrElse(p.toLong, 0.0) + c)
-              re += 1
             }
           }
           // δ(p) = σ(p) · csum for EVERY level-(lvl−1) vertex (0 if none)

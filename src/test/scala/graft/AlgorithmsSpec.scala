@@ -116,12 +116,26 @@ class AlgorithmsSpec extends SparkSpec {
   test("iterative algorithms fail loudly when the budget exhausts") {
     val vs = (0L to 15L).toDF("id")
     val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
-    intercept[Algorithms.BudgetExhausted] {
-      Algorithms.bfs(chain, Seq(0L).toDF("id"), maxIter = 5).count()
-    }
-    intercept[Algorithms.BudgetExhausted] {
-      Algorithms.sssp(chain.withColumn("w", lit(1.0)), Seq(0L).toDF("id"), maxIter = 5).count()
-    }
+    val from0 = Seq(0L).toDF("id")
+    // rounds R each loop needs on the chain 0→…→15: it passes at maxIter = R
+    // and throws at R − 1, with the same R on both sides of the gate
+    val loops: Seq[(String, Int, Int => DataFrame)] = Seq(
+      // 15 levels, then the round whose frontier is empty
+      ("bfs", 16, Algorithms.bfs(chain, from0, _)),
+      ("bfsPerSource", 16, Algorithms.bfsPerSource(chain, from0, _)),
+      ("shortestPathCounts", 16, Algorithms.shortestPathCounts(chain, from0, _)),
+      ("sssp", 16, Algorithms.sssp(chain.withColumn("w", lit(1.0)), from0, _)),
+      // k = n: every vertex is a landmark, and the BFS from 0 is the deepest
+      ("betweennessLandmark", 16, Algorithms.betweennessLandmark(vs, chain, 16, _)),
+      // the path loses its two end edges a round (15 → 13 → … → 1 → 0 in
+      // 8 rounds); the 9th finds the count unchanged
+      ("kCore", 9, Algorithms.kCore(chain, 2, _)),
+      // no path edge is in a triangle: round 1 drops all, round 2 is stable
+      ("kTruss", 2, Algorithms.kTruss(chain, 3, _)))
+    bothSides(for ((name, rounds, run) <- loops) withClue(s"$name, R = $rounds: ") {
+      run(rounds).count()
+      intercept[Algorithms.BudgetExhausted](run(rounds - 1).count())
+    })
     // the local union-find gate never exhausts a budget — force the
     // distributed star-contraction loop to pin ITS budget behavior
     distributed(intercept[Algorithms.BudgetExhausted] {
@@ -375,11 +389,31 @@ class AlgorithmsSpec extends SparkSpec {
     val cc = distributed(released(
       Algorithms.connectedComponents((0L to 6L).toDF("id"), chain), checkpoints = true))
     assert(cc.map(_.getLong(1)) == Set(0L))
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    distributed(intercept[Algorithms.BudgetExhausted](
-      Algorithms.connectedComponents((0L to 6L).toDF("id"), chain, maxIter = 1)))
-    val leaked = leakedSince(before, checkpoints = true)
-    assert(leaked.isEmpty, s"components scratch not released on BudgetExhausted: RDDs $leaked")
+    // the BudgetExhausted exit releases too: a distributed loop's edge
+    // caches and un-checkpointed tips, and the gate's edge cache when the
+    // local run throws
+    val from0 = Seq(0L).toDF("id")
+    def exhausted(name: String)(run: => DataFrame): Option[String] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      intercept[Algorithms.BudgetExhausted](run.count())
+      Some(leakedSince(before, checkpoints = true)).filter(_.nonEmpty).map(l => s"$name: RDDs $l")
+    }
+    val leaks = distributed(Seq(
+      exhausted("components")(
+        Algorithms.connectedComponents((0L to 6L).toDF("id"), chain, maxIter = 1)),
+      exhausted("bfs")(Algorithms.bfs(chain, from0, maxIter = 1)),
+      exhausted("bfsPerSource")(Algorithms.bfsPerSource(chain, from0, maxIter = 1)),
+      exhausted("shortestPathCounts")(Algorithms.shortestPathCounts(chain, from0, maxIter = 1)),
+      exhausted("sssp")(Algorithms.sssp(chain.withColumn("w", lit(1.0)), from0, maxIter = 1)),
+      exhausted("betweennessLandmark")(
+        Algorithms.betweennessLandmark((0L to 6L).toDF("id"), chain, k = 7, maxIter = 1)),
+      exhausted("kCore")(Algorithms.kCore(chain, k = 2, maxIter = 1)),
+      exhausted("kTruss")(Algorithms.kTruss(chain, k = 3, maxIter = 1)))) :+
+      // its own chain: a cache of the same plan left by a leaking case
+      // above would be reused here and hide this case's leak
+      exhausted("local bfs")(Algorithms.bfs(
+        (10L until 16L).map(i => (i, i + 1)).toDF("src", "dst"), Seq(10L).toDF("id"), maxIter = 1))
+    assert(leaks.flatten.isEmpty, s"scratch not released on BudgetExhausted: ${leaks.flatten}")
   }
 
   test("local per-source BFS: a row cap tripped with the frontier live at maxIter throws") {
@@ -612,14 +646,6 @@ class AlgorithmsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap)
     assert(slL == slD, "mis with self-loops")
     assert(slD(0L) && slD(3L) && (slD(1L) != slD(2L)), s"mis with self-loops: $slD")
-    // budget parity: the local loops throw at the same round counts
-    val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
-    intercept[Algorithms.BudgetExhausted] {
-      Algorithms.shortestPathCounts(chain, Seq(0L).toDF("id"), maxIter = 5).count()
-    }
-    intercept[Algorithms.BudgetExhausted] {
-      Algorithms.bfsPerSource(chain, Seq(0L).toDF("id"), maxIter = 5).count()
-    }
   }
 
   test("cc/scc: distributed paths (gate forced off) equal the local gates") {
