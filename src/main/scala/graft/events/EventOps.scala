@@ -3,6 +3,7 @@ package graft.events
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Md5Draw
 
 /**
  * Temporal operators over event streams (batch forms; streaming variants in
@@ -532,9 +533,8 @@ object EventOps {
     val exploded = df.filter(value.isNotNull)
       .select(groupCols.map(col) :+ col(idCol) :+ value.as("__v"): _*)
       .withColumn("rep", explode(sequence(lit(0), lit(replicates - 1))))
-    val u = conv(substring(md5(
-        concat(col(idCol).cast("string"), lit(":"), col("rep").cast("string"))),
-        1, 8), 16, 10).cast("long") / lit(4294967296.0)
+    val u = Md5Draw.uniform(Md5Draw.ofString(
+      concat(col(idCol).cast("string"), lit(":"), col("rep").cast("string"))), 8)
     // inverse CDF: first k with u < P(X ≤ k); cap at 5
     val w = poissonCdf1.zipWithIndex.foldRight(lit(5): Column) {
       case ((cdf, k), els) => when(col("__u") < lit(cdf), lit(k)).otherwise(els)

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Md5Draw
 
 /**
  * Embedding similarity operators: exact cosine, brute-force top-k, near-dup
@@ -196,12 +197,17 @@ object Similarity {
     * both engines agree on md5 hex of the decimal id string. Cell ids are the
     * rank in that order (row_number over ≤ numCells rows — a driver-size
     * window, not a data-size one). */
-  def ivfCentroids(corpus: DataFrame, numCells: Int): DataFrame = {
-    val h = md5(col("vec_id").cast("string").cast("binary"))
-    corpus.select(col("vec_id"), col("embedding"), h.as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(numCells)
-      .select((row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1)
-        .cast("long").as("cell"), col("embedding").as("c_emb"))
+  def ivfCentroids(corpus: DataFrame, numCells: Int): DataFrame =
+    md5First(corpus.select(col("vec_id"), col("embedding")), numCells)
+      .select(col("cell"), col("embedding").as("c_emb"))
+
+  /** The first `n` rows of `df` in md5-of-vec_id order (ids break ties),
+    * with their rank in that order as `cell`. */
+  private def md5First(df: DataFrame, n: Int): DataFrame = {
+    val order = Window.orderBy(col("h"), col("vec_id"))
+    df.withColumn("h", Md5Draw.of(col("vec_id")))
+      .orderBy(col("h"), col("vec_id")).limit(n)
+      .withColumn("cell", (row_number().over(order) - 1).cast("long"))
   }
 
   def ivfAssign(corpus: DataFrame, numCells: Int): DataFrame =
@@ -998,12 +1004,8 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val d = dim / m
     val sv = subVectors(corpus, m, d)
-    val h = md5(col("vec_id").cast("string").cast("binary"))
-    var cent = corpus.select(col("vec_id"), h.as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(ksub)
-      .select(col("vec_id"),
-        (row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1)
-          .cast("long").as("cell"))
+    var cent = md5First(corpus.select(col("vec_id")), ksub)
+      .select(col("vec_id"), col("cell"))
       .join(sv, Seq("vec_id"))
       .select(col("sub"), col("cell"), col("v").as("c_sub"))
     for (_ <- 0 until iters) {

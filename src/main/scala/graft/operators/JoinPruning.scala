@@ -30,10 +30,10 @@ object JoinPruning {
   def bloomPruneRows(probe: DataFrame, key: Column, bits: DataFrame,
                      k: Int, mBits: Int): DataFrame = {
     require(k >= 1 && mBits >= 2, s"Bloom needs k >= 1, mBits >= 2, got k=$k mBits=$mBits")
-    (0 until k).foldLeft(probe) { (df, j) =>
-      df.join(broadcast(bits.select(col("pos").as(s"__bp_$j"))),
-        graft.sketch.Sketches.saltedH32(j, key) % mBits === col(s"__bp_$j"),
-        "left_semi")
+    graft.sketch.Sketches.saltedPositions(key, k, mBits).zipWithIndex.foldLeft(probe) {
+      case (df, (pos, j)) =>
+        df.join(broadcast(bits.select(col("pos").as(s"__bp_$j"))), pos === col(s"__bp_$j"),
+          "left_semi")
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.util.Md5Draw
 
 /**
  * Deterministic cardinality sketches for corpus-scale statistics — the
@@ -13,13 +14,39 @@ import org.apache.spark.sql.functions._
  * (md5 is the random oracle), so unlike HLL the estimate is
  * engine-reproducible and the external DuckDB oracle computes the exact
  * same number (beyond the reference, which has no sketch surface).
+ *
+ * Hash contract: every sketch hashes a value through [[graft.util.Md5Draw]]
+ * (md5 hex of its string form; CMS and Bloom salt row j as md5 of
+ * "j:value"), so sketches built anywhere interoperate and replay exactly.
+ *
+ * NULL contract: NULL values, keys and ids are ignored (COUNT(DISTINCT) /
+ * membership semantics) — md5(NULL) is NULL and would otherwise land a
+ * phantom register, bucket, bit or sample row. Bottom-k samples also drop
+ * rows whose value casts to a NULL double (a non-numeric string with ANSI
+ * off; an ANSI cast raises instead).
  */
 object Sketches {
 
   /** 16^15 = 2^60 — the hash-prefix value space (first 15 hex chars of the
-    * md5; 15 keeps the parse inside a signed 64-bit int). Exact as a
-    * Double (power of two). */
-  val HashSpace: Double = 1152921504606846976.0
+    * md5; 15 keeps the parse inside a signed 64-bit int). */
+  val HashSpace: Double = Md5Draw.space(15)
+
+  /** Insert `x` into `b`, a set sorted ascending by `key` and bounded at
+    * the k smallest keys: a key already present leaves `b` as it is (a set,
+    * not a bag), and a key above a full set's k-th is dropped. The one
+    * bottom-k state of [[KmvAggregator]] and [[BottomKAggregator]]. */
+  private def boundedInsert[T](b: Vector[T], x: T, k: Int)(key: T => String): Vector[T] = {
+    val h = key(x)
+    var lo = 0; var hi = b.size
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (key(b(mid)) < h) lo = mid + 1 else hi = mid
+    }
+    if (lo < b.size && key(b(lo)) == h) b
+    else if (b.size < k) b.patch(lo, Seq(x), 0)
+    else if (lo >= k) b
+    else b.patch(lo, Seq(x), 0).take(k)
+  }
 
   /**
    * K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002): keep
@@ -44,22 +71,8 @@ object Sketches {
     /** (#hashes in sketch, k-th smallest hash or "" when under-full). */
     def finish(b: Vector[String]): (Long, String) =
       (b.size.toLong, if (b.size < k) "" else b.last)
-    private def insert(b: Vector[String], h: String): Vector[String] = {
-      if (h == null) return b
-      val i = searchInsert(b, h)
-      if (i < b.size && b(i) == h) b // duplicate value: a set, not a bag
-      else if (b.size < k) b.patch(i, Seq(h), 0)
-      else if (i >= k) b // larger than the current k-th minimum
-      else b.patch(i, Seq(h), 0).take(k)
-    }
-    private def searchInsert(b: Vector[String], h: String): Int = {
-      var lo = 0; var hi = b.size
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (b(mid) < h) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
+    private def insert(b: Vector[String], h: String): Vector[String] =
+      if (h == null) b else boundedInsert(b, h, k)(identity)
     def bufferEncoder: Encoder[Vector[String]] = ExpressionEncoder()
     def outputEncoder: Encoder[(Long, String)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
@@ -75,20 +88,21 @@ object Sketches {
    */
   def kmvDistinct(df: DataFrame, groupCol: String, value: Column, k: Int): DataFrame = {
     val sketch = udaf(new KmvAggregator(k), Encoders.STRING)
-    // NULL contract (all sketches): NULLs are ignored, COUNT(DISTINCT) /
-    // membership semantics — md5(NULL) is NULL and would otherwise pollute
-    // the sketch state (a phantom register/bucket/bit)
     df.filter(value.isNotNull)
-      .select(col(groupCol), md5(value.cast("string").cast("binary")).as("__h"))
+      .select(col(groupCol), Md5Draw.of(value).as("__h"))
       .groupBy(groupCol)
       .agg(sketch(col("__h")).as("__sk"))
       .select(col(groupCol),
-        round(
-          when(col("__sk._1") < k, col("__sk._1").cast("double"))
-            .otherwise(lit((k - 1).toDouble) * lit(HashSpace) /
-              conv(substring(col("__sk._2"), 1, 15), 16, 10).cast("long").cast("double")),
-          6).as("est"))
+        round(kmvEstimate(col("__sk._1"), Md5Draw.prefix(col("__sk._2"), 1, 15), k), 6)
+          .as("est"))
   }
+
+  /** The KMV estimate from `n` hashes kept and the k-th smallest hash's
+    * 60-bit prefix `kth` (a long): exactly n when under-full, else
+    * (k−1)·2^60 / h_(k). */
+  private def kmvEstimate(n: Column, kth: Column, k: Int): Column =
+    when(n < k, n.cast("double"))
+      .otherwise(lit((k - 1).toDouble) * lit(HashSpace) / kth.cast("double"))
 
   /**
    * KMV set-operation estimates over two value sets (the theta-sketch
@@ -109,7 +123,7 @@ object Sketches {
     require(k >= 2, s"KMV needs k >= 2, got $k")
     def sample(df: DataFrame, v: Column): DataFrame =
       df.filter(v.isNotNull)
-        .select(md5(v.cast("string").cast("binary")).as("h"))
+        .select(Md5Draw.of(v).as("h"))
         .distinct().orderBy("h").limit(k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ha = sample(a, aVal)
@@ -117,10 +131,9 @@ object Sketches {
     val hu = ha.unionByName(hb).distinct().orderBy("h").limit(k)
     val common = hu.join(ha, Seq("h"), "left_semi").join(hb, Seq("h"), "left_semi")
     val stats = hu.agg(count(lit(1)).as("n_sample"),
-        max(conv(substring(col("h"), 1, 15), 16, 10).cast("long")).as("__kth"))
+        max(Md5Draw.prefix(col("h"), 1, 15)).as("__kth"))
       .crossJoin(broadcast(common.agg(count(lit(1)).as("n_common"))))
-    val estU = when(col("n_sample") < k, col("n_sample").cast("double"))
-      .otherwise(lit((k - 1).toDouble) * lit(HashSpace) / col("__kth").cast("double"))
+    val estU = kmvEstimate(col("n_sample"), col("__kth"), k)
     val out = stats.select(col("n_sample"), col("n_common"),
       round(estU, 6).as("est_union"),
       round(when(col("n_sample") < k, col("n_common").cast("double"))
@@ -130,54 +143,88 @@ object Sketches {
   }
 
   // ── HyperLogLog (registers-as-DataFrame) ──────────────────────────────
+  //
+  // One frame, two widths. The register index is the first 8 md5 hex chars
+  // % 2^p; the rank comes from the next frame/4 hex chars — 32 bits (ranks
+  // to 33) for per-group distincts, 48 bits (ranks to 49, the wide variant)
+  // once a global count nears 2^32 and the 32-bit frame would saturate.
+  // Independent hex ranges instead of one split hash keep every
+  // intermediate inside a signed long on both engines. Wide and 32-bit
+  // tables share the register addressing but never merge.
 
-  /** First 8 md5 hex chars as a 32-bit value (register index source) and
-    * the next 8 as the rank frame. Two independent 32-bit halves instead of
-    * one split hash keep every intermediate inside a signed long on both
-    * engines; the 32-bit rank frame caps usable cardinality well below
-    * 2^32 — the documented contract (plenty for per-group distincts; the
-    * global-corpus count at 100 TB belongs to [[kmvDistinct]] with large k
-    * or a wider-frame variant). */
-  private def h32(value: Column, off: Int): Column =
-    conv(substring(md5(value.cast("string").cast("binary")), off, 8), 16, 10).cast("long")
+  /** Rank of a `frame`-bit hash: leading zeros in the frame + 1, i.e.
+    * frame + 1 − bitlength. `bin` renders minimal-width on both Spark and
+    * DuckDB, so `length(bin(h))` IS the bitlength; h = 0 ranks frame + 1. */
+  private def rank(h: Column, frame: Int): Column =
+    when(h === 0L, lit(frame + 1L)).otherwise(lit(frame + 1L) - length(bin(h)).cast("long"))
 
-  /** Rank of a 32-bit hash: leading zeros in the 32-bit frame + 1, i.e.
-    * 33 − bitlength. `bin` renders minimal-width on both Spark and DuckDB,
-    * so `length(bin(h))` IS the bitlength; h = 0 (all 32 bits zero) ranks
-    * 33. */
-  private def rho32(h: Column): Column =
-    when(h === 0L, lit(33L)).otherwise(lit(33L) - length(bin(h)).cast("long"))
-
-  /** The (register index, rank) column pair of one value — the per-row HLL
-    * projection, exposed so other register-table maintainers (e.g. the
-    * streaming windowed variant) share the exact hash/rank contract. */
-  private[graft] def hllRegisterCols(value: Column, p: Int): (Column, Column) = {
-    require(p >= 4 && p <= 16, s"HLL precision must be in [4,16], got $p")
-    ((h32(value, 1) % (1L << p), rho32(h32(value, 9))))
+  /** The register table of `value` in a `frame`-bit rank frame. */
+  private def registers(df: DataFrame, groupCols: Seq[String], value: Column, p: Int,
+                        frame: Int): DataFrame = {
+    val h = Md5Draw.of(value)
+    df.filter(value.isNotNull)
+      .select(groupCols.map(col) :+ (Md5Draw.prefix(h, 1, 8) % (1L << p)).as("idx")
+        :+ rank(Md5Draw.prefix(h, 9, frame / 4), frame).as("r"): _*)
+      .groupBy((groupCols :+ "idx").map(col): _*)
+      .agg(max(col("r")).as("r"))
   }
+
+  /**
+   * Estimate from a `frame`-bit register table: E = α·m²/S with
+   * S = Σ 2^−M[j] over all m registers (absent rows contribute 2^0),
+   * linear counting below 2.5·m when any register is empty. S is summed
+   * SCALED by 2^(frame+1): every term 2^(frame+1−r) is an integer, absent
+   * registers contribute 2^(frame+1), and the total stays within a long
+   * (≤ 2^49 for the 32-bit frame at p ≤ 16, ≤ 2^62 for the wide one at
+   * p ≤ 13) — pure long arithmetic both engines replay bit-for-bit, then
+   * one IEEE-rounded double conversion. For the 32-bit frame that
+   * conversion is exact and S equals the plain double Σ 2^−r, itself exact
+   * (dyadic terms ≥ 2^−33, total ≤ 2^16). Ranks must lie in the frame
+   * (≤ frame + 1). Rounded to 4 decimals (the ln/÷ steps may differ by an
+   * ulp across libm implementations).
+   */
+  private def estimate(regs: DataFrame, groupCols: Seq[String], p: Int,
+                       frame: Int): DataFrame = {
+    val m = (1L << p).toDouble
+    val alpha = p match {
+      case 4 => 0.673
+      case 5 => 0.697
+      case 6 => 0.709
+      case _ => 0.7213 / (1.0 + 1.079 / m)
+    }
+    val scale = 1L << (frame + 1)
+    val agged = regs.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("__nz"),
+        // pow is exact for integer powers of two within range; the long
+        // cast is exact; the long sum is exact
+        sum(pow(lit(2.0), lit((frame + 1).toDouble) - col("r").cast("double")).cast("long"))
+          .as("__hsl"))
+    val s = (col("__hsl") + (lit(1L << p) - col("__nz")) * lit(scale)).cast("double") /
+      lit(scale.toDouble)
+    val raw = lit(alpha * m * m) / s
+    val zeros = lit(m) - col("__nz")
+    val est = when(raw <= lit(2.5 * m) && zeros > 0,
+      lit(m) * log(lit(m) / zeros)).otherwise(raw)
+    agged.select(groupCols.map(col) :+ round(est, 4).as("est"): _*)
+  }
+
+  private def requirePrecision(p: Int, max: Int, what: String): Unit =
+    require(p >= 4 && p <= max, s"${what}HLL precision must be in [4,$max], got $p")
 
   /**
    * HyperLogLog registers (Flajolet et al. 2007) as a DataFrame — the
    * sketch IS a ≤ m-row (groupCols…, idx, r) table: idx = hash % m over m =
-   * 2^p registers, r = max rank. This shape is the 100 TB story: one
-   * narrow projection + one partially-aggregating groupBy (map-side max),
-   * and the result is storable, incremental (union new data's registers)
-   * and mergeable across corpora ([[hllMerge]]) without touching raw data
-   * again. Deterministic (md5), so the external oracle reproduces it
-   * bit-for-bit — unlike Spark's own approx_count_distinct, whose xxhash64
-   * HLL no second engine can replay.
+   * 2^p registers, r = max rank in the 32-bit frame. This shape is the
+   * 100 TB story: one narrow projection + one partially-aggregating groupBy
+   * (map-side max), and the result is storable, incremental (union new
+   * data's registers) and mergeable across corpora ([[hllMerge]]) without
+   * touching raw data again. Deterministic (md5), so the external oracle
+   * reproduces it bit-for-bit — unlike Spark's own approx_count_distinct,
+   * whose xxhash64 HLL no second engine can replay.
    */
   def hllRegisters(df: DataFrame, groupCols: Seq[String], value: Column, p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, s"HLL precision must be in [4,16], got $p")
-    val m = 1L << p
-    // NULLs are ignored (COUNT DISTINCT semantics) — md5(NULL) is NULL and
-    // would otherwise land a phantom null-idx register row, inflating the
-    // nonzero count and shifting the linear-counting branch
-    val (idx, r) = hllRegisterCols(value, p)
-    df.filter(value.isNotNull)
-      .select(groupCols.map(col) :+ idx.as("idx") :+ r.as("r"): _*)
-      .groupBy((groupCols :+ "idx").map(col): _*)
-      .agg(max(col("r")).as("r"))
+    requirePrecision(p, 16, "")
+    registers(df, groupCols, value, p, 32)
   }
 
   /** Merge two register tables of the same precision: union + max. The
@@ -188,35 +235,11 @@ object Sketches {
       .groupBy((groupCols :+ "idx").map(col): _*)
       .agg(max(col("r")).as("r"))
 
-  /**
-   * Estimate from a register table: E = α·m²/S with S = Σ 2^−M[j] over all
-   * m registers (absent rows contribute 2^0), linear counting below 2.5·m
-   * when any register is empty. Every harmonic term is a power of two
-   * ≥ 2^−33 and there are ≤ 2^16 of them, so S is EXACT in a double no
-   * matter the aggregation order — the estimate is reproducible, not just
-   * approximately stable. Rounded to 4 decimals (the ln/÷ steps may differ
-   * by an ulp across libm implementations).
-   *
-   * @return (groupCols…, est DOUBLE)
-   */
-  def hllEstimate(regs: DataFrame, groupCols: Seq[String], p: Int): DataFrame = {
-    val m = (1L << p).toDouble
-    val alpha = p match {
-      case 4 => 0.673
-      case 5 => 0.697
-      case 6 => 0.709
-      case _ => 0.7213 / (1.0 + 1.079 / m)
-    }
-    val agged = regs.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__nz"),
-        sum(pow(lit(2.0), -col("r"))).as("__hs"))
-    val s = (lit(m) - col("__nz")) + col("__hs")
-    val raw = lit(alpha * m * m) / s
-    val zeros = lit(m) - col("__nz")
-    val est = when(raw <= lit(2.5 * m) && zeros > 0,
-      lit(m) * log(lit(m) / zeros)).otherwise(raw)
-    agged.select(groupCols.map(col) :+ round(est, 4).as("est"): _*)
-  }
+  /** Estimate from a 32-bit-frame register table.
+    *
+    * @return (groupCols…, est DOUBLE) rounded to 4 decimals */
+  def hllEstimate(regs: DataFrame, groupCols: Seq[String], p: Int): DataFrame =
+    estimate(regs, groupCols, p, 32)
 
   /** Per-group approximate distinct count of `value` — registers +
     * estimate in one call. */
@@ -256,73 +279,20 @@ object Sketches {
     hllEstimate(merged, Seq("w_start"), p)
   }
 
-  // ── Wide-frame HyperLogLog (48-bit rank frame) ────────────────────────
-  //
-  // The 32-bit rank frame above caps register ranks at 33 — fine for
-  // per-group distincts, but a GLOBAL corpus count approaching 2^32 pushes
-  // ranks against the frame and the estimate saturates low. The wide
-  // variant draws the rank from the NEXT 12 md5 hex chars (48 independent
-  // bits, ranks to 49), lifting the comfortable range to ~2^48 while
-  // keeping every intermediate in a signed long.
-
-  /** md5 hex chars [off, off+12) as a 48-bit long (rank-frame source). */
-  private def h48(value: Column, off: Int): Column =
-    conv(substring(md5(value.cast("string").cast("binary")), off, 12), 16, 10).cast("long")
-
-  /** Rank in the 48-bit frame: 49 − bitlength; the all-zero frame ranks 49. */
-  private def rho48(h: Column): Column =
-    when(h === 0L, lit(49L)).otherwise(lit(49L) - length(bin(h)).cast("long"))
-
   /** [[hllRegisters]] with the 48-bit rank frame. Same register-table shape
     * and merge algebra ([[hllMerge]] applies unchanged); p capped at 13 so
     * the estimator's scaled-integer harmonic sum stays inside a long. */
   def hllRegistersWide(df: DataFrame, groupCols: Seq[String], value: Column, p: Int): DataFrame = {
-    require(p >= 4 && p <= 13, s"wide-frame HLL precision must be in [4,13], got $p")
-    val m = 1L << p
-    // idx must stay bit-identical to hllRegisterCols (same h32 % m); only
-    // the RANK is wide (48-bit) — wide and 32-bit tables never merge, but
-    // the register addressing contract is one
-    df.filter(value.isNotNull)
-      .select(groupCols.map(col) :+ (h32(value, 1) % m).as("idx")
-        :+ rho48(h48(value, 9)).as("r"): _*)
-      .groupBy((groupCols :+ "idx").map(col): _*)
-      .agg(max(col("r")).as("r"))
+    requirePrecision(p, 13, "wide-frame ")
+    registers(df, groupCols, value, p, 48)
   }
 
-  /** [[hllEstimate]] for wide-frame registers. Exactness here needs more
-    * care than the 32-bit variant (whose ≤ 2^16 power-of-two terms span
-    * ≤ 49 binary orders — always exact in a double): ranks reach 49, so the
-    * harmonic sum is computed SCALED by 2^49 — every term 2^(49−r) is an
-    * integer ≤ 2^48, absent registers contribute 2^49, and the total stays
-    * under 2^62 for p ≤ 13 — pure long arithmetic both engines replay
-    * bit-for-bit; the single double conversion at the end is IEEE-rounded
-    * identically everywhere.
+  /** [[hllEstimate]] for wide-frame registers.
     *
-    * @return (groupCols…, est DOUBLE) rounded to 4 decimals
-    */
+    * @return (groupCols…, est DOUBLE) rounded to 4 decimals */
   def hllEstimateWide(regs: DataFrame, groupCols: Seq[String], p: Int): DataFrame = {
-    require(p >= 4 && p <= 13, s"wide-frame HLL precision must be in [4,13], got $p")
-    val mL = 1L << p
-    val m = mL.toDouble
-    val alpha = p match {
-      case 4 => 0.673
-      case 5 => 0.697
-      case 6 => 0.709
-      case _ => 0.7213 / (1.0 + 1.079 / m)
-    }
-    val scaleL = 1L << 49
-    val agged = regs.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__nz"),
-        // pow is exact for integer powers of two within range; the long
-        // cast is exact; the long sum is exact
-        sum(pow(lit(2.0), lit(49.0) - col("r").cast("double")).cast("long")).as("__hsl"))
-    val sScaled = (col("__hsl") + (lit(mL) - col("__nz")) * lit(scaleL)).cast("double")
-    val s = sScaled / lit(scaleL.toDouble)
-    val raw = lit(alpha * m * m) / s
-    val zeros = lit(m) - col("__nz")
-    val est = when(raw <= lit(2.5 * m) && zeros > 0,
-      lit(m) * log(lit(m) / zeros)).otherwise(raw)
-    agged.select(groupCols.map(col) :+ round(est, 4).as("est"): _*)
+    requirePrecision(p, 13, "wide-frame ")
+    estimate(regs, groupCols, p, 48)
   }
 
   /** Per-group wide-frame distinct estimate — registers + estimate in one
@@ -332,18 +302,26 @@ object Sketches {
 
   // ── Count-Min sketch (count table as a DataFrame) ─────────────────────
 
-  /** Salted 32-bit row hash for CMS/Bloom: md5 of "j:value". Shared with
-    * every other maintainer of the same bit/bucket contract (windowed CMS,
-    * bloom join pruning) so sketches built anywhere interoperate. */
-  private[graft] def saltedH32(j: Int, value: Column): Column =
-    conv(substring(md5(concat(lit(j.toString), lit(":"),
-      value.cast("string")).cast("binary")), 1, 8), 16, 10).cast("long")
+  /** The n salted positions of `value` in [0, width): for j = 0 until n,
+    * the first 8 md5 hex chars of "j:value" % width. A CMS's d row buckets
+    * and a Bloom filter's k bit positions alike, for every maintainer of
+    * either table (windowed sketches, bloom join pruning). */
+  private[graft] def saltedPositions(value: Column, n: Int, width: Int): Seq[Column] =
+    (0 until n).map(j => Md5Draw.prefix(
+      Md5Draw.ofString(concat(lit(j.toString), lit(":"), value.cast("string"))), 1, 8) % width)
 
-  /** Row j's bucket for `value` in a w-bucket CMS — exposed so other CMS
-    * table maintainers (the streaming windowed variant) share the exact
-    * salted-hash contract. */
-  private[graft] def cmsBucket(j: Int, value: Column, w: Int): Column =
-    saltedH32(j, value) % w
+  /** The (groupCols…, j, bucket, c) count table of [[cmsTable]] per group:
+    * the window column of the streaming windowed CMS is one such group. */
+  private[graft] def cmsCounts(df: DataFrame, groupCols: Seq[String], key: Column,
+                               weight: Column, d: Int, w: Int): DataFrame = {
+    require(d >= 1 && w >= 2, s"CMS needs d >= 1, w >= 2, got d=$d w=$w")
+    df.filter(key.isNotNull)
+      .select(groupCols.map(col) :+ weight.as("__w")
+        :+ posexplode(array(saltedPositions(key, d, w): _*)): _*)
+      .withColumnsRenamed(Map("pos" -> "j", "col" -> "bucket"))
+      .groupBy((groupCols ++ Seq("j", "bucket")).map(col): _*)
+      .agg(sum(col("__w")).as("c"))
+  }
 
   /**
    * Count-Min sketch (Cormode & Muthukrishnan 2005) as a ≤ d·w-row
@@ -354,15 +332,8 @@ object Sketches {
    * shuffle every key. Mergeable: union + sum ([[cmsMerge]]). Estimates
    * overcount only (min over d rows), never undercount.
    */
-  def cmsTable(df: DataFrame, key: Column, weight: Column, d: Int, w: Int): DataFrame = {
-    require(d >= 1 && w >= 2, s"CMS needs d >= 1, w >= 2, got d=$d w=$w")
-    // NULL keys are ignored (the shared sketch NULL contract, see kmvDistinct)
-    df.filter(key.isNotNull)
-      .select(weight.as("__w"),
-        posexplode(array((0 until d).map(j => cmsBucket(j, key, w)): _*)))
-      .withColumnsRenamed(Map("pos" -> "j", "col" -> "bucket"))
-      .groupBy("j", "bucket").agg(sum(col("__w")).as("c"))
-  }
+  def cmsTable(df: DataFrame, key: Column, weight: Column, d: Int, w: Int): DataFrame =
+    cmsCounts(df, Nil, key, weight, d, w)
 
   /** Merge two CMS tables built with the same (d, w): union + sum. */
   def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
@@ -403,7 +374,7 @@ object Sketches {
   def cmsLookup(cms: DataFrame, keys: DataFrame, keyName: String, d: Int, w: Int): DataFrame = {
     val probes = keys.select(col(keyName)).filter(col(keyName).isNotNull).distinct()
       .select(col(keyName),
-        posexplode(array((0 until d).map(j => cmsBucket(j, col(keyName), w)): _*)))
+        posexplode(array(saltedPositions(col(keyName), d, w): _*)))
       .withColumnsRenamed(Map("pos" -> "j", "col" -> "bucket"))
     probes.join(broadcast(cms), Seq("j", "bucket"), "left")
       .groupBy(keyName)
@@ -433,9 +404,8 @@ object Sketches {
    */
   def bloomBits(df: DataFrame, value: Column, k: Int, mBits: Int): DataFrame = {
     require(k >= 1 && mBits >= 2, s"Bloom needs k >= 1, mBits >= 2, got k=$k mBits=$mBits")
-    // NULL values are ignored (the shared sketch NULL contract)
     df.filter(value.isNotNull)
-      .select(explode(array((0 until k).map(j => saltedH32(j, value) % mBits): _*)).as("pos"))
+      .select(explode(array(saltedPositions(value, k, mBits): _*)).as("pos"))
       .distinct()
   }
 
@@ -449,12 +419,8 @@ object Sketches {
    */
   def bloomMightContain(bits: DataFrame, probe: DataFrame, keyName: String,
                         k: Int, mBits: Int): DataFrame = {
-    // NULL probe keys are ignored (the shared sketch NULL contract) — all
-    // k salted positions of NULL are NULL, which would emit a spurious
-    // (NULL, might = false) row
     probe.select(col(keyName)).filter(col(keyName).isNotNull).distinct()
-      .select(col(keyName),
-        explode(array((0 until k).map(j => saltedH32(j, col(keyName)) % mBits): _*)).as("pos"))
+      .select(col(keyName), explode(array(saltedPositions(col(keyName), k, mBits): _*)).as("pos"))
       .join(broadcast(bits.withColumn("__hit", lit(1))), Seq("pos"), "left")
       .groupBy(keyName)
       .agg((count(col("__hit")) === k).as("might"))
@@ -485,55 +451,42 @@ object Sketches {
               b: Vector[(String, Double)]): Vector[(String, Double)] = b.foldLeft(a)(insert)
     def finish(b: Vector[(String, Double)]): Vector[(String, Double)] = b
     private def insert(b: Vector[(String, Double)],
-                       r: (String, Double)): Vector[(String, Double)] = {
-      if (r == null || r._1 == null) return b
-      var lo = 0; var hi = b.size
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (b(mid)._1 < r._1) lo = mid + 1 else hi = mid
-      }
-      if (lo < b.size && b(lo)._1 == r._1) b
-      else if (b.size < k) b.patch(lo, Seq(r), 0)
-      else if (lo >= k) b
-      else b.patch(lo, Seq(r), 0).take(k)
-    }
+                       r: (String, Double)): Vector[(String, Double)] =
+      if (r == null || r._1 == null) b else boundedInsert(b, r, k)(_._1)
     def bufferEncoder: Encoder[Vector[(String, Double)]] = ExpressionEncoder()
     def outputEncoder: Encoder[Vector[(String, Double)]] = ExpressionEncoder()
+  }
+
+  /** The k smallest-`h` (h, v) rows per group of `df`. */
+  private def bottomK(df: DataFrame, groupCols: Seq[String], h: Column, v: Column,
+                      k: Int): DataFrame = {
+    val agg = udaf(new BottomKAggregator(k),
+      Encoders.tuple(Encoders.STRING, Encoders.scalaDouble))
+    df.groupBy(groupCols.map(col): _*)
+      .agg(agg(h, v).as("__s"))
+      .select(groupCols.map(col) :+ explode(col("__s")).as("e"): _*)
+      .select(groupCols.map(col) :+ col("e._1").as("h") :+ col("e._2").as("v"): _*)
   }
 
   /**
    * Per-group deterministic uniform row sample: the k rows with the
    * smallest md5(id). One partially-aggregating groupBy — O(k) state per
-   * group at any scale. NULL ids/values are ignored (the sketch family's
-   * NULL contract); `id` must be row-unique or colliding rows collapse.
+   * group at any scale. `id` must be row-unique or colliding rows collapse.
    *
    * @return (groupCols…, h, v) — ≤ k rows per group, h the sampling hash
    */
   def bottomKSample(df: DataFrame, groupCols: Seq[String], id: Column,
-                    value: Column, k: Int): DataFrame = {
-    val agg = udaf(new BottomKAggregator(k),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaDouble))
-    df.filter(id.isNotNull && value.cast("double").isNotNull)
-      .select(groupCols.map(col) :+ md5(id.cast("string").cast("binary")).as("__h")
-        :+ value.cast("double").as("__v"): _*)
-      .groupBy(groupCols.map(col): _*)
-      .agg(agg(col("__h"), col("__v")).as("__s"))
-      .select(groupCols.map(col) :+ explode(col("__s")).as("e"): _*)
-      .select(groupCols.map(col) :+ col("e._1").as("h") :+ col("e._2").as("v"): _*)
-  }
+                    value: Column, k: Int): DataFrame =
+    bottomK(df.filter(id.isNotNull && value.cast("double").isNotNull)
+        .select(groupCols.map(col) :+ Md5Draw.of(id).as("__h")
+          :+ value.cast("double").as("__v"): _*),
+      groupCols, col("__h"), col("__v"), k)
 
   /** Merge two bottom-k samples of the same k: union, keep the k smallest
     * hashes per group again — the shared hash coordinates the samples, so
     * the merge IS a bottom-k sample of the union. */
-  def sampleMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String], k: Int): DataFrame = {
-    val agg = udaf(new BottomKAggregator(k),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaDouble))
-    a.unionByName(b)
-      .groupBy(groupCols.map(col): _*)
-      .agg(agg(col("h"), col("v")).as("__s"))
-      .select(groupCols.map(col) :+ explode(col("__s")).as("e"): _*)
-      .select(groupCols.map(col) :+ col("e._1").as("h") :+ col("e._2").as("v"): _*)
-  }
+  def sampleMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String], k: Int): DataFrame =
+    bottomK(a.unionByName(b), groupCols, col("h"), col("v"), k)
 
   /**
    * Quantile estimates from a bottom-k sample: for each q, the

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.util.Md5Draw
 
 /** Typed event row for the stateful operators (matches the driver's
   * `events` parquet schema, TESTDATA.md). */
@@ -157,14 +158,13 @@ object StreamOps {
    * table IS the durable sketch: sink it per window and merge/estimate at
    * read time ([[graft.sketch.Sketches.hllMerge]]/[[graft.sketch.Sketches.hllEstimate]])
    * — at 100 TB the stream never holds raw values. Identical on batch
-   * input (the oracle path). NULL values are ignored (the sketch family's
-   * shared NULL contract).
+   * input (the oracle path). The sketch is [[graft.sketch.Sketches
+   * .hllRegisters]] with the window as one more group column.
    */
   def windowedHllRegisters(events: DataFrame, groupCols: Seq[String], value: Column,
                            p: Int, windowDur: String = "1 day",
                            wm: String = "1 hour",
                            slide: Option[String] = None): DataFrame = {
-    val (idx, rank) = graft.sketch.Sketches.hllRegisterCols(value, p)
     slide.foreach(requireEpochGrid(windowDur, _)) // same grid contract
     // a slide replicates each event into its windowDur/slide overlapping
     // windows before the max — state widens by the overlap factor, the
@@ -175,13 +175,19 @@ object StreamOps {
     // tumbling windows keep the raw timestamp (date_trunc oracle semantics)
     val evIn = if (slide.isDefined)
       events.withColumn("ts", tsToOracleSecond(col("ts"))) else events
-    watermarked(evIn, "ts", wm)
-      .filter(value.isNotNull)
-      .groupBy(w.as("w") +: groupCols.map(col) :+ idx.as("idx"): _*)
-      .agg(max(rank).as("r"))
-      .select(col("w.start").as("w_start") +: groupCols.map(col)
-        :+ col("idx") :+ col("r"): _*)
+    windowStart(graft.sketch.Sketches.hllRegisters(
+      windowed(evIn, w, wm), "__win" +: groupCols, value, p))
   }
+
+  /** `events` watermarked on `ts`, with its `window` as the group column
+    * `__win` — how a windowed sketch runs the batch sketch per window. */
+  private def windowed(events: DataFrame, window: Column, wm: String): DataFrame =
+    watermarked(events, "ts", wm).withColumn("__win", window)
+
+  /** A per-window sketch table with `__win` replaced, in place, by its
+    * start `w_start`. */
+  private def windowStart(sketch: DataFrame): DataFrame =
+    sketch.withColumn("__win", col("__win.start")).withColumnRenamed("__win", "w_start")
 
   /** Per-(window, groupCols) distinct estimate from [[windowedHllRegisters]].
     * The estimate is a SECOND aggregation, so on a stream run it at read
@@ -202,22 +208,14 @@ object StreamOps {
    * stream past. The sunk table answers point-frequency/heavy-hitter
    * queries at read time ([[graft.sketch.Sketches.cmsLookup]] on the
    * window's slice; merge windows with [[graft.sketch.Sketches.cmsMerge]]).
-   * Identical on batch input. NULL keys are ignored.
+   * Identical on batch input: [[graft.sketch.Sketches.cmsTable]]'s count
+   * table with the window as a group column.
    */
   def windowedCmsTable(events: DataFrame, key: Column, weight: Column,
                        d: Int, w: Int, windowDur: String = "1 day",
-                       wm: String = "1 hour"): DataFrame = {
-    require(d >= 1 && w >= 2, s"CMS needs d >= 1, w >= 2, got d=$d w=$w")
-    watermarked(events, "ts", wm)
-      .filter(key.isNotNull)
-      .select(window(col("ts"), windowDur).as("win"), weight.as("__w"),
-        posexplode(array((0 until d).map(j =>
-          graft.sketch.Sketches.cmsBucket(j, key, w)): _*)))
-      .withColumnsRenamed(Map("pos" -> "j", "col" -> "bucket"))
-      .groupBy(col("win"), col("j"), col("bucket"))
-      .agg(sum(col("__w")).as("c"))
-      .select(col("win.start").as("w_start"), col("j"), col("bucket"), col("c"))
-  }
+                       wm: String = "1 hour"): DataFrame =
+    windowStart(graft.sketch.Sketches.cmsCounts(
+      windowed(events, window(col("ts"), windowDur), wm), Seq("__win"), key, weight, d, w))
 
   /**
    * Windowed streaming COUNTING Bloom filter: the (window, bit position) →
@@ -227,8 +225,8 @@ object StreamOps {
    * counting Bloom for free (read-side deletions = decrement). Probe a
    * window's slice with [[graft.sketch.Sketches.bloomMightContain]] —
    * false negatives impossible within the window, same hash contract as
-   * the batch filter so sketches built anywhere interoperate. NULL values
-   * are ignored. Identical on batch input (the oracle path).
+   * the batch filter so sketches built anywhere interoperate. Identical on
+   * batch input (the oracle path).
    */
   def windowedBloomBits(events: DataFrame, value: Column, k: Int, mBits: Int,
                         windowDur: String = "1 day", wm: String = "1 hour"): DataFrame = {
@@ -236,8 +234,7 @@ object StreamOps {
     watermarked(events, "ts", wm)
       .filter(value.isNotNull)
       .select(window(col("ts"), windowDur).as("w"),
-        explode(array((0 until k).map(j =>
-          graft.sketch.Sketches.saltedH32(j, value) % mBits): _*)).as("pos"))
+        explode(array(graft.sketch.Sketches.saltedPositions(value, k, mBits): _*)).as("pos"))
       .groupBy(col("w"), col("pos"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("pos"), col("n"))
@@ -284,27 +281,15 @@ object StreamOps {
    * stream past. The sample table IS the durable quantile sketch: sink it
    * per window and read quantiles out with
    * [[graft.sketch.Sketches.sampleQuantiles]] (or merge windows with
-   * [[graft.sketch.Sketches.sampleMerge]]). Identical on batch input.
-   * NULL ids/values are ignored (the sketch family's NULL contract).
+   * [[graft.sketch.Sketches.sampleMerge]]). Identical on batch input:
+   * [[graft.sketch.Sketches.bottomKSample]] with the window as one more
+   * group column.
    */
   def windowedBottomKSample(events: DataFrame, groupCols: Seq[String], id: Column,
                             value: Column, k: Int, windowDur: String = "1 day",
-                            wm: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    val agg = udaf(new graft.sketch.Sketches.BottomKAggregator(k),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaDouble))
-    watermarked(events, "ts", wm)
-      .filter(id.isNotNull && value.isNotNull)
-      .select(window(col("ts"), windowDur).as("w") +: groupCols.map(col)
-        :+ md5(id.cast("string").cast("binary")).as("__h")
-        :+ value.cast("double").as("__v"): _*)
-      .groupBy(col("w") +: groupCols.map(col): _*)
-      .agg(agg(col("__h"), col("__v")).as("__s"))
-      .select(col("w.start").as("w_start") +: groupCols.map(col)
-        :+ explode(col("__s")).as("e"): _*)
-      .select(col("w_start") +: groupCols.map(col)
-        :+ col("e._1").as("h") :+ col("e._2").as("v"): _*)
-  }
+                            wm: String = "1 hour"): DataFrame =
+    windowStart(graft.sketch.Sketches.bottomKSample(
+      windowed(events, window(col("ts"), windowDur), wm), "__win" +: groupCols, id, value, k))
 
   /** Per-(window, groupCols) quantile estimates from
     * [[windowedBottomKSample]]. The quantile read-out is a SECOND
@@ -410,13 +395,13 @@ object StreamOps {
   private def bandBucketCols(grams: Column, numHashes: Int,
                              bandRows: Int): Seq[Column] = {
     val sigs = (0 until numHashes).map(k =>
-      array_min(transform(grams, g => md5(concat_ws(":", lit(k), g).cast("binary")))))
+      array_min(transform(grams, g => Md5Draw.ofString(concat_ws(":", lit(k), g)))))
     (0 until numHashes / bandRows).map { b =>
       // a doc with NO grams (shorter than n words) gets a NULL bucket: a
       // null join key never matches, so gram-less docs neither drop nor
       // block anything (minhash over the empty set is undefined)
-      when(size(grams) > 0, md5(concat_ws("|",
-        (lit(b) +: (0 until bandRows).map(r => sigs(b * bandRows + r))): _*).cast("binary")))
+      when(size(grams) > 0, Md5Draw.ofString(concat_ws("|",
+        (lit(b) +: (0 until bandRows).map(r => sigs(b * bandRows + r))): _*)))
         .as(s"bucket_$b")
     }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.CacheLifecycle.releaseOnFirstAction
+import graft.util.Md5Draw
 
 /**
  * Text-analysis and deduplication operators for large-scale training-data
@@ -198,8 +199,7 @@ object TextOps {
   def corpusStats(df: DataFrame, sourceCol: String, idCol: String, textCol: String,
                   langCol: String): DataFrame =
     df.select(col(sourceCol), col(idCol), col(langCol),
-        length(col(textCol)).cast("long").as("nc"),
-        md5(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")).cast("binary")).as("fp"))
+        length(col(textCol)).cast("long").as("nc"), fingerprintOf(col(textCol)).as("fp"))
       .groupBy(col(sourceCol))
       .agg(count(lit(1)).as("n_docs"),
         sum("nc").as("total_chars"),
@@ -224,8 +224,7 @@ object TextOps {
     require(fracs.nonEmpty && fracs.forall(_._2 > 0) && fracs.map(_._2).sum <= 1.0 + 1e-9,
       s"fractions must be positive and sum to <= 1, got $fracs")
     // 32-bit hash / 2^32 ∈ [0, 1) — same uniform device as sampleStratified
-    val u = conv(substring(md5(concat_ws(":", lit(seed), col(idCol)).cast("binary")), 1, 8),
-      16, 10).cast("long") / lit(4294967296.0)
+    val u = Md5Draw.uniform(Md5Draw.ofString(concat_ws(":", lit(seed), col(idCol))), 8)
     val cum = fracs.scanLeft(0.0)(_ + _._2).tail
     val split = fracs.zip(cum).dropRight(1)
       .foldRight(lit(fracs.last._1): Column) { case (((name, _), hi), acc) =>
@@ -353,7 +352,7 @@ object TextOps {
    */
   def sampleStratified(df: DataFrame, idCol: String, strataCol: String,
                        rates: Map[String, Double], defaultRate: Double): DataFrame = {
-    val h = substring(md5(col(idCol).cast("string")), 1, 8)
+    val h = substring(Md5Draw.of(col(idCol)), 1, 8)
     val cond = rates.toSeq.sortBy(_._1).foldRight(h < lit(rateThresholdHex(defaultRate))) {
       case ((stratum, r), acc) =>
         when(col(strataCol) === stratum, h < lit(rateThresholdHex(r))).otherwise(acc)
@@ -367,7 +366,7 @@ object TextOps {
   def rateThresholdHex(rate: Double): String =
     if (rate >= 1.0) "g"
     else if (rate <= 0.0) ""
-    else f"${(rate * 4294967296.0).toLong}%08x"
+    else f"${(rate * Md5Draw.space(8)).toLong}%08x"
 
   /**
    * Deterministic PER-ROW weighted Bernoulli sampling — quality-weighted
@@ -386,9 +385,9 @@ object TextOps {
    */
   def sampleWeighted(df: DataFrame, idCol: String, weight: Column): DataFrame = {
     val w = least(greatest(weight.cast("double"), lit(0.0)), lit(1.0))
-    val thr = least(floor(w * lit(1152921504606846976.0)).cast("long"),
-      lit(1152921504606846975L))
-    val pfx = substring(md5(col(idCol).cast("string").cast("binary")), 1, 15)
+    val thr = least(floor(w * lit(Md5Draw.space(15))).cast("long"),
+      lit(Md5Draw.space(15).toLong - 1))
+    val pfx = substring(Md5Draw.of(col(idCol)), 1, 15)
     df.filter(pfx <= format_string("%015x", thr))
   }
 
@@ -414,9 +413,8 @@ object TextOps {
                       seed: String = "0"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // 48-bit md5 prefix + 1 → u ∈ (0, 1]; log(u) ∈ (-∞, 0]
-    val u = (conv(substring(md5(concat(lit(seed + ":"),
-      col(idCol).cast("string")).cast("binary")), 1, 12), 16, 10).cast("long") + 1L) /
-      lit(281474976710656.0)
+    val u = (Md5Draw.prefix(Md5Draw.ofString(concat(lit(seed + ":"), col(idCol).cast("string"))),
+      1, 12) + 1L) / lit(Md5Draw.space(12))
     df.filter(weight.isNotNull && weight.cast("double") > 0.0)
       .withColumn("__aes", log(u) / weight.cast("double"))
       .orderBy(col("__aes").desc, col(idCol))
@@ -462,7 +460,7 @@ object TextOps {
       .otherwise(array().cast("array<int>"))
     df.withColumn("epoch", explode(copies))
       .filter(col("epoch") < floor(e).cast("int") ||
-        substring(md5(concat(col(idCol).cast("string"), lit("_"),
+        substring(Md5Draw.ofString(concat(col(idCol).cast("string"), lit("_"),
           col("epoch").cast("string"))), 1, 8) < thresh)
   }
 
@@ -557,14 +555,20 @@ object TextOps {
    */
   def shuffleShards(df: DataFrame, idCol: String, numShards: Int,
                     seed: String = "0"): DataFrame = {
-    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
-    val h = md5(concat(lit(seed + ":"), col(idCol).cast("string")).cast("binary"))
-    df.select(col(idCol), h.as("__h"),
-        (conv(substring(h, 1, 8), 16, 10).cast("long") % numShards).as("shard"))
+    val (h, shard) = shardOf(col(idCol), seed, numShards)
+    df.select(col(idCol), h.as("__h"), shard.as("shard"))
       .withColumn("pos",
         (row_number().over(Window.partitionBy("shard")
           .orderBy(col("__h"), col(idCol))) - 1).cast("long"))
       .select(col(idCol), col("shard"), col("pos"))
+  }
+
+  /** A document's seeded md5 (its order within its shard) and its shard,
+    * that hash's first 8 hex chars % numShards. */
+  private def shardOf(id: Column, seed: String, numShards: Int): (Column, Column) = {
+    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
+    val h = Md5Draw.ofString(concat(lit(seed + ":"), id.cast("string")))
+    (h, Md5Draw.prefix(h, 1, 8) % numShards)
   }
 
   /**
@@ -577,9 +581,7 @@ object TextOps {
    */
   def shardManifest(df: DataFrame, idCol: String, textCol: String,
                     numShards: Int, seed: String = "0"): DataFrame = {
-    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
-    val h = md5(concat(lit(seed + ":"), col(idCol).cast("string")).cast("binary"))
-    df.select((conv(substring(h, 1, 8), 16, 10).cast("long") % numShards).as("shard"),
+    df.select(shardOf(col(idCol), seed, numShards)._2.as("shard"),
         size(tokens(col(textCol))).cast("long").as("__t"),
         length(col(textCol)).cast("long").as("__c"))
       .groupBy("shard")
@@ -617,8 +619,10 @@ object TextOps {
   /** Document fingerprint: md5 of the whitespace-normalized lowercase text
     * (md5 agrees byte-for-byte with DuckDB's). */
   def fingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      md5(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")).cast("binary")).as("fp"))
+    df.select(col(idCol), fingerprintOf(col(textCol)).as("fp"))
+
+  private def fingerprintOf(text: Column): Column =
+    Md5Draw.ofString(trim(regexp_replace(lower(text), "\\s+", " ")))
 
   /** Exact dedup: group by fingerprint, keep the minimum id as representative. */
   def dedupExact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -711,7 +715,7 @@ object TextOps {
   def dedupNormalized(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val canon = trim(regexp_replace(
       regexp_replace(lower(col(textCol)), "[^a-z0-9\\s]", " "), "\\s+", " "))
-    df.select(col(idCol), md5(canon).as("fp"))
+    df.select(col(idCol), Md5Draw.ofString(canon).as("fp"))
       .groupBy("fp").agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("dup_count"))
   }
 

@@ -1,6 +1,8 @@
 package graft
 
+import graft.events.EventOps
 import graft.sketch.Sketches
+import graft.text.TextOps
 import org.apache.spark.sql.functions.{col, lit}
 
 /** KMV distinct sketch: exact under k, estimator replay above k, merge
@@ -249,6 +251,76 @@ class SketchSpec extends SparkSpec {
       Sketches.hllRegistersWide(h2, Seq("g"), $"v", p), Seq("g"))
     val viaMerge = Sketches.hllEstimateWide(merged, Seq("g"), p).collect()(0).getDouble(1)
     assert(viaMerge == got)
+  }
+
+  test("hll: one estimator serves both frames (32-bit and wide agree bit for bit)") {
+    // on a register table whose ranks fit the 32-bit frame (r <= 33), the
+    // 32-bit and the wide-frame estimators must return raw-bit-identical
+    // doubles: the 32-bit harmonic sum is exact in a double, the wide one
+    // exact as a scaled long, so both see the same S
+    val rnd = new scala.util.Random(11)
+    for (p <- 4 to 13) {
+      val m = 1 << p
+      // group "lc": 1/8 of the registers set (linear-counting branch);
+      // "raw": every register set with ranks >= 3 (raw branch); "mix":
+      // every register set, ranks over the whole frame incl. 1 and 33
+      val lc = rnd.shuffle((0 until m).toList).take(math.max(1, m / 8))
+        .map(i => ("lc", i.toLong, 1L + rnd.nextInt(33)))
+      val raw = (0 until m).map(i => ("raw", i.toLong, 3L + rnd.nextInt(31)))
+      val mix = (0 until m).map(i => ("mix", i.toLong,
+        if (i == 0) 1L else if (i == 1) 33L else 1L + rnd.nextInt(33)))
+      val regs = (lc ++ raw ++ mix).toDF("g", "idx", "r")
+      def est(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val a = est(Sketches.hllEstimate(regs, Seq("g"), p))
+      val b = est(Sketches.hllEstimateWide(regs, Seq("g"), p))
+      assert(a.keySet == Set("lc", "raw", "mix"))
+      for (g <- a.keys) assert(java.lang.Double.doubleToRawLongBits(a(g)) ==
+        java.lang.Double.doubleToRawLongBits(b(g)), s"p=$p group $g: ${a(g)} vs ${b(g)}")
+      // the fixture reaches both branches: linear counting returns
+      // m·ln(m/zeros), rounded to 4 decimals
+      val zeros = (m - lc.size).toDouble
+      assert(a("lc") == BigDecimal(m * StrictMath.log(m / zeros))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, s"p=$p lc")
+      assert(a("raw") > 2.5 * m, s"p=$p raw")
+    }
+  }
+
+  test("md5 draw: assignSplits, shuffleShards and bootstrapMeans salts replay on the JVM") {
+    // one row per id; the NULL id pins each salt's NULL behaviour:
+    // assignSplits salts with concat_ws, which SKIPS a NULL id (it draws
+    // md5("s")); shuffleShards and bootstrapMeans salt with concat, which
+    // turns the whole salt NULL (no shard; every replicate weight falls
+    // through the inverse CDF to its cap, 5)
+    val ids = Seq(Some(1L), Some(2L), Some(42L), Some(1234567L), Some(-5L), None)
+    val df = ids.map(i => (i, i.fold("null-id")(_.toString), 1.5)).toDF("id", "g", "v")
+    def u32(s: String) = java.lang.Long.parseLong(md5hex(s).substring(0, 8), 16) / 4294967296.0
+    def key(r: org.apache.spark.sql.Row) = if (r.isNullAt(0)) None else Some(r.getLong(0))
+    val splitNames = (0 until 64).map(i => f"s$i%02d")
+    // 64 dyadic fractions: the split index is floor(64·u), six bits of u
+    val splits = TextOps.assignSplits(df, "id", "s", splitNames.map(_ -> 1.0 / 64))
+      .collect().map(r => key(r) -> r.getString(1)).toMap
+    val shards = TextOps.shuffleShards(df, "id", 997, "s")
+      .collect().map(r => key(r) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    // only n_eff is read: a one-row group's zero-weight replicate would
+    // divide by zero in `mean`
+    val boot = EventOps.bootstrapMeans(df, "id", col("v"), replicates = 8, Seq("g"))
+      .select("g", "rep", "n_eff")
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    def poissonW(u: Double) = EventOps.poissonCdf1.indexWhere(u < _) match {
+      case -1 => 5L
+      case k => k.toLong
+    }
+    for (id <- ids) {
+      val salt = id.fold("s")(i => s"s:$i")
+      assert(splits(id) == splitNames((u32(salt) * 64).toInt), s"split of $id")
+      assert(shards(id) == id.map(i =>
+        java.lang.Long.parseLong(md5hex(s"s:$i").substring(0, 8), 16) % 997), s"shard of $id")
+      for (rep <- 0 until 8) {
+        val w = id.fold(5L)(i => poissonW(u32(s"$i:$rep")))
+        assert(boot((id.fold("null-id")(_.toString), rep)) == w, s"weight of $id in rep $rep")
+      }
+    }
   }
 
   test("heavy hitters: exact phi-frequent set, partitioning-independent") {

@@ -599,6 +599,35 @@ class StreamingSpec extends SparkSpec {
         .as[(String, String, Double, Double)].collect().toSet
       assert(est == batchEst)
     } finally q.stop()
+    // a value that does not cast to a double leaves the sample, exactly as
+    // in the batch bottomKSample. An ANSI cast raises on "x" instead of
+    // reading NULL, so this part runs with ANSI off.
+    import org.apache.spark.sql.functions.{lit, when}
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val few = (1 to 7).map(i => GEvent(i.toLong,
+        ts(f"2024-03-0${1 + i % 2}%d 11:00:00"), 1L, "click", i * 0.5))
+      val v = when($"event_id" === 7L, lit("x")).otherwise($"value".cast("string"))
+      val in2 = MemoryStream[GEvent]
+      val q2 = StreamOps.windowedBottomKSample(in2.toDF(), Seq("event_type"), $"event_id", v,
+          k = 16)
+        .writeStream.format("memory").queryName("bksampx").outputMode("complete").start()
+      try {
+        in2.addData(few: _*)
+        drain(q2)
+        val stream = spark.table("bksampx").select($"h", $"v").as[(String, Double)]
+          .collect().toSet
+        val batch = StreamOps.windowedBottomKSample(
+            few.toDF(), Seq("event_type"), $"event_id", v, k = 16)
+          .select($"h", $"v").as[(String, Double)].collect().toSet
+        val numeric = graft.sketch.Sketches.bottomKSample(
+            few.filter(_.event_id != 7L).toDF(), Seq("event_type"), $"event_id", $"value", 16)
+          .select($"h", $"v").as[(String, Double)].collect().toSet
+        assert(stream == batch)
+        assert(batch == numeric) // under-full: every numeric row, not "x"
+      } finally q2.stop()
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("windowedKeyCounts streaming ≡ batch; read-side heavy hitters exact") {
