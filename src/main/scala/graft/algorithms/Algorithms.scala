@@ -1,10 +1,10 @@
 package graft.algorithms
 
-import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.util.CacheLifecycle.releaseOnFirstAction
 
@@ -58,62 +58,71 @@ object Algorithms {
     * over-budget source aborts mid-flood instead of after completing. */
   val LocalStateMaxRows: Long = 1L << 22
 
-  /** An id list [[onDriver]] collects: the `id` column of `df`. A [[Fresh]]
-    * list is deduplicated, persisted and counted by the dispatch itself; a
-    * [[Held]] list is the caller's own, already distinct, of `n` rows. */
-  private sealed trait Ids { def df: DataFrame }
-  private final case class Fresh(df: DataFrame) extends Ids
-  private final case class Held(df: DataFrame, n: Long) extends Ids
-
-  /** What [[onDriver]] hands the local loop; each part collects on first
-    * use, so a declined answer collects no more than it needed. */
-  private final class Collected(e: DataFrame, idLists: Seq[DataFrame]) {
-    private lazy val rows = e.collect()
+  /** What [[onDriver]] hands the local loop: the edge frame's rows, in
+    * collect order, and each id list deduplicated in first-seen order. */
+  private final class Collected(rows: Array[Row], val ids: Seq[Array[Long]]) {
     lazy val pairs: Array[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1)))
     /** The edge frame's third column; None when a weight is NULL — the
       * distributed loop owns NULL semantics (dist + null → null, sums skip
       * nulls), so such inputs behave the same on both sides of the gate. */
     def weights: Option[Array[Double]] =
       if (rows.exists(_.isNullAt(2))) None else Some(rows.map(_.getDouble(2)))
-    lazy val ids: Seq[Array[Long]] = idLists.map(_.collect().map(_.getLong(0)))
   }
+
+  private val gateLog = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** A driver-built answer's schema: non-nullable columns, the schema `toDF`
+    * gives the same primitive tuples. */
+  private def schemaOf(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (c, t) => StructField(c, t, nullable = false) })
 
   /**
    * The driver-local dispatch, the one place the gate rule of [[Local]]
-   * lives. `e` is the caller's persisted edge frame, endpoints in its first
-   * two columns; `edgeCount` is its row count (evaluated only once the
-   * BIGINT checks pass — it is the cache fill, so the gate adds no job).
-   * When the graph passes the gate, `run` gets it collected and its answer
-   * comes back as a DataFrame with columns `cols`; `e` and every id list
-   * are then released, as they are when `run` throws (a local
-   * [[BudgetExhausted]]). None means: run the distributed loop (the
-   * caller's frames stay persisted for it). Frames the dispatch persisted
-   * itself are released on every exit.
+   * lives. `e` holds the endpoints in its first two columns and each of
+   * `ids` an `id` column. Unless the caller passes the exact row count
+   * `edgeRows` of an already materialized `e`, the dispatch persists `e`
+   * and reads it with one `limit(cap + 1)` collect; each id list is one
+   * collect capped at [[LocalGraphMaxVertices]] + 1 rows. No count job
+   * runs: the collected lengths are the gate test. When the graph passes,
+   * `run` gets the rows, and its answer becomes a local relation with
+   * schema `schema`; `e` is released, as it is when `run` throws (a local
+   * [[BudgetExhausted]]). None means: run the distributed loop — `e` stays
+   * persisted for it, its cache filled by the collect. A NULL endpoint or
+   * id declines too (the distributed loops own NULL semantics). The side
+   * taken, and what declined, is logged at DEBUG.
    */
-  private def onDriver[T <: Product : TypeTag](e: DataFrame, edgeCount: => Long, ids: Ids*)(
-      cols: String*)(run: Collected => Option[Array[T]]): Option[DataFrame] = {
-    def bigint(df: DataFrame, k: Int) = df.schema.take(k).forall(_.dataType == LongType)
+  private def onDriver(e: DataFrame, ids: DataFrame*)(schema: StructType,
+      edgeRows: Option[Long] = None)(run: Collected => Option[Array[_ <: Product]]): Option[DataFrame] = {
     val spark = e.sparkSession
-    if (!bigint(e, 2) || !ids.forall(i => bigint(i.df.select(col("id")), 1)) ||
-        ids.exists { case Held(_, n) => n > LocalGraphMaxVertices; case _ => false } ||
-        edgeCount > spark.conf.getOption("graft.localGraphMaxEdges")
-          .map(_.toLong).getOrElse(LocalGraphMaxEdges)) return None
-    val owned = scala.collection.mutable.Buffer[DataFrame]()
-    def release(): Unit = { e.unpersist(false); ids.foreach(_.df.unpersist(false)) }
-    try {
-      val lists = ids.map {
-        case Fresh(df) =>
-          val d = df.select(col("id")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-          owned += d
-          d
-        case Held(df, _) => df.select(col("id"))
-      }
-      if (owned.exists(_.count() > LocalGraphMaxVertices)) return None
-      val answer = try run(new Collected(e, lists)) catch { case x: Throwable => release(); throw x }
-      if (answer.nonEmpty) release()
-      import spark.implicits._
-      answer.map(_.toSeq.toDF(cols: _*))
-    } finally owned.foreach(_.unpersist(false))
+    val cap = spark.conf.getOption("graft.localGraphMaxEdges").map(_.toLong).getOrElse(LocalGraphMaxEdges)
+    def debug(msg: => String): Unit = if (gateLog.isDebugEnabled) gateLog.debug(msg)
+    def decline(why: => String): Option[DataFrame] = {
+      debug(s"driver-local gate declined (${schema.fieldNames.mkString(",")}): $why")
+      None
+    }
+    // at most `n` + 1 rows, so a length over `n` is the cap test
+    def bounded(df: DataFrame, n: Long): Array[Row] =
+      df.limit(math.max(0L, math.min(n, Int.MaxValue - 1L) + 1).toInt).collect()
+    def bigint(df: DataFrame, k: Int) = df.schema.take(k).forall(_.dataType == LongType)
+    if (edgeRows.isEmpty) e.persist(StorageLevel.MEMORY_AND_DISK)
+    if (!bigint(e, 2) || !ids.forall(i => bigint(i.select(col("id")), 1))) return decline("BIGINT")
+    if (edgeRows.exists(_ > cap)) return decline(s"known count ${edgeRows.get} > edge cap $cap")
+    val rows = bounded(e, cap)
+    if (rows.length > cap) return decline(s"edge cap $cap, ${rows.length} rows collected")
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return decline("NULL endpoint")
+    val lists = ids.map { df =>
+      val got = bounded(df.select(col("id")), LocalGraphMaxVertices)
+      if (got.length > LocalGraphMaxVertices)
+        return decline(s"vertex cap $LocalGraphMaxVertices, ${got.length} rows collected")
+      if (got.exists(_.isNullAt(0))) return decline("NULL id")
+      got.map(_.getLong(0)).distinct
+    }
+    val out = try run(new Collected(rows, lists)) catch { case x: Throwable => e.unpersist(false); throw x }
+    if (out.isEmpty) return decline(s"local run, ${rows.length} edges")
+    e.unpersist(false)
+    debug(s"driver-local gate took the local loop (${schema.fieldNames.mkString(",")}): " +
+      s"${rows.length} edges, ids ${lists.map(_.length).mkString(",")}")
+    Some(spark.createDataFrame(out.get.toSeq.map(Row.fromTuple).asJava, schema))
   }
 
   /**
@@ -241,8 +250,8 @@ object Algorithms {
    * @return (id BIGINT, level INT) — minimum hop count from any source
    */
   def bfs(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).cache()
-    val local = onDriver(e, e.count(), Fresh(sources))("id", "level")(g =>
+    val e = edges.select(col("src"), col("dst"))
+    val local = onDriver(e, sources)(schemaOf("id" -> LongType, "level" -> IntegerType))(g =>
       Some(Local.bfsLevels(g.pairs, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
     val (visited, held) = frontierLoop("bfs",
@@ -270,10 +279,11 @@ object Algorithms {
    *         for vertices actually reached; level 0 rows seed every source
    */
   def bfsPerSource(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst")).cache()
+    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
     // the local run declines past [[LocalStateMaxRows]] of (src, id, level)
     // state: the distributed loop's state is disk-backed
-    val local = onDriver(e, e.count(), Fresh(sources))("src", "id", "level")(g =>
+    val local = onDriver(e, sources)(
+        schemaOf("src" -> LongType, "id" -> LongType, "level" -> IntegerType))(g =>
       Local.bfsPerSource(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
     if (local.nonEmpty) return local.get
     val (visited, held) = frontierLoop("bfsPerSource", sources.select(col("id")).distinct()
@@ -395,22 +405,29 @@ object Algorithms {
   def betweennessLandmark(vertices: DataFrame, edges: DataFrame, k: Int,
                           maxIter: Int = 100): DataFrame = {
     require(k >= 1, s"betweennessLandmark needs k >= 1, got $k")
+    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
+    // on the driver the vertex list collects whole: n, the md5-order
+    // landmark sample and every vertex's row are read off it
+    val local = onDriver(e, vertices)(StructType(Seq(
+        StructField("id", LongType, vertices.schema("id").nullable),
+        StructField("betweenness", DoubleType, nullable = false)))) { g =>
+      val ids = g.ids(0)
+      val kk = math.min(k, ids.length)
+      val dsum = Local.betweennessDeltas(g.pairs,
+        ids.sortBy(id => (Local.md5Hex(id.toString), id)).take(kk), maxIter)
+      Some(ids.map(id => (id, dsum.getOrElse(id, 0.0) * (ids.length.toDouble / kk))))
+    }
+    if (local.nonEmpty) return local.get
     val vs = vertices.select(col("id")).distinct()
     val n = vs.count()
-    if (n == 0) return vs.select(col("id"), lit(0.0).as("betweenness"))
+    if (n == 0) {
+      e.unpersist(false)
+      return vs.select(col("id"), lit(0.0).as("betweenness"))
+    }
     val kk = math.min(k.toLong, n)
     val landmarks = vs
       .select(col("id"), md5(col("id").cast("string").cast("binary")).as("h"))
       .orderBy(col("h"), col("id")).limit(kk.toInt).select("id")
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst")).cache()
-    // landmark selection stays the distributed TakeOrdered above: the
-    // collected list is its kk rows
-    val local = onDriver(e, e.count(), Held(landmarks, kk))("id", "dsum")(g =>
-      Some(Local.betweennessDeltas(g.pairs, g.ids(0), maxIter).toArray))
-    if (local.nonEmpty)
-      return vs.join(local.get, Seq("id"), "left")
-        .select(col("id"),
-          (coalesce(col("dsum"), lit(0.0)) * lit(n.toDouble / kk)).as("betweenness"))
     val (visited, held) = frontierLoop("betweennessLandmark", landmarks
         .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma")),
       maxIter, Seq(e))(sigmaStep(e))
@@ -477,8 +494,7 @@ object Algorithms {
                             maxIter: Int = 50): DataFrame = {
     // the gate's edge cache serves only the local loop
     val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val local = onDriver(e0, e0.count(), Fresh(vertices))("id", "in_mis")(g =>
+    val local = onDriver(e0, vertices)(schemaOf("id" -> LongType, "in_mis" -> BooleanType))(g =>
       Some(Local.mis(g.ids(0), g.pairs, maxIter)))
     if (local.nonEmpty) return local.get
     e0.unpersist(false)
@@ -538,15 +554,15 @@ object Algorithms {
     // device (and its session-conf mutation, the round-13 advisory): the
     // regime where the narrow width won — tiny per-round sigma tables — is
     // exactly the at-or-under-gate regime, and above the gate the
-    // data-sized width equaled the session width anyway. The gate's count
-    // fills e0, the local path collects FROM it, and the distributed loop's
-    // pre-partitioned edge cache repartitions from it — one evaluation of
+    // data-sized width equaled the session width anyway. The gate's collect
+    // fills e0's cache, and the distributed loop's pre-partitioned edge
+    // cache repartitions from it — one evaluation of
     // the (often expensive: a lineitem self-join at the graph_sigma call
     // site) edge derivation. The local run declines past
     // [[LocalStateMaxRows]] of state, as in [[bfsPerSource]].
     val e0 = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val local = onDriver(e0, e0.count(), Fresh(sources))("src", "id", "level", "sigma")(g =>
+    val local = onDriver(e0, sources)(schemaOf(
+        "src" -> LongType, "id" -> LongType, "level" -> IntegerType, "sigma" -> LongType))(g =>
       Local.sigmaCounts(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
     if (local.nonEmpty) return local.get
     // cached PRE-PARTITIONED on the join key: every round's expansion join
@@ -582,13 +598,13 @@ object Algorithms {
    * @return (id, dist DOUBLE)
    */
   def sssp(edges: DataFrame, sources: DataFrame, maxIter: Int = 100): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w")).cache()
+    val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
     // NULL weights fall through to the distributed loop: its semantics
     // (dist + null → null, nulls dropped by min over mixed groups, a null
     // dist row for null-only-reachable vertices) are not worth replicating
     // in-JVM, and r14's getDouble here CRASHED on them — same input must
     // behave identically above and below the gate (r15 advisory fix)
-    val local = onDriver(e, e.count(), Fresh(sources))("id", "dist")(g =>
+    val local = onDriver(e, sources)(schemaOf("id" -> LongType, "dist" -> DoubleType))(g =>
       g.weights.map(w => Local.sssp(g.pairs, w, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
     // the improved set is the frontier; it replaces those vertices' rows
@@ -648,41 +664,37 @@ object Algorithms {
    *         every id in `vertices`
    */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // persist-then-count: the count doubles as the cache fill AND the gate
-    // probe, and on the (common) local path the collect reads the cache —
-    // one materialization pass total. r13 checkpointed BEFORE the gate,
-    // paying an extra eager materialization job per call on the local path
-    // (wcc_apply and the dedup cluster family each call CC twice).
-    val e0 = edges.select(greatest(col("src"), col("dst")).as("src"),
+    // CC is routinely fed a SMALL edge set (an LSH dedup's pair table, a
+    // delta-contracted graph): the gate collects the raw edges — union-find
+    // needs neither orientation nor dedup — and the vertex ids, and labels
+    // every vertex on the driver (an id no edge touches is its own label)
+    val raw = edges.select(col("src"), col("dst"))
+    val nn = vertices.schema("id").nullable
+    val local = onDriver(raw, vertices)(StructType(Seq(
+        StructField("id", LongType, nn), StructField("component", LongType, nn)))) { g =>
+      val label = scala.collection.mutable.LongMap(Local.componentLabels(g.pairs).toSeq: _*)
+      Some(g.ids(0).map(v => (v, label.getOrElse(v, v))))
+    }
+    if (local.nonEmpty) return local.get
+    // Every round is rooted at a lineage-free leaf: round 1 reads the
+    // gate's edge cache and each later round the previous round's
+    // checkpoint. CC is the algorithm routinely fed a deep upstream plan
+    // (an LSH dedup pipeline's pair table), and until a checkpoint lands
+    // every action re-walks that whole analyzed tree driver-side
+    // (cache-lookup sameResult checks + re-analysis; r13 measured 40+ s of
+    // jobless driver gaps on the minhash pair graph). Only the gate's
+    // collect and round 1's checkpoint walk it; later rounds plan one
+    // round's operators. The checkpoint blocks of dropped rounds are
+    // reclaimed by the ContextCleaner as references lapse. An empty edge
+    // set halts after round 1.
+    val e0 = raw.select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // CC is routinely fed a SMALL edge set (an LSH dedup's pair table, a
-    // delta-contracted graph) — the local union-find answers it in one job
-    // instead of one per round. `vertices` stays distributed either way
-    // (only the edge-induced labeling collects).
-    val eCount = e0.count()
-    val local = onDriver(e0, eCount)("id", "component")(g =>
-      Some(Local.componentLabels(g.pairs)))
-    if (local.nonEmpty)
-      return vertices.select(col("id")).distinct()
-        .join(local.get.filter(col("id") =!= col("component")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    // Every round is rooted at a lineage-free leaf: round 1 reads the
-    // gate's cache and each later round the previous round's checkpoint.
-    // CC is the algorithm routinely fed a deep upstream plan (an LSH dedup
-    // pipeline's pair table), and until a checkpoint lands every action
-    // re-walks that whole analyzed tree driver-side (cache-lookup
-    // sameResult checks + re-analysis; r13 measured 40+ s of jobless driver
-    // gaps on the minhash pair graph). Only the gate's count and round 1's
-    // checkpoint walk it; later rounds plan one round's operators. The
-    // checkpoint blocks of dropped rounds are reclaimed by the
-    // ContextCleaner as references lapse.
     val byNode = Window.partitionBy("src")
     try {
       var e = e0
       var iter = 0
-      var converged = eCount == 0L
+      var converged = false
       while (iter < maxIter && !converged) {
         // large-star over the symmetrized neighborhood (no duplicate rows:
         // e is distinct and hi→lo, its reverse lo→hi)
@@ -703,8 +715,10 @@ object Algorithms {
           .select(explode(array(col("src"), col("dst"))).as("src"), col("m").as("dst"))
           .filter(col("src") =!= col("dst")).distinct()
           .localCheckpoint(true)
-        if (iter == 0) e0.unpersist(false)
-        converged = halt.get("nonStar") == 0L
+        if (iter == 0) raw.unpersist(false)
+        // the optimizer drops the observation from a round over an empty
+        // edge set, which has no vertex off the star shape
+        converged = halt.get.getOrElse("nonStar", 0L) == 0L
         e = next
         iter += 1
       }
@@ -713,7 +727,7 @@ object Algorithms {
       vertices.select(col("id")).distinct()
         .join(e.select(col("src").as("id"), col("dst").as("component")), Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    } finally e0.unpersist(false)
+    } finally raw.unpersist(false)
   }
 
   /**
@@ -941,7 +955,8 @@ object Algorithms {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
     peel("kCore", edges, maxIter)(
-      (e, n) => onDriver(e, n)("id")(g => Some(Local.kCore(g.pairs, k, maxIter).map(Tuple1(_)))),
+      (e, n) => onDriver(e)(schemaOf("id" -> LongType), Some(n))(g =>
+        Some(Local.kCore(g.pairs, k, maxIter).map(Tuple1(_)))),
       // every k-core vertex (k ≥ 1) is incident to a surviving edge
       e => e.select(col("a").as("id")).unionByName(e.select(col("b").as("id"))).distinct()) { e =>
       val alive = e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
@@ -977,7 +992,8 @@ object Algorithms {
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
     peel("kTruss", edges, maxIter)(
-      (e, n) => onDriver(e, n)("a", "b")(g => Some(Local.kTruss(g.pairs, k, maxIter))),
+      (e, n) => onDriver(e)(schemaOf("a" -> LongType, "b" -> LongType), Some(n))(g =>
+        Some(Local.kTruss(g.pairs, k, maxIter))),
       identity) { e =>
       val nbr = e.select(col("a").as("v"), col("b").as("n"))
         .unionByName(e.select(col("b").as("v"), col("a").as("n")))
@@ -1051,15 +1067,17 @@ object Algorithms {
    */
   def labelPropagation(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
+    // the local loop symmetrizes the raw edges itself
+    val raw = edges.select(col("src"), col("dst"))
+    val local = onDriver(raw, vertices)(schemaOf("id" -> LongType, "community" -> LongType))(g =>
+      Some(Local.lpa(g.ids(0), g.pairs, iters)))
+    if (local.nonEmpty) return local.get
     val cutter = new Cutter
-    val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+    val e0 = raw.filter(col("src") =!= col("dst"))
     val sym = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .select(col("src").as("id"), col("dst").as("nb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val local = onDriver(sym, sym.count(), Fresh(vertices))("id", "community")(g =>
-      Some(Local.lpa(g.ids(0), g.pairs, iters)))
-    if (local.nonEmpty) return local.get
     var labels = cutter(vertices.select(col("id")).distinct()
       .withColumn("lab", col("id")), 0)
     for (i <- 1 to iters) {
@@ -1072,7 +1090,7 @@ object Algorithms {
         .select(col("id"), coalesce(col("new_lab"), col("lab")).as("lab")), i)
     }
     releaseOnFirstAction(labels.select(col("id"), col("lab").as("community")),
-      sym +: cutter.leftovers: _*)
+      raw +: sym +: cutter.leftovers: _*)
   }
 
   /** lo→hi canonical orientation, self-loops dropped, deduped. */
@@ -1129,19 +1147,23 @@ object Algorithms {
    */
   def personalizedPageRank(vertices: DataFrame, edges: DataFrame, sources: DataFrame,
                            iters: Int = 10, damping: Double = 0.85): DataFrame = {
+    val noSeed = "personalizedPageRank needs at least one source present in `vertices`"
+    // the edge derivation is persisted once: the gate's collect fills it
+    val e0 = edges.select(col("src"), col("dst"))
+    val local = onDriver(e0, vertices, sources)(schemaOf("id" -> LongType, "rank" -> DoubleType)) { g =>
+      val vs = g.ids(0)
+      val seeds = g.ids(1).toSet.intersect(vs.toSet)
+      require(seeds.nonEmpty, noSeed)
+      Some(Local.pageRank(vs, g.pairs, Array.fill(g.pairs.length)(1.0),
+        id => if (seeds(id)) 1.0 / seeds.size else 0.0, 1.0, iters, damping))
+    }
+    if (local.nonEmpty) return local.get
     val v = vertices.select(col("id")).distinct().cache()
     val srcs = sources.select(col("id")).distinct()
       .join(v, Seq("id"), "left_semi").cache()
     val nS = srcs.count()
-    require(nS > 0, "personalizedPageRank needs at least one source present in `vertices`")
-    // the edge derivation is persisted once: the gate's count fills it
-    val e0 = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val local = onDriver(e0, e0.count(), Held(v, v.count()), Held(srcs, nS))("id", "rank") { g =>
-      val (vs, seeds) = (g.ids(0), g.ids(1).toSet)
-      Some(Local.pageRank(vs, g.pairs, Array.fill(g.pairs.length)(1.0),
-        vs.map(id => if (seeds(id)) 1.0 / seeds.size else 0.0), 1.0, iters, damping))
-    }
-    if (local.nonEmpty) return local.get
+    if (nS == 0) Seq(v, srcs, e0).foreach(_.unpersist(false))
+    require(nS > 0, noSeed)
     val p = v.join(srcs.withColumn("__p", lit(1.0 / nS)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__p"), lit(0.0)).as("p")).cache()
     pageRankLoop(p, e0.withColumn("w", lit(1.0)), 1.0, iters, damping, v, srcs, p, e0)
@@ -1152,23 +1174,22 @@ object Algorithms {
     * with w = 1. */
   private def uniformPageRank(vertices: DataFrame, e: DataFrame, weighted: Boolean,
                               iters: Int, damping: Double): DataFrame = {
-    val v = vertices.select(col("id")).distinct().cache()
-    val n = v.count()
     // the edge derivation can be expensive (a lineitem self-join at the
-    // call sites) — persist it ONCE; the gate's count fills the cache and
-    // the distributed loop's out-weights and links both read it
-    val e0 = e.persist(StorageLevel.MEMORY_AND_DISK)
+    // call sites) — onDriver persists it ONCE; the gate's collect fills the
+    // cache and the distributed loop's out-weights and links both read it.
     // NULL weights fall through to the distributed loop (see [[sssp]] —
     // r14's getDouble here crashed on a null the distributed path
     // null-propagates through its sums; r15 advisory fix)
-    val local = onDriver(e0, e0.count(), Held(v, n))("id", "rank") { g =>
+    val local = onDriver(e, vertices)(schemaOf("id" -> LongType, "rank" -> DoubleType)) { g =>
       val w = if (weighted) g.weights else Some(Array.fill(g.pairs.length)(1.0))
       val vs = g.ids(0)
-      w.map(Local.pageRank(vs, g.pairs, _, Array.fill(vs.length)(1.0), vs.length, iters, damping))
+      w.map(ws => Local.pageRank(vs, g.pairs, ws, _ => 1.0, vs.length, iters, damping))
     }
     if (local.nonEmpty) return local.get
-    pageRankLoop(v.withColumn("p", lit(1.0)), if (weighted) e0 else e0.withColumn("w", lit(1.0)),
-      n.toDouble, iters, damping, v, e0)
+    val v = vertices.select(col("id")).distinct().cache()
+    val n = v.count()
+    pageRankLoop(v.withColumn("p", lit(1.0)), if (weighted) e else e.withColumn("w", lit(1.0)),
+      n.toDouble, iters, damping, v, e)
   }
 
   /**
@@ -1281,9 +1302,12 @@ object Algorithms {
    */
   def hits(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"hits needs iters >= 1, got $iters")
-    val e = edges.select("src", "dst").distinct().cache()
-    val local = onDriver(e, e.count())("id", "hub", "auth")(g => Some(Local.hits(g.pairs, iters)))
+    // the local loop dedups the raw edges itself
+    val raw = edges.select(col("src"), col("dst"))
+    val local = onDriver(raw)(schemaOf("id" -> LongType, "hub" -> DoubleType, "auth" -> DoubleType))(g =>
+      Some(Local.hits(g.pairs, iters)))
     if (local.nonEmpty) return local.get
+    val e = raw.distinct().cache()
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct().cache()
     // score frames are |V|-sized; under the broadcast gate each half-step
@@ -1314,7 +1338,7 @@ object Algorithms {
     }
     val out = hub.join(auth, Seq("id"))
       .select(col("id"), col("hub"), col("auth"))
-    releaseOnFirstAction(out, Seq(e, nodes) ++ cutter.leftovers: _*)
+    releaseOnFirstAction(out, Seq(raw, e, nodes) ++ cutter.leftovers: _*)
   }
 
   /**
@@ -1339,10 +1363,13 @@ object Algorithms {
    */
   def randomWalks(edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     require(steps >= 0, s"randomWalks needs steps >= 0, got $steps")
-    val e = edges.select("src", "dst").distinct().cache()
-    val local = onDriver(e, e.count(), Fresh(seeds))("walk_id", "step", "node")(g =>
+    // the local loop dedups the raw edges itself
+    val raw = edges.select(col("src"), col("dst"))
+    val local = onDriver(raw, seeds)(
+        schemaOf("walk_id" -> LongType, "step" -> IntegerType, "node" -> LongType))(g =>
       Some(Local.randomWalks(g.pairs, g.ids(0), steps)))
     if (local.nonEmpty) return local.get
+    val e = raw.distinct().cache()
     e.count()
     val cutter = new Cutter
     var cur = seeds.select(col("id")).distinct()
@@ -1360,7 +1387,7 @@ object Algorithms {
       cur = cutter(next, s - 1)
       walks = walks.unionByName(cur)
     }
-    releaseOnFirstAction(walks, e +: cutter.leftovers: _*)
+    releaseOnFirstAction(walks, raw +: e +: cutter.leftovers: _*)
   }
 
   /**
@@ -1427,17 +1454,21 @@ object Algorithms {
     var live = nodes.count()
     // Finish the live graph with the in-JVM Tarjan when it passes the gate:
     // identical min-id components (the epilogue relabels to min either way)
-    def tarjanOnDriver(eCount: => Long): Unit =
-      onDriver(e.select(col("src"), col("dst")), eCount, Held(nodes, live))("id", "root")(g =>
-        Some(Local.sccLabels(g.ids(0), g.pairs))).foreach { labels =>
-        assign(labels)
+    def tarjanOnDriver(eCount: Option[Long]): Unit = {
+      val sel = e.select(col("src"), col("dst"))
+      val labels = onDriver(sel, nodes)(schemaOf("id" -> LongType, "root" -> LongType), eCount)(g =>
+        Some(Local.sccLabels(g.ids(0), g.pairs)))
+      sel.unpersist(false) // a declined entry gate's cache: the loops read e
+      labels.foreach { l =>
+        assign(l)
         nodes = nodes.filter(lit(false)).localCheckpoint(true)
         live = 0L
       }
+    }
     // ENTRY gate (round 14): the residual-tail gate below only fires after
     // the distributed trim loop has already paid its per-pass job floor; an
     // INITIAL graph that is already distillate-sized goes straight to Tarjan
-    if (live > 0) tarjanOnDriver(e.count())
+    if (live > 0) tarjanOnDriver(None)
     // Small-state tail: once the live subgraph is tiny relative to the
     // cluster, per-round task-scheduling latency dominates the actual work
     // (measured 0.37 s/round on a 1868-node graph at 32 shuffle
@@ -1483,7 +1514,7 @@ object Algorithms {
         // residuals keep the distributed loop; the gate re-checks every
         // outer round as `live` shrinks (post-trim every live vertex has
         // in- and out-degree ≥ 1, so live ≤ 2·eCount)
-        tarjanOnDriver(eCount)
+        tarjanOnDriver(Some(eCount))
         if (live > 0) {
           val eAug =
             if (eCount > SccAugMaxEdges) e

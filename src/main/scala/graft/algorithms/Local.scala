@@ -6,20 +6,30 @@ import scala.collection.mutable
  * Driver-local loop bodies for distillate-sized graphs — the in-JVM twins
  * of the distributed iterative algorithms in [[Algorithms]].
  *
- * THE GATE RULE (one place: `Algorithms.onDriver`): an algorithm runs here
- * when its edge and id columns are BIGINT, its persisted edge frame has at
- * most [[Algorithms.LocalGraphMaxEdges]] rows (session override
- * `graft.localGraphMaxEdges`; 0 forces the distributed loops) and every id
- * list it collects has at most [[Algorithms.LocalGraphMaxVertices]] rows.
- * Then the edges and ids collect once, the loop runs in-JVM, and the answer
- * is parallelized back; the gate's count is the edge cache's fill. Above
- * the gate the distributed loops run unchanged — a 100 TB graph never
- * collects.
+ * THE GATE RULE (one place: `Algorithms.onDriver`): the edge frame the
+ * local loop reads is persisted and read by ONE collect of at most
+ * [[Algorithms.LocalGraphMaxEdges]] + 1 rows (session override
+ * `graft.localGraphMaxEdges`; 0 forces the distributed loops), and each id
+ * list by one collect of at most [[Algorithms.LocalGraphMaxVertices]] + 1
+ * rows, deduplicated on the driver in first-seen order. An algorithm runs
+ * here when the edge and id columns are BIGINT, no endpoint or id is NULL
+ * and the collected lengths are within the caps: the edge cap tests the
+ * rows the local loop reads (for components, hits, label propagation and
+ * random walks the raw edges, which those loops dedup themselves) and the
+ * vertex cap the rows collected, before the dedup. No count job runs; a
+ * caller that already holds an exact edge count (the peel loop, SCC's
+ * residual) passes it, and a graph known to be over the cap never
+ * collects. The loop's answer is a local relation built on the driver.
+ * A declined call has paid one bounded collect — at most cap + 1 rows, the
+ * driver bound an accepted graph at the gate uses — which filled the edge
+ * cache the distributed loop then reads; a 100 TB graph never collects
+ * more than that.
  *
  * WHY (measured, round 13/14): on a graph of a few thousand vertices the
  * distributed loops are pure per-round JOB FLOOR — pagerank at sf0.1 is 92
  * Spark jobs / 32 task-seconds for a 30-vertex graph, ppr 113 jobs, mis 53
- * jobs — tens of scheduling round-trips for sub-second real work.
+ * jobs — tens of scheduling round-trips for sub-second real work. So the
+ * local side's own job floor is its collects, one per input.
  *
  * EQUIVALENCE CONTRACT (what makes the gate safe, per algorithm):
  *  - integer/lexicographic fixpoints (BFS levels, σ counts, k-core,
@@ -34,6 +44,8 @@ import scala.collection.mutable
  *    partition-dependent and the DuckDB oracle sums in yet another order);
  *    every published query rounds these to 6 decimals, and local-vs-
  *    distributed parity is spec-pinned plus oracle-verified at all SFs.
+ *    The local loops sum in a canonical order — edges by (src, dst, w),
+ *    vertices by id — so their bits do not depend on the collect order.
  *
  * Budget semantics are preserved: the local loops are LEVEL-SYNCHRONOUS
  * replicas of the distributed rounds and throw the same
@@ -52,6 +64,23 @@ private[graft] object Local {
       i += 1
     }
     sb.toString
+  }
+
+  /** The indices of `edges` in (src, dst, w) order — the canonical order
+    * the double-sum loops ([[pageRank]], [[hits]], [[betweennessDeltas]])
+    * sum in, so their bits do not depend on the collect order (partition
+    * layout, or which identical cached plan served the collect). `w` is
+    * parallel to `edges`, or empty. */
+  private def canonicalOrder(edges: Array[(Long, Long)], w: Array[Double]): Array[Int] = {
+    val order = Array.tabulate[Integer](edges.length)(Int.box)
+    java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
+      val (i, j) = (a.intValue, b.intValue)
+      var c = java.lang.Long.compare(edges(i)._1, edges(j)._1)
+      if (c == 0) c = java.lang.Long.compare(edges(i)._2, edges(j)._2)
+      if (c == 0 && w.nonEmpty) c = java.lang.Double.compare(w(i), w(j))
+      c
+    })
+    order.map(_.intValue)
   }
 
   /** Dense vertex index + CSR out-adjacency (multiplicity preserved —
@@ -258,37 +287,41 @@ private[graft] object Local {
 
   /** The PageRank family's one loop — [[Algorithms.pageRank]],
     * [[Algorithms.pageRankWeighted]] and [[Algorithms.personalizedPageRank]].
-    * `vs` is distinct, `w` parallel to `edges`, and the teleport vector `p`
-    * parallel to `vs` with total `mass` (uniform: p = 1, mass = |vs|;
+    * `vs` is distinct, `w` parallel to `edges`, and the teleport share
+    * `p(v)` totals `mass` over `vs` (uniform: p = 1, mass = |vs|;
     * personalized: p = 1/|S| on the seeds, mass = 1). Ranks start at p and
     * iterate rank' = (1−d)·p + d·(contrib + dm·p / mass): contribs flow
     * (rank·w) / Σw out of every source whose total out-weight is positive,
     * and the dangling mass dm = mass − Σ rank over those sources. Vertices
-    * = `vs` only: edges out of or into other ids carry nothing. The
-    * expression order is each variant's historical one (w = 1 and
-    * mass = 1 are exact), so results are bit-stable. */
+    * = `vs` only: edges out of or into other ids carry nothing. Edges sum
+    * in (src, dst, w) order and vertices in id order, whatever the input
+    * order; the answer comes in id order. The expression order is each
+    * variant's historical one (w = 1 and mass = 1 are exact). */
   def pageRank(vs: Array[Long], edges: Array[(Long, Long)], w: Array[Double],
-               p: Array[Double], mass: Double, iters: Int,
+               p: Long => Double, mass: Double, iters: Int,
                damping: Double): Array[(Long, Double)] = {
-    val n = vs.length
+    val ids = vs.sorted
+    val n = ids.length
     val idx = new mutable.LongMap[Int](n)
-    vs.indices.foreach(i => idx.update(vs(i), i))
+    ids.indices.foreach(i => idx.update(ids(i), i))
+    val order = canonicalOrder(edges, w)
     val wsum = new mutable.LongMap[Double]()
-    edges.indices.foreach { k =>
+    order.foreach { k =>
       val s = edges(k)._1
       wsum.update(s, wsum.getOrElse(s, 0.0) + w(k))
     }
-    // the flowing edges, in input order (contribs sum in that order)
-    val live = edges.indices.filter { k =>
+    // the flowing edges, in canonical order (contribs sum in that order)
+    val live = order.filter { k =>
       val (s, d) = edges(k)
       wsum(s) > 0 && idx.contains(s) && idx.contains(d)
-    }.toArray
+    }
     val from = live.map(k => idx(edges(k)._1))
     val to = live.map(k => idx(edges(k)._2))
     val lw = live.map(w(_))
     val lsum = live.map(k => wsum(edges(k)._1))
-    val hasOut = vs.map(v => wsum.getOrElse(v, 0.0) > 0)
-    var rank = p.clone()
+    val hasOut = ids.map(v => wsum.getOrElse(v, 0.0) > 0)
+    val pv = ids.map(p)
+    var rank = pv.clone()
     var it = 0
     while (it < iters) {
       val contrib = new Array[Double](n)
@@ -300,19 +333,19 @@ private[graft] object Local {
       val next = new Array[Double](n)
       i = 0
       while (i < n) {
-        next(i) = (1 - damping) * p(i) + damping * (contrib(i) + dm * p(i) / mass)
+        next(i) = (1 - damping) * pv(i) + damping * (contrib(i) + dm * pv(i) / mass)
         i += 1
       }
       rank = next
       it += 1
     }
-    vs.indices.map(i => (vs(i), rank(i))).toArray
+    ids.indices.map(i => (ids(i), rank(i))).toArray
   }
 
   /** HITS — [[Algorithms.hits]]: L1-normalized half-steps over the DEDUPED
-    * edge set; vertices = edge endpoints. */
+    * edge set, summed in (src, dst) order; vertices = edge endpoints. */
   def hits(edges: Array[(Long, Long)], iters: Int): Array[(Long, Double, Double)] = {
-    val e = edges.distinct
+    val e = canonicalOrder(edges, Array.emptyDoubleArray).map(edges).distinct
     val idx = new mutable.LongMap[Int]()
     val ids = new mutable.ArrayBuffer[Long]()
     def at(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
@@ -515,10 +548,11 @@ private[graft] object Local {
     * after landmark selection: forward σ-BFS from each landmark (exact
     * longs), then the backward dependency sweep
     * δ(p) = σ(p) · Σ_w (1 + δ(w)) / σ(w) over the level-(L−1) DAG parents.
-    * Returns Σ δ per vertex (caller scales by n/k and left-joins `vs`). */
+    * Edges are read in (src, dst) order. Returns Σ δ per vertex (the caller
+    * scales by n/k). */
   def betweennessDeltas(edges: Array[(Long, Long)], landmarks: Array[Long],
                         maxIter: Int): mutable.LongMap[Double] = {
-    val g = new Csr(edges, landmarks)
+    val g = new Csr(canonicalOrder(edges, Array.emptyDoubleArray).map(edges), landmarks)
     val dsum = new mutable.LongMap[Double]()
     val level = new Array[Int](g.n)
     val sigma = new Array[Long](g.n)

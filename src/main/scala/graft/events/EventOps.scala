@@ -525,7 +525,8 @@ object EventOps {
    * combinable (groupCols, rep) aggregation; R multiplies the scan, never
    * the state.
    *
-   * @return (groupCols…, rep INT, n_eff BIGINT = Σw, mean DOUBLE rounded 6)
+   * @return (groupCols…, rep INT, n_eff BIGINT = Σw, mean DOUBLE rounded 6;
+   *         NULL where n_eff = 0)
    */
   def bootstrapMeans(df: DataFrame, idCol: String, value: Column,
                      replicates: Int, groupCols: Seq[String] = Nil): DataFrame = {
@@ -542,8 +543,10 @@ object EventOps {
     exploded.withColumn("__u", u).withColumn("__w", w)
       .groupBy((groupCols :+ "rep").map(col): _*)
       .agg(sum(col("__w").cast("long")).as("n_eff"),
-        round(sum((col("__w") * col("__v")).cast("decimal(38,10)")).cast("double")
-          / sum(col("__w").cast("long")), 6).as("mean"))
+        // a replicate that draws total weight 0 has no mean: NULL, not an
+        // ANSI DIVIDE_BY_ZERO for the whole query
+        round(try_divide(sum((col("__w") * col("__v")).cast("decimal(38,10)")).cast("double"),
+          sum(col("__w").cast("long"))), 6).as("mean"))
   }
 
   /**

@@ -69,10 +69,18 @@ object CacheLifecycle {
     val spark = result.sparkSession
     if (spark.conf.getOption(RetainScratchKey).exists(_.toBoolean)) return result
     val target = result.queryExecution.analyzed
+    // The bus may still deliver executions that ran before this call (an
+    // iterative loop's rounds read the result's plan); one of them must not
+    // release the scratch while the first action runs, or that action fills
+    // caches no one releases. Executions are numbered in creation order: an
+    // action on `result` runs its own execution or one created from now on.
+    val own = result.queryExecution
+    val fromNow = spark.range(0).queryExecution.id
     val listener = new QueryExecutionListener {
       // listener-bus delivery is single-threaded per listener → plain var
       private var remaining = ExpiryBudget
       private def maybeRelease(qe: QueryExecution): Unit = {
+        if ((qe ne own) && qe.id < fromNow) return
         remaining -= 1
         val matched = qe.analyzed.exists(_.sameResult(target))
         if (remaining <= 0 || matched) {

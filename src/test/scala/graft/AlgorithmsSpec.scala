@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import graft.algorithms.{Algorithms, Local}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
 
@@ -12,11 +15,70 @@ import org.apache.spark.sql.functions.lit
 class AlgorithmsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** `f` with the driver-local gate forced off: the distributed loops run. */
-  private def distributed[A](f: => A): A = {
-    spark.conf.set("graft.localGraphMaxEdges", "0")
+  /** `f` with the driver-local gate's edge cap at `cap`. */
+  private def withGate[A](cap: Long)(f: => A): A = {
+    spark.conf.set("graft.localGraphMaxEdges", cap.toString)
     try f finally spark.conf.unset("graft.localGraphMaxEdges")
   }
+
+  /** `f` with the driver-local gate forced off: the distributed loops run. */
+  private def distributed[A](f: => A): A = withGate(0)(f)
+
+  /** The Spark jobs `f` submits, and its value: a listener counts the jobs
+    * that carry this call's local property; a marker job after `f` flushes
+    * the listener bus. */
+  private def jobsOf[A](f: => A): (Int, A) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach {
+          case "run" => counted.incrementAndGet()
+          case _ => flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "run")
+      val out = try f finally sc.setLocalProperty(key, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus not flushed")
+      (counted.get, out)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** RDDs persisted since `before`, less localCheckpoint blocks when
+    * `checkpoints` (lineage-truncated, reclaimed by the ContextCleaner on
+    * GC); the release listener fires async on the listener bus — poll. */
+  private def leakedSince(before: Set[Int], checkpoints: Boolean): Set[Int] = {
+    def leaked = spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !before(id) && !(checkpoints && rdd.isCheckpointed) => id
+    }.toSet
+    val deadline = System.currentTimeMillis() + 20000
+    while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    leaked
+  }
+
+  /** `result`'s rows and the Spark jobs of the call plus its first action,
+    * after checking that the action left no algorithm scratch cache behind
+    * and that a second action, without the caches, agrees. */
+  private def releasedWithJobs(result: => DataFrame, checkpoints: Boolean = false): (Int, Set[Row]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (jobs, (df, first)) = jobsOf { val df = result; (df, df.collect().toSet) }
+    val leaked = leakedSince(before, checkpoints)
+    assert(leaked.isEmpty, s"algorithm scratch not released: RDDs $leaked, " +
+      leaked.flatMap(spark.sparkContext.getPersistentRDDs.get).map(_.toDebugString).mkString("\n"))
+    assert(df.collect().toSet == first)
+    (jobs, first)
+  }
+
+  private def released(result: => DataFrame, checkpoints: Boolean = false): Set[Row] =
+    releasedWithJobs(result, checkpoints)._2
 
   /** `f` on both sides of the gate: under the default (toy graphs run the
     * driver-local loops), then with it forced off. */
@@ -67,6 +129,13 @@ class AlgorithmsSpec extends SparkSpec {
     val none = Algorithms.connectedComponents(vs, es.filter($"src" < 0))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(none == Map(7L -> 7L, 3L -> 3L, 9L -> 9L, 12L -> 12L, 40L -> 40L, 41L -> 41L))
+    // a NULL vertex id keeps its row and a NULL endpoint joins nothing, on
+    // both sides of the gate (the driver-local side declines such inputs)
+    val nv = Seq(Some(1L), Some(2L), Some(5L), None).toDF("id")
+    val ne = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L))).toDF("src", "dst")
+    val (nl, nd) = bothSides(Algorithms.connectedComponents(nv, ne).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toSet)
+    assert(nl == nd && nl == Set(Some(1L) -> Some(1L), Some(2L) -> Some(1L), Some(5L) -> Some(5L), None -> None))
   }
 
   test("wcc distributed rounds: the star-forest halting test stops where set equality did") {
@@ -347,28 +416,7 @@ class AlgorithmsSpec extends SparkSpec {
     // Each input stays short of the Cutter's first localCheckpoint (every 3
     // rounds), so every persisted frame — edge caches and iteration tips —
     // is a plain recomputable cache and the release must leave the session
-    // completely clean.
-    // RDDs persisted since `before`, less localCheckpoint blocks when
-    // `checkpoints` (lineage-truncated, reclaimed by the ContextCleaner on
-    // GC); the release listener fires async on the listener bus — poll
-    def leakedSince(before: Set[Int], checkpoints: Boolean): Set[Int] = {
-      def leaked = spark.sparkContext.getPersistentRDDs.collect {
-        case (id, rdd) if !before(id) && !(checkpoints && rdd.isCheckpointed) => id
-      }.toSet
-      val deadline = System.currentTimeMillis() + 20000
-      while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      leaked
-    }
-    def released(result: => DataFrame, checkpoints: Boolean = false): Set[Row] = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val df = result
-      val first = df.collect().toSet
-      val leaked = leakedSince(before, checkpoints)
-      assert(leaked.isEmpty, s"algorithm scratch not released: RDDs $leaked")
-      // a second action recomputes the same result without the caches
-      assert(df.collect().toSet == first)
-      first
-    }
+    // completely clean ([[released]]).
     // label propagation, iters = 1; distributed: the symmetrized edge
     // cache and both tips
     val vs = Seq(1L, 2L, 3L, 9L).toDF("id")
@@ -414,6 +462,89 @@ class AlgorithmsSpec extends SparkSpec {
       exhausted("local bfs")(Algorithms.bfs(
         (10L until 16L).map(i => (i, i + 1)).toDF("src", "dst"), Seq(10L).toDF("id"), maxIter = 1))
     assert(leaks.flatten.isEmpty, s"scratch not released on BudgetExhausted: ${leaks.flatten}")
+  }
+
+  test("driver-local calls: one bounded collect per input, at most 3 Spark jobs, no cache left") {
+    // the local side reads the edge frame and each id list once (no count,
+    // distinct or persist job) and builds its answer on the driver, so the
+    // answer's own collect runs no job
+    val vs = (0L to 6L).toDF("id")
+    val es = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    val from0 = Seq(0L).toDF("id")
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "bfs" -> (() => Algorithms.bfs(es, from0)),
+      "sssp" -> (() => Algorithms.sssp(es.withColumn("w", lit(1.5)), from0)),
+      "pageRank" -> (() => Algorithms.pageRank(vs, es, iters = 5)),
+      "connectedComponents" -> (() => Algorithms.connectedComponents(vs, es)))
+    for ((name, call) <- calls) {
+      val (jobs, rows) = releasedWithJobs(call())
+      assert(rows.nonEmpty, name)
+      assert(jobs <= 3, s"$name ran $jobs Spark jobs")
+    }
+  }
+
+  test("gate boundary: m edges run locally at a cap of m and distributed at m - 1") {
+    // a simple graph (no duplicates, self-loops or reverse pairs; every
+    // endpoint a vertex), so the raw, canonical and SCC edge sets all have
+    // m rows; 6 and 7 are isolated
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 3L), (1L, 4L))
+    val m = pairs.length.toLong
+    val vs = (0L to 7L).toDF("id")
+    val es = pairs.toDF("src", "dst")
+    val ws = pairs.map { case (s, d) => (s, d, (s * 3 + d) % 4 + 0.5) }.toDF("src", "dst", "w")
+    val from0 = Seq(0L).toDF("id")
+    def sides(name: String, cap: Long, call: => DataFrame): Set[Row] = {
+      val (local, l) = withGate(cap)(releasedWithJobs(call, checkpoints = true))
+      val (dist, d) = withGate(cap - 1)(releasedWithJobs(call, checkpoints = true))
+      // the declined side pays its loop's rounds on top of the same collects
+      assert(local < dist, s"$name: $local jobs at cap $cap, $dist at cap ${cap - 1}")
+      assert(l == d || name == "pageRank", s"$name: local $l, distributed $d")
+      if (name == "pageRank") {
+        val dm = d.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(l.size == d.size && l.forall(r => math.abs(r.getDouble(1) - dm(r.getLong(0))) < 1e-9),
+          s"pageRank: local $l, distributed $d")
+      }
+      l
+    }
+    sides("bfs", m, Algorithms.bfs(es, from0))
+    sides("sssp", m, Algorithms.sssp(ws, from0))
+    sides("pageRank", m, Algorithms.pageRank(vs, es, iters = 5))
+    val cc = sides("connectedComponents", m, Algorithms.connectedComponents(vs, es))
+    assert(cc.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      ((0L to 5L).map(_ -> 0L) ++ Seq(6L -> 6L, 7L -> 7L)).toMap)
+    sides("kCore", m, Algorithms.kCore(es, k = 2))
+    val scc = sides("scc", m, Algorithms.stronglyConnectedComponents(vs, es))
+    assert(scc.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 3L, 6L -> 6L, 7L -> 7L))
+    // isolated vertices and no edges: a cap of 0 is local, -1 declines
+    val none = sides("connectedComponents", 0,
+      Algorithms.connectedComponents(vs, es.filter(lit(false))))
+    assert(none.map(r => r.getLong(0) -> r.getLong(1)).toMap == (0L to 7L).map(v => v -> v).toMap)
+  }
+
+  test("driver-local double sums are bit-stable under repartitioned, shuffled input") {
+    // the local PageRank family and HITS sum in (src, dst, w) and id order,
+    // whatever order the collect returns; 0.1-multiple weights make the
+    // sums order-sensitive, and repeated (src, dst) pairs carry other weights
+    val rnd = new scala.util.Random(31)
+    val n = 40
+    val edges = Seq.fill(160)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong, (rnd.nextInt(9) + 1) * 0.1))
+    val ids = (0L until n.toLong).toList
+    def bits(df: DataFrame): Map[Long, Seq[Long]] = df.collect().map(r => r.getLong(0) ->
+      (1 until r.length).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i)))).toMap
+    def all(es: DataFrame, vs: DataFrame): Seq[Map[Long, Seq[Long]]] = Seq(
+      bits(Algorithms.pageRank(vs, es.select("src", "dst"), iters = 8)),
+      bits(Algorithms.pageRankWeighted(vs, es, iters = 8)),
+      bits(Algorithms.personalizedPageRank(vs, es.select("src", "dst"), Seq(3L, 0L, 9L).toDF("id"),
+        iters = 8)),
+      bits(Algorithms.hits(es.select("src", "dst"), iters = 4)))
+    val base = all(edges.toDF("src", "dst", "w"), ids.toDF("id"))
+    for (parts <- Seq(1, 7); seed <- Seq(1, 2)) {
+      val r = new scala.util.Random(seed)
+      val got = all(r.shuffle(edges).toDF("src", "dst", "w").repartition(parts),
+        r.shuffle(ids).toDF("id").repartition(parts))
+      assert(got == base, s"$parts partitions, shuffle seed $seed")
+    }
   }
 
   test("local per-source BFS: a row cap tripped with the frontier live at maxIter throws") {

@@ -272,6 +272,21 @@ class EventOpsSpec extends SparkSpec {
     assert(again.toMap == out.toMap)
   }
 
+  test("bootstrapMeans: a replicate drawing total weight 0 reads a NULL mean, not an error") {
+    // one-row groups: each replicate draws weight 0 with probability e^-1,
+    // so 3 groups x 8 replicates hold zero-weight draws; under the default
+    // (ANSI) conf they must not fail the query with DIVIDE_BY_ZERO
+    val rows = Seq((1L, "a", 2.5), (2L, "b", -1.0), (3L, "c", 7.0)).toDF("id", "g", "v")
+    val out = EventOps.bootstrapMeans(rows, "id", col("v"), replicates = 8, Seq("g")).collect()
+    assert(out.length == 24)
+    val v = Map("a" -> 2.5, "b" -> -1.0, "c" -> 7.0)
+    val (empty, drawn) = out.partition(_.getLong(2) == 0L)
+    assert(empty.nonEmpty && drawn.nonEmpty)
+    assert(empty.forall(_.isNullAt(3)))
+    // a one-row group's weighted mean is its value whatever the weight
+    assert(drawn.forall(r => r.getDouble(3) == v(r.getString(0))))
+  }
+
   test("aggApply: any split point folds to the full rebuild, bit-for-bit") {
     val rows = (1 to 200).map(i =>
       ((i % 7).toString, i, if (i % 13 == 0) None else Some(i * 0.37 - 20)))

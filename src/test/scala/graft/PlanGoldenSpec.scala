@@ -59,9 +59,12 @@ class PlanGoldenSpec extends SparkSpec {
     "cy_multi_return" -> "BroadcastHashJoin=4 ShuffleExchange=1 BroadcastExchange=4 ReusedExchange=0",
     // r13: CC's local union-find gate replaced the star-contraction loop's
     // shuffles on the distillate-sized pair graphs (scc likewise via the
-    // residual-tail Tarjan gate) — deliberate plan improvements
-    "dedup_apply" -> "BroadcastHashJoin=24 SortMergeJoin=1 ShuffleExchange=12 BroadcastExchange=24 ReusedExchange=0",
-    "dedup_clusters" -> "BroadcastHashJoin=2 ShuffleExchange=1 BroadcastExchange=2 ReusedExchange=0",
+    // residual-tail Tarjan gate) — deliberate plan improvements. Since the
+    // gate builds CC's whole answer on the driver, the vertex distinct and
+    // the join back onto the vertices left the plans of every CC caller
+    // (dedup_apply, dedup_clusters, dedup_keep_best, wcc_apply).
+    "dedup_apply" -> "BroadcastHashJoin=6 SortMergeJoin=1 ShuffleExchange=3 BroadcastExchange=6 ReusedExchange=0",
+    "dedup_clusters" -> "BroadcastHashJoin=1 ShuffleExchange=0 BroadcastExchange=1 ReusedExchange=0",
     "graph_sigma" -> "ShuffleExchange=0 BroadcastExchange=0 ReusedExchange=0",
     // r14: the distillate gates extended to the whole iterative family —
     // hits/kcore now root at a driver-local result (no joins/exchanges at
@@ -79,10 +82,10 @@ class PlanGoldenSpec extends SparkSpec {
     // read no longer carries the write's match (DETACH DELETE's removal
     // legs and SET's id join are broadcasts of a local relation)
     "cy_delete" -> "BroadcastHashJoin=5 ShuffleExchange=3 BroadcastExchange=5 ReusedExchange=0",
-    "dedup_keep_best" -> "BroadcastHashJoin=3 ShuffleExchange=2 BroadcastExchange=3 ReusedExchange=0",
+    "dedup_keep_best" -> "BroadcastHashJoin=2 ShuffleExchange=1 BroadcastExchange=2 ReusedExchange=0",
     "mxm_minplus" -> "BroadcastHashJoin=1 ShuffleExchange=3 BroadcastExchange=1 ReusedExchange=0",
     "sssp_minplus" -> "ShuffleExchange=0 BroadcastExchange=0 ReusedExchange=0",
-    "wcc_apply" -> "BroadcastHashJoin=16 ShuffleExchange=10 BroadcastExchange=16 ReusedExchange=0",
+    "wcc_apply" -> "BroadcastHashJoin=3 ShuffleExchange=1 BroadcastExchange=3 ReusedExchange=0",
     // the Cypher forms that share GraphDB's query tail, WITH-stage loop
     // and SET/MERGE rewrites
     "cy_merge" -> "ShuffleExchange=1 BroadcastExchange=0 ReusedExchange=0",
