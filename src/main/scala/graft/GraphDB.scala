@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.graph.{GraphStats, PropertyGraph}
+import graft.graph.{Delta, GraphStats, PropertyGraph}
+import graft.graph.Delta.freeze
 import graft.cypher.{Ast, CypherParser, ParseException, WriteConflictException}
 import graft.plans.{LogicNode, Pattern, Planner}
 import graft.operators.PatternExec
@@ -27,8 +28,10 @@ import graft.operators.PatternExec
  *  - SET items (SET and MERGE's ON CREATE / ON MATCH SET): `checkSetItem`
  *    and `setColumn`
  *  - MERGE's `(src, dst, etype)` anti-join: `unstoredEdges`
- *  - the match of a write statement: `matchFrame`; the delta it adds,
- *    removes or rewrites is materialized once by `freeze`
+ *  - the match of a write statement: `matchFrame`; the rows it adds or
+ *    removes are materialized once by `Delta.freeze`
+ *  - a write's version: its tables are `PropertyGraph.apply` of the
+ *    write's [[graft.graph.Delta]], its stats `Delta.foldInto` the parent's
  * The AST walks live in [[graft.cypher.Ast]]: `children`/`collect` (one
  * walk behind `patAggs`, `patterns` and `fns`) and `Path.names`.
  */
@@ -40,26 +43,28 @@ object GraphDB {
   val DefaultShortestMaxSources = 1000000L
 }
 
-final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = None,
-                    statsThunk: Option[() => GraphStats] = None) {
+final class GraphDB private (val graph: PropertyGraph, parent: Option[(GraphDB, Delta)]) {
 
-  /** `precomputed` wins, then `statsThunk` (a LAZY derivation — [[execute]]
-    * uses it to update stats incrementally from the pre-mutation snapshot
-    * and the write's frozen delta, the reference's per-insert StatsStore
-    * contract without a graph scan), else a full distributed recompute. */
+  /** A GraphDB over `graph`, whose stats are one full distributed count. */
+  def this(graph: PropertyGraph) = this(graph, None)
+
+  /** Computed on first plan. A GraphDB built directly on a graph counts its
+    * tables; a version that [[execute]] derived folds its write's delta into
+    * its parent's stats ([[Delta.foldInto]]), the reference's per-insert
+    * StatsStore contract (ConcurrentDirectedGraph.scala:121-124,151-152)
+    * without a graph scan. Either way they are exact for this version's
+    * graph, and the parent keeps its own snapshot, so in-flight plans are
+    * unaffected. */
   lazy val stats: GraphStats =
-    precomputed.orElse(statsThunk.map(_())).getOrElse(graph.computeStats())
+    parent.fold(graph.computeStats()) { case (p, d) => d.foldInto(p.stats, p.graph.nodes) }
 
-  /** Mutation at the GraphDB level returns a NEW GraphDB whose stats are
-    * recomputed (lazily, on first plan) over the mutated graph — the
-    * freshness contract the reference keeps by updating StatsStore per
-    * insert (ConcurrentDirectedGraph.scala:121-124,151-152). The old
-    * GraphDB keeps its snapshot, so in-flight plans are unaffected; going
-    * through `graph.addNodes` directly and reusing the old GraphDB is the
-    * one way to plan against stale stats, and PropertyGraph's scaladoc
-    * says to rebuild. */
-  def addNodes(rows: DataFrame): GraphDB = new GraphDB(graph.addNodes(rows))
-  def addEdges(rows: DataFrame): GraphDB = new GraphDB(graph.addEdges(rows))
+  /** Bulk appends: a new GraphDB over this graph plus `rows` (missing
+    * property columns null-fill), whose stats are a full recompute. */
+  def addNodes(rows: DataFrame): GraphDB = new GraphDB(graph(Delta(addedNodes = Some(rows))))
+  def addEdges(rows: DataFrame): GraphDB = new GraphDB(graph(Delta(addedEdges = Some(rows))))
+
+  /** The version `d` derives from this one. */
+  private def write(d: Delta): GraphDB = new GraphDB(graph(d), Some((this, d)))
 
   def execute(text: String): GraphDB = execute(text, Map.empty[String, Any])
 
@@ -92,13 +97,13 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     *
     * A version is its parent plus a frozen delta: `execute` runs the
     * write's match once, eagerly, and materializes what the write adds,
-    * removes or rewrites (see [[freeze]]); the new version's tables join or
-    * union the parent's tables with that delta, so no later read replays
-    * an earlier write's match and a version's plan does not grow with its
-    * depth. A match error therefore surfaces at `execute`, not at the
-    * first read. A delta too large to broadcast is a local checkpoint,
-    * whose blocks live as long as a version that references it is
-    * reachable; a small one holds no cache. */
+    * removes or rewrites (a [[graft.graph.Delta]], see [[Delta.freeze]]);
+    * the new version's tables join or union the parent's tables with it,
+    * so no later read replays an earlier write's match. A match error
+    * therefore surfaces at `execute`, not at the first read. A delta too
+    * large to broadcast is a local checkpoint, whose blocks live as long as
+    * a version that references it is reachable; a small one holds no
+    * cache. */
   def execute(text: String, params: Map[String, Any]): GraphDB = {
     val stmt = CypherParser.parseWrite(text, params)
     if (stmt.sets.nonEmpty) runSet(stmt)
@@ -110,30 +115,6 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
   private def matchFrame(stmt: Ast.WriteStmt, items: Seq[Ast.Ret]): DataFrame =
     runQuery(Ast.Query(stmt.matchPaths, Seq.empty, stmt.where, items,
       distinct = true, Seq.empty, None))
-
-  /** A write's delta (the rows it adds, removes or rewrites), evaluated
-    * once so that the new version's tables are the parent's joined or
-    * unioned with a materialized relation, not a plan that replays the
-    * write's match on every later read. One bounded collect decides: a
-    * delta within `spark.sql.autoBroadcastJoinThreshold` by Catalyst's own
-    * estimate for a local relation ((8 + row default size) bytes a row)
-    * becomes one. Its statistics are exact, so every join against it is a
-    * broadcast that leaves the base tables unshuffled, and it holds no
-    * cache. A larger delta, or any delta under a threshold ≤ 0, is an eager
-    * `localCheckpoint` instead, whose blocks live as long as a version that
-    * references them is reachable. A checkpoint alone would not serve the
-    * small case: it keeps its origin's size estimate, so joins against a
-    * one-row delta would still shuffle the base tables. */
-  private def freeze(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxRows = spark.sessionState.conf.autoBroadcastJoinThreshold / (8L + df.schema.defaultSize)
-    if (maxRows > 0) {
-      val rows = df.limit((maxRows min (Int.MaxValue - 1L)).toInt + 1).collect()
-      if (rows.length <= maxRows)
-        return spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    }
-    df.localCheckpoint(eager = true)
-  }
 
   /** The rows of `df` whose (src, dst, etype) key is not stored yet —
     * MERGE's idempotent edge append (re-running it appends nothing). The
@@ -221,9 +202,9 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       }
       df
     }
-    var pg = graph
     var idOf = Map.empty[String, Long]
     var createdNodes = Seq.empty[Ast.CreateNode]
+    var addedNodes = Option.empty[DataFrame]
     if (stmt.nodes.nonEmpty) {
       val explicitId: Ast.CreateNode => Option[Long] =
         n => n.props.collectFirst { case ("id", v: Long) => v; case ("id", v: Int) => v.toLong }
@@ -282,47 +263,22 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           idOf += n.name -> id
           (id, n)
         }
-        pg = pg.addNodes(literalDf(
+        addedNodes = Some(literalDf(
           Seq("id" -> LongType, "label" -> StringType),
           withIds.map { case (id, n) => Seq[Any](id, n.label) },
           withIds.map(_._2.props.filterNot(_._1 == "id")), graph.nodes))
       }
     }
-    val labelOfCreated = stmt.nodes.map(n => n.name -> n.label).toMap
     val (matchEdges, literalEdges) = stmt.edges.partition(
       e => matchBound(e.src) || matchBound(e.dst))
-    var literalEdgeDf: Option[DataFrame] = None
+    var addedEdges = Seq.empty[DataFrame]
     if (literalEdges.nonEmpty) {
       val df0 = literalDf(
         Seq("src" -> LongType, "dst" -> LongType, "etype" -> StringType),
         literalEdges.map(e => Seq[Any](idOf(e.src), idOf(e.dst), e.etype)),
         literalEdges.map(_.props), graph.edges)
       // MERGE: only the keys not already stored are appended (idempotent)
-      val df = if (!stmt.merge) df0 else freeze(unstoredEdges(df0))
-      literalEdgeDf = Some(df)
-      pg = pg.addEdges(df)
-    }
-    // match-created edges: the statement carries the endpoint labels when
-    // the pattern declares them, so the stats delta is knowable without a
-    // graph scan — only the created-pair COUNT needs a job, deferred into
-    // the stats thunk, over the frozen appended rows.
-    val matchLabel: Map[String, Option[String]] = stmt.matchPaths
-      .flatMap(_.nodes.flatMap(np => np.name.map(_ -> np.label))).toMap
-    var edgeDeltas = Seq.empty[(Option[String], String, Option[String], () => Long)]
-    if (literalEdges.nonEmpty) {
-      // labels of BOTH endpoints come from the statement (merge-matched
-      // nodes declared theirs too). Under MERGE the per-group created count
-      // is whatever survived the anti-join — one collect of the frozen
-      // frame, shared by every group's thunk.
-      lazy val kept: Set[(Long, Long, String)] = literalEdgeDf.get
-        .select("src", "dst", "etype").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      literalEdges.groupBy(e => (labelOfCreated(e.src), e.etype, labelOfCreated(e.dst)))
-        .foreach { case ((sl, t, dl), es) =>
-          edgeDeltas :+= ((Some(sl), t, Some(dl),
-            if (!stmt.merge) () => es.size.toLong
-            else () => es.count(e => kept((idOf(e.src), idOf(e.dst), e.etype))).toLong))
-        }
+      addedEdges :+= (if (!stmt.merge) df0 else freeze(unstoredEdges(df0)))
     }
     if (matchEdges.nonEmpty) {
       val ends = matchEdges.flatMap(e => Seq(e.src, e.dst)).distinct
@@ -336,16 +292,14 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
           val t = graph.edges.schema.find(_.name == k).map(_.dataType)
           df.withColumn(k, t.fold(lit(norm(v)))(tt => lit(norm(v)).cast(tt)))
         }
-        val appended = freeze(if (!stmt.merge) withProps else unstoredEdges(withProps))
-        pg = pg.addEdges(appended)
-        edgeDeltas :+= ((matchLabel.getOrElse(e.src, None), e.etype,
-          matchLabel.getOrElse(e.dst, None), () => appended.count()))
+        addedEdges :+= freeze(if (!stmt.merge) withProps else unstoredEdges(withProps))
       }
     }
     // MERGE upsert clauses: each merge node takes ON CREATE SET when it was
     // created THIS statement, ON MATCH SET when it already existed — the
     // standard upsert. Values compile through the same per-row rewrite as
     // SET (own-property expressions); labels/ids are immutable.
+    var rewrite: DataFrame => DataFrame = identity
     if (stmt.onCreateSets.nonEmpty || stmt.onMatchSets.nonEmpty) {
       val createdNames = createdNodes.map(_.name).toSet
       def validate(items: Seq[Ast.SetItem], clause: String): Unit = items.foreach { s =>
@@ -358,63 +312,38 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       val applicable =
         stmt.onCreateSets.filter(s => createdNames(s.binding)) ++
           stmt.onMatchSets.filter(s => !createdNames(s.binding))
-      pg = pg.withNodes(applicable.foldLeft(pg.nodes)((df, s) =>
-        setColumn(df, df.schema, s, col("id") === idOf(s.binding))))
+      val ids = idOf
+      rewrite = nodes => applicable.foldLeft(nodes)((df, s) =>
+        setColumn(df, df.schema, s, col("id") === ids(s.binding)))
     }
-    // incremental stats (reference StatsStore per-insert updates,
-    // ConcurrentDirectedGraph.scala:121-124,151-152): exact when every
-    // created edge's endpoint labels are statically known; otherwise fall
-    // back to the lazy full recompute. The thunk forces the RECEIVER's
-    // stats (itself lazy) and folds the deltas in — no scan of the mutated
-    // graph, which at 100 TB turns a CREATE from a full-corpus stats pass
-    // into one bounded count of the created pairs.
-    val exact = edgeDeltas.forall { case (sl, _, dl, _) => sl.isDefined && dl.isDefined }
-    val thunk: Option[() => GraphStats] =
-      if (!exact) None
-      else Some(() => {
-        val base = stats
-        def bump[K](m: Map[K, Long], k: K, by: Long): Map[K, Long] =
-          if (by == 0) m else m.updated(k, m.getOrElse(k, 0L) + by)
-        var nc = base.nodeCounts
-        createdNodes.foreach(n => nc = bump(nc, n.label, 1L))
-        var ec = base.edgeCounts
-        var tc = base.tripletCounts
-        var eTotal = base.edgesTotal
-        edgeDeltas.foreach { case (sl, t, dl, cnt) =>
-          val c = cnt()
-          ec = bump(ec, t, c)
-          tc = bump(tc, (sl.get, t, dl.get), c)
-          eTotal += c
-        }
-        GraphStats(base.nodesTotal + createdNodes.size, eTotal, nc, ec, tc)
-      })
-    new GraphDB(pg, statsThunk = thunk)
+    write(Delta(addedNodes, addedEdges.reduceOption(_.unionByName(_, allowMissingColumns = true)),
+      rewrite = rewrite))
   }
 
   /** `MATCH … SET b.prop = expr (, …)`: a distributed column rewrite —
     * the frozen matched ids left-join the node table, each SET prop becomes
     * `when(matched, value).otherwise(old)` (new columns null-fill outside
     * the match). The value expression may read the binding's OWN joined
-    * property columns; stats are unchanged by construction (labels and
-    * topology untouched), so the new GraphDB reuses the receiver's. */
+    * property columns. The delta has no rows (labels and topology are
+    * untouched), so the new version's stats are the receiver's. */
   private def runSet(stmt: Ast.WriteStmt): GraphDB = {
     stmt.sets.foreach(checkSetItem(_, "SET"))
     val bindings = stmt.sets.map(_.binding).distinct
     val m = freeze(matchFrame(stmt, bindings.map(Ast.Ret(_))))
-    var nodesDf = graph.nodes
-    bindings.foreach { b =>
+    val idsOf = bindings.map { b =>
       // m is DISTINCT over all the bindings, so one binding's ids are
       // distinct by themselves only when it is the sole binding
       val ids0 = m.select(col(b).as("__set_id"))
-      val ids = if (bindings.lengthIs == 1) ids0 else freeze(ids0.dropDuplicates())
+      b -> (if (bindings.lengthIs == 1) ids0 else freeze(ids0.dropDuplicates()))
+    }
+    write(Delta(rewrite = nodes => idsOf.foldLeft(nodes) { case (nodesDf, (b, ids)) =>
       val stored = nodesDf.schema
       // REMOVE (SET to null) of an absent property is a no-op (openCypher)
       val items = stmt.sets.filter(s => s.binding == b &&
         !(s.value == Ast.ELit(null) && !stored.fieldNames.contains(s.prop)))
-      nodesDf = items.foldLeft(nodesDf.join(ids, nodesDf("id") === ids("__set_id"), "left"))(
+      items.foldLeft(nodesDf.join(ids, nodesDf("id") === ids("__set_id"), "left"))(
         (df, s) => setColumn(df, stored, s, col("__set_id").isNotNull)).drop("__set_id")
-    }
-    new GraphDB(graph.withNodes(nodesDf), statsThunk = Some(() => stats))
+    }))
   }
 
   /** `MATCH … [DETACH] DELETE x (, …)`: distributed anti-join removal.
@@ -422,10 +351,9 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
     * the pattern's stored orientation (undirected matches remove both); a
     * node target removes the matched ids — refusing (openCypher) when
     * relationships would be orphaned unless DETACH, which removes the
-    * incident edges too. Stats update INCREMENTALLY (base − deltas): the
-    * deleted rows' label distribution is measured by joins against the
-    * removed set only — work ∝ |deleted|, never a rescan of the surviving
-    * graph (the CREATE path's per-insert StatsStore contract, mirrored). */
+    * incident edges too. The delta's frozen removed rows carry the
+    * multiplicity the stats fold needs, so no stats path rescans the
+    * parent's edge table. */
   private def runDelete(stmt: Ast.WriteStmt): GraphDB = {
     // relationship name → (srcBinding, relPat, dstBinding), walking each path
     val relInfo: Map[String, (Option[String], Ast.RelPat, Option[String])] =
@@ -462,73 +390,27 @@ final class GraphDB(val graph: PropertyGraph, precomputed: Option[GraphStats] = 
       Ast.Ret(r, agg = Some("startnode"), alias = Some(s"__del_${r}_s")),
       Ast.Ret(r, agg = Some("endnode"), alias = Some(s"__del_${r}_d")),
       Ast.Ret(r, agg = Some("type"), alias = Some(s"__del_${r}_t"))))
-    // removal keys and ids feed only anti- and semi-joins, which ignore
-    // duplicates: no dedup of the frozen match
+    // removal keys and ids feed only anti-joins and membership tests,
+    // which ignore duplicates: no dedup of the frozen match
     val m = freeze(matchFrame(stmt, relRets ++ nodeTargets.map(Ast.Ret(_))))
-    var pg = graph
-    var removedKeys = Seq.empty[DataFrame] // (src, dst, etype) removed keys
-    var removedIds: Option[DataFrame] = None
-    relTargets.foreach { r =>
-      val keys = m.select(col(s"__del_${r}_s").as("src"),
-        col(s"__del_${r}_d").as("dst"), col(s"__del_${r}_t").as("etype"))
-      pg = pg.removeEdges(keys)
-      removedKeys :+= keys
+    val key = Seq(col("src"), col("dst"), col("etype"))
+    val keys = relTargets.map(r => m.select(col(s"__del_${r}_s").as("src"),
+      col(s"__del_${r}_d").as("dst"), col(s"__del_${r}_t").as("etype"))).reduceOption(_.unionByName(_))
+    val ids = nodeTargets.map(n => m.select(col(n).as("id"))).reduceOption(_.unionByName(_))
+    val incident = ids.map(i => col("src").isin(i) || col("dst").isin(i))
+    if (!stmt.detach) incident.foreach { inc =>
+      val kept = keys.fold(graph.edges)(k => graph.edges.join(k, Seq("src", "dst", "etype"), "left_anti"))
+      if (kept.where(inc).limit(1).count() > 0) throw new ParseException(
+        "DELETE would orphan relationships — use DETACH DELETE")
     }
-    if (nodeTargets.nonEmpty) {
-      val ids = nodeTargets.map(n => m.select(col(n).as("id"))).reduce(_.unionByName(_))
-      // one scan of the edge table: each edge key once per endpoint,
-      // semi-joined on the endpoint against the removed ids
-      val incident = pg.edges.select(col("src"), col("dst"), col("etype"),
-          explode(array(col("src"), col("dst"))).as("id"))
-        .join(ids, Seq("id"), "left_semi").drop("id")
-      if (!stmt.detach) {
-        if (incident.limit(1).count() > 0) throw new ParseException(
-          "DELETE would orphan relationships — use DETACH DELETE")
-      } else {
-        val inc = freeze(incident.dropDuplicates())
-        pg = pg.removeEdges(inc)
-        removedKeys :+= inc
-      }
-      pg = pg.removeNodes(ids)
-      removedIds = Some(ids)
-    }
-    // incremental stats: measure the REMOVED rows and subtract from the
-    // snapshot; zeroed entries drop so the result is structurally identical
-    // to a full recompute over the survivors. Labels are looked up only for
-    // the removed ids and the removed keys' endpoints (a frozen slice of the
-    // pre-delete node table); the removed keys semi-join the pre-delete edge
-    // table, so every stored copy of a key counts (multigraph multiplicity).
-    val thunk: () => GraphStats = () => {
-      val base = stats
-      val keys = removedKeys.reduceOption(_.unionByName(_))
-      val touched = (keys.toSeq.flatMap(k =>
-          Seq(k.select(col("src").as("id")), k.select(col("dst").as("id")))) ++ removedIds)
-        .reduce(_.unionByName(_))
-      val lab = freeze(graph.nodes.select(col("id"), col("label"))
-        .join(touched, Seq("id"), "left_semi"))
-      val tripDeltas: Seq[((String, String, String), Long)] = keys.fold(
-        Seq.empty[((String, String, String), Long)])(k =>
-          graph.edges.select("src", "dst", "etype")
-            .join(k, Seq("src", "dst", "etype"), "left_semi")
-            .join(lab.withColumnRenamed("id", "src").withColumnRenamed("label", "sl"), "src")
-            .join(lab.withColumnRenamed("id", "dst").withColumnRenamed("label", "dl"), "dst")
-            .groupBy("sl", "etype", "dl").count().collect()
-            .map(r => ((r.getString(0), r.getString(1), r.getString(2)), r.getLong(3))).toSeq)
-      val nodeDeltas: Seq[(String, Long)] = removedIds.fold(Seq.empty[(String, Long)])(ids =>
-        lab.join(ids, Seq("id"), "left_semi").groupBy("label").count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
-      var nc = base.nodeCounts; var ec = base.edgeCounts; var tc = base.tripletCounts
-      var eTot = base.edgesTotal; var nTot = base.nodesTotal
-      tripDeltas.foreach { case ((sl, t, dl), c) =>
-        ec = ec.updated(t, ec.getOrElse(t, 0L) - c)
-        tc = tc.updated((sl, t, dl), tc.getOrElse((sl, t, dl), 0L) - c)
-        eTot -= c
-      }
-      nodeDeltas.foreach { case (l, c) => nc = nc.updated(l, nc.getOrElse(l, 0L) - c); nTot -= c }
-      GraphStats(nTot, eTot,
-        nc.filter(_._2 != 0), ec.filter(_._2 != 0), tc.filter(_._2 != 0))
-    }
-    new GraphDB(pg, statsThunk = Some(thunk))
+    // one scan of the edge table freezes the stored rows that go, each copy
+    // once (a multigraph's doubled edge twice, an edge between two removed
+    // nodes or a self-loop once): the matched relationships and, under
+    // DETACH, every row incident to a removed node
+    val gone = (keys.map(k => struct(key: _*).isin(k)) ++
+      incident.filter(_ => stmt.detach)).reduceOption(_ || _)
+    write(Delta(removedIds = ids,
+      removedEdges = gone.map(p => freeze(graph.edges.select(key: _*).where(p)))))
   }
 
   def plan(cypher: String): LogicNode =

@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
  * declares that (src, dst, etype) has no duplicate rows — a multigraph keeps
  * it false and the query layer then pays a final duplicate-elimination it can
  * otherwise skip (set-semantics tracking in PatternExec).
+ *
+ * A graph is immutable. Every write, from a bulk `GraphDB.addNodes` to a
+ * Cypher DETACH DELETE, is one [[Delta]]; `apply(delta)` derives the next
+ * version's tables from these, and [[Delta.foldInto]] its statistics.
  */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
                                edgesDistinct: Boolean = false,
@@ -63,44 +67,26 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
 
   def cache(): PropertyGraph = copy(nodes = nodes.cache(), edges = edges.cache())
 
-  /** Batch append of vertices — the Spark-native analogue of the reference's
-    * `insertVertex` (ConcurrentDirectedGraph.scala:109-125): new rows are
-    * union'd immutably; id allocation is the loader's concern (natural keys
-    * or `monotonically_increasing_id` at ingest). Missing property columns
-    * null-fill. */
-  def addNodes(rows: DataFrame): PropertyGraph =
-    copy(nodes = nodes.unionByName(rows, allowMissingColumns = true))
-
-  /** Batch append of edges (reference `insertEdge`,
-    * ConcurrentDirectedGraph.scala:141-153). No transpose maintenance —
-    * reverse traversal swaps join keys instead. */
-  def addEdges(rows: DataFrame): PropertyGraph =
-    // appended rows may duplicate existing edges → conservatively demote.
-    // The dst-keyed copy unions the same rows (row-identity invariant;
-    // its bucketing benefit degrades to the appended fraction).
-    copy(edges = edges.unionByName(rows, allowMissingColumns = true), edgesDistinct = false,
-      edgesRev = edgesRev.map(_.unionByName(rows, allowMissingColumns = true)))
-
-  /** Batch removal of vertices by id — one distributed anti-join. The
-    * reference has no delete at all (its matrices only grow); this backs
-    * the write surface's DELETE/DETACH DELETE. Incident-edge handling is
-    * the CALLER's contract (GraphDB.execute refuses a non-DETACH delete
-    * that would orphan edges). `ids` is a one-column frame of node ids. */
-  def removeNodes(ids: DataFrame): PropertyGraph =
-    copy(nodes = nodes.join(
-      ids.select(col(ids.columns.head).as("id")), Seq("id"), "left_anti"))
-
-  /** Batch removal of edges by (src, dst, etype) key — anti-joins BOTH the
-    * primary table and the dst-keyed copy (row-identity invariant). */
-  def removeEdges(keys: DataFrame): PropertyGraph = {
-    val k = keys.select("src", "dst", "etype")
-    def anti(df: DataFrame) = df.join(k, Seq("src", "dst", "etype"), "left_anti")
-    copy(edges = anti(edges), edgesRev = edgesRev.map(anti))
+  /** The version `d` derives from this one — the only code that derives a
+    * version's tables from its parent's. In order: the removed edge rows
+    * anti-join the edge table and its dst-keyed copy (row-identity
+    * invariant) on (src, dst, etype), the removed ids anti-join the node
+    * table, the appended rows union in by name (missing property columns
+    * null-fill; appended edges may duplicate stored ones, so `edgesDistinct`
+    * drops), and the rewrite runs over the resulting node table. The
+    * reference appends in place (`insertVertex`/`insertEdge`,
+    * ConcurrentDirectedGraph.scala:109-153) and never deletes; id
+    * allocation and the refusal of orphaned edges are the caller's. */
+  def apply(d: Delta): PropertyGraph = {
+    val key = Seq("src", "dst", "etype")
+    def edgesOf(df: DataFrame) = {
+      val kept = d.removedEdges.fold(df)(r => df.join(r.select(key.map(col): _*), key, "left_anti"))
+      d.addedEdges.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
+    }
+    val kept = d.removedIds.fold(nodes)(ids => nodes.join(ids.select("id"), Seq("id"), "left_anti"))
+    PropertyGraph(d.rewrite(d.addedNodes.fold(kept)(kept.unionByName(_, allowMissingColumns = true))),
+      edgesOf(edges), edgesDistinct && d.addedEdges.isEmpty, edgesRev.map(edgesOf))
   }
-
-  /** Wholesale node-table replacement (SET's column rewrite). The dst-keyed
-    * edge copy is untouched — SET never changes topology. */
-  def withNodes(newNodes: DataFrame): PropertyGraph = copy(nodes = newNodes)
 
   /** Point lookup (reference `getV`, ConcurrentDirectedGraph.scala:104). */
   def node(id: Long): DataFrame = nodes.filter(col("id") === lit(id))

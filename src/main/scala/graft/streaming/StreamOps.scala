@@ -652,15 +652,16 @@ object StreamOps {
       .start()
 
   /** Base graph + all edge increments landed in `lakePath` (empty lake →
-    * the base unchanged). Each call reads the CURRENT listing — a new
-    * GraphDB per refresh, stats recomputed lazily. */
+    * the base unchanged), appended through [[graft.GraphDB.addEdges]]. Each
+    * call reads the CURRENT listing — a new GraphDB per refresh, whose stats
+    * are one full recompute on first plan. */
   def loadIngested(spark: SparkSession, base: graft.graph.PropertyGraph,
                    lakePath: String): graft.GraphDB = {
     val dirs = new java.io.File(lakePath).listFiles()
     if (dirs == null || dirs.isEmpty) new graft.GraphDB(base)
     else {
       val inc = spark.read.parquet(lakePath).drop("batch_id")
-      new graft.GraphDB(base.addEdges(inc))
+      new graft.GraphDB(base).addEdges(inc)
     }
   }
 

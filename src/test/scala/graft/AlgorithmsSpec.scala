@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import graft.algorithms.{Algorithms, Local}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
 
@@ -23,34 +20,6 @@ class AlgorithmsSpec extends SparkSpec {
 
   /** `f` with the driver-local gate forced off: the distributed loops run. */
   private def distributed[A](f: => A): A = withGate(0)(f)
-
-  /** The Spark jobs `f` submits, and its value: a listener counts the jobs
-    * that carry this call's local property; a marker job after `f` flushes
-    * the listener bus. */
-  private def jobsOf[A](f: => A): (Int, A) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobs"
-    val counted = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach {
-          case "run" => counted.incrementAndGet()
-          case _ => flushed.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "run")
-      val out = try f finally sc.setLocalProperty(key, "flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus not flushed")
-      (counted.get, out)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** RDDs persisted since `before`, less localCheckpoint blocks when
     * `checkpoints` (lineage-truncated, reclaimed by the ContextCleaner on

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cypher.{Ast, CypherParser}
-import graft.graph.PropertyGraph
+import graft.graph.{Delta, PropertyGraph}
 import graft.plans._
 
 /**
@@ -949,9 +949,9 @@ class CypherSpec extends SparkSpec {
 
   test("mutation: addNodes/addEdges visible to subsequent queries") {
     import spark.implicits._
-    val g1 = diamond
-      .addNodes(Seq((5L, "C")).toDF("id", "label"))
-      .addEdges(Seq((2L, 5L, "Y")).toDF("src", "dst", "etype"))
+    val g1 = diamond(Delta(
+      addedNodes = Some(Seq((5L, "C")).toDF("id", "label")),
+      addedEdges = Some(Seq((2L, 5L, "Y")).toDF("src", "dst", "etype"))))
     val got = new GraphDB(g1).query("MATCH (b:B)-[:Y]->(c:C) RETURN c")
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(4L, 5L))
@@ -1342,6 +1342,95 @@ class CypherSpec extends SparkSpec {
     // DETACH DELETE removed p2 and its four incident edge rows (the doubled
     // one twice)
     assert(local(1)._3.size == chainGraph.edges.count() - 4)
+  }
+
+  /** `chain` past depth 9, adding the write kinds it lacks: an unlabelled
+    * `MATCH … CREATE`, a CREATE that doubles a stored edge, a relationship
+    * DELETE of both copies, a literal CREATE and a literal MERGE. */
+  private val longChain: Seq[(String, String)] = chain ++ Seq(
+    ("MATCH (a:supplier)-[:SUPPLIES]->(b) CREATE (a)-[:ALT]->(b)",
+      "MATCH (a:supplier {name: 's1'})-[:ALT]->(b) RETURN b"),
+    ("MATCH (s:supplier {name: 's2'}), (p:part {name: 'p3'}) CREATE (s)-[:SUPPLIES]->(p)",
+      "MATCH (s:supplier {name: 's2'})-[:SUPPLIES]->(p:part) RETURN p"),
+    ("MATCH (s:supplier)-[r:SUPPLIES]->(p:part {name: 'p3'}) DELETE r",
+      "MATCH (s:supplier)-[:SUPPLIES]->(p:part {name: 'p3'}) RETURN s"),
+    ("CREATE (x:customer {name: 'c9', value: 9.0})-[:LIKES]->(y:part {name: 'p9', value: 9.5})",
+      "MATCH (c:customer {name: 'c9'})-[:LIKES]->(p:part) RETURN p"),
+    ("MERGE (x:customer {name: 'c9'})-[:LIKES]->(y:part {name: 'p1'})",
+      "MATCH (c:customer {name: 'c9'})-[:LIKES]->(p:part) RETURN p"),
+    ("MATCH (c:customer) WHERE c.name = 'c2' SET c.value = 1.5",
+      "MATCH (c:customer {name: 'c2'}) RETURN c.value"))
+
+  // optimized-plan nodes of the SET check at each depth of `longChain` over
+  // the parquet fixture: each write still stacks its anti-join, union or
+  // rewrite on its parent's plan (the net-delta fold is to flatten this)
+  private val chainPlanGolden: Map[Int, Int] = Map(1 -> 21, 2 -> 28, 3 -> 28, 4 -> 28, 5 -> 36,
+    6 -> 36, 7 -> 36, 8 -> 36, 9 -> 53, 10 -> 53, 11 -> 64)
+
+  test("long write chain: the check's plan size per depth; stats stay exact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-long-chain").toString
+    chainGraph.nodes.write.parquet(s"$dir/nodes")
+    chainGraph.edges.write.parquet(s"$dir/edges")
+    val base = PropertyGraph(spark.read.parquet(s"$dir/nodes"), spark.read.parquet(s"$dir/edges"))
+    val check = "MATCH (c:customer {name: 'c2'}) RETURN c.value"
+    def versions(): Seq[GraphDB] = longChain.scanLeft(new GraphDB(base))(_ execute _._1).tail
+    val sizes = versions().zipWithIndex.map { case (db, i) =>
+      assert(db.stats == new GraphDB(db.graph).stats, s"depth ${i + 1}")
+      val rows = db.query(longChain(i)._2).collect().map(_.toSeq.mkString(",")).sorted.toSeq
+      (i + 1, db.query(check).queryExecution.optimizedPlan.collect { case n => n }.size, rows)
+    }
+    assert(sizes.map(_._3) == Seq(Seq("42.5"), Seq(), Seq("3"), Seq("22"), Seq("7.25"),
+      Seq("20"), Seq("22"), Seq(), Seq("24"), Seq("20", "24"), Seq("1.5")))
+    val current = sizes.map(s => s._1 -> s._2).toMap
+    if (sys.env.get("GRAFT_PLAN_DUMP").contains("1"))
+      println(current.toSeq.sorted.map { case (d, n) => s"$d -> $n" }.mkString("CHAINGOLD Map(", ", ", ")"))
+    else assert(current == chainPlanGolden, s"check plan nodes by depth moved: $current " +
+      "(rerun with GRAFT_PLAN_DUMP=1 if intentional)")
+    withoutBroadcast(versions().zipWithIndex.foreach { case (db, i) =>
+      assert(db.stats == new GraphDB(db.graph).stats, s"depth ${i + 1}, checkpointed")
+    })
+  }
+
+  /** `f` with `spark.sql.autoBroadcastJoinThreshold` at -1: every frozen
+    * delta and label lookup is a checkpoint, not a local relation. */
+  private def withoutBroadcast[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("write stats: exact for every write kind, and cheap to force") {
+    val db0 = new GraphDB(chainGraph.cache())
+    db0.stats
+    // (write, most jobs forcing its version's stats may run)
+    val writes: Seq[(String, Option[Int])] = Seq(
+      "MATCH (s:supplier)-[r:SUPPLIES]->(p:part {name: 'p2'}) DELETE r" -> Some(6),
+      "MATCH (p:part {name: 'p2'}) DETACH DELETE p" -> Some(6),
+      "MATCH (a:supplier)-[:SUPPLIES]->(b) CREATE (a)-[:ALT]->(b)" -> Some(6),
+      "MATCH (c:customer) WHERE c.name = 'c2' SET c.value = 42.5" -> Some(0),
+      "CREATE (x:customer {name: 'c9', value: 9.0})-[:LIKES]->(y:part {name: 'p9', value: 9.5})" -> None,
+      "MERGE (x:customer {name: 'c1'})-[:LIKES]->(y:part {name: 'p3'})" -> None)
+    writes.foreach { case (w, bound) =>
+      val db = db0.execute(w)
+      val (jobs, stats) = jobsOf(db.stats)
+      bound.foreach(b => assert(jobs <= b, s"$jobs jobs to force the stats after: $w"))
+      assert(stats == new GraphDB(db.graph).stats, w)
+    }
+  }
+
+  test("DELETE: an edge to a node with no node row leaves exact stats") {
+    def deleteBoth(): Unit = {
+      val db0 = new GraphDB(PropertyGraph(
+        spark.createDataFrame(Seq((1L, "A"), (2L, "B"))).toDF("id", "label"),
+        spark.createDataFrame(Seq((1L, 2L, "X"), (1L, 9L, "X"))).toDF("src", "dst", "etype")))
+      db0.stats
+      val db1 = db0.execute("MATCH (a:A)-[r:X]->(b) DELETE r")
+      assert(db1.graph.edges.count() == 0)
+      assert(db1.stats == new GraphDB(db1.graph).stats)
+    }
+    deleteBoth()
+    withoutBroadcast(deleteBoth())
   }
 
   // --- round 8: pattern predicates, collect(), id()/type() ---

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,4 +24,32 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val SF: String = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `f` submits, and its value: a listener counts the jobs
+    * that carry this call's local property; a marker job after `f` flushes
+    * the listener bus. */
+  def jobsOf[A](f: => A): (Int, A) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach {
+          case "run" => counted.incrementAndGet()
+          case _ => flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "run")
+      val out = try f finally sc.setLocalProperty(key, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus not flushed")
+      (counted.get, out)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
