@@ -193,7 +193,8 @@ object Algorithms {
 
   /**
    * The frontier loop of [[bfs]], [[bfsPerSource]], [[shortestPathCounts]],
-   * [[sssp]] and [[betweennessLandmark]]'s forward pass: frontier ⊕.⊗ A
+   * [[sssp]], [[betweennessLandmark]]'s forward pass and
+   * [[stronglyConnectedComponents]]' coloring and sweep: frontier ⊕.⊗ A
    * until the frontier is empty, where only the semiring changes (the
    * reference's BFS and SSSP, DocSpec.scala:31-101). Round `iter` computes
    * `step(frontier, state, iter)`; an empty result halts the loop, anything
@@ -206,19 +207,21 @@ object Algorithms {
    * take(1) fills only the partitions it scans, so the next round (or the
    * next cut) recomputes the rest from upstream.
    *
-   * Returns the fixpoint state and the frames to release with it: `scratch`
-   * plus both chains' pending tips. When the budget runs out they are
-   * released before [[BudgetExhausted]] is thrown.
+   * Every round, the empty one included, counts against `maxIter`, of which
+   * a caller sharing one budget across loops has already `spent` some.
+   * Returns the fixpoint state, the frames to release with it — `scratch`
+   * plus both chains' pending tips — and the rounds run. When the budget
+   * runs out they are released before [[BudgetExhausted]] is thrown.
    */
   private def frontierLoop(algo: String, seed: DataFrame, maxIter: Int, scratch: Seq[DataFrame],
-      absorb: (DataFrame, DataFrame) => DataFrame = _.unionByName(_))(
-      step: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Seq[DataFrame]) = {
+      absorb: (DataFrame, DataFrame) => DataFrame = _.unionByName(_), spent: Int = 0)(
+      step: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Seq[DataFrame], Int) = {
     val cutF = new Cutter; val cutS = new Cutter
     var state = seed
     var frontier = seed
     var iter = 0
     var done = false
-    while (iter < maxIter && !done) {
+    while (spent + iter < maxIter && !done) {
       frontier = cutF(step(frontier, state, iter), iter)
       if (frontier.count() == 0L) done = true
       else state = cutS(absorb(state, frontier), iter)
@@ -226,8 +229,14 @@ object Algorithms {
     }
     val held = scratch ++ cutF.leftovers ++ cutS.leftovers
     if (!done) { held.foreach(_.unpersist(false)); throw new BudgetExhausted(algo, maxIter) }
-    (state, held)
+    (state, held, iter)
   }
+
+  /** [[frontierLoop]]'s absorb for a frontier of improved values keyed by
+    * `id`: they replace those vertices' rows ([[sssp]]'s distances and
+    * [[stronglyConnectedComponents]]' colors). */
+  private def replaceById(state: DataFrame, improved: DataFrame): DataFrame =
+    state.join(improved.select("id"), Seq("id"), "left_anti").unionByName(improved)
 
   /**
    * One σ round of a per-source BFS over `e` (e_src, e_dst): σ sums over
@@ -254,7 +263,7 @@ object Algorithms {
     val local = onDriver(e, sources)(schemaOf("id" -> LongType, "level" -> IntegerType))(g =>
       Some(Local.bfsLevels(g.pairs, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
-    val (visited, held) = frontierLoop("bfs",
+    val (visited, held, _) = frontierLoop("bfs",
         sources.select(col("id")).distinct().withColumn("level", lit(0)), maxIter, Seq(e)) {
       (frontier, visited, iter) =>
         frontier.join(e, frontier("id") === e("src"))
@@ -286,7 +295,7 @@ object Algorithms {
         schemaOf("src" -> LongType, "id" -> LongType, "level" -> IntegerType))(g =>
       Local.bfsPerSource(g.pairs, g.ids(0), maxIter, LocalStateMaxRows))
     if (local.nonEmpty) return local.get
-    val (visited, held) = frontierLoop("bfsPerSource", sources.select(col("id")).distinct()
+    val (visited, held, _) = frontierLoop("bfsPerSource", sources.select(col("id")).distinct()
         .select(col("id").as("src"), col("id"), lit(0).as("level")), maxIter, Seq(e)) {
       (frontier, visited, iter) =>
         frontier.join(e, frontier("id") === col("e_src"))
@@ -428,7 +437,7 @@ object Algorithms {
     val landmarks = vs
       .select(col("id"), md5(col("id").cast("string").cast("binary")).as("h"))
       .orderBy(col("h"), col("id")).limit(kk.toInt).select("id")
-    val (visited, held) = frontierLoop("betweennessLandmark", landmarks
+    val (visited, held, _) = frontierLoop("betweennessLandmark", landmarks
         .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma")),
       maxIter, Seq(e))(sigmaStep(e))
     val vis = visited.persist(StorageLevel.MEMORY_AND_DISK)
@@ -492,18 +501,17 @@ object Algorithms {
    */
   def maximalIndependentSet(vertices: DataFrame, edges: DataFrame,
                             maxIter: Int = 50): DataFrame = {
-    // the gate's edge cache serves only the local loop
+    // self-loops dropped on BOTH legs: a reversed (v, v) would make v its
+    // own neighbour, and v could never win
     val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
     val local = onDriver(e0, vertices)(schemaOf("id" -> LongType, "in_mis" -> BooleanType))(g =>
       Some(Local.mis(g.ids(0), g.pairs, maxIter)))
     if (local.nonEmpty) return local.get
-    e0.unpersist(false)
     val vs = vertices.select(col("id")).distinct().localCheckpoint(true)
-    // self-loops dropped on BOTH legs: a reversed (v, v) would make v its
-    // own neighbour, and v could never win
-    val fwd = edges.select("src", "dst").filter(col("src") =!= col("dst"))
-    val sym = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    // symmetrized from the gate's edge cache, released once checkpointed
+    val sym = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint(true)
+    e0.unpersist(false)
     var active = vs
     val winnersAcc = scala.collection.mutable.Buffer[DataFrame]()
     var round = 0
@@ -577,7 +585,7 @@ object Algorithms {
     // rebuild of the frontier, while the shuffled join it replaces moves
     // only the cached 32-partition edge table — graph_sigma 11.9 → 17-22 s
     // at sf0.1. AQE already broadcast-converts when runtime sizes favor it.
-    val (visited, held) = frontierLoop("shortestPathCounts", sources.select(col("id")).distinct()
+    val (visited, held, _) = frontierLoop("shortestPathCounts", sources.select(col("id")).distinct()
         .select(col("id").as("src"), col("id"), lit(0).as("level"), lit(1L).as("sigma")),
       maxIter, Seq(e, e0))(sigmaStep(e))
     releaseOnFirstAction(visited, held: _*)
@@ -608,10 +616,9 @@ object Algorithms {
       g.weights.map(w => Local.sssp(g.pairs, w, g.ids(0), maxIter)))
     if (local.nonEmpty) return local.get
     // the improved set is the frontier; it replaces those vertices' rows
-    val (dist, held) = frontierLoop("sssp",
+    val (dist, held, _) = frontierLoop("sssp",
         sources.select(col("id")).distinct().withColumn("dist", lit(0.0)), maxIter, Seq(e),
-        (dist, improved) =>
-          dist.join(improved.select("id"), Seq("id"), "left_anti").unionByName(improved)) {
+        replaceById) {
       (frontier, dist, _) =>
         frontier.join(e, frontier("id") === e("src"))
           .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
@@ -1425,10 +1432,11 @@ object Algorithms {
    *    unrestricted 2/3-hop shortcuts never admit a wrong member). On a
    *    giant-SCC graph above the gate the quadratic wedge growth of e²
    *    would dominate, so big graphs propagate 1 hop at a time.
-   *  - ONE ACTION PER ROUND: only the per-round DELTA (improved colors /
-   *    sweep frontier) is eagerly checkpointed; the accumulated state is
-   *    a lazy union of those checkpointed leaves, collapsed every 4th
-   *    round — vs checkpointing the full state every round.
+   *  - ONE ACTION PER ROUND: color and sweep are [[frontierLoop]] runs, so
+   *    a round's one job is the count of its persisted DELTA (improved
+   *    colors / sweep frontier), and every 3rd round the Cutter pair cuts
+   *    both the delta and the accumulated state with an eager checkpoint —
+   *    vs checkpointing the full state every round.
    *
    * @param vertices (id) — vertices to report (isolated ⇒ singleton SCC)
    * @param edges (src, dst) directed
@@ -1450,7 +1458,7 @@ object Algorithms {
       assignedPending += 1
       if (assignedPending >= 8) { assigned = assigned.localCheckpoint(true); assignedPending = 0 }
     }
-    var budget = maxIter
+    var spent = 0 // rounds charged to the shared budget
     var live = nodes.count()
     // Finish the live graph with the in-JVM Tarjan when it passes the gate:
     // identical min-id components (the epilogue relabels to min either way)
@@ -1486,8 +1494,8 @@ object Algorithms {
       // and the shrinking edge set re-roots on it.
       var trimming = true
       while (trimming && live > 0) {
-        if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
-        budget -= 1
+        if (spent >= maxIter) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
+        spent += 1
         val hasIn = e.select(col("dst").as("id")).distinct()
         val hasOut = e.select(col("src").as("id")).distinct()
         val keep = squeeze(nodes.join(hasIn, Seq("id"), "left_semi")
@@ -1529,53 +1537,33 @@ object Algorithms {
                 .filter(col("src") =!= col("dst")).distinct()
               squeeze(e.unionByName(e2).unionByName(e3).distinct()).localCheckpoint(true)
             }
-          // ---- 2. forward-max coloring to fixpoint (frontier-based over eAug)
-          var color = squeeze(nodes.select(col("id"), col("id").as("color"))).localCheckpoint(true)
-          var colorPending = 0
-          var frontier = color
-          var coloring = true
-          while (coloring) {
-            if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
-            budget -= 1
-            val prop = frontier.join(eAug, frontier("id") === eAug("src"))
-              .groupBy(eAug("dst").as("id")).agg(max("color").as("nc"))
-            val improved = squeeze(prop.join(color, Seq("id"))
+          // ---- 2. forward-max coloring to fixpoint over eAug: only
+          // improved colors re-propagate, and they replace their rows
+          val (color, colorHeld, colorRounds) = frontierLoop("stronglyConnectedComponents",
+              squeeze(nodes.select(col("id"), col("id").as("color"))), maxIter, Seq.empty,
+              replaceById, spent) { (frontier, color, _) =>
+            squeeze(frontier.join(eAug, frontier("id") === col("src"))
+              .groupBy(col("dst").as("id")).agg(max("color").as("nc"))
+              .join(color, Seq("id"))
               .filter(col("nc") > col("color"))
               .select(col("id"), col("nc").as("color")))
-              .localCheckpoint(true)
-            if (improved.count() == 0L) coloring = false
-            else {
-              color = color.join(improved.select("id"), Seq("id"), "left_anti")
-                .unionByName(improved)
-              colorPending += 1
-              if (colorPending >= 4) { color = squeeze(color).localCheckpoint(true); colorPending = 0 }
-              frontier = improved
-            }
           }
-          // ---- 3. backward sweep from the roots, within each color class
+          spent += colorRounds
+          // ---- 3. backward sweep from the roots, within each color class;
+          // a throw here releases the coloring's tips with the sweep's own
           val roots = color.filter(col("color") === col("id")).select(col("id").as("root"))
-          var reached = squeeze(roots.select(col("root"), col("root").as("id"))).localCheckpoint(true)
-          var reachedPending = 0
-          var bf = reached
-          var sweeping = true
-          while (sweeping) {
-            if (budget <= 0) throw new BudgetExhausted("stronglyConnectedComponents", maxIter)
-            budget -= 1
-            val cand = squeeze(bf.join(eAug, bf("id") === eAug("dst"))
-              .select(col("root"), eAug("src").as("id")).distinct()
+          val (reached, held, sweepRounds) = frontierLoop("stronglyConnectedComponents",
+              squeeze(roots.select(col("root"), col("root").as("id"))), maxIter, colorHeld,
+              spent = spent) { (bf, reached, _) =>
+            squeeze(bf.join(eAug, bf("id") === col("dst"))
+              .select(col("root"), col("src").as("id")).distinct()
               .join(color, Seq("id"))
               .filter(col("color") === col("root")).drop("color")
               .join(reached, Seq("root", "id"), "left_anti"))
-              .localCheckpoint(true)
-            if (cand.count() == 0L) sweeping = false
-            else {
-              reached = reached.unionByName(cand)
-              reachedPending += 1
-              if (reachedPending >= 4) { reached = squeeze(reached).localCheckpoint(true); reachedPending = 0 }
-              bf = cand
-            }
           }
+          spent += sweepRounds
           val found = reached.select(col("id"), col("root")).localCheckpoint(true)
+          held.foreach(_.unpersist(false))
           val c = found.count()
           assign(found)
           nodes = nodes.join(found.select("id"), Seq("id"), "left_anti").localCheckpoint(true)

@@ -49,7 +49,9 @@ import scala.collection.mutable
  *
  * Budget semantics are preserved: the local loops are LEVEL-SYNCHRONOUS
  * replicas of the distributed rounds and throw the same
- * [[Algorithms.BudgetExhausted]] at the same round counts.
+ * [[Algorithms.BudgetExhausted]] at the same round counts. Each halting
+ * rule is stated once per side of the gate: [[frontierLoop]] here twins
+ * `Algorithms.frontierLoop`, and [[peel]] twins `Algorithms.peel`.
  */
 private[graft] object Local {
 
@@ -136,15 +138,53 @@ private[graft] object Local {
     def inTo(v: Int): Range = inOff(v) until inOff(v + 1)
   }
 
+  /** The local twin of [[Algorithms]]' frontier loop, shared by
+    * [[bfsLevels]], [[sssp]] and the per-source loops of [[bfsPerSource]],
+    * [[sigmaCounts]] and [[betweennessDeltas]]: round `iter` replaces the
+    * frontier by `round(frontier, iter)` until it is empty, and a frontier
+    * still live at `maxIter` throws [[Algorithms.BudgetExhausted]]. After
+    * each round a true `over` (a per-source caller's row cap, which
+    * declines) stops the loop and returns false, unless that throw is due. */
+  private def frontierLoop(algo: String, seed: Array[Int], maxIter: Int, over: => Boolean = false)(
+      round: (Array[Int], Int) => Array[Int]): Boolean = {
+    var frontier = seed
+    var iter = 0
+    while (frontier.nonEmpty) {
+      if (iter >= maxIter) throw new Algorithms.BudgetExhausted(algo, maxIter)
+      frontier = round(frontier, iter)
+      iter += 1
+      if (over && (frontier.isEmpty || iter < maxIter)) return false
+    }
+    true
+  }
+
+  /** The local twin of [[Algorithms]]' peel loop, shared by [[kCore]] and
+    * [[kTruss]]: `pruned` keeps a subset of its input, so the fixpoint is
+    * the first round whose survivor count is unchanged; a round budget
+    * spent before it throws [[Algorithms.BudgetExhausted]]. */
+  private def peel(algo: String, canon: Array[(Long, Long)], maxIter: Int)(
+      pruned: Array[(Long, Long)] => Array[(Long, Long)]): Array[(Long, Long)] = {
+    var e = canon
+    var iter = 0
+    var converged = e.isEmpty
+    while (iter < maxIter && !converged) {
+      val next = pruned(e)
+      converged = next.length == e.length
+      e = next
+      iter += 1
+    }
+    if (!converged) throw new Algorithms.BudgetExhausted(algo, maxIter)
+    e
+  }
+
   /** Multi-source BFS levels — [[Algorithms.bfs]]'s fixpoint. */
   def bfsLevels(edges: Array[(Long, Long)], sources: Array[Long],
                 maxIter: Int): Array[(Long, Int)] = {
     val g = new Csr(edges, sources)
     val level = Array.fill(g.n)(-1)
-    var frontier = sources.distinct.map(g.idx(_))
-    frontier.foreach(level(_) = 0)
-    var iter = 0
-    while (frontier.nonEmpty && iter < maxIter) {
+    val seed = sources.distinct.map(g.idx(_))
+    seed.foreach(level(_) = 0)
+    frontierLoop("bfs", seed, maxIter) { (frontier, iter) =>
       val next = new mutable.ArrayBuffer[Int]()
       frontier.foreach { v =>
         g.outFrom(v).foreach { ei =>
@@ -152,10 +192,8 @@ private[graft] object Local {
           if (level(w) < 0) { level(w) = iter + 1; next += w }
         }
       }
-      frontier = next.toArray
-      iter += 1
+      next.toArray
     }
-    if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("bfs", maxIter)
     (0 until g.n).iterator.filter(level(_) >= 0)
       .map(i => (g.ids(i), level(i))).toArray
   }
@@ -177,25 +215,22 @@ private[graft] object Local {
       val si = g.idx(s)
       level(si) = 0
       out += ((s, s, 0))
-      var frontier = Array(si)
-      var iter = 0
-      while (frontier.nonEmpty && iter < maxIter) {
-        val next = new mutable.ArrayBuffer[Int]()
-        frontier.foreach { v =>
-          g.outFrom(v).foreach { ei =>
-            val w = g.adj(ei)
-            if (level(w) < 0) { level(w) = iter + 1; next += w; out += ((s, g.ids(w), iter + 1)) }
+      // cap checked per ROUND, not per completed source: one over-budget
+      // source aborts mid-flood instead of first materializing its whole
+      // reachability on the driver; a frontier live at maxIter throws
+      // before the cap declines
+      val done = frontierLoop("bfsPerSource", Array(si), maxIter, out.length > maxRows) {
+        (frontier, iter) =>
+          val next = new mutable.ArrayBuffer[Int]()
+          frontier.foreach { v =>
+            g.outFrom(v).foreach { ei =>
+              val w = g.adj(ei)
+              if (level(w) < 0) { level(w) = iter + 1; next += w; out += ((s, g.ids(w), iter + 1)) }
+            }
           }
-        }
-        frontier = next.toArray
-        iter += 1
-        // cap checked per ROUND, not per completed source: one over-budget
-        // source aborts mid-flood instead of first materializing its whole
-        // reachability on the driver (r14 advisory); a frontier live at
-        // maxIter falls out of the loop to the budget throw instead
-        if (out.length > maxRows && (frontier.isEmpty || iter < maxIter)) return None
+          next.toArray
       }
-      if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("bfsPerSource", maxIter)
+      if (!done) return None
     }
     Some(out.toArray)
   }
@@ -215,16 +250,14 @@ private[graft] object Local {
       val si = g.idx(s)
       level(si) = 0; sigma(si) = 1L
       out += ((s, s, 0, 1L))
-      var frontier = Array(si)
-      var iter = 0
-      while (frontier.nonEmpty && iter < maxIter) {
-        frontier = sigmaRound(g, level, sigma, frontier, iter + 1)
-        frontier.foreach(w => out += ((s, g.ids(w), iter + 1, sigma(w))))
-        iter += 1
-        // per-ROUND cap check and budget precedence — see [[bfsPerSource]]
-        if (out.length > maxRows && (frontier.isEmpty || iter < maxIter)) return None
+      // per-ROUND cap check and budget precedence — see [[bfsPerSource]]
+      val done = frontierLoop("shortestPathCounts", Array(si), maxIter, out.length > maxRows) {
+        (frontier, iter) =>
+          val next = sigmaRound(g, level, sigma, frontier, iter + 1)
+          next.foreach(w => out += ((s, g.ids(w), iter + 1, sigma(w))))
+          next
       }
-      if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("shortestPathCounts", maxIter)
+      if (!done) return None
     }
     Some(out.toArray)
   }
@@ -260,10 +293,9 @@ private[graft] object Local {
     val g = new Csr(edges, sources, w)
     val dist = new Array[Double](g.n)
     val has = new Array[Boolean](g.n)
-    var frontier = sources.distinct.map(g.idx(_))
-    frontier.foreach { v => dist(v) = 0.0; has(v) = true }
-    var iter = 0
-    while (frontier.nonEmpty && iter < maxIter) {
+    val seed = sources.distinct.map(g.idx(_))
+    seed.foreach { v => dist(v) = 0.0; has(v) = true }
+    frontierLoop("sssp", seed, maxIter) { (frontier, _) =>
       // min candidate per destination this round, then improve
       val cand = new mutable.LongMap[Double]()
       frontier.foreach { v =>
@@ -278,10 +310,8 @@ private[graft] object Local {
         val v = wi.toInt
         if (!has(v) || nd < dist(v)) { dist(v) = nd; has(v) = true; improved += v }
       }
-      frontier = improved.toArray
-      iter += 1
+      improved.toArray
     }
-    if (frontier.nonEmpty) throw new Algorithms.BudgetExhausted("sssp", maxIter)
     (0 until g.n).iterator.filter(has(_)).map(i => (g.ids(i), dist(i))).toArray
   }
 
@@ -419,53 +449,34 @@ private[graft] object Local {
     * (budget semantics preserved): drop all vertices under degree k each
     * round until the edge count is stable. Input must already be canonical
     * (a < b, deduped). Returns surviving incident vertex ids. */
-  def kCore(canon: Array[(Long, Long)], k: Int, maxIter: Int): Array[Long] = {
-    var e = canon
-    var iter = 0
-    var converged = e.isEmpty
-    while (iter < maxIter && !converged) {
+  def kCore(canon: Array[(Long, Long)], k: Int, maxIter: Int): Array[Long] =
+    peel("kCore", canon, maxIter) { e =>
       val deg = new mutable.LongMap[Long]()
       e.foreach { case (a, b) =>
         deg.update(a, deg.getOrElse(a, 0L) + 1L)
         deg.update(b, deg.getOrElse(b, 0L) + 1L)
       }
-      val pruned = e.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
-      converged = pruned.length == e.length
-      e = pruned
-      iter += 1
-    }
-    if (!converged) throw new Algorithms.BudgetExhausted("kCore", maxIter)
-    e.flatMap { case (a, b) => Seq(a, b) }.distinct
-  }
+      e.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+    }.flatMap { case (a, b) => Seq(a, b) }.distinct
 
   /** Synchronous k-truss peel — [[Algorithms.kTruss]] round for round:
     * per-edge triangle support via neighbor-set intersection, edges under
     * k−2 drop, until stable. Input canonical (a < b, deduped). */
-  def kTruss(canon: Array[(Long, Long)], k: Int, maxIter: Int): Array[(Long, Long)] = {
-    var e = canon
-    var iter = 0
-    var converged = e.isEmpty
-    while (iter < maxIter && !converged) {
+  def kTruss(canon: Array[(Long, Long)], k: Int, maxIter: Int): Array[(Long, Long)] =
+    peel("kTruss", canon, maxIter) { e =>
       val nbr = new mutable.LongMap[mutable.LongMap[Boolean]]()
       def add(v: Long, w: Long): Unit =
         nbr.getOrElseUpdate(v, new mutable.LongMap[Boolean]()).update(w, true)
       e.foreach { case (a, b) => add(a, b); add(b, a) }
-      val pruned =
-        if (k == 2) e
-        else e.filter { case (a, b) =>
-          val na = nbr(a); val nb = nbr(b)
-          val (small, big) = if (na.size <= nb.size) (na, nb) else (nb, na)
-          var sup = 0L
-          small.foreachKey { w => if (big.contains(w)) sup += 1 }
-          sup >= k - 2
-        }
-      converged = pruned.length == e.length
-      e = pruned
-      iter += 1
+      if (k == 2) e
+      else e.filter { case (a, b) =>
+        val na = nbr(a); val nb = nbr(b)
+        val (small, big) = if (na.size <= nb.size) (na, nb) else (nb, na)
+        var sup = 0L
+        small.foreachKey { w => if (big.contains(w)) sup += 1 }
+        sup >= k - 2
+      }
     }
-    if (!converged) throw new Algorithms.BudgetExhausted("kTruss", maxIter)
-    e
-  }
 
   /** Luby MIS with per-round md5 priorities —
     * [[Algorithms.maximalIndependentSet]] round for round: key(v) =
@@ -561,15 +572,11 @@ private[graft] object Local {
       val si = g.idx(s)
       level(si) = 0; sigma(si) = 1L
       var levels = List(Array(si)) // per-level vertex lists, deepest first
-      var frontier = Array(si)
-      var iter = 0
-      while (frontier.nonEmpty && iter < maxIter) {
-        frontier = sigmaRound(g, level, sigma, frontier, iter + 1)
-        if (frontier.nonEmpty) levels ::= frontier
-        iter += 1
+      frontierLoop("betweennessLandmark", Array(si), maxIter) { (frontier, iter) =>
+        val next = sigmaRound(g, level, sigma, frontier, iter + 1)
+        if (next.nonEmpty) levels ::= next
+        next
       }
-      if (frontier.nonEmpty)
-        throw new Algorithms.BudgetExhausted("betweennessLandmark", maxIter)
       // backward sweep, deepest level first; delta at the deepest level is 0
       val delta = new Array[Double](g.n)
       levels.foreach { lvlVerts =>

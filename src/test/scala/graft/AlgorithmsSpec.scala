@@ -169,11 +169,25 @@ class AlgorithmsSpec extends SparkSpec {
       // 8 rounds); the 9th finds the count unchanged
       ("kCore", 9, Algorithms.kCore(chain, 2, _)),
       // no path edge is in a triangle: round 1 drops all, round 2 is stable
-      ("kTruss", 2, Algorithms.kTruss(chain, 3, _)))
-    bothSides(for ((name, rounds, run) <- loops) withClue(s"$name, R = $rounds: ") {
-      run(rounds).count()
-      intercept[Algorithms.BudgetExhausted](run(rounds - 1).count())
-    })
+      ("kTruss", 2, Algorithms.kTruss(chain, 3, _)),
+      // round 1's md5 winners and their neighbours leave some vertices
+      // active; round 2 settles the rest
+      ("maximalIndependentSet", 2, Algorithms.maximalIndependentSet(vs, chain, _)))
+    def pin(loops: Seq[(String, Int, Int => DataFrame)]): Unit =
+      for ((name, rounds, run) <- loops) withClue(s"$name, R = $rounds: ") {
+        run(rounds).count()
+        intercept[Algorithms.BudgetExhausted](run(rounds - 1).count())
+      }
+    bothSides(pin(loops))
+    // the local Tarjan gate never exhausts a budget; the distributed SCC
+    // shares one budget across its trim, coloring and sweep rounds. On the
+    // chain of cycles 1⇄2→3⇄4→5⇄6 with tails 0→1 and 6→7: two trim passes
+    // (0 and 7 peel, then none), two coloring rounds (the improving one,
+    // then the empty one) and two sweep rounds
+    val cycles = Seq((0L, 1L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L), (4L, 5L),
+      (5L, 6L), (6L, 5L), (6L, 7L)).toDF("src", "dst")
+    distributed(pin(Seq(("stronglyConnectedComponents", 6,
+      Algorithms.stronglyConnectedComponents((0L to 7L).toDF("id"), cycles, _)))))
     // the local union-find gate never exhausts a budget — force the
     // distributed star-contraction loop to pin ITS budget behavior
     distributed(intercept[Algorithms.BudgetExhausted] {
@@ -406,6 +420,14 @@ class AlgorithmsSpec extends SparkSpec {
     val cc = distributed(released(
       Algorithms.connectedComponents((0L to 6L).toDF("id"), chain), checkpoints = true))
     assert(cc.map(_.getLong(1)) == Set(0L))
+    // distributed SCC: the coloring's and the sweep's round tips, on the
+    // chain of cycles 1⇄2→3⇄4 with tail 0→1 (trim 2, coloring 2, sweep 2)
+    val cycles = Seq((0L, 1L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
+      .toDF("src", "dst")
+    val scc = distributed(released(
+      Algorithms.stronglyConnectedComponents((0L to 4L).toDF("id"), cycles), checkpoints = true))
+    assert(scc.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
     // the BudgetExhausted exit releases too: a distributed loop's edge
     // caches and un-checkpointed tips, and the gate's edge cache when the
     // local run throws
@@ -425,7 +447,13 @@ class AlgorithmsSpec extends SparkSpec {
       exhausted("betweennessLandmark")(
         Algorithms.betweennessLandmark((0L to 6L).toDF("id"), chain, k = 7, maxIter = 1)),
       exhausted("kCore")(Algorithms.kCore(chain, k = 2, maxIter = 1)),
-      exhausted("kTruss")(Algorithms.kTruss(chain, k = 3, maxIter = 1)))) :+
+      exhausted("kTruss")(Algorithms.kTruss(chain, k = 3, maxIter = 1)),
+      // one throw in the coloring, one in the sweep (which holds the
+      // coloring's tips too)
+      exhausted("scc coloring")(
+        Algorithms.stronglyConnectedComponents((0L to 4L).toDF("id"), cycles, maxIter = 3)),
+      exhausted("scc sweep")(
+        Algorithms.stronglyConnectedComponents((0L to 4L).toDF("id"), cycles, maxIter = 5)))) :+
       // its own chain: a cache of the same plan left by a leaking case
       // above would be reused here and hide this case's leak
       exhausted("local bfs")(Algorithms.bfs(
@@ -663,10 +691,11 @@ class AlgorithmsSpec extends SparkSpec {
       val edges = Seq.fill(60)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2).distinct
       val expect = tarjan(n, edges)
-      val got = Algorithms.stronglyConnectedComponents(
+      val (l, d) = bothSides(Algorithms.stronglyConnectedComponents(
         (0L until n.toLong).toDF("id"), edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"seed=$seed edges=$edges")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(l == expect, s"local gate, seed=$seed edges=$edges")
+      assert(d == expect, s"distributed, seed=$seed edges=$edges")
     }
   }
 
